@@ -2,205 +2,37 @@
 
 The reference's benchmark driver round-robins a query log over N threads in
 one process (/root/reference/src/Plan/src/QueryRunner.cpp:282-402). The
-Spark-native analogue (SURVEY §2.5 "Multi-query benchmark driver"): ship ALL
-query plans in one broadcast descriptor, scan the union of their terms'
-segments once, evaluate every query inside each (shard, slice) group with a
-shared decode cache, and take per-query top-k with a single window — one
-job, amortizing scheduling + Python-worker startup across the whole log.
-This is how high-QPS serving should run on a cluster: queries become data.
+Spark-native analogue (SURVEY §2.5 "Multi-query benchmark driver"): the
+whole log runs through the one query kernel (plans/kernel.run_log) — one
+descriptor, one scan of the union of the queries' segments, every query
+evaluated inside each (shard, slice) group over a shared block decode
+cache — and per-query top-k comes from a single window. One job amortizes
+scheduling + Python-worker startup across the whole log; a single
+kernel-path query is the same kernel over a log of one. This is how
+high-QPS serving should run on a cluster: queries become data.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from bitfunnel_spark.operators.segments import decode_group
-from bitfunnel_spark.plans.kernel import (
-    _EMPTY,
-    _EMPTYF,
-    _candidates_pruned,
-    _group_phrase_docs,
-    _mask,
-    _score,
-)
+from bitfunnel_spark.plans.kernel import run_log
 from bitfunnel_spark.plans.planner import QueryPlan, plan_query
 
-_OUT_EMPTY = pd.DataFrame(
-    {
-        "query_id": pd.Series(dtype="int32"),
-        "doc_id": pd.Series(dtype="int64"),
-        "score": pd.Series(dtype="float64"),
-    }
-)
 
-
-def _batch_kernel(plans: list[QueryPlan], descriptor: dict):
-    from bitfunnel_spark.plans.wand import BlockCache, route_units, units_topk
-
-    from bitfunnel_spark.plans.kernel import _keymap
-
-    gram_set = frozenset(descriptor.get("gram_phrases") or frozenset())
-    fb_set = frozenset(descriptor.get("fallback_phrases") or frozenset())
-    from bitfunnel_spark.plans.kernel import _phrase_term
-
-    keymap = _keymap(
-        {(s, t) for p in plans for s, t in p.terms}
-        | {(ph.stream, ph.text) for ph in gram_set}
-        | {(ph.stream, _phrase_term(ph)) for ph in fb_set}
-    )
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        if pdf.empty:
-            return _OUT_EMPTY
-        raw = {
-            keymap[int(key)]: rows
-            for key, rows in pdf.groupby("term_key", sort=False)
-            if int(key) in keymap
-        }
-        decoded: dict = {}
-        cache = BlockCache(raw)  # block decodes shared across the whole log
-
-        def get(key):
-            if key not in decoded:
-                rows = raw.get(key)
-                decoded[key] = (
-                    decode_group(rows) if rows is not None else (_EMPTY, _EMPTY, _EMPTYF)
-                )
-            return decoded[key]
-
-        out_q, out_d, out_s = [], [], []
-        k = descriptor["k"]
-        allow = descriptor.get("allow")
-        deny = descriptor.get("deleted")
-        from bitfunnel_spark.plans.planner import effective_idf
-
-        for qid, plan in enumerate(plans):
-            qidf = effective_idf(plan, descriptor["idf"])  # per-query boosts
-            flat = route_units(plan.ast) if k is not None else None
-            if flat is not None:
-                # block-max pruned paths (plans/wand.py); a single term is a
-                # 1-conjunct AND — same block-max traversal; blended groups
-                # ride it via the subadditive saturation bound
-                kind, units = flat
-                skeys = sorted(plan.scoring_keys)
-                res = units_topk(
-                    kind, units, skeys, qidf, k, cache, allow=allow, deny=deny,
-                    syn_groups=plan.syn_groups,
-                    field_groups=getattr(plan, "field_groups", ()),
-                    k1=descriptor.get("k1", 1.2),
-                )
-                if len(res):
-                    out_q.append(np.full(len(res), qid, dtype=np.int32))
-                    out_d.append(res["doc_id"].to_numpy())
-                    out_s.append(res["score"].to_numpy())
-                continue
-            cand = _candidates_pruned(plan.ast, raw, gram_set, fb_set)
-            from bitfunnel_spark.plans.wand import restrict
-
-            cand = restrict(cand, allow, deny)
-            if cand.size == 0:
-                continue
-            postings = {key: get(key) for key in ((s, t) for s, t in plan.terms)}
-            m = _mask(plan.ast, cand, postings, _group_phrase_docs(plan.phrases, raw, descriptor))
-            cand = cand[m]
-            if cand.size == 0:
-                continue
-            score = _score(
-                cand, postings, sorted(plan.scoring_keys), qidf,
-                plan.syn_groups, descriptor.get("k1", 1.2),
-                getattr(plan, "field_groups", ()),
-            )
-            if k is not None and cand.size > k:
-                r = np.round(score, 4)
-                idx = np.lexsort((cand, -r))[:k]
-                cand, score = cand[idx], score[idx]
-            out_q.append(np.full(cand.shape, qid, dtype=np.int32))
-            out_d.append(cand)
-            out_s.append(score)
-        if not out_q:
-            return _OUT_EMPTY
-        return pd.DataFrame(
-            {
-                "query_id": np.concatenate(out_q),
-                "doc_id": np.concatenate(out_d),
-                "score": np.concatenate(out_s),
-            }
-        )
-
-    return kernel
-
-
-def _batched_groups(
-    index, queries: list[str], k: int | None, facts: list[str] | None
-) -> DataFrame:
-    """Shared batched-execution core: one segment scan + one
-    applyInPandas over (shard, slice) groups evaluating EVERY query.
-    ``k`` None = full match sets (no per-group truncation)."""
-    if index.segments is None:
-        index.build_segments()
-    from bitfunnel_spark.plans.kernel import _segment_filter
-
-    from bitfunnel_spark.plans.kernel import filter_terms, use_gram_phrase
-
-    residual_facts = facts
-
-    def _prep(q):
-        nonlocal residual_facts
-        node, residual_facts = index._apply_indexed_facts(
-            index.prepare_query(q), facts
-        )
-        return node
-
-    plans = [plan_query(_prep(q)) for q in queries]
-    all_terms = {(s, t) for p in plans for s, t in p.terms}
-    all_filter_terms = set().union(*(filter_terms(index, p) for p in plans)) if plans else set()
-    seg = index.segments.filter(_segment_filter(index, all_filter_terms))
-
-    # driver-resident hash dictionary (TermTable analogue) when it fits,
-    # else one filtered collect — index.idf_for_terms
-    idf = index.idf_for_keys(all_terms)
-    from bitfunnel_spark.plans.kernel import use_positional_phrases
-
-    gram_phrases: set = set()
-    fallback: set = set()
-    use_positions = use_positional_phrases(index)
-    if not use_positions:
-        for p in plans:
-            for ph, _neg in p.phrases:
-                if ph in gram_phrases or ph in fallback:
-                    continue
-                if use_gram_phrase(index, ph):
-                    gram_phrases.add(ph)
-                else:
-                    fallback.add(ph)  # distributed synthetic postings
-    if fallback:
-        from bitfunnel_spark.plans.kernel import phrase_fallback_segments
-
-        seg = seg.unionByName(
-            phrase_fallback_segments(
-                index, sorted(fallback, key=lambda p: (p.stream, p.text, p.slop))
-            )
-        )
-
-    from bitfunnel_spark.plans.kernel import _restriction_arrays
-
-    kernel = _batch_kernel(
-        plans,
-        {
-            "idf": idf,
-            "gram_phrases": frozenset(gram_phrases),
-            "fallback_phrases": frozenset(fallback),
-            "use_positions": use_positions, "k": k,
-            "k1": index.config.bm25.k1,  # blended-group norm recovery
-            **_restriction_arrays(index, residual_facts),
-        },
-    )
-    return seg.groupBy("shard", "slice").applyInPandas(
-        lambda pdf: kernel(pdf), "query_id int, doc_id long, score double"
-    )
+def plan_log(
+    index, queries: list, facts: list[str] | None = None
+) -> tuple[list[QueryPlan], list[str] | None]:
+    """(plans, residual_facts) for a query log: each query is prepared
+    (synonyms, expansions), its indexed facts become filter-context
+    conjuncts, and it is planned — once per query, on the driver."""
+    residual = facts
+    plans = []
+    for q in queries:
+        node, residual = index._apply_indexed_facts(index.prepare_query(q), facts)
+        plans.append(plan_query(node))
+    return plans, residual
 
 
 def search_many(index, queries: list[str], k=10, facts: list[str] | None = None) -> DataFrame:
@@ -220,7 +52,8 @@ def search_many(index, queries: list[str], k=10, facts: list[str] | None = None)
         raise ValueError("per-query k list must match the query count")
     if not ks or min(ks) < 1:
         raise ValueError("k must be >= 1")
-    groups = _batched_groups(index, queries, max(ks), facts)
+    plans, facts = plan_log(index, queries, facts)
+    groups = run_log(index, plans, max(ks), facts)
     res = groups.select("query_id", "doc_id", F.round(F.col("score"), 4).alias("score"))
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
     k_expr = (
@@ -236,9 +69,9 @@ def match_many(index, queries: list[str], facts: list[str] | None = None) -> Dat
     """Full (unscored) match sets for a whole query log in ONE job:
     DataFrame[(query_id int, doc_id long)]. Each document lives in exactly
     one (shard, slice) group, so group outputs are disjoint — no window,
-    no dedup, no truncation."""
-    groups = _batched_groups(index, queries, None, facts)
-    return groups.select("query_id", "doc_id")
+    no dedup, no truncation, and no scoring."""
+    plans, facts = plan_log(index, queries, facts)
+    return run_log(index, plans, None, facts)
 
 
 def percolate(spark, docs: DataFrame, queries: list[str], config=None) -> DataFrame:

@@ -3,148 +3,32 @@ parity (/root/reference/src/Plan/src/QueryRunner.cpp:84-92 records
 parse/plan/match wall-times; inc/BitFunnel/Plan/QueryInstrumentation.h:63-70
 records row/cacheline counts; our analogue counts posting blocks).
 
-`profile_search` runs ONE kernel-path query and returns
-(result_rows, metrics) where metrics carries driver-side phase timings plus
-per-(shard, slice) group counters:
+`profile_many` runs a query log through the production query kernel
+(plans/kernel.run_log) with the counters sink on — the same descriptor,
+restrictions (tombstones), phrase routing and search_after handling as
+search, so a profile describes the execution that actually runs. Instead
+of result rows the kernel emits one METRIC_SCHEMA row per (query, shard,
+slice) group, with driver-side phase timings alongside:
 
     blocks_total    — blocks of the query's terms present in the group
     blocks_decoded  — blocks actually decoded (block-max pruning skips the
                       rest; the pruning-effectiveness signal)
     rows            — result rows the group emitted
+    kernel_ms       — the query's kernel wall time in the group
 
-`profile_many` does the same for a whole query log in one job (the batch
-path), attributing counters per query via BlockCache stats deltas. Metrics
-come back through the same Arrow channel as results (an extra metrics
-column group), so profiling adds no extra Spark job.
+Each query gets its own block decode cache under the sink, so counters
+attribute exactly. Metrics come back through the same Arrow channel as
+results would, so profiling adds no extra Spark job.
 """
 
 from __future__ import annotations
 
 import time
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
-from bitfunnel_spark.plans.kernel import (
-    _descriptor,
-    _keymap,
-    _segment_filter,
-    use_positional_phrases,
-)
-from bitfunnel_spark.plans.planner import plan_query
-from bitfunnel_spark.plans.wand import BlockCache, route_units, units_all_keys, units_topk
-
-METRIC_SCHEMA = (
-    "query_id int, shard int, slice int, blocks_total long, blocks_decoded long, "
-    "rows long, kernel_ms double"
-)
-
-
-def _profiled_batch_kernel(plans, descriptor):
-    """Batch kernel variant that emits per-(query, group) metric rows
-    instead of result rows. Pruned paths report real decode counters; the
-    exhaustive fallback reports its full-decode counts through the same
-    BlockCache interface."""
-    from bitfunnel_spark.plans.kernel import (
-        _candidates_pruned,
-        _group_phrase_docs,
-        _mask,
-        _score,
-    )
-
-    from bitfunnel_spark.plans.kernel import _phrase_term
-
-    fb_set = frozenset(descriptor.get("fallback_phrases") or frozenset())
-    keymap = _keymap(
-        {(s, t) for p in plans for s, t in p.terms}
-        | {(ph.stream, _phrase_term(ph)) for ph in fb_set}
-    )
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        cols = ["query_id", "shard", "slice", "blocks_total", "blocks_decoded", "rows", "kernel_ms"]
-        if pdf.empty:
-            return pd.DataFrame({c: [] for c in cols})
-        shard = int(pdf["shard"].iloc[0])
-        slc = int(pdf["slice"].iloc[0])
-        raw = {
-            keymap[int(key)]: rows
-            for key, rows in pdf.groupby("term_key", sort=False)
-            if int(key) in keymap
-        }
-        k = descriptor["k"]
-        out = []
-        from bitfunnel_spark.plans.planner import effective_idf
-
-        sim = descriptor.get("similarity", "bm25")
-        for qid, plan in enumerate(plans):
-            qidf = effective_idf(plan, descriptor["idf"])
-            stats: dict = {}
-            # fresh per query: exact attribution; bound mode mirrors the
-            # result kernel (max_partial for bm25, max_tf for dot_tf)
-            cache = BlockCache(raw, stats, bound=sim)
-            t0 = time.perf_counter()
-            flat = route_units(plan.ast) if k is not None else None
-            skeys = sorted(plan.scoring_keys)
-            if flat is not None:
-                kind, units = flat
-                res = units_topk(
-                    kind, units, skeys, qidf, k, cache,
-                    syn_groups=plan.syn_groups,
-                    field_groups=getattr(plan, "field_groups", ()),
-                    k1=descriptor.get("k1", 1.2),
-                    after=descriptor.get("after"),
-                )
-                nrows = len(res)
-                # blocks_total counts only terms the traversal touched; add
-                # untouched terms' blocks so the denominator is the query's
-                # full footprint in this group
-                for key in units_all_keys(units):
-                    cache.meta(key)
-            else:
-                cand = _candidates_pruned(plan.ast, raw, frozenset(), fb_set)
-                nrows = 0
-                if cand.size:
-                    from bitfunnel_spark.plans.kernel import _decode_pruned
-
-                    lo, hi = int(cand[0]), int(cand[-1])
-                    postings = {}
-                    for key in plan.terms:
-                        rows = raw.get(key)
-                        if rows is not None:
-                            stats["blocks_total"] = stats.get("blocks_total", 0) + len(rows)
-                            sel = rows[(rows["last_doc"] >= lo) & (rows["first_doc"] <= hi)]
-                            stats["blocks_decoded"] = stats.get("blocks_decoded", 0) + len(sel)
-                        from bitfunnel_spark.plans.kernel import _EMPTY, _EMPTYF
-
-                        postings[key] = (
-                            _decode_pruned(rows, lo, hi)
-                            if rows is not None
-                            else (_EMPTY, _EMPTY, _EMPTYF)
-                        )
-                    m = _mask(plan.ast, cand, postings, _group_phrase_docs(plan.phrases, raw, descriptor))
-                    cand = cand[m]
-                    if cand.size:
-                        score = _score(
-                            cand, postings, sorted(plan.scoring_keys), qidf,
-                            plan.syn_groups, descriptor.get("k1", 1.2),
-                            getattr(plan, "field_groups", ()),
-                            similarity=sim,
-                        )
-                        nrows = min(cand.size, k) if k is not None else cand.size
-                        del score
-            ms = (time.perf_counter() - t0) * 1000.0
-            out.append(
-                (
-                    qid, shard, slc,
-                    int(stats.get("blocks_total", 0)),
-                    int(stats.get("blocks_decoded", 0)),
-                    int(nrows), float(ms),
-                )
-            )
-        return pd.DataFrame(out, columns=cols)
-
-    return kernel
+from bitfunnel_spark.plans.batch import plan_log
+from bitfunnel_spark.plans.kernel import METRIC_SCHEMA, run_log  # noqa: F401 (re-export)
 
 
 def profile_many(
@@ -169,61 +53,11 @@ def profile_many(
             f"profile_many instruments the prunable similarities "
             f"('bm25', 'dot_tf'), got {similarity!r}"
         )
-    if index.segments is None:
-        index.build_segments()
     t0 = time.perf_counter()
-    plans = [plan_query(index.prepare_query(q)) for q in queries]
-    if similarity == "dot_tf":
-        # blended groups score BM25-shaped saturation — the result kernel
-        # rejects them under dot_tf (scoring.check_similarity); profiling
-        # them here would silently report counters for an execution that
-        # cannot exist
-        for p in plans:
-            if p.syn_groups or getattr(p, "field_groups", ()):
-                raise ValueError(
-                    "dot_tf profiling rejects blended syn/field groups "
-                    "(the kernel does too)"
-                )
+    plans, _ = plan_log(index, queries)
     t_parse = time.perf_counter()
-    all_terms = {(s, t) for p in plans for s, t in p.terms}
-    seg = index.segments.filter(_segment_filter(index, all_terms))
-    idf = index.idf_for_keys(all_terms)
-    if similarity != "bm25":
-        from bitfunnel_spark.plans.scoring import base_weight_map
-
-        idf = base_weight_map(idf, similarity, index.n_docs)
-    fallback: set = set()
-    use_positions = use_positional_phrases(index)
-    if not use_positions:
-        for p in plans:
-            for ph, _neg in p.phrases:
-                fallback.add(ph)  # distributed synthetic postings, no collect
-    if fallback:
-        from bitfunnel_spark.plans.kernel import phrase_fallback_segments
-
-        seg = seg.unionByName(
-            phrase_fallback_segments(
-                index, sorted(fallback, key=lambda p: (p.stream, p.text, p.slop))
-            )
-        )
+    metrics = run_log(index, plans, k, None, similarity, after, sink=True)
     t_plan = time.perf_counter()
-    kernel = _profiled_batch_kernel(
-        plans,
-        {
-            "idf": idf,
-            "fallback_phrases": frozenset(fallback),
-            "use_positions": use_positions,
-            "k": k,
-            "k1": index.config.bm25.k1,
-            "similarity": similarity,
-            **(
-                {"after": (round(float(after[0]), 4), int(after[1]))}
-                if after is not None
-                else {}
-            ),
-        },
-    )
-    metrics = seg.groupBy("shard", "slice").applyInPandas(lambda pdf: kernel(pdf), METRIC_SCHEMA)
     timings = {
         "parse_ms": round((t_parse - t0) * 1000.0, 3),
         "plan_ms": round((t_plan - t_parse) * 1000.0, 3),

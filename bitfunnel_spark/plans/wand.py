@@ -489,26 +489,6 @@ def or_topk(
     return _topk_select(docs_l, scores_l, k)
 
 
-def route_flat(ast):
-    """('term'|'and'|'or', keys) for ASTs the pruned paths handle, else None.
-
-    Flat positive conjunctions (any streams) and flat body-stream
-    disjunctions; phrases / NOTs / nested shapes use the exhaustive kernel."""
-    from bitfunnel_spark.plans.ast import And, Or, Term
-
-    if isinstance(ast, Term):
-        return ("term", [(ast.stream, ast.text)])
-    if isinstance(ast, And) and all(isinstance(c, Term) for c in ast.children):
-        return ("and", [(c.stream, c.text) for c in ast.children])
-    if (
-        isinstance(ast, Or)
-        and getattr(ast, "min_match", 1) <= 1
-        and all(isinstance(c, Term) and c.stream == "body" for c in ast.children)
-    ):
-        return ("or", [(c.stream, c.text) for c in ast.children])
-    return None
-
-
 # ---------------------------------------------------------------------------
 # blended pseudo-terms under block-max (VERDICT r3 item 4)
 #
@@ -545,10 +525,8 @@ def route_units(ast):
             return ("group", tuple(node.weighted))
         return None
 
-    flat = route_flat(ast)
-    if flat is not None:
-        kind, keys = flat
-        return (kind, [("key", k) for k in keys])
+    if isinstance(ast, Term):
+        return ("term", [unit_of(ast)])
     if isinstance(ast, (SynGroup, FieldGroup)):
         return ("or", [unit_of(ast)])
     if isinstance(ast, And):
@@ -561,14 +539,14 @@ def route_units(ast):
         if any(u is None for u in units):
             return None
         if any(u[0] == "key" and u[1][0] != "body" for u in units):
-            return None  # same body-stream restriction as route_flat
+            return None  # non-body disjuncts take the exhaustive kernel
         return ("or", units)
     return None
 
 
 def _blend_w(members, idf) -> float:
     """The group's blended idf (min over in-dictionary members — Lucene's
-    blended docFreq, kernel._score:347); 0.0 when no member scores."""
+    blended docFreq, kernel._score); 0.0 when no member scores."""
     vals = [idf[k] for k, _w in members if k in idf]
     return min(vals) if vals else 0.0
 
@@ -772,14 +750,3 @@ def _and_units(units, scoring_keys, idf, k, cache, allow, deny, scorer, after=No
         if count >= k:
             kth = _kth(scores_l, k)
     return _topk_select(docs_l, scores_l, k)
-
-
-def units_all_keys(units) -> list:
-    """Every (stream, term) key a routed unit list touches (profiling)."""
-    out = []
-    for u in units:
-        if u[0] == "key":
-            out.append(u[1])
-        else:
-            out.extend(k for k, _w in u[1])
-    return sorted(set(out))

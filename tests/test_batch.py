@@ -1,27 +1,17 @@
 """Batched multi-query execution must be rank-identical to single-query
 search for every query in the log (engine-vs-engine equivalence, §5.2)."""
 
-import pytest
-
-BATCH = [
-    "data",
-    "spark & join",
-    "data -slow",
-    "dup | vector",
-    "(dup | vector) join -merge",
-    "lang:en data",
-    '"batch batch"',
-]
+from tests.test_kernel_parity import QUERIES
 
 
 def test_batch_matches_single(index):
     if index.segments is None:
         index.build_segments()
-    got = index.search_many(BATCH, k=10).collect()
+    got = index.search_many(QUERIES, k=10).collect()
     by_q = {}
     for r in got:
         by_q.setdefault(r["query_id"], []).append((r["doc_id"], r["score"]))
-    for qid, q in enumerate(BATCH):
+    for qid, q in enumerate(QUERIES):
         single = [(r["doc_id"], r["score"]) for r in index.search(q, k=10, mode="kernel").collect()]
         batch = sorted(by_q.get(qid, []), key=lambda t: (-t[1], t[0]))
         assert batch == single, f"batch/single divergence for {q!r}"
@@ -36,11 +26,11 @@ def test_batch_empty_and_absent(index):
 def test_match_many_equals_single_match(index):
     from bitfunnel_spark.plans.batch import match_many
 
-    got = match_many(index, BATCH).collect()
+    got = match_many(index, QUERIES).collect()
     by_q = {}
     for r in got:
         by_q.setdefault(r["query_id"], []).append(r["doc_id"])
-    for qid, q in enumerate(BATCH):
+    for qid, q in enumerate(QUERIES):
         single = sorted(r["doc_id"] for r in index.match(q).collect())
         assert sorted(by_q.get(qid, [])) == single, f"match_many mismatch for {q!r}"
     # disjoint groups: no duplicate (query, doc) pairs

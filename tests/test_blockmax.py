@@ -51,6 +51,21 @@ def test_multi_term_topk_parity(tiny_block_index, q, k):
     assert a == b
 
 
+@pytest.mark.parametrize("k", [3, 10])
+def test_search_many_matches_single_under_pruning(tiny_block_index, k):
+    """A batch is the same kernel as a single query: with blocks small
+    enough for pruning to engage, every query of the log (single terms
+    included) ranks exactly as its own kernel-path search."""
+    queries = ["data", "the", "dup", *MULTI_QUERIES, "data -slow", '"batch batch"']
+    by_q: dict = {}
+    for r in tiny_block_index.search_many(queries, k=k).collect():
+        by_q.setdefault(r["query_id"], []).append((r["doc_id"], r["score"]))
+    for qid, q in enumerate(queries):
+        single = [(r["doc_id"], r["score"]) for r in
+                  tiny_block_index.search(q, k=k, mode="kernel").collect()]
+        assert sorted(by_q.get(qid, []), key=lambda t: (-t[1], t[0])) == single, q
+
+
 def _biggest_group_raw(index, stream_terms):
     """raw dict ({(stream, term): rows}) for the (shard, slice) group holding
     the most blocks of the given terms — a unit harness for the wand kernels."""

@@ -82,3 +82,112 @@ def test_profile_many_rejects_non_prunable_similarity(prof_index):
 
     with pytest.raises(ValueError):
         profile_many(prof_index, ["data"], k=3, similarity="classic")
+
+
+# ---------------------------------------------------------------------------
+# profiling runs the production kernel: same restrictions, same phrase
+# routing, same result volume as search
+
+TOMBSTONED_QUERIES = ["data fast", "dup | vector", "data -slow"]
+
+
+@pytest.fixture(scope="module")
+def tombstoned_index(prof_index):
+    """prof_index with every doc matched by TOMBSTONED_QUERIES deleted."""
+    import dataclasses
+
+    victims = {
+        r["doc_id"] for q in TOMBSTONED_QUERIES for r in prof_index.match(q).collect()
+    }
+    assert victims
+    return dataclasses.replace(prof_index, tombstones=frozenset(victims))
+
+
+@pytest.fixture(scope="module")
+def gram_index(spark, corpus):
+    from bitfunnel_spark import BuildConfig, FullTextIndex
+
+    return FullTextIndex.build_fused(
+        spark, corpus, BuildConfig(n_slices=4, block_size=8, max_gram_size=2)
+    )
+
+
+def _profile_rows(index, queries, k):
+    from pyspark.sql import functions as F
+
+    from bitfunnel_spark.plans.profile import profile_many
+
+    metrics, _ = profile_many(index, queries, k=k)
+    agg = metrics.groupBy("query_id").agg(F.sum("rows").alias("rows")).collect()
+    return {r["query_id"]: r["rows"] for r in agg}
+
+
+def _search_rows(index, queries, k):
+    out: dict = {}
+    for r in index.search_many(queries, k=k).collect():
+        out[r["query_id"]] = out.get(r["query_id"], 0) + 1
+    return out
+
+
+def test_profile_honours_tombstones(tombstoned_index):
+    """Profiles count the execution that runs: with every matched doc
+    tombstoned, search_many returns nothing and profile_many reports 0
+    rows per query."""
+    assert _search_rows(tombstoned_index, TOMBSTONED_QUERIES, 10) == {}
+    got = _profile_rows(tombstoned_index, TOMBSTONED_QUERIES, 10)
+    assert got == {qid: 0 for qid in range(len(TOMBSTONED_QUERIES))}
+
+
+@pytest.mark.parametrize(
+    "case, queries",
+    [
+        ("tombstoned", TOMBSTONED_QUERIES + ["the"]),
+        ("grams", ['"batch batch"', '"batch batch" data', 'data -"slow sort"']),
+    ],
+)
+def test_profile_rows_equal_search_rows(request, case, queries):
+    """Per query, profiled rows equal search_many rows (k covers every match
+    so no per-group top-k truncates): profiling plans restrictions and
+    phrases — gram-eligible ones from the gram posting list — as search
+    does."""
+    index = request.getfixturevalue("tombstoned_index" if case == "tombstoned" else "gram_index")
+    k = index.n_docs
+    want = _search_rows(index, queries, k)
+    got = _profile_rows(index, queries, k)
+    assert want, case
+    assert {q: n for q, n in got.items() if n} == want
+
+
+def test_restricted_copy_refused_on_every_path(prof_index):
+    """An index copy carrying a doc-metadata restriction is refused with
+    the same ValueError by the single, batch, match and profile paths —
+    none of them may silently return unrestricted results."""
+    import dataclasses
+
+    from bitfunnel_spark.plans.batch import match_many, search_many
+    from bitfunnel_spark.plans.kernel import search_kernel
+    from bitfunnel_spark.plans.profile import profile_many
+
+    idx = dataclasses.replace(prof_index)
+    idx._restrict_docs = prof_index.doc_stats.select("doc_id").limit(5)
+    with pytest.raises(ValueError) as single:
+        search_kernel(idx, "data", k=3)
+    for run in (
+        lambda: search_many(idx, ["data"], k=3),
+        lambda: match_many(idx, ["data"]),
+        lambda: profile_many(idx, ["data"], k=3)[0],
+    ):
+        with pytest.raises(ValueError) as err:
+            run().collect()
+        assert str(err.value) == str(single.value)
+
+
+def test_profile_reads_gram_postings(gram_index):
+    """A gram-eligible phrase is profiled through its gram posting list, as
+    search reads it: its block footprint is the constituent's blocks plus
+    the gram term's."""
+    from bitfunnel_spark.plans.profile import profile_many, summarize
+
+    metrics, _ = profile_many(gram_index, ["batch", '"batch batch"'], k=10)
+    rows = {r["query_id"]: r for r in summarize(metrics).collect()}
+    assert rows[1]["blocks_total"] > rows[0]["blocks_total"] > 0
