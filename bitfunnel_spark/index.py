@@ -141,20 +141,27 @@ class FullTextIndex:
         """{(stream, term): collection term frequency} for a query's keys —
         the Lucene totalTermFreq statistic, needed by LM similarities
         (plans/scoring.py). Aggregated per query from the postings table:
-        the `(stream, term) IN` predicate prunes the scan to just the
-        query's terms, the agg returns ≤ |terms| rows — a point lookup at
-        any corpus size (the dictionary intentionally doesn't denormalize
-        ctf; queries carrying it are rare)."""
-        pairs = sorted({(s, t) for s, t in terms})
-        key_col = F.concat_ws(":", F.col("stream"), F.col("term"))
+        plain `stream IN` and `term IN` column predicates (pushed down to
+        the scan — no computed-column key) prune it to the query's terms,
+        the agg returns ≤ |streams|·|terms| rows, and only the requested
+        (stream, term) pairs are kept — a point lookup at any corpus size
+        (the dictionary intentionally doesn't denormalize ctf; queries
+        carrying it are rare)."""
+        pairs = {(s, t) for s, t in terms}
         rows = (
-            self.postings.withColumn("key", key_col)
-            .filter(F.col("key").isin([f"{s}:{t}" for s, t in pairs]))
+            self.postings.filter(
+                F.col("stream").isin(sorted({s for s, _ in pairs}))
+                & F.col("term").isin(sorted({t for _, t in pairs}))
+            )
             .groupBy("stream", "term")
             .agg(F.sum("tf").alias("ctf"))
             .collect()
         )
-        return {(r["stream"], r["term"]): int(r["ctf"]) for r in rows}
+        return {
+            (r["stream"], r["term"]): int(r["ctf"])
+            for r in rows
+            if (r["stream"], r["term"]) in pairs
+        }
 
     def body_total_tokens(self) -> int:
         """Total body tokens (Lucene sumTotalTermFreq of the body field) —

@@ -699,7 +699,9 @@ def search_dsl(index, body: dict, k: int = 10, mode: str = "kernel"):
     have no single match node to re-rank or page — and all four compose
     with the doc-metadata restriction plan (`range` in bool.filter /
     must_not, `post_filter`): the restriction rides an index copy's
-    ambient `_restrict_docs` semi-join on the declarative executor."""
+    ambient `_restrict_docs`, which both executors honour — the kernel as
+    per-(shard, slice) allow arrays, the declarative executor as a
+    semi-join."""
     if "suggest" in body:
         _require("query" not in body,
                  "suggest-only bodies supported (no query alongside)")
@@ -797,18 +799,15 @@ def search_dsl(index, body: dict, k: int = 10, mode: str = "kernel"):
     if ranges or negs or post_filter is not None:
         # Doc-metadata restriction plan (ES range filters in bool.filter;
         # post_filter): the text query compiles and scores as usual; the
-        # restriction ANDs in as a semi-join on the scored match set BEFORE
-        # top-k (executor `restrict` — Catalyst broadcasts narrow doc sets,
-        # shuffle-joins broad ones; no driver-resident array, no size cap).
-        # Runs on the declarative executor — both executors are
-        # rank-identical by contract, and a metadata predicate is a column
-        # predicate only where postings are columnar rows. Composes with
-        # collapse / search_after / sort / highlight by attaching the
-        # restriction ambiently to an index COPY (`_restrict_docs`, the
-        # run_aggs mechanism — executor._matched is the one dataframe
-        # match surface all four routes ride), then falling through to
-        # their branches below; mutual-exclusion rules AMONG those four
-        # stay the branches' own.
+        # restriction ANDs into the match set BEFORE top-k. It attaches
+        # ambiently to an index COPY (`_restrict_docs`, the run_aggs
+        # mechanism) and the body falls through to its route below: the
+        # kernel (plain hits, search_after, highlight, explain, rescore's
+        # window in mode="kernel") cogroups it into per-(shard, slice)
+        # allow arrays; collapse / sort / the combinators ride
+        # executor._matched, which semi-joins it. Neither side collects a
+        # doc array to the driver or caps its size. Mutual-exclusion
+        # rules AMONG the routes stay the branches' own.
         if (ranges or negs) and not residual:
             raise DslError(
                 "a bool of only metadata filters has no scoring query: use "
@@ -821,13 +820,13 @@ def search_dsl(index, body: dict, k: int = 10, mode: str = "kernel"):
             _require(kind0 not in _FILTER_ONLY_KINDS,
                      "post_filter needs a scoring query, not a "
                      "filter-only kind (fold the filter into the query)")
-            # combinator kinds whose executors ride the declarative match
-            # surface end-to-end (scored_matches / index.match /
-            # index.search in dataframe mode) compose with the restriction
-            # via the ambient channel below; the positional/kernel-pinned
-            # ones (span_*, intervals, sparse_vector, pinned,
-            # more_like_this) reject HERE with a pointed message rather
-            # than surfacing the kernel's restricted-copy refusal later
+            # combinator kinds whose executors ride the engine's match
+            # surfaces end-to-end (scored_matches / index.match /
+            # index.search) compose with the restriction via the ambient
+            # channel below; the positional/kernel-pinned ones (span_*,
+            # intervals, sparse_vector, pinned, more_like_this) read
+            # postings or positions directly, bypass `_restrict_docs`,
+            # and reject HERE with a pointed message
             _require(kind0 not in set(_COMBINATOR_KINDS)
                      - set(_RESTRICT_COMBINATORS),
                      f"{kind0} does not compose with the restriction plan "
@@ -841,18 +840,17 @@ def search_dsl(index, body: dict, k: int = 10, mode: str = "kernel"):
                 pf, "doc_id", "left_semi"
             )
         # ONE restriction channel for every downstream route, including
-        # the plain-hits tail: the restriction attaches to an index copy
-        # as the ambient `_restrict_docs` semi-join (applied by
-        # executor._matched, the one dataframe match surface) and the
-        # body falls through. The kernel executor refuses restricted
-        # copies loudly, so mode pins the (rank-identical) declarative
-        # executor.
+        # the plain-hits tail: the caller's `mode` picks the executor
         import dataclasses as _dc
 
+        if mode == "kernel" and index.segments is None:
+            # build the segment store once on the served index — the
+            # kernel would otherwise encode (and cache) a fresh one on
+            # every request's throwaway copy
+            index.build_segments()
         index = _dc.replace(index)
         index._restrict_docs = restrict
         query = node_query
-        mode = "dataframe"
     if explain_flag:
         # ES "explain": true — per-hit score breakdown. ES nests an
         # explanation object under every hit; this engine's flattened
@@ -927,7 +925,7 @@ def search_dsl(index, body: dict, k: int = 10, mode: str = "kernel"):
             window_size=window,
             query_weight=float(rq.get("query_weight", 1.0)),
             rescore_weight=float(rq.get("rescore_query_weight", 1.0)),
-            score_mode=score_mode, k=fetch_k,
+            score_mode=score_mode, k=fetch_k, mode=mode,
         )
         return _fetch_source(index, _page(hits), source)
     if search_after is not None:
@@ -1887,8 +1885,7 @@ def run_aggs(index, body: dict, k: int = 10):
             # out of bool.filter and attach the doc-metadata restriction
             # to an index COPY as `_restrict_docs` — executor._matched
             # (the one dataframe match surface every serving agg rides)
-            # semi-joins it in; the kernel path refuses such copies
-            # loudly. The `global` agg still escapes the FULL query
+            # semi-joins it in. The `global` agg still escapes the FULL query
             # context including these filters (ES semantics) because it
             # never touches the match set.
             residual, ranges, negs = _pop_bool_ranges(query["bool"])

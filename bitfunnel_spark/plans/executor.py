@@ -299,8 +299,8 @@ def _matched(
     # filters without threading a parameter through each op; _matched is
     # the one dataframe match surface, so applying it here covers
     # index.match, scored_matches, and search_dataframe alike. The kernel
-    # executor refuses such copies loudly (kernel._descriptor) rather
-    # than silently ignoring the filter.
+    # executor applies the same restriction as per-group allow arrays
+    # (kernel.run_log).
     amb = getattr(index, "_restrict_docs", None)
     if amb is not None:
         hits = hits.join(amb.select("doc_id"), "doc_id", "left_semi")

@@ -810,7 +810,7 @@ def rescore(
     index, query: str, rescore_query: str, window_size: int = 100,
     query_weight: float = 1.0, rescore_weight: float = 1.0,
     score_mode: str = "total", k: int = 10,
-    facts: list[str] | None = None,
+    facts: list[str] | None = None, mode: str = "dataframe",
 ) -> DataFrame:
     """ES ``rescore`` (Lucene QueryRescorer): re-rank ONLY the top
     ``window_size`` docs of ``query`` by combining their primary score
@@ -823,7 +823,8 @@ def rescore(
     (TakeOrderedAndProject at window_size); the window — k-scale rows —
     then broadcast-joins the rescore arm's scored match set, so the
     expensive second query runs ONCE regardless of window size and the
-    re-sort touches only window_size rows.
+    re-sort touches only window_size rows. ``mode`` picks the executor
+    of the window cut (index.search's modes, rank-identical).
     """
     if score_mode not in _RESCORE_MODES:
         raise ValueError(f"unknown score_mode {score_mode!r}")
@@ -831,7 +832,7 @@ def rescore(
 
     from bitfunnel_spark.plans.executor import scored_matches
 
-    win = index.search(query, k=int(window_size), facts=facts).select(
+    win = index.search(query, k=int(window_size), mode=mode, facts=facts).select(
         "doc_id", F.col("score").alias("p")
     )
     sec = scored_matches(index, rescore_query, facts).select(

@@ -19,8 +19,9 @@ both sides alike; T is the ``run_seconds`` that BENCHMARK.json fixes.
 The script only invokes perfbench; it changes nothing under it. For
 every end-to-end metric BENCHMARK.json declares it prints each side's
 median and quartiles (``statistics.quantiles(n=4)``), the median
-relative change, and on how many pairs HEAD was better. A run that
-fails its oracle gate or exits non-zero is reported, not hidden.
+relative change, on how many pairs HEAD was better, and a verdict (see
+``verdict``). A run that fails its oracle gate or exits non-zero is
+reported, not hidden.
 """
 
 from __future__ import annotations
@@ -75,6 +76,34 @@ def quartiles(values: list[float]) -> tuple[float, float, float]:
     return q1, q2, q3
 
 
+def verdict(base: list[float], head: list[float], better: str, bound: float) -> str:
+    """The A/B verdict for one metric over interleaved pairs
+    (``base[i]`` and ``head[i]`` ran back to back):
+
+    - ``gain``: HEAD is better on at least 9 of 10 pairs (ties count for
+      neither side) and the medians differ, in HEAD's favour, by more than
+      the base runs' interquartile range;
+    - ``regression``: the HEAD median is worse than the base median by more
+      than ``bound`` (a fraction of the base median);
+    - ``unresolved``: the base runs spread (IQR over median) wider than
+      ``bound`` and not every HEAD run beats every base run;
+    - ``no change``: otherwise."""
+    lower = better == "lower"
+    sign = 1.0 if lower else -1.0  # sign * (base - head) > 0 means HEAD is better
+    n = len(base)
+    wins = sum(sign * (a - b) > 0 for a, b in zip(base, head))
+    bq1, bmed, bq3 = quartiles(base)
+    hmed = quartiles(head)[1]
+    if 10 * wins >= 9 * n and sign * (bmed - hmed) > bq3 - bq1:
+        return "gain"
+    if sign * (hmed - bmed) > bound * abs(bmed):
+        return "regression"
+    head_beats_all = (max(head) < min(base)) if lower else (min(head) > max(base))
+    if (bq3 - bq1) > bound * abs(bmed) and not head_beats_all:
+        return "unresolved"
+    return "no change"
+
+
 def summarize(metrics: list[dict], pairs: list[tuple[dict, dict]]) -> list[dict]:
     rows = []
     for m in metrics:
@@ -97,6 +126,7 @@ def summarize(metrics: list[dict], pairs: list[tuple[dict, dict]]) -> list[dict]
             "head_median": hq[1], "head_q1": hq[0], "head_q3": hq[2],
             "change": (hq[1] - bq[1]) / bq[1] if bq[1] else 0.0,
             "head_wins": wins,
+            "verdict": verdict(base, head, m["better"], m["bound"]),
         })
     return rows
 
@@ -136,13 +166,15 @@ def main(argv=None) -> int:
     rows = summarize(metrics, pairs)
     print(f"A/B {args.workload}: base {args.base} vs head {args.head}, "
           f"{args.pairs} interleaved pairs, seeds {args.seed}..{args.seed + args.pairs - 1}")
-    print("| metric | base median [Q1, Q3] | head median [Q1, Q3] | change | head better | bound |")
-    print("|---|---|---|---|---|---|")
+    print("| metric | base median [Q1, Q3] | head median [Q1, Q3] | change "
+          "| head better | bound | verdict |")
+    print("|---|---|---|---|---|---|---|")
     for r in rows:
         print(f"| `{r['metric']}` ({r['unit']}) "
               f"| {r['base_median']:.4g} [{r['base_q1']:.4g}, {r['base_q3']:.4g}] "
               f"| {r['head_median']:.4g} [{r['head_q1']:.4g}, {r['head_q3']:.4g}] "
-              f"| {r['change']:+.1%} | {r['head_wins']}/{r['n']} | {r['bound']} |")
+              f"| {r['change']:+.1%} | {r['head_wins']}/{r['n']} | {r['bound']} "
+              f"| {r['verdict']} |")
     for side in ("base", "head"):
         bad = [p[side] for p in runs if p[side]["exit"] or not p[side].get("correct")]
         failed = sum(p[side].get("failed") or 0 for p in runs)

@@ -66,6 +66,21 @@ def test_search_many_matches_single_under_pruning(tiny_block_index, k):
         assert sorted(by_q.get(qid, []), key=lambda t: (-t[1], t[0])) == single, q
 
 
+def test_restrict_empty_allow_keeps_nothing():
+    """wand.restrict: allow=None is unrestricted; an empty allow array (a
+    restriction no doc passes) keeps nothing; deny masks either way."""
+    import numpy as np
+
+    from bitfunnel_spark.plans.wand import restrict
+
+    cand = np.array([2, 5, 9], dtype=np.int64)
+    empty = np.empty(0, dtype=np.int64)
+    assert restrict(cand, None, None).tolist() == [2, 5, 9]
+    assert restrict(cand, empty, None).tolist() == []
+    assert restrict(cand, np.array([5, 9, 11]), np.array([9])).tolist() == [5]
+    assert restrict(empty, np.array([5]), None).tolist() == []
+
+
 def _biggest_group_raw(index, stream_terms):
     """raw dict ({(stream, term): rows}) for the (shard, slice) group holding
     the most blocks of the given terms — a unit harness for the wand kernels."""

@@ -158,28 +158,78 @@ def test_profile_rows_equal_search_rows(request, case, queries):
     assert {q: n for q, n in got.items() if n} == want
 
 
-def test_restricted_copy_refused_on_every_path(prof_index):
-    """An index copy carrying a doc-metadata restriction is refused with
-    the same ValueError by the single, batch, match and profile paths —
-    none of them may silently return unrestricted results."""
+RESTRICTED_QUERIES = ["data", "data fast", "dup | vector", "data -slow", '"batch batch" data']
+
+
+def _restricted(index, case):
+    """(index copy, facts) carrying one doc-metadata restriction case:
+    a doclen range, an ids set, an empty restriction, range ∩ tombstones,
+    range ∩ a driver-array fact set."""
     import dataclasses
 
-    from bitfunnel_spark.plans.batch import match_many, search_many
-    from bitfunnel_spark.plans.kernel import search_kernel
-    from bitfunnel_spark.plans.profile import profile_many
+    from pyspark.sql import functions as F
 
-    idx = dataclasses.replace(prof_index)
-    idx._restrict_docs = prof_index.doc_stats.select("doc_id").limit(5)
-    with pytest.raises(ValueError) as single:
-        search_kernel(idx, "data", k=3)
-    for run in (
-        lambda: search_many(idx, ["data"], k=3),
-        lambda: match_many(idx, ["data"]),
-        lambda: profile_many(idx, ["data"], k=3)[0],
-    ):
-        with pytest.raises(ValueError) as err:
-            run().collect()
-        assert str(err.value) == str(single.value)
+    in_range = index.doc_stats.filter(
+        (F.col("doclen") >= 40) & (F.col("doclen") <= 200)).select("doc_id")
+    data_ids = sorted(r[0] for r in index.match("data").collect())
+    facts = None
+    idx = dataclasses.replace(index)
+    if case == "range":
+        idx._restrict_docs = in_range
+    elif case == "ids":
+        idx._restrict_docs = index.corpus.select("doc_id").filter(
+            F.col("doc_id").isin(data_ids[::3]))
+    elif case == "empty":
+        idx._restrict_docs = index.doc_stats.filter(F.lit(False)).select("doc_id")
+    elif case == "tombstones":
+        idx = dataclasses.replace(index, tombstones=frozenset(data_ids[::2]))
+        idx._restrict_docs = in_range
+    else:  # facts
+        even = index.corpus.filter(F.col("doc_id") % 2 == 0).select("doc_id")
+        idx = dataclasses.replace(index, facts={**index.facts, "even": even})
+        idx._restrict_docs = in_range
+        facts = ["even"]
+    return idx, facts
+
+
+@pytest.mark.parametrize("case", ["range", "ids", "empty", "tombstones", "facts"])
+@pytest.mark.parametrize("index_name", ["index", "prof_index"])
+def test_restriction_honoured_on_every_path(request, index_name, case):
+    """An index copy carrying a doc-metadata restriction is served by the
+    single, batch, match and profile paths of the kernel, each equal to the
+    declarative executor under the same restriction. prof_index is the
+    block_size=8 fused index (test_blockmax's shape), so block-max
+    thresholds run with an allow array; ``index`` is the row-form build."""
+    from bitfunnel_spark.plans.batch import match_many, search_many
+    from bitfunnel_spark.plans.kernel import match_kernel, search_kernel
+
+    idx, facts = _restricted(request.getfixturevalue(index_name), case)
+    top, matched = {}, {}
+    for qid, q in enumerate(RESTRICTED_QUERIES):
+        top[qid] = [(r.doc_id, r.score)
+                    for r in idx.search(q, k=10, mode="dataframe", facts=facts).collect()]
+        matched[qid] = sorted(r.doc_id for r in idx.match(q, facts=facts).collect())
+        got = [(r.doc_id, r.score) for r in search_kernel(idx, q, k=10, facts=facts).collect()]
+        assert got == top[qid], q
+        assert sorted(r.doc_id for r in match_kernel(idx, q, facts).collect()) == matched[qid], q
+    many: dict = {}
+    for r in search_many(idx, RESTRICTED_QUERIES, k=10, facts=facts).collect():
+        many.setdefault(r.query_id, []).append((r.doc_id, r.score))
+    assert {q: sorted(v, key=lambda t: (-t[1], t[0])) for q, v in many.items()} == {
+        q: v for q, v in top.items() if v}
+    sets: dict = {}
+    for r in match_many(idx, RESTRICTED_QUERIES, facts=facts).collect():
+        sets.setdefault(r.query_id, []).append(r.doc_id)
+    assert {q: sorted(v) for q, v in sets.items()} == {q: v for q, v in matched.items() if v}
+    if facts is None:  # profile_many takes no fact sets
+        # k covers every match, so per-group rows sum to the match-set size
+        got = _profile_rows(idx, RESTRICTED_QUERIES, idx.n_docs)
+        assert {q: n for q, n in got.items() if n} == {
+            q: len(v) for q, v in matched.items() if v}
+    if case == "empty":
+        assert not any(matched.values())
+    else:
+        assert any(matched.values())  # the case exercises a non-empty result
 
 
 def test_profile_reads_gram_postings(gram_index):

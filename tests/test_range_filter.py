@@ -1,6 +1,8 @@
 """ES `range` filters, `post_filter`, and collapse `inner_hits` — the
 doc-metadata restriction plan (plans/dsl._pop_bool_ranges / _range_doc_ids →
-executor `restrict` semi-join) and the per_group collapse routing.
+an index copy's `_restrict_docs`, served as per-(shard, slice) allow arrays
+by the kernel and as a semi-join by the declarative executor) and the
+per_group collapse routing.
 
 Reference parity anchor: the reference restricts match sets with fact rows
 ANDed into the plan (inc/BitFunnel/IFactSet.h); a metadata range is the
@@ -12,6 +14,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from bitfunnel_spark.plans.dsl import DslError, count_dsl, search_dsl
+
+# both executors serve the restriction plan; every composed route must give
+# the same hits whichever one the caller picks
+MODES = ("kernel", "dataframe")
 
 
 def _range_ids(index, lo=None, hi=None, col="doclen"):
@@ -43,9 +49,12 @@ def test_range_in_bool_filter_equals_manual_restriction(index):
     assert got  # the bounds must actually select something at this SF
 
 
-def test_range_restricts_before_topk(index):
+def test_range_restricts_before_topk(index, duck):
     # the page is the top of the FILTERED set — docs outside the range
     # never crowd the page (filter-then-rank, not rank-then-filter)
+    from bitfunnel_spark.plans.dsl import compile_dsl
+    from bitfunnel_spark.plans.oracle import oracle_search_sql
+
     base = _full_ranking(index, "data")
     ok = _range_ids(index, 40, 200)
     excluded_top = [d for d, _ in base[:10] if d not in ok]
@@ -55,9 +64,17 @@ def test_range_restricts_before_topk(index):
         "must": [{"match": {"body": "data"}}],
         "filter": [{"range": {"doclen": {"gte": 40, "lte": 200}}}]}},
         "size": 10}
-    got_ids = [r.doc_id for r in search_dsl(index, body).collect()]
-    assert not set(excluded_top) & set(got_ids)
-    assert len(got_ids) == min(10, len([d for d, _ in base if d in ok]))
+    where = ("h.doc_id IN (SELECT doc_id FROM dl "
+             "WHERE doclen >= 40 AND doclen <= 200)")
+    oracle = [tuple(r) for r in duck.execute(oracle_search_sql(
+        compile_dsl({"match": {"body": "data"}}), k=10,
+        extra_where=where)).fetchall()]
+    for mode in MODES:
+        got = [(r.doc_id, r.score) for r in search_dsl(index, body, mode=mode).collect()]
+        got_ids = [d for d, _ in got]
+        assert not set(excluded_top) & set(got_ids), mode
+        assert len(got_ids) == min(10, len([d for d, _ in base if d in ok])), mode
+        assert got == oracle, mode
 
 
 def test_range_open_bounds_and_doc_id_field(index):
@@ -126,16 +143,17 @@ def test_count_with_range(index):
 def test_post_filter_restricts_hits(index):
     body = {"query": {"match": {"body": "data"}},
             "post_filter": {"range": {"doc_id": {"lt": 120}}}, "size": 8}
-    got = [(r.doc_id, r.score) for r in search_dsl(index, body).collect()]
-    expect = [(d, s) for d, s in _full_ranking(index, "data") if d < 120][:8]
-    assert got == expect
-    # post_filter accepts the other filter kinds too (exists/term routes)
     body2 = {"query": {"match": {"body": "data"}},
              "post_filter": {"term": {"lang": "en"}}, "size": 5}
     en = {r[0] for r in index.corpus.filter(F.col("lang") == "en")
           .select("doc_id").collect()}
-    got2 = [r.doc_id for r in search_dsl(index, body2).collect()]
-    assert got2 == [d for d, _ in _full_ranking(index, "data") if d in en][:5]
+    expect = [(d, s) for d, s in _full_ranking(index, "data") if d < 120][:8]
+    for mode in MODES:
+        got = [(r.doc_id, r.score) for r in search_dsl(index, body, mode=mode).collect()]
+        assert got == expect, mode
+        # post_filter accepts the other filter kinds too (exists/term routes)
+        got2 = [r.doc_id for r in search_dsl(index, body2, mode=mode).collect()]
+        assert got2 == [d for d, _ in _full_ranking(index, "data") if d in en][:5], mode
 
 
 def test_post_filter_composes_with_range(index):
@@ -143,11 +161,12 @@ def test_post_filter_composes_with_range(index):
         "must": [{"match": {"body": "data"}}],
         "filter": [{"range": {"doclen": {"gte": 20}}}]}},
         "post_filter": {"range": {"doc_id": {"lt": 300}}}, "size": 6}
-    got = [r.doc_id for r in search_dsl(index, body).collect()]
     ok = _range_ids(index, lo=20)
     expect = [d for d, _ in _full_ranking(index, "data")
               if d in ok and d < 300][:6]
-    assert got == expect
+    for mode in MODES:
+        got = [r.doc_id for r in search_dsl(index, body, mode=mode).collect()]
+        assert got == expect, mode
 
 
 def test_collapse_inner_hits_per_group(index):
@@ -287,15 +306,21 @@ def test_aggs_compose_with_range_filter(index):
     assert g.n_docs == index.corpus.count()
 
 
-def test_restricted_copy_refuses_kernel(index):
+def test_restricted_copy_runs_on_kernel(index):
     import dataclasses
 
     from bitfunnel_spark.plans.dsl import run_aggs
 
+    # an index copy carrying a doc-metadata restriction is served by both
+    # executors: the page is the top of the allowed docs
+    ranking = [r.doc_id for r in index.search("data", k=20, mode="dataframe").collect()]
+    allowed = ranking[1::2]
     idx2 = dataclasses.replace(index)
-    idx2._restrict_docs = index.doc_stats.select("doc_id").limit(5)
-    with pytest.raises(ValueError, match="declarative executor"):
-        idx2.search("data", k=3, mode="kernel").collect()
+    idx2._restrict_docs = index.doc_stats.filter(
+        F.col("doc_id").isin(allowed)).select("doc_id")
+    for mode in MODES:
+        got = [r.doc_id for r in idx2.search("data", k=3, mode=mode).collect()]
+        assert got == allowed[:3], mode
     # and run_aggs rejects a pure-range query (no match clause)
     with pytest.raises(DslError, match="match\\s+query alongside|match query"):
         run_aggs(index, {"query": {"bool": {"filter":
@@ -369,10 +394,11 @@ def test_range_composes_with_collapse(index):
             seen.add(repo[d])
             best.append((d, s, repo[d]))
     expect = best[:5]
-    got = [(r.doc_id, r.score, r.repo) for r in search_dsl(
-        index, {"query": _RANGE_BODY, "collapse": {"field": "repo"},
-                "size": 5}).collect()]
-    assert got == expect
+    for mode in MODES:
+        got = [(r.doc_id, r.score, r.repo) for r in search_dsl(
+            index, {"query": _RANGE_BODY, "collapse": {"field": "repo"},
+                    "size": 5}, mode=mode).collect()]
+        assert got == expect, mode
     # every collapsed hit obeys the range
     assert got and all(d in ok for d, _, _ in got)
     # and the restriction actually changed at least one group winner vs
@@ -395,11 +421,12 @@ def test_range_composes_with_collapse_inner_hits(index):
         if per.setdefault(repo[d], 0) < 2:
             per[repo[d]] += 1
             expect.append((d, s, repo[d]))
-    got = [(r.doc_id, r.score, r.repo) for r in search_dsl(
-        index, {"query": _RANGE_BODY,
-                "collapse": {"field": "repo", "inner_hits": {"size": 2}},
-                "size": 8}).collect()]
-    assert got == expect[:8]
+    for mode in MODES:
+        got = [(r.doc_id, r.score, r.repo) for r in search_dsl(
+            index, {"query": _RANGE_BODY,
+                    "collapse": {"field": "repo", "inner_hits": {"size": 2}},
+                    "size": 8}, mode=mode).collect()]
+        assert got == expect[:8], mode
 
 
 def test_range_composes_with_search_after(index):
@@ -407,14 +434,16 @@ def test_range_composes_with_search_after(index):
     restricted = [(d, s) for d, s in _full_ranking(index, "data") if d in ok]
     if len(restricted) < 6:
         pytest.skip("not enough restricted matches at this SF")
-    p1 = [(r.doc_id, r.score) for r in search_dsl(
-        index, {"query": _RANGE_BODY, "size": 3}).collect()]
-    cursor = [p1[-1][1], p1[-1][0]]
-    p2 = [(r.doc_id, r.score) for r in search_dsl(
-        index, {"query": _RANGE_BODY, "search_after": cursor,
-                "size": 3}).collect()]
-    assert p1 + p2 == restricted[:6]  # pages exactly partition the
-    # RESTRICTED ranking — the cursor never resurrects out-of-range docs
+    for mode in MODES:
+        p1 = [(r.doc_id, r.score) for r in search_dsl(
+            index, {"query": _RANGE_BODY, "size": 3}, mode=mode).collect()]
+        cursor = [p1[-1][1], p1[-1][0]]
+        p2 = [(r.doc_id, r.score) for r in search_dsl(
+            index, {"query": _RANGE_BODY, "search_after": cursor,
+                    "size": 3}, mode=mode).collect()]
+        # pages exactly partition the RESTRICTED ranking — the cursor
+        # never resurrects out-of-range docs
+        assert p1 + p2 == restricted[:6], mode
 
 
 def test_range_composes_with_sort(index):
@@ -423,11 +452,12 @@ def test_range_composes_with_sort(index):
     dl = {r.doc_id: r.doclen
           for r in index.doc_stats.select("doc_id", "doclen").collect()}
     expect = sorted(((dl[d], d) for d in matched & ok))[:5]
-    got = [(r.doclen, r.doc_id) for r in search_dsl(
-        index, {"query": _RANGE_BODY, "sort": [{"doclen": "asc"}],
-                "size": 5}).collect()]
-    assert got == [(l, d) for l, d in expect]
-    assert all(40 <= l <= 200 for l, _ in got)
+    for mode in MODES:
+        got = [(r.doclen, r.doc_id) for r in search_dsl(
+            index, {"query": _RANGE_BODY, "sort": [{"doclen": "asc"}],
+                    "size": 5}, mode=mode).collect()]
+        assert got == [(l, d) for l, d in expect], mode
+        assert all(40 <= l <= 200 for l, _ in got), mode
 
 
 def test_range_composes_with_highlight(index):
@@ -435,16 +465,17 @@ def test_range_composes_with_highlight(index):
     restricted = [(d, s) for d, s in _full_ranking(index, "data") if d in ok]
     body = {"query": _RANGE_BODY,
             "highlight": {"fields": {"content": {}}}, "size": 5}
-    rows = search_dsl(index, body).collect()
-    assert [(r.doc_id, r.score) for r in rows] == restricted[:5]
     # snippets depend on the doc and the (full-index) term stats only, so
     # the restricted snippet equals the unrestricted one for the same doc
     base = {r.doc_id: r.snippet for r in search_dsl(
         index, {"query": {"match": {"body": "data"}},
                 "highlight": {"fields": {"content": {}}},
                 "size": 10_000}).collect()}
-    assert all(r.snippet == base[r.doc_id] for r in rows)
-    assert any(r.snippet for r in rows)
+    for mode in MODES:
+        rows = search_dsl(index, body, mode=mode).collect()
+        assert [(r.doc_id, r.score) for r in rows] == restricted[:5], mode
+        assert all(r.snippet == base[r.doc_id] for r in rows), mode
+        assert any(r.snippet for r in rows), mode
 
 
 def test_post_filter_composes_with_collapse(index):
@@ -458,11 +489,13 @@ def test_post_filter_composes_with_collapse(index):
         if repo[d] not in seen:
             seen.add(repo[d])
             best.append((d, s, repo[d]))
-    got = [(r.doc_id, r.score, r.repo) for r in search_dsl(
-        index, {"query": {"match": {"body": "data"}},
-                "post_filter": {"range": {"doc_id": {"lt": 150}}},
-                "collapse": {"field": "repo"}, "size": 5}).collect()]
-    assert got == best[:5]
+    for mode in MODES:
+        got = [(r.doc_id, r.score, r.repo) for r in search_dsl(
+            index, {"query": {"match": {"body": "data"}},
+                    "post_filter": {"range": {"doc_id": {"lt": 150}}},
+                    "collapse": {"field": "repo"}, "size": 5},
+            mode=mode).collect()]
+        assert got == best[:5], mode
 
 
 def test_restriction_composes_with_declarative_combinators(index):
@@ -503,8 +536,23 @@ def test_post_filter_rank_and_distance_feature_standalone(index):
                               "pivot": 10}},
     ]:
         full = search_dsl(index, {"query": q, "size": 10_000}).collect()
-        got = search_dsl(index, {"query": q, "post_filter": pf,
-                                 "size": 10_000}).collect()
         expect = [(r.doc_id, r.score) for r in full if r.doc_id < 150]
-        assert [(r.doc_id, r.score) for r in got] == expect and got, q
-        assert len(got) < len(full)  # the restriction actually cut docs
+        for mode in MODES:
+            got = search_dsl(index, {"query": q, "post_filter": pf,
+                                     "size": 10_000}, mode=mode).collect()
+            assert [(r.doc_id, r.score) for r in got] == expect and got, (q, mode)
+            assert len(got) < len(full)  # the restriction actually cut docs
+
+
+def test_rescore_modes_agree(index):
+    # the rescore window cut runs on the caller's executor; both give the
+    # same hits, with and without a range filter
+    rescore = {"window_size": 15, "query": {
+        "rescore_query": {"match": {"content": "fast"}},
+        "query_weight": 0.7, "rescore_query_weight": 1.2}}
+    for query in ({"match": {"body": "data"}}, _RANGE_BODY):
+        body = {"query": query, "rescore": rescore, "size": 6}
+        got = {mode: [(r.doc_id, r.score) for r in
+                      search_dsl(index, body, mode=mode).collect()]
+               for mode in MODES}
+        assert got["kernel"] == got["dataframe"] and got["kernel"], query
