@@ -21,8 +21,14 @@ Layout
 - ``streaming`` incremental ingest (Structured Streaming)
 """
 
+from bitfunnel_spark._worker import install_in_worker
 from bitfunnel_spark.config import BM25Params, BuildConfig
 from bitfunnel_spark.index import FullTextIndex
+
+# Engine UDFs import this package when a Python worker unpickles them:
+# from then on the worker skips re-reading unchanged zip archives on each
+# task (see _worker.py). A no-op on the driver.
+install_in_worker()
 
 __all__ = ["BM25Params", "BuildConfig", "FullTextIndex"]
 __version__ = "0.1.0"

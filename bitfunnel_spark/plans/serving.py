@@ -1328,6 +1328,21 @@ def explain(
     )
 
 
+def rank_window(df: DataFrame, score_col: str, id_col: str,
+                rank_col: str) -> DataFrame:
+    """DataFrame[(id_col, rank_col)]: ranks 1..n of a top-k window in
+    (score desc, id asc) order, as ``row_number`` would give them.
+
+    The ≤k rows are sorted inside one array aggregate instead of a
+    ``row_number`` over an unpartitioned window (a single-partition
+    WindowExec). Sorting (score, -id) descending is score desc, id asc,
+    with null scores last, like the window's ordering."""
+    ordered = F.sort_array(F.collect_list(F.struct(
+        F.col(score_col).alias("s"), (-F.col(id_col)).alias("i"))), asc=False)
+    return df.agg(ordered.alias("a")).select(F.posexplode("a")).select(
+        (-F.col("col.i")).alias(id_col), (F.col("pos") + 1).alias(rank_col))
+
+
 def hybrid_search(
     index, emb: DataFrame, query: str, query_vec_id: int, k: int = 10,
     k_each: int = 20, rrf_k: int = 60, mode: str = "kernel",
@@ -1349,15 +1364,12 @@ def hybrid_search(
     """
     from bitfunnel_spark.operators.similarity import brute_cosine_topk
 
-    bm = index.search(query, k=k_each, mode=mode)
-    w1 = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-    bm = bm.select("doc_id", F.row_number().over(w1).alias("bm25_rank"))
+    bm = rank_window(index.search(query, k=k_each, mode=mode),
+                     "score", "doc_id", "bm25_rank")
     cs = brute_cosine_topk(emb, [int(query_vec_id)], k=k_each,
                            vec_col=vec_col, id_col=id_col)
-    w2 = Window.orderBy(F.desc("cosine"), F.asc("vec_id"))
-    cs = cs.select(
-        F.col("vec_id").alias("doc_id"), F.row_number().over(w2).alias("cos_rank")
-    )
+    cs = rank_window(cs, "cosine", "vec_id", "cos_rank").withColumnRenamed(
+        "vec_id", "doc_id")
     fused = bm.join(cs, "doc_id", "full_outer")
     contrib = lambda r: F.coalesce(1.0 / (F.lit(float(rrf_k)) + F.col(r)), F.lit(0.0))  # noqa: E731
     return (

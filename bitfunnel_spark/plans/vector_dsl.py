@@ -33,7 +33,7 @@ reciprocals computed identically in both engines.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from bitfunnel_spark.operators.similarity import (
@@ -41,6 +41,7 @@ from bitfunnel_spark.operators.similarity import (
     cosine_expr,
 )
 from bitfunnel_spark.plans.dsl import DslError, _require, compile_dsl
+from bitfunnel_spark.plans.serving import rank_window
 
 
 def _vec_literal(qv: list[float]) -> Column:
@@ -282,10 +283,10 @@ def rrf_search(
 
     Any mix of `standard` / `knn` retrievers (>= 2, like ES). Each runs
     through its own engine-native top-window path (BM25 kernel search /
-    exact knn); ranks are row_numbers over each retriever's total
-    (score desc, id asc) order; fusion is a chain of full outer joins of
-    ≤window-row frames — driver-scale frames, broadcast by AQE, no corpus
-    shuffle. Documents outside a retriever's window contribute 0 from
+    exact knn); ranks are 1..n over each retriever's total
+    (score desc, id asc) order (``serving.rank_window``); fusion is a
+    chain of full outer joins of ≤window-row frames — driver-scale
+    frames, broadcast by AQE, no corpus shuffle. Documents outside a retriever's window contribute 0 from
     that retriever (ES contract)."""
     retrievers, rank_constant, window, size = _rrf_spec(body)
 
@@ -293,12 +294,7 @@ def rrf_search(
     for i, (kind, conf) in enumerate(retrievers):
         if kind == "standard":
             hits = index.search(compile_dsl(conf), k=window, mode=mode)
-            ranked.append(hits.select(
-                "doc_id",
-                F.row_number()
-                .over(Window.orderBy(F.desc("score"), F.asc("doc_id")))
-                .alias(f"r_{i}"),
-            ))
+            ranked.append(rank_window(hits, "score", "doc_id", f"r_{i}"))
         else:
             kn = knn_search(emb, {"knn": {
                 "field": conf["field"],
@@ -307,12 +303,8 @@ def rrf_search(
                 "num_candidates": max(conf["num_candidates"], window),
                 **({"filter": conf["filter"]} if conf["filter"] is not None else {}),
             }})
-            ranked.append(kn.select(
-                F.col("vec_id").alias("doc_id"),
-                F.row_number()
-                .over(Window.orderBy(F.desc("cosine"), F.asc("vec_id")))
-                .alias(f"r_{i}"),
-            ))
+            ranked.append(rank_window(kn, "cosine", "vec_id", f"r_{i}")
+                          .withColumnRenamed("vec_id", "doc_id"))
     fused = ranked[0]
     for nxt in ranked[1:]:
         fused = fused.join(nxt, "doc_id", "full_outer")

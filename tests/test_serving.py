@@ -516,6 +516,36 @@ def test_hybrid_rank_semantics(index, spark):
         assert abs(r["rrf"] - round(want, 6)) < 1e-9
 
 
+def unpartitioned_windows(df):
+    """The Window nodes of df's executed plan that have no partition spec.
+    A WindowExec prints as ``Window [exprs], [partition], [order]``, with
+    the empty partition list left out."""
+    found = []
+    for line in df._jdf.queryExecution().executedPlan().toString().splitlines():
+        node = line.lstrip(" +-*()0123456789")
+        if not node.startswith("Window ["):
+            continue
+        depth = groups = 0
+        for ch in node:
+            if ch == "[":
+                groups += depth == 0
+                depth += 1
+            elif ch == "]":
+                depth -= 1
+        if groups < 3:
+            found.append(node)
+    return found
+
+
+def test_hybrid_ranks_without_a_global_window(index, spark):
+    # both ≤k_each-row arms are ranked without a row_number over an
+    # unpartitioned window (a single-partition WindowExec)
+    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    got = serving.hybrid_search(index, emb, "data fast", 7, k=10)
+    assert got.collect()
+    assert unpartitioned_windows(got) == []
+
+
 def test_snippets_with_expansion_query(index, duck):
     # a wildcard query must resolve BEFORE snippet-term ranking — the raw
     # AST holds an unplannable Wildcard node (regression: serving used to

@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 from bitfunnel_spark.operators import similarity
 from bitfunnel_spark.plans.dsl import DslError
 from bitfunnel_spark.plans.vector_dsl import knn_search, rrf_search
+from tests.test_serving import unpartitioned_windows
 
 TESTDATA = "/root/testdata/sf0.001"
 
@@ -151,6 +152,14 @@ def test_rrf_fuses_both_retrievers(spark, index, emb):
     both = set(r_bm) & set(r_kn)
     if both:
         assert any(r.doc_id in both for r in got)
+
+
+def test_rrf_ranks_without_a_global_window(spark, index, emb):
+    # each retriever's ≤window rows are ranked without a row_number over an
+    # unpartitioned window (a single-partition WindowExec)
+    got = rrf_search(index, emb, _rrf_body(_qv(emb), {"match": {"content": "data fast"}}))
+    assert got.collect()
+    assert unpartitioned_windows(got) == []
 
 
 def test_rrf_validation(spark, index, emb):
