@@ -37,7 +37,7 @@ def entry(spark: SparkSession) -> DataFrame:
     from bitfunnel_spark.entry_queries import get_index
 
     idx = get_index(spark, "/root/testdata/sf0.001")
-    return idx.search("data fast -slow", k=10, mode="kernel")
+    return idx.search("data fast -slow", k=10)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

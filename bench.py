@@ -87,7 +87,7 @@ def main() -> None:
     warm = FullTextIndex.build_fused(spark, corpus.filter(F.col("doc_id") < 2000), cfg)
     warm.segments.count()
     warm.key_stats.count()
-    warm.search("data", k=10, mode="kernel").collect()
+    warm.search("data", k=10).collect()
     for df in (warm.doc_stats, warm.key_stats, warm.segments):
         df.unpersist()
 
@@ -119,7 +119,7 @@ def main() -> None:
 
     # warm-up (JVM/Arrow path init — excluded, matches the reference warming
     # its cache before `query log` timings)
-    idx.search("data", k=10, mode="kernel").collect()
+    idx.search("data", k=10).collect()
 
     # per-query and batch timings are best-of-3 passes for the same reason
     # as the build trials (±35% VM noise); the suite clock counts one pass.
@@ -129,7 +129,7 @@ def main() -> None:
         t_pass = time.time()
         for name, q in BENCH_QUERIES:
             tq = time.time()
-            idx.search(q, k=10, mode="kernel").collect()
+            idx.search(q, k=10).collect()
             dt = round(time.time() - tq, 4)
             queries[name] = min(queries.get(name, float("inf")), dt)
         if rep > 0:
@@ -215,7 +215,7 @@ def main() -> None:
         ).collect()[0]
         page_decodes.append({"total": int(row["bt"] or 0), "decoded": int(row["bd"] or 0)})
         hits = (
-            idx_b.search(PAGING_QUERY, k=PRUNE_BATTERY_K, mode="kernel").collect()
+            idx_b.search(PAGING_QUERY, k=PRUNE_BATTERY_K).collect()
             if cursor is None
             else idx_b.search_after(PAGING_QUERY, cursor, k=PRUNE_BATTERY_K).collect()
         )
@@ -252,8 +252,8 @@ def main() -> None:
     grep_sec = min(grep_trials)  # best-of-3: first trial pays one-time codegen
 
     # restriction battery (r05): the doc-metadata restriction plan — an ES
-    # range filter in bool.filter (executor semi-join over the narrow
-    # doc_stats scan), post_filter, and aggs×range through run_aggs.
+    # range filter in bool.filter (kernel allow arrays cogrouped from the
+    # narrow doc_stats scan), post_filter, and aggs×range through run_aggs.
     # Deterministic hit/doc counts recorded so result drift is visible;
     # the timing shows the restriction costs one narrow scan + semi-join
     # on top of the base query.

@@ -17,7 +17,9 @@ Layout
 - ``functions`` tokenizer, cross-engine hashing, text analysis (all JVM-side F.*)
 - ``operators`` build pipeline (statistics, sharding, treatments, postings,
                 codec) and training-data ops (dedup, similarity)
-- ``plans``     query parser → AST → planner → executors (DataFrame + kernel)
+- ``plans``     query parser → AST → planner → the one kernel (plans/kernel.py);
+                plans/executor.py is the declarative reference it is verified
+                against
 - ``streaming`` incremental ingest (Structured Streaming)
 """
 

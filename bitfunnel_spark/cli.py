@@ -80,7 +80,7 @@ def cmd_build(args) -> None:
 def cmd_query(args) -> None:
     spark = _spark(args)
     idx = _load(spark, args)
-    for r in idx.search(args.query, k=args.k, mode=args.mode).collect():
+    for r in idx.search(args.query, k=args.k).collect():
         print(f"{r['doc_id']}\t{r['score']}")
 
 
@@ -98,7 +98,7 @@ def cmd_snippets(args) -> None:
 
     spark = _spark(args)
     idx = _load(spark, args)
-    for r in snippets(idx, args.query, k=args.k, window=args.window, mode=args.mode).collect():
+    for r in snippets(idx, args.query, k=args.k, window=args.window).collect():
         print(f"{r['doc_id']}\t{r['score']}\t{r['snippet']}")
 
 
@@ -107,7 +107,7 @@ def cmd_mlt(args) -> None:
 
     spark = _spark(args)
     idx = _load(spark, args)
-    for r in more_like_this(idx, args.doc_id, k=args.k, m=args.m, mode=args.mode).collect():
+    for r in more_like_this(idx, args.doc_id, k=args.k, m=args.m).collect():
         print(f"{r['doc_id']}\t{r['score']}")
 
 
@@ -131,11 +131,11 @@ def cmd_querylog(args) -> None:
     spark = _spark(args)
     idx = _load(spark, args)
     queries = [l.strip() for l in open(args.log) if l.strip() and not l.startswith("#")]
-    idx.search(queries[0], k=args.k, mode=args.mode).collect()  # warm
+    idx.search(queries[0], k=args.k).collect()  # warm
     rows, t_all = [], time.time()
     for q in queries:
         t0 = time.time()
-        n = len(idx.search(q, k=args.k, mode=args.mode).collect())
+        n = len(idx.search(q, k=args.k).collect())
         rows.append((q, round(time.time() - t0, 4), n))
     elapsed = time.time() - t_all
     print("query\tlatency_sec\tmatches")
@@ -157,12 +157,16 @@ def cmd_querylog(args) -> None:
 
 
 def _verify_one(idx, q: str, k: int) -> dict:
-    """Kernel-vs-DataFrame cross check for one query (MatchVerifier.cpp
-    pattern: the exhaustive evaluation is the truth oracle; for our exact
-    index both must agree EXACTLY — any diff is a bug, unlike the
-    reference's quantified false positives)."""
-    kern = [(r["doc_id"], r["score"]) for r in idx.search(q, k=k, mode="kernel").collect()]
-    base = [(r["doc_id"], r["score"]) for r in idx.search(q, k=k, mode="dataframe").collect()]
+    """Kernel-vs-reference cross check for one query (MatchVerifier.cpp
+    pattern: the exhaustive evaluation — plans/executor.py, the declarative
+    reference — is the truth oracle; for our exact index both must agree
+    EXACTLY — any diff is a bug, unlike the reference's quantified false
+    positives)."""
+    from bitfunnel_spark.plans.executor import search_dataframe
+
+    node, facts = idx._prepared(q, None)
+    kern = [(r["doc_id"], r["score"]) for r in idx.search(q, k=k).collect()]
+    base = [(r["doc_id"], r["score"]) for r in search_dataframe(idx, node, k, facts).collect()]
     kset, bset = {d for d, _ in kern}, {d for d, _ in base}
     return {
         "query": q,
@@ -314,7 +318,7 @@ def cmd_repl(args) -> None:
             elif line.startswith("!explain "):
                 from bitfunnel_spark.plans.serving import explain
 
-                for r in explain(idx, line[9:], k=args.k, mode=args.mode).collect():
+                for r in explain(idx, line[9:], k=args.k).collect():
                     print(
                         f"{r['doc_id']}\tscore={r['score']}\t{r['stream']}:{r['term']}"
                         f"\ttf={r['tf']}\t+{r['contribution']}"
@@ -377,12 +381,12 @@ def cmd_repl(args) -> None:
             elif line.startswith("!snippets "):
                 from bitfunnel_spark.plans.serving import snippets
 
-                for r in snippets(idx, line[10:], k=args.k, mode=args.mode).collect():
+                for r in snippets(idx, line[10:], k=args.k).collect():
                     print(f"{r['doc_id']}\t{r['score']}\t{r['snippet']}")
             elif line.startswith("!mlt "):
                 from bitfunnel_spark.plans.serving import more_like_this
 
-                for r in more_like_this(idx, int(line[5:]), k=args.k, mode=args.mode).collect():
+                for r in more_like_this(idx, int(line[5:]), k=args.k).collect():
                     print(f"{r['doc_id']}\t{r['score']}")
             elif line.startswith("!near "):
                 # !near slop term term [term...] — unordered proximity
@@ -604,7 +608,7 @@ def cmd_repl(args) -> None:
                             return False
             else:
                 t0 = time.time()
-                for r in idx.search(line, k=args.k, mode=args.mode).collect():
+                for r in idx.search(line, k=args.k).collect():
                     print(f"{r['doc_id']}\t{r['score']}")
                 print(f"({time.time() - t0:.3f}s)", file=sys.stderr)
         except Exception as e:  # noqa: BLE001 — REPL: report, keep looping
@@ -643,7 +647,6 @@ def main(argv=None) -> None:
     q.add_argument("--corpus", required=True)
     q.add_argument("--index", required=True)
     q.add_argument("--k", type=int, default=10)
-    q.add_argument("--mode", default="kernel", choices=["kernel", "dataframe"])
     q.add_argument("query")
     q.set_defaults(fn=cmd_query)
 
@@ -651,7 +654,6 @@ def main(argv=None) -> None:
     ql.add_argument("--corpus", required=True)
     ql.add_argument("--index", required=True)
     ql.add_argument("--k", type=int, default=10)
-    ql.add_argument("--mode", default="kernel", choices=["kernel", "dataframe"])
     ql.add_argument("log")
     ql.set_defaults(fn=cmd_querylog)
 
@@ -700,7 +702,6 @@ def main(argv=None) -> None:
     r.add_argument("--corpus", required=True)
     r.add_argument("--index", required=True)
     r.add_argument("--k", type=int, default=10)
-    r.add_argument("--mode", default="kernel", choices=["kernel", "dataframe"])
     r.add_argument("--emb", default=None,
                    help="embeddings parquet (vec_id, embedding[, ...]) — "
                         "enables !knn / !hybrid / !rerank")
@@ -718,7 +719,6 @@ def main(argv=None) -> None:
     sn.add_argument("--index", required=True)
     sn.add_argument("--k", type=int, default=10)
     sn.add_argument("--window", type=int, default=4)
-    sn.add_argument("--mode", default="kernel", choices=["kernel", "dataframe"])
     sn.add_argument("query")
     sn.set_defaults(fn=cmd_snippets)
 
@@ -727,7 +727,6 @@ def main(argv=None) -> None:
     ml.add_argument("--index", required=True)
     ml.add_argument("--k", type=int, default=10)
     ml.add_argument("--m", type=int, default=8)
-    ml.add_argument("--mode", default="kernel", choices=["kernel", "dataframe"])
     ml.add_argument("doc_id", type=int)
     ml.set_defaults(fn=cmd_mlt)
 

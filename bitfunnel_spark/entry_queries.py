@@ -115,17 +115,17 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
 # full-text queries (engine vs plans/oracle.py generator)
 
 SEARCH_QUERIES = {
-    "ft_bm25_and": ("spark & join", "kernel"),
-    "ft_bm25_not": ("data -slow", "dataframe"),
-    "ft_bm25_or": ("dup | vector", "kernel"),
-    "ft_bm25_complex": ("(dup | vector) join -merge", "dataframe"),
-    "ft_bm25_phrase": ('"batch batch"', "kernel"),
-    "ft_bm25_slop": ('"batch data"~2', "kernel"),
-    "ft_bm25_boost": ("data^2 fast", "kernel"),
-    "ft_bm25_field_boost": ("path:txt^2 data", "dataframe"),
-    "ft_bm25_minmatch": ("(dup | vector | data)@2", "kernel"),
-    "ft_bm25_field": ("lang:en data", "dataframe"),
-    "ft_bm25_path": ("path:txt data fast", "kernel"),
+    "ft_bm25_and": "spark & join",
+    "ft_bm25_not": "data -slow",
+    "ft_bm25_or": "dup | vector",
+    "ft_bm25_complex": "(dup | vector) join -merge",
+    "ft_bm25_phrase": '"batch batch"',
+    "ft_bm25_slop": '"batch data"~2',
+    "ft_bm25_boost": "data^2 fast",
+    "ft_bm25_field_boost": "path:txt^2 data",
+    "ft_bm25_minmatch": "(dup | vector | data)@2",
+    "ft_bm25_field": "lang:en data",
+    "ft_bm25_path": "path:txt data fast",
 }
 MATCH_QUERIES = {
     "ft_match_and_not": "customer window -stream",
@@ -134,9 +134,9 @@ MATCH_QUERIES = {
 }
 
 
-def _mk_search(q: str, mode: str) -> Callable[[SparkSession, str], DataFrame]:
+def _mk_search(q: str) -> Callable[[SparkSession, str], DataFrame]:
     def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return get_index(spark, sf_dir).search(q, k=10, mode=mode)
+        return get_index(spark, sf_dir).search(q, k=10)
 
     return fn
 
@@ -163,7 +163,7 @@ def q_bm25_and_deleted(spark: SparkSession, sf_dir: str) -> DataFrame:
     import dataclasses
 
     idx = dataclasses.replace(get_index(spark, sf_dir), tombstones=frozenset(DELETED_IDS))
-    return idx.search("spark & join", k=10, mode="kernel")
+    return idx.search("spark & join", k=10)
 
 
 def q_bm25_fact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -173,7 +173,7 @@ def q_bm25_fact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     idx = dataclasses.replace(get_index(spark, sf_dir), facts={})
     idx.define_fact("even_doc", F.col("doc_id") % 2 == 0)
-    return idx.search("data fast", k=10, mode="kernel", facts=["even_doc"])
+    return idx.search("data fast", k=10, facts=["even_doc"])
 
 
 def q_ft_fact_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -187,7 +187,7 @@ def q_ft_fact_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         get_index(spark, sf_dir), facts={}, indexed_facts={}
     )
     idx.define_fact_indexed("mod3", F.col("doc_id") % 3 == 0)
-    return idx.search("data fast", k=10, mode="kernel", facts=["mod3"])
+    return idx.search("data fast", k=10, facts=["mod3"])
 
 
 # ---------------------------------------------------------------------------
@@ -2075,10 +2075,10 @@ def q_ft_dsl_collapse(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_ft_range_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ES `range` filter in bool.filter (plans/dsl._pop_bool_ranges →
-    executor `restrict`): the text query scores as usual (epoch-frozen
-    df/avgdl); the doclen range restricts the match set via a semi-join on
-    the NARROW doc_stats scan before top-k — no driver-resident doc array,
-    no size cap, Catalyst broadcasts the narrow side. The oracle mirrors
+    FullTextIndex.restricted): the text query scores as usual (epoch-frozen
+    df/avgdl); the doclen range restricts the match set via per-(shard,
+    slice) kernel allow arrays cogrouped from the NARROW doc_stats scan
+    before top-k — no driver-resident doc array, no size cap. The oracle mirrors
     the restriction as a predicate over its `dl` CTE (the same per-doc
     body-token counts the BM25 oracles already certify)."""
     from bitfunnel_spark.plans.dsl import search_dsl
@@ -2111,7 +2111,7 @@ def q_ft_collapse_inner(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_ft_aggs_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ES aggregations composed with a range filter (plans/dsl.run_aggs →
-    `_restrict_docs` index copy → executor semi-join): a terms facet over
+    FullTextIndex.restricted copy → kernel allow arrays): a terms facet over
     the match set of `data OR join` restricted to doclen ∈ [30, 70]. The
     oracle mirrors the restriction as a `dl` predicate ANDed into its
     match CTE."""
@@ -2606,8 +2606,8 @@ def build_registry() -> tuple[dict[str, Callable], dict[str, str]]:
     queries: dict[str, Callable] = {}
     oracles: dict[str, str] = {}
 
-    for name, (q, mode) in SEARCH_QUERIES.items():
-        queries[name] = _mk_search(q, mode)
+    for name, q in SEARCH_QUERIES.items():
+        queries[name] = _mk_search(q)
         oracles[name] = oracle_search_sql(q, k=10, config=ENTRY_CONFIG)
     for name, q in MATCH_QUERIES.items():
         queries[name] = _mk_match(q)
@@ -2624,15 +2624,15 @@ def build_registry() -> tuple[dict[str, Callable], dict[str, str]]:
     from bitfunnel_spark.plans.oracle import oracle_expansion_search_sql
 
     # dictionary expansion: prefix wildcard + fuzzy term (plans/expand.py)
-    queries["ft_bm25_prefix"] = _mk_search("s*", "kernel")
+    queries["ft_bm25_prefix"] = _mk_search("s*")
     oracles["ft_bm25_prefix"] = oracle_expansion_search_sql(
         "term LIKE 's%'", k=10, config=ENTRY_CONFIG
     )
-    queries["ft_bm25_fuzzy"] = _mk_search("vektor~", "dataframe")
+    queries["ft_bm25_fuzzy"] = _mk_search("vektor~")
     oracles["ft_bm25_fuzzy"] = oracle_expansion_search_sql(
         "levenshtein(term, 'vektor') <= 1", k=10, config=ENTRY_CONFIG
     )
-    queries["ft_bm25_wildcard"] = _mk_search("s?a*", "kernel")
+    queries["ft_bm25_wildcard"] = _mk_search("s?a*")
     oracles["ft_bm25_wildcard"] = oracle_expansion_search_sql(
         "term LIKE 's_a%'", k=10, config=ENTRY_CONFIG
     )
@@ -2640,16 +2640,16 @@ def build_registry() -> tuple[dict[str, Callable], dict[str, str]]:
 
     # match_phrase_prefix (search-as-you-type): 6 dictionary completions
     # at sf0.01 -> a real OR-of-phrases expansion, ~170 matching docs
-    queries["ft_bm25_phrase_prefix"] = _mk_search('"filter s*"', "kernel")
+    queries["ft_bm25_phrase_prefix"] = _mk_search('"filter s*"')
     oracles["ft_bm25_phrase_prefix"] = oracle_phrase_prefix_sql(
         ("filter",), "s", k=10, config=ENTRY_CONFIG
     )
     # filter context (ES bool-filter): '#fast' matches but never scores
-    queries["ft_bm25_filter_ctx"] = _mk_search("data #fast -slow", "kernel")
+    queries["ft_bm25_filter_ctx"] = _mk_search("data #fast -slow")
     oracles["ft_bm25_filter_ctx"] = oracle_search_sql(
         "data #fast -slow", k=10, config=ENTRY_CONFIG
     )
-    queries["ft_bm25_regex"] = _mk_search("/s.a[nr]k?/", "kernel")
+    queries["ft_bm25_regex"] = _mk_search("/s.a[nr]k?/")
     oracles["ft_bm25_regex"] = oracle_expansion_search_sql(
         "regexp_full_match(term, 's.a[nr]k?')", k=10, config=ENTRY_CONFIG
     )
@@ -2663,7 +2663,7 @@ def build_registry() -> tuple[dict[str, Callable], dict[str, str]]:
 
         idx = get_index(spark, sf_dir)
         node = apply_synonyms(parse_query("join & data"), {"join": ("merge",)})
-        return idx.search(node, k=10, mode="kernel")
+        return idx.search(node, k=10)
 
     queries["ft_bm25_synonym"] = q_bm25_synonym
     oracles["ft_bm25_synonym"] = oracle_search_sql(
@@ -2685,7 +2685,7 @@ def build_registry() -> tuple[dict[str, Callable], dict[str, str]]:
         # mode="blend" -> ast.SynGroup; the oracle mirrors the blended
         # formula exactly (plans/oracle._hits_cte group branch).
         idx = get_index(spark, sf_dir)
-        return idx.search(_synonym_blend_node(), k=10, mode="kernel")
+        return idx.search(_synonym_blend_node(), k=10)
 
     queries["ft_bm25_synonym_blend"] = q_bm25_synonym_blend
     oracles["ft_bm25_synonym_blend"] = oracle_search_sql(
@@ -2704,7 +2704,7 @@ def build_registry() -> tuple[dict[str, Callable], dict[str, str]]:
         # in ANY listed field and scores as ONE pseudo-term — weighted
         # per-field tf sum, single saturation, blended idf (ES
         # combined_fields / Lucene CombinedFieldQuery semantics)
-        return get_index(spark, sf_dir).search(_bm25f_node(), k=10, mode="kernel")
+        return get_index(spark, sf_dir).search(_bm25f_node(), k=10)
 
     queries["ft_bm25f"] = q_bm25f
     oracles["ft_bm25f"] = oracle_search_sql(_bm25f_node(), k=10, config=ENTRY_CONFIG)
@@ -2718,7 +2718,7 @@ def build_registry() -> tuple[dict[str, Callable], dict[str, str]]:
         # analyzer; a hash match proves the whole split chain + build +
         # kernel agree with the DuckDB mirror of the same chain)
         return get_code_index(spark, sf_dir).search(
-            "key & agg & request", k=10, mode="kernel"
+            "key & agg & request", k=10
         )
 
     queries["ft_bm25_code"] = q_bm25_code
@@ -2733,9 +2733,9 @@ def build_registry() -> tuple[dict[str, Callable], dict[str, str]]:
         The total (rounded score, doc_id) order makes page 2 ≡ the oracle's
         OFFSET 10."""
         idx = get_index(spark, sf_dir)
-        page1 = idx.search("data fast", k=10, mode="kernel").collect()
+        page1 = idx.search("data fast", k=10).collect()
         cursor = (float(page1[-1]["score"]), int(page1[-1]["doc_id"]))
-        return idx.search_after("data fast", cursor, k=10, mode="kernel")
+        return idx.search_after("data fast", cursor, k=10)
 
     queries["ft_bm25_page2"] = q_bm25_page2
     oracles["ft_bm25_page2"] = oracle_search_sql(
@@ -2762,11 +2762,11 @@ def build_registry() -> tuple[dict[str, Callable], dict[str, str]]:
     # regex-expansion soundness regressions (ADVICE r2): top-level
     # alternation and optional-quantifier shapes whose fully-matching terms
     # the old leading-literal prune silently dropped
-    queries["ft_bm25_regex_alt"] = _mk_search(r"/scan\|data/", "kernel")
+    queries["ft_bm25_regex_alt"] = _mk_search(r"/scan\|data/")
     oracles["ft_bm25_regex_alt"] = oracle_expansion_search_sql(
         "regexp_full_match(term, 'scan|data')", k=10, config=ENTRY_CONFIG
     )
-    queries["ft_bm25_regex_opt"] = _mk_search("/datax{0,1}/", "kernel")
+    queries["ft_bm25_regex_opt"] = _mk_search("/datax{0,1}/")
     oracles["ft_bm25_regex_opt"] = oracle_expansion_search_sql(
         "regexp_full_match(term, 'datax{0,1}')", k=10, config=ENTRY_CONFIG
     )
@@ -2786,7 +2786,7 @@ def build_registry() -> tuple[dict[str, Callable], dict[str, str]]:
 
         idx = get_index(spark, sf_dir)
         node = common_terms_query(idx, "dup data fast", max_df_ratio=0.3)
-        return idx.search(node, k=10, mode="kernel")
+        return idx.search(node, k=10)
 
     queries["ft_bm25_common"] = q_bm25_common
     oracles["ft_bm25_common"] = oracle_search_sql(
@@ -3177,14 +3177,14 @@ ORDER BY event_type, metric_rank"""
 
     # phrase via positional postings (kernel adjacency from stored positions)
     def q_phrase_positions(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return get_pos_index(spark, sf_dir).search('"batch batch"', k=10, mode="kernel")
+        return get_pos_index(spark, sf_dir).search('"batch batch"', k=10)
 
     queries["ft_bm25_phrase_pos"] = q_phrase_positions
     oracles["ft_bm25_phrase_pos"] = oracle_search_sql('"batch batch"', k=10, config=ENTRY_POS_CONFIG)
 
     # phrase via indexed n-gram terms (reference's maxGramSize rows)
     def q_phrase_gram(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return get_gram_index(spark, sf_dir).search('"batch batch"', k=10, mode="kernel")
+        return get_gram_index(spark, sf_dir).search('"batch batch"', k=10)
 
     queries["ft_bm25_phrase_gram"] = q_phrase_gram
     oracles["ft_bm25_phrase_gram"] = oracle_search_sql('"batch batch"', k=10, config=ENTRY_GRAM_CONFIG)
@@ -3445,10 +3445,10 @@ ORDER BY event_type, metric_rank"""
 
     from bitfunnel_spark.plans.oracle import (
         CORPUS_CTE as _CCTE,
-        _as_plan as _asp,
         _bool_sql as _bsql,
         _hits_cte as _hcte,
     )
+    from bitfunnel_spark.plans.planner import as_plan as _asp
 
     _mm_plan = _asp(FACETS_QUERY)
     queries["ft_multi_metrics"] = q_ft_multi_metrics
@@ -3711,11 +3711,11 @@ ORDER BY doc_id, stream, term"""
     oracles["ft_percolate_log"] = _sql_percolate_log()
 
     # pluggable query-time similarities (plans/scoring.py): Lucene
-    # ClassicSimilarity (kernel mode — exercises the storage-free doclen
-    # inversion) and BooleanSimilarity (dataframe mode)
+    # ClassicSimilarity (exercises the kernel's storage-free doclen
+    # inversion) and BooleanSimilarity
     def q_ft_classic(spark: SparkSession, sf_dir: str) -> DataFrame:
         return get_index(spark, sf_dir).search(
-            "spark & join", k=10, mode="kernel", similarity="classic"
+            "spark & join", k=10, similarity="classic"
         )
 
     queries["ft_classic"] = q_ft_classic
@@ -3734,10 +3734,10 @@ ORDER BY doc_id, stream, term"""
     )
 
     def q_ft_lmdirichlet(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # Lucene LMDirichletSimilarity (μ=2000) — kernel mode exercises the
-        # per-query ctf lookup + in-kernel doclen inversion
+        # Lucene LMDirichletSimilarity (μ=2000) — exercises the per-query
+        # ctf lookup + in-kernel doclen inversion
         return get_index(spark, sf_dir).search(
-            "data -slow", k=10, mode="kernel", similarity="lm_dirichlet"
+            "data -slow", k=10, similarity="lm_dirichlet"
         )
 
     queries["ft_lmdirichlet"] = q_ft_lmdirichlet

@@ -2,8 +2,10 @@
 
 Build pipeline (SURVEY §7): tokenize → doc stats + postings (no shuffle) →
 term stats (one agg shuffle) → [optional] encoded posting segments
-(operators/segments.py). Query: parse → plan → execute (plans/executor.py
-DataFrame path, plans/kernel.py block-max WAND kernel path).
+(operators/segments.py). Query: parse → plan → execute on the one kernel
+(plans/kernel.py: block-max WAND top-k, full scored match sets, unscored
+match sets). plans/executor.py is the declarative reference the parity
+tests compare the kernel against; no query method runs it.
 
 The reference's equivalent lifecycle is SimpleIndex + Ingestor
 (/root/reference/src/Index/src/SimpleIndex.cpp, Ingestor.cpp:210-269) and
@@ -173,7 +175,7 @@ class FullTextIndex:
 
     def delete_docs(self, doc_ids) -> None:
         """Soft-delete documents: they stop matching every query immediately
-        (both executors mask the tombstone set — the reference's "document
+        (the kernel masks the tombstone set — the reference's "document
         active" row ANDed into every plan, Row.h:34-35). Epoch stats
         (df/idf/avgdl) stay frozen until the next compaction, which drops
         tombstoned docs physically (streaming/ingest.compact)."""
@@ -421,16 +423,47 @@ class FullTextIndex:
             node = expand.expand_query(self, node)
         return node
 
-    def match(self, query: str, facts: list[str] | None = None) -> DataFrame:
-        """Reference semantics: the full unscored boolean match set
-        (ResultsBuffer analogue) as DataFrame[doc_id]."""
-        from bitfunnel_spark.plans.executor import match_dataframe
+    def restricted(self, docs: DataFrame) -> "FullTextIndex":
+        """A copy of the index whose every query ANDs in the doc-metadata
+        restriction ``docs`` (DataFrame[doc_id] — ES range filters and
+        post_filter, plans/dsl.py); the kernel cogroups it into per-(shard,
+        slice) allow arrays (kernel.run_log). Segments are built on THIS
+        index first, so a kernel run on the copy never encodes a throwaway
+        segment store per request."""
+        import dataclasses
 
-        node, facts = self._apply_indexed_facts(self.prepare_query(query), facts)
-        return match_dataframe(self, node, facts)
+        if self.segments is None:
+            self.build_segments()
+        out = dataclasses.replace(self)
+        out._restrict_docs = docs
+        return out
+
+    def _prepared(self, query, facts: list[str] | None):
+        """(node, residual_facts): prepare_query, then indexed facts folded
+        in as filter conjuncts — the one query preparation of every query
+        method."""
+        return self._apply_indexed_facts(self.prepare_query(query), facts)
+
+    def match(self, query, facts: list[str] | None = None) -> DataFrame:
+        """Reference semantics: the full unscored boolean match set
+        (ResultsBuffer analogue) as DataFrame[doc_id]. Fact sets
+        (define_fact) reach the kernel as a doc-id array capped at
+        MAX_FACT_DOCS; indexed facts have no cap."""
+        from bitfunnel_spark.plans.kernel import match_kernel
+
+        return match_kernel(self, *self._prepared(query, facts))
+
+    def scored_match(self, query, facts: list[str] | None = None) -> DataFrame:
+        """The full match set with BM25 scores: DataFrame[(doc_id, score)],
+        score rounded to 4 dp, no top-k cut — what serving layers that
+        rescore every match read (function_score, collapse, aggregations).
+        Facts as in ``match``."""
+        from bitfunnel_spark.plans.kernel import score_kernel
+
+        return score_kernel(self, *self._prepared(query, facts))
 
     def search(
-        self, query: str, k: int = 10, mode: str = "dataframe",
+        self, query, k: int = 10, mode: str = "kernel",
         facts: list[str] | None = None, similarity: str = "bm25",
     ) -> DataFrame:
         """Scored top-k: DataFrame[(doc_id, score)], score rounded to 4 dp,
@@ -442,21 +475,18 @@ class FullTextIndex:
         product: boost · tf — the sparse_vector query's scorer); see
         plans/scoring.py. The
         match set is identical under every flavor; non-BM25 flavors skip
-        the BM25-shaped block-max pruning (exhaustive kernel path)."""
-        query, facts = self._apply_indexed_facts(self.prepare_query(query), facts)
-        if mode == "dataframe":
-            from bitfunnel_spark.plans.executor import search_dataframe
+        the BM25-shaped block-max pruning (exhaustive kernel path).
+        ``mode`` accepts only "kernel", the one engine."""
+        if mode != "kernel":
+            raise ValueError(f"unknown mode {mode!r} (the kernel is the only engine)")
+        from bitfunnel_spark.plans.kernel import search_kernel
 
-            return search_dataframe(self, query, k, facts, similarity=similarity)
-        if mode == "kernel":
-            from bitfunnel_spark.plans.kernel import search_kernel
-
-            return search_kernel(self, query, k, facts, similarity=similarity)
-        raise ValueError(f"unknown mode {mode!r}")
+        query, facts = self._prepared(query, facts)
+        return search_kernel(self, query, k, facts, similarity=similarity)
 
     def search_after(
         self, query, after: tuple[float, int], k: int = 10,
-        mode: str = "kernel", facts: list[str] | None = None,
+        facts: list[str] | None = None,
     ) -> DataFrame:
         """Deep pagination (Elasticsearch search_after): the next k results
         strictly AFTER the cursor ``after=(score, doc_id)`` — the last row
@@ -465,16 +495,10 @@ class FullTextIndex:
         full result set, no LIMIT that grows with the page number (the
         from+size anti-pattern). The ordering is total (rounded score,
         doc_id), so pages partition the full result exactly."""
-        query, facts = self._apply_indexed_facts(self.prepare_query(query), facts)
-        if mode == "dataframe":
-            from bitfunnel_spark.plans.executor import search_dataframe
+        from bitfunnel_spark.plans.kernel import search_kernel
 
-            return search_dataframe(self, query, k, facts, after=after)
-        if mode == "kernel":
-            from bitfunnel_spark.plans.kernel import search_kernel
-
-            return search_kernel(self, query, k, facts, after=after)
-        raise ValueError(f"unknown mode {mode!r}")
+        query, facts = self._prepared(query, facts)
+        return search_kernel(self, query, k, facts, after=after)
 
     def search_many(
         self, queries: list[str], k: int = 10, facts: list[str] | None = None

@@ -2,8 +2,8 @@
 
 Lets an ES user run their JSON `_search` query bodies unchanged against
 this engine: the compiler maps the DSL's compositional subset onto the
-existing AST (ast.py), so matching, scoring, expansion, and both
-executors come for free. Documented subset (everything else raises
+existing AST (ast.py), so matching, scoring, expansion, and the kernel
+come for free. Documented subset (everything else raises
 DslError, never silently mis-executes):
 
   query_string, match (or/and operator, integer minimum_should_match),
@@ -346,7 +346,7 @@ def compile_dsl(query: dict) -> Node:
     if kind == "terms_set":
         # ES terms_set: match docs containing >= N of the given terms.
         # Maps onto the engine's Or.min_match (minimum-should-match
-        # counting in both executors — tests/test_minmatch.py).
+        # counting in the kernel — tests/test_minmatch.py).
         field, raw = _one_field(body, "terms_set")
         if not isinstance(raw, dict):
             raise DslError("terms_set expects an object per field")
@@ -483,9 +483,11 @@ _COMBINATOR_KINDS = (
 _FILTER_ONLY_KINDS = ("constant_score", "ids", "exists", "match_all", "range",
                       "match_none")
 
-# combinator kinds whose serving executors are declarative end-to-end —
-# the subset that composes with the doc-metadata restriction plan (the
-# rest are positional / kernel-pinned and reject loudly at routing)
+# combinator kinds whose serving executors take every match from
+# index.match / index.scored_match, so the kernel applies the doc-metadata
+# restriction plan to them; the other combinators also read positions,
+# postings, pinned ids or a vector store outside that call, and reject
+# loudly at routing
 _RESTRICT_COMBINATORS = (
     "multi_match", "dis_max", "boosting", "function_score",
     "script_score", "rank_feature", "distance_feature",
@@ -607,8 +609,8 @@ def _pop_bool_ranges(body: dict) -> tuple[dict, list, list]:
     match_none) out of a bool's `filter` AND `must_not` lists. These are
     metadata scans, not posting intersections — the router executes them
     as semi-join (filter) / anti-join (must_not — the ES "field is
-    missing" idiom) restrictions on the scored match set (executor
-    `restrict`) instead of compiling them into the AST. In must/should
+    missing" idiom) restrictions on the scored match set
+    (FullTextIndex.restricted) instead of compiling them into the AST. In must/should
     they reject loudly (filter context only; a metadata predicate never
     contributes relevance — the subset rule keeps the scoring story
     simple)."""
@@ -685,7 +687,7 @@ def _filter_only_hits(index, kind: str, conf, k: int):
     )
 
 
-def search_dsl(index, body: dict, k: int = 10, mode: str = "kernel"):
+def search_dsl(index, body: dict, k: int = 10):
     """Run an ES `_search`-style body: `{"query": {...}}` (or a bare query
     object) through the engine. `size` maps to k; `"_source": [cols...]`
     joins the named corpus columns onto the hits — the k-row result
@@ -699,9 +701,8 @@ def search_dsl(index, body: dict, k: int = 10, mode: str = "kernel"):
     have no single match node to re-rank or page — and all four compose
     with the doc-metadata restriction plan (`range` in bool.filter /
     must_not, `post_filter`): the restriction rides an index copy's
-    ambient `_restrict_docs`, which both executors honour — the kernel as
-    per-(shard, slice) allow arrays, the declarative executor as a
-    semi-join."""
+    ambient `_restrict_docs` (FullTextIndex.restricted), which the kernel
+    honours as per-(shard, slice) allow arrays."""
     if "suggest" in body:
         _require("query" not in body,
                  "suggest-only bodies supported (no query alongside)")
@@ -800,14 +801,12 @@ def search_dsl(index, body: dict, k: int = 10, mode: str = "kernel"):
         # Doc-metadata restriction plan (ES range filters in bool.filter;
         # post_filter): the text query compiles and scores as usual; the
         # restriction ANDs into the match set BEFORE top-k. It attaches
-        # ambiently to an index COPY (`_restrict_docs`, the run_aggs
-        # mechanism) and the body falls through to its route below: the
-        # kernel (plain hits, search_after, highlight, explain, rescore's
-        # window in mode="kernel") cogroups it into per-(shard, slice)
-        # allow arrays; collapse / sort / the combinators ride
-        # executor._matched, which semi-joins it. Neither side collects a
-        # doc array to the driver or caps its size. Mutual-exclusion
-        # rules AMONG the routes stay the branches' own.
+        # ambiently to an index COPY (FullTextIndex.restricted, the
+        # run_aggs mechanism) and the body falls through to its route
+        # below: every route's match set comes from the kernel, which
+        # cogroups it into per-(shard, slice) allow arrays — no doc array
+        # collected to the driver, no size cap. Mutual-exclusion rules
+        # AMONG the routes stay the branches' own.
         if (ranges or negs) and not residual:
             raise DslError(
                 "a bool of only metadata filters has no scoring query: use "
@@ -820,17 +819,17 @@ def search_dsl(index, body: dict, k: int = 10, mode: str = "kernel"):
             _require(kind0 not in _FILTER_ONLY_KINDS,
                      "post_filter needs a scoring query, not a "
                      "filter-only kind (fold the filter into the query)")
-            # combinator kinds whose executors ride the engine's match
-            # surfaces end-to-end (scored_matches / index.match /
-            # index.search) compose with the restriction via the ambient
-            # channel below; the positional/kernel-pinned ones (span_*,
-            # intervals, sparse_vector, pinned, more_like_this) read
-            # postings or positions directly, bypass `_restrict_docs`,
-            # and reject HERE with a pointed message
+            # combinators that take every match from index.match /
+            # index.scored_match compose with the restriction via the
+            # ambient channel below; the others (span_*, intervals,
+            # sparse_vector, pinned, more_like_this) also read positions,
+            # postings, pinned ids or a vector store outside that call,
+            # so they reject HERE with a pointed message
             _require(kind0 not in set(_COMBINATOR_KINDS)
                      - set(_RESTRICT_COMBINATORS),
                      f"{kind0} does not compose with the restriction plan "
-                     "(its executor is positional/kernel-pinned)")
+                     "(its executor reads positions, postings, pinned ids "
+                     "or a vector store outside the restricted match)")
         restrict = _range_restrict(index, ranges, negs)
         if post_filter is not None:
             _require(isinstance(post_filter, dict) and len(post_filter) == 1,
@@ -840,16 +839,8 @@ def search_dsl(index, body: dict, k: int = 10, mode: str = "kernel"):
                 pf, "doc_id", "left_semi"
             )
         # ONE restriction channel for every downstream route, including
-        # the plain-hits tail: the caller's `mode` picks the executor
-        import dataclasses as _dc
-
-        if mode == "kernel" and index.segments is None:
-            # build the segment store once on the served index — the
-            # kernel would otherwise encode (and cache) a fresh one on
-            # every request's throwaway copy
-            index.build_segments()
-        index = _dc.replace(index)
-        index._restrict_docs = restrict
+        # the plain-hits tail
+        index = index.restricted(restrict)
         query = node_query
     if explain_flag:
         # ES "explain": true — per-hit score breakdown. ES nests an
@@ -857,8 +848,7 @@ def search_dsl(index, body: dict, k: int = 10, mode: str = "kernel"):
         # rendering (the inner_hits precedent) is serving.explain's
         # DataFrame[(doc_id, score, stream, term, tf, contribution)] —
         # one row per (result doc, scoring key), contributions summing to
-        # the doc's score, the executor's expression VERBATIM so the
-        # breakdown always reconciles with the ranking it explains.
+        # the doc's score, so the breakdown always reconciles with the ranking it explains.
         # The shape differs from a hits page, so explain composes with
         # query/size and the metadata restriction plan only — everything
         # else alongside rejects loudly.
@@ -873,7 +863,7 @@ def search_dsl(index, body: dict, k: int = 10, mode: str = "kernel"):
                  "combinator/filter-only kind")
         from bitfunnel_spark.plans import serving
 
-        return serving.explain(index, compile_dsl(query), k=k, mode=mode)
+        return serving.explain(index, compile_dsl(query), k=k)
     if rescore is not None:
         # ES rescore (Lucene QueryRescorer): re-rank the top window_size
         # primary hits by blending in a second query's score —
@@ -925,7 +915,7 @@ def search_dsl(index, body: dict, k: int = 10, mode: str = "kernel"):
             window_size=window,
             query_weight=float(rq.get("query_weight", 1.0)),
             rescore_weight=float(rq.get("rescore_query_weight", 1.0)),
-            score_mode=score_mode, k=fetch_k, mode=mode,
+            score_mode=score_mode, k=fetch_k,
         )
         return _fetch_source(index, _page(hits), source)
     if search_after is not None:
@@ -958,7 +948,7 @@ def search_dsl(index, body: dict, k: int = 10, mode: str = "kernel"):
                  "second element must be an integral doc_id (a fractional "
                  "value usually means the cursor is swapped)")
         cursor = (float(search_after[0]), int(search_after[1]))
-        hits = index.search_after(compile_dsl(query), cursor, k=k, mode=mode)
+        hits = index.search_after(compile_dsl(query), cursor, k=k)
         return _fetch_source(index, hits, source)
     if collapse is not None:
         # ES field collapsing: best hit per distinct value of a keyword
@@ -1064,7 +1054,7 @@ def search_dsl(index, body: dict, k: int = 10, mode: str = "kernel"):
                     post if post is not None else "</em>")
         from bitfunnel_spark.plans import serving
 
-        hits = serving.snippets(index, node, k=fetch_k, mode=mode, tags=tags)
+        hits = serving.snippets(index, node, k=fetch_k, tags=tags)
         if min_score is not None:
             hits = hits.filter(F.col("score") >= min_score)
         return _fetch_source(index, _page(hits), source, extra_cols=("snippet",))
@@ -1073,7 +1063,7 @@ def search_dsl(index, body: dict, k: int = 10, mode: str = "kernel"):
         # single AST (per-clause score fusion) — dispatched directly
         hits = _serving_query(index, *next(iter(query.items())), k=fetch_k)
     else:
-        hits = index.search(compile_dsl(query), k=fetch_k, mode=mode)
+        hits = index.search(compile_dsl(query), k=fetch_k)
     if min_score is not None:
         hits = hits.filter(F.col("score") >= min_score)
     return _fetch_source(index, _page(hits), source)
@@ -1112,7 +1102,7 @@ def _match_ids(index, query: dict, api: str = "_count"):
             if not residual:
                 # counting needs no scoring query — the metadata
                 # restriction alone is the match set; mask tombstones (the
-                # residual branch gets this from match_dataframe)
+                # residual branch gets this from the kernel)
                 ids = restrict
                 tomb = getattr(index, "tombstones", frozenset())
                 if tomb:
@@ -1120,12 +1110,8 @@ def _match_ids(index, query: dict, api: str = "_count"):
                         ~F.col("doc_id").isin([int(d) for d in tomb])
                     )
             else:
-                from bitfunnel_spark.plans.executor import match_dataframe
-
-                ids = match_dataframe(
-                    index,
-                    index.prepare_query(compile_dsl({"bool": residual})),
-                    restrict=restrict,
+                ids = index.restricted(restrict).match(
+                    compile_dsl({"bool": residual})
                 )
         else:
             ids = index.match(compile_dsl(query))
@@ -1161,7 +1147,7 @@ def delete_by_query(index, body: dict) -> int:
     """ES ``_delete_by_query``: soft-delete every document matching the
     query; returns the number deleted (ES's ``deleted`` field). Deletion
     is the engine's standing tombstone semantics (index.delete_docs):
-    matching stops immediately in both executors; epoch stats (df/idf/
+    matching stops immediately; epoch stats (df/idf/
     avgdl) stay frozen until compaction. Already-deleted docs never match,
     so repeating a delete reports 0 — ES's own idempotence behavior."""
     query = body.get("query", body) if isinstance(body, dict) else body
@@ -1376,7 +1362,7 @@ def _serving_query(index, kind: str, body, k: int = 10):
             for tok, w in sorted(qv.items())
         )
         node = clauses[0] if len(clauses) == 1 else Or(clauses)
-        return index.search(node, k=k, mode="kernel", similarity="dot_tf")
+        return index.search(node, k=k, similarity="dot_tf")
     if kind == "intervals":
         # ES intervals query — documented subset mapped onto the engine's
         # positional executors: `match` rules (and `all_of` over
@@ -1429,16 +1415,16 @@ def _serving_query(index, kind: str, body, k: int = 10):
 
         toks, gaps, ordered = _interval_tokens(rule)
         if len(toks) == 1:
-            return index.search(Term(toks[0], "body"), k=k, mode="kernel")
+            return index.search(Term(toks[0], "body"), k=k)
         if gaps < 0:  # unlimited gaps: pure conjunction, order unobservable
             _require(not ordered,
                      "ordered intervals need max_gaps >= 0 (an unbounded "
                      "ordered subsequence is not modeled)")
             return index.search(And(tuple(Term(t, "body") for t in toks)),
-                                k=k, mode="kernel")
+                                k=k)
         if ordered:
             return index.search(Phrase(tuple(toks), "body", slop=gaps),
-                                k=k, mode="kernel")
+                                k=k)
         try:
             return serving.span_near(index, toks, slop=gaps, k=k)
         except ValueError as e:
@@ -1515,7 +1501,7 @@ def _serving_query(index, kind: str, body, k: int = 10):
         _require(isinstance(organic, dict), "pinned needs an organic query")
         ids = [int(i) for i in ids]
         _require(len(set(ids)) == len(ids), "pinned ids must be distinct")
-        org = index.search(compile_dsl(organic), k=k + len(ids), mode="kernel")
+        org = index.search(compile_dsl(organic), k=k + len(ids))
         org = org.filter(~F.col("doc_id").isin(ids))
         id_arr = F.array(*[F.lit(i).cast("long") for i in ids])
         live = index.corpus.select("doc_id").filter(F.col("doc_id").isin(ids))
@@ -1883,9 +1869,9 @@ def run_aggs(index, body: dict, k: int = 10):
         if isinstance(query, dict) and set(query) == {"bool"}:
             # ES range filters compose with every aggregation: pop them
             # out of bool.filter and attach the doc-metadata restriction
-            # to an index COPY as `_restrict_docs` — executor._matched
-            # (the one dataframe match surface every serving agg rides)
-            # semi-joins it in. The `global` agg still escapes the FULL query
+            # to an index COPY (FullTextIndex.restricted) — the kernel
+            # behind index.match / index.scored_match (the match surfaces
+            # every serving agg rides) ANDs it in. The `global` agg still escapes the FULL query
             # context including these filters (ES semantics) because it
             # never touches the match set.
             residual, ranges, negs = _pop_bool_ranges(query["bool"])
@@ -1894,11 +1880,7 @@ def run_aggs(index, body: dict, k: int = 10):
                          "aggs over a pure metadata filter need a match "
                          "query alongside (a bool of only metadata "
                          "filters has no scoring/match clause)")
-                import dataclasses as _dc
-
-                restrict = _range_restrict(index, ranges, negs)
-                index = _dc.replace(index)
-                index._restrict_docs = restrict
+                index = index.restricted(_range_restrict(index, ranges, negs))
                 query = {"bool": residual}
         q = compile_dsl(query)
     (_, spec), = aggs.items()

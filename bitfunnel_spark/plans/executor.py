@@ -1,25 +1,27 @@
-"""DataFrame-path query executor.
+"""The declarative reference executor — a verifier, not a serving path.
 
-Evaluates a boolean query + BM25 entirely with declarative DataFrame ops —
-Catalyst handles pushdown/broadcast/codegen. This path is the correctness
-anchor (oracle-comparable, see plans/oracle.py) and is itself scalable: one
-filtered scan of postings (term-key pushdown), one hash aggregation by
-doc_id, a broadcast join of the tiny per-query term dictionary, and a global
-top-k (partial per-partition TopK then final — Spark's TakeOrderedAndProject).
-
-The kernel path (plans/kernel.py) replaces the hash-agg with galloping
-intersection + block-max WAND over encoded segments; both must produce
-rank-identical results (tested).
+Evaluates a boolean query + BM25 entirely with declarative DataFrame ops:
+one filtered scan of the row-form postings, one hash aggregation by doc_id,
+a broadcast join of the per-query term dictionary, and a global top-k.
+Nothing under serving runs it: every served route takes its match sets and
+scores from the one kernel (plans/kernel.run_log). This module is the
+exhaustive evaluation that the kernel-parity and fuzz-parity tests and
+``cli verify`` compare the kernel against — the role of the reference's
+MatchVerifier (src/Plan/src/MatchVerifier.cpp:128-167). The DuckDB oracle
+(plans/oracle.py) is the independent check of both.
 
 Semantics (SURVEY §2.5):
 - AND/OR/NOT over per-document hit sets; NOT terms never score.
-- Phrase = adjacency of constituent tokens (exact, via the tokenized text);
-  constituents also contribute to BM25 like unigrams (the reference treats a
-  phrase as the AND of its grams — TermMatchTreeConverter.cpp:55-229).
+- Phrase = adjacency of constituent tokens (exact, via the tokenized text —
+  kernel._phrase_doc_ids); constituents also contribute to BM25 like
+  unigrams (the reference treats a phrase as the AND of its grams —
+  TermMatchTreeConverter.cpp:55-229).
 - Scoring: BM25 over the positive scoring keys — body terms always, non-body
   (field) terms when query-boosted (field-weighted scoring).
 - Determinism contract with the oracle: score rounded half-up to 4 dp,
   ordered (score desc, doc_id asc), ties broken by doc_id.
+- Fact sets semi-join with no size cap; the kernel collects them into a
+  doc-id array capped at MAX_FACT_DOCS (index.fact_doc_ids).
 """
 
 from __future__ import annotations
@@ -27,62 +29,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from bitfunnel_spark.functions.tokenizer import tokenize
 from bitfunnel_spark.plans.ast import And, FieldGroup, Node, Not, Or, Phrase, SynGroup, Term
-from bitfunnel_spark.plans.parser import parse_query
-from bitfunnel_spark.plans.planner import QueryPlan, plan_query
-
-_STREAM_TEXT = {"body": "content", "path": "path", "lang": "lang", "repo": "repo"}
-
-
-def _slop_phrase_expr(phrase: Phrase, col: str, analyzer: str = "standard") -> Column:
-    """Catalyst predicate for a sloppy phrase (ast.Phrase.slop > 0): there
-    exist 0-based token positions p1 < p2 < ... < pn, one per constituent,
-    with pn - p1 <= (n-1) + slop. Built as nested higher-order ``exists``
-    over per-constituent position arrays — pure JVM expressions, no UDF."""
-    toks = tokenize(col, analyzer)
-
-    # NOTE: pyspark decides unary-vs-binary HOF lambdas by parameter COUNT,
-    # so no default-arg captures here — closures only.
-    def _positions(t: str) -> Column:
-        def mark(x, i):
-            return F.when(x == F.lit(t), i).otherwise(F.lit(-1))
-
-        return F.filter(F.transform(toks, mark), lambda v: v >= 0)
-
-    pos_arrays = [_positions(t) for t in phrase.tokens]
-    n = len(phrase.tokens)
-    span = F.lit(n - 1 + int(phrase.slop))
-
-    def chain(k: int, prev: Column, first: Column) -> Column:
-        if k == n:
-            return F.lit(True)
-
-        def pred(p):
-            return (p > prev) & ((p - first) <= span) & chain(k + 1, p, first)
-
-        return F.exists(pos_arrays[k], pred)
-
-    return F.exists(pos_arrays[0], lambda p0: chain(1, p0, p0))
-
-
-def _phrase_doc_ids(index, phrase: Phrase, candidates: DataFrame | None) -> DataFrame:
-    """doc_ids whose tokenized stream text contains the phrase (adjacently
-    when slop is 0; within the slop window otherwise).
-
-    Scoped to candidate docs first (semi-join) so the corpus scan + regex
-    only touches documents that already contain all constituents. The scale
-    path replaces this with positional postings; the semantics anchor stays.
-    """
-    col = _STREAM_TEXT[phrase.stream]
-    analyzer = getattr(getattr(index, "config", None), "analyzer", "standard")
-    src = index.corpus
-    if candidates is not None:
-        src = src.join(candidates.select("doc_id"), "doc_id", "left_semi")
-    if getattr(phrase, "slop", 0):
-        return src.filter(_slop_phrase_expr(phrase, col, analyzer)).select("doc_id")
-    padded = F.concat(F.lit(" "), F.array_join(tokenize(col, analyzer), " "), F.lit(" "))
-    return src.filter(padded.contains(f" {phrase.text} ")).select("doc_id")
+from bitfunnel_spark.plans.kernel import _phrase_doc_ids
+from bitfunnel_spark.plans.planner import QueryPlan, as_plan
 
 
 def _bool_expr(node: Node, phrase_cols: dict[Phrase, str]) -> Column:
@@ -287,33 +236,19 @@ def _hits(index, plan: QueryPlan, similarity: str = "bm25") -> DataFrame:
 
 def _matched(
     index, plan: QueryPlan, facts: list[str] | None = None,
-    similarity: str = "bm25", restrict: DataFrame | None = None,
+    similarity: str = "bm25",
 ) -> DataFrame:
     if similarity != "bm25":
         from bitfunnel_spark.plans.scoring import check_similarity
 
         check_similarity(similarity, plan, index.config.bm25.b)
     hits = _hits(index, plan, similarity)
-    # ambient doc restriction: run_aggs attaches `_restrict_docs` to an
-    # index COPY so every serving aggregation composes with ES range
-    # filters without threading a parameter through each op; _matched is
-    # the one dataframe match surface, so applying it here covers
-    # index.match, scored_matches, and search_dataframe alike. The kernel
-    # executor applies the same restriction as per-group allow arrays
-    # (kernel.run_log).
+    # ambient doc restriction (an index copy's `_restrict_docs` — ES range
+    # filters and post_filter, plans/dsl.py): a semi-join; the kernel
+    # applies the same restriction as per-group allow arrays (run_log)
     amb = getattr(index, "_restrict_docs", None)
     if amb is not None:
         hits = hits.join(amb.select("doc_id"), "doc_id", "left_semi")
-    if restrict is not None:
-        # doc-level restriction (ES range filters / post_filter — the
-        # metadata-predicate channel, plans/dsl.py): a semi-join Catalyst
-        # sizes (broadcast when the restriction is narrow, shuffle join
-        # otherwise — no driver-resident doc array, no size cap). Applied
-        # before phrase verification so positional work only touches
-        # surviving candidates. Scores stay epoch-frozen: df/idf/avgdl are
-        # full-index statistics, the restriction only filters the match
-        # set — the same contract facts and tombstones follow.
-        hits = hits.join(restrict.select("doc_id"), "doc_id", "left_semi")
     phrase_cols: dict[Phrase, str] = {}
     for i, (ph, _neg) in enumerate(plan.phrases):
         if ph in phrase_cols:
@@ -338,36 +273,16 @@ def _matched(
     return out
 
 
-def _as_plan(query) -> QueryPlan:
-    if isinstance(query, QueryPlan):
-        return query
-    if isinstance(query, str):
-        return plan_query(parse_query(query))
-    return plan_query(query)  # an AST Node
-
-
-def match_dataframe(
-    index, query, facts: list[str] | None = None,
-    restrict: DataFrame | None = None,
-) -> DataFrame:
+def match_dataframe(index, query, facts: list[str] | None = None) -> DataFrame:
     """Unscored boolean match set (the reference's semantics —
-    ResultsBuffer.h:38-88 holds matches only). ``restrict`` ANDs a
-    DataFrame[doc_id] restriction in as a semi-join (see _matched)."""
-    return _matched(index, _as_plan(query), facts, restrict=restrict).select(
-        "doc_id"
-    )
+    ResultsBuffer.h:38-88 holds matches only)."""
+    return _matched(index, as_plan(query), facts).select("doc_id")
 
 
-def scored_matches(
-    index, query, facts: list[str] | None = None
-) -> DataFrame:
+def scored_matches(index, query, facts: list[str] | None = None) -> DataFrame:
     """The FULL match set with BM25 scores — DataFrame[(doc_id, score)],
-    score rounded to 4 dp, no top-k. The input to rescoring layers
-    (serving.function_score) that must see every match, not a truncated
-    top-k (Elasticsearch applies score functions during scoring, before
-    any result-window cut)."""
-    plan = _as_plan(query)
-    return _matched(index, plan, facts).select(
+    score rounded to 4 dp, no top-k (kernel.score_kernel's reference)."""
+    return _matched(index, as_plan(query), facts).select(
         "doc_id", F.round(F.col("score"), 4).alias("score")
     )
 
@@ -375,16 +290,12 @@ def scored_matches(
 def search_dataframe(
     index, query, k: int = 10, facts: list[str] | None = None,
     after: tuple[float, int] | None = None, similarity: str = "bm25",
-    restrict: DataFrame | None = None,
 ) -> DataFrame:
     """BM25 top-k as DataFrame[(doc_id, score)]; see module docstring for the
     determinism contract. ``after=(score, doc_id)`` pages past the cursor
-    (search_after semantics — the filter keeps the job k-row at any depth).
-    ``similarity`` swaps the scoring flavor (plans/scoring.py). ``restrict``
-    ANDs a DataFrame[doc_id] restriction in as a semi-join BEFORE top-k
-    (ES filter semantics — the page is the top of the filtered set)."""
-    plan = _as_plan(query)
-    res = _matched(index, plan, facts, similarity, restrict=restrict).select(
+    (search_after semantics). ``similarity`` swaps the scoring flavor
+    (plans/scoring.py)."""
+    res = _matched(index, as_plan(query), facts, similarity).select(
         "doc_id", F.round(F.col("score"), 4).alias("score")
     )
     if after is not None:

@@ -1,4 +1,4 @@
-"""Kernel-path query executor — one N-query kernel over posting segments.
+"""The query engine — one N-query kernel over posting segments.
 
 The scale path (SURVEY §3.1 "Our Spark lifecycle"): queries are parsed and
 planned driver-side, ONE tiny descriptor (per-query plans, idf, route and
@@ -11,7 +11,8 @@ no doc-table join; the segment store is self-sufficient) → per-group top-k.
 
 Every execution variant is this one kernel over a query log:
 
-- ``search_kernel`` / ``match_kernel`` run a log of one query;
+- ``search_kernel`` / ``score_kernel`` / ``match_kernel`` run a log of one
+  query (its top-k, its full scored match set, its unscored match set);
 - ``plans/batch.py`` (search_many, match_many, percolate) runs a whole log,
   the queries of a group sharing one block decode cache;
 - ``plans/profile.py`` runs it with the counters sink on: a fresh decode
@@ -30,8 +31,11 @@ the kernel: every posting read goes through the group's ``wand.BlockCache``,
 which decodes only candidate-bearing blocks; scored flat term/group shapes
 (single terms included) take block-max top-k (plans/wand.py — block-max
 WAND for conjunctions, MaxScore for disjunctions); phrases/NOTs/nested
-shapes and match sets (``k=None``, never scored) use the exhaustive
-candidate+mask path below.
+shapes, full scored match sets (``k=math.inf``) and match sets
+(``k=None``, never scored) use the exhaustive candidate+mask path below.
+
+``plans/executor.py`` is not an execution path: it is the declarative
+reference the parity tests and ``cli verify`` compare this kernel against.
 
 Phrases: evaluated exactly — from stored positions, from an indexed gram
 posting list, or from corpus-derived synthetic posting rows unioned into
@@ -40,18 +44,19 @@ the scan (phrase_fallback_segments). The routing is decided once per log.
 
 from __future__ import annotations
 
+import math
 import time
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from bitfunnel_spark.config import POS_BITS, POS_SAFE_DOCLEN
+from bitfunnel_spark.functions.tokenizer import tokenize
 from bitfunnel_spark.operators.segments import decode_group_positions
 from bitfunnel_spark.plans.ast import And, FieldGroup, Node, Not, Or, Phrase, SynGroup, Term
-from bitfunnel_spark.plans.executor import _as_plan, _phrase_doc_ids
-from bitfunnel_spark.plans.planner import QueryPlan
+from bitfunnel_spark.plans.planner import QueryPlan, as_plan
 from bitfunnel_spark.plans.wand import (
     _EMPTY,
     _EMPTYF,
@@ -263,7 +268,7 @@ def _score(
     SynonymQuery; plan.syn_groups) as weight-1.0 members, then
     combined-fields groups (BM25F — ast.FieldGroup). Per doc, tf̃ = Σ w·tf
     accumulated in the group's fixed sorted-member order (exactly the order
-    the DataFrame executor and the SQL oracle fold in, so float64 stays
+    the reference executor and the SQL oracle fold in, so float64 stays
     bit-identical; 1.0·tf == tf), saturated ONCE with the doc's norm,
     weighted by the blended idf = min over in-dictionary members (idf is
     monotone-decreasing in df, so min idf ≡ idf of the max df — Lucene's
@@ -311,7 +316,7 @@ def _score(
         elif similarity == "dot_tf":
             # sparse dot product: (weight·boost)·tf — tf is an exact small
             # integer in float64, so the product is bit-reproducible by
-            # the DataFrame executor and the SQL oracle
+            # the reference executor and the SQL oracle
             score[m] += idf.get(key, 0.0) * tfs_all[idxs].astype(np.float64)
         else:  # boolean: constant (boost) per matched scoring key
             score[m] += idf.get(key, 0.0)
@@ -414,7 +419,7 @@ def _evaluate(
 _NP_TYPES = {"int": np.int32, "long": np.int64, "double": np.float64}
 
 
-def _schema(k: int | None, sink: bool) -> str:
+def _schema(k: float | None, sink: bool) -> str:
     return METRIC_SCHEMA if sink else RESULT_SCHEMA if k is not None else MATCH_SCHEMA
 
 
@@ -528,6 +533,60 @@ def _phrase_term(ph: Phrase) -> str:
     output never contains NUL); slop is part of the key because "a b" and
     "a b"~2 have different doc sets."""
     return f"{ph.text}\x00~{int(getattr(ph, 'slop', 0) or 0)}"
+
+
+_STREAM_TEXT = {"body": "content", "path": "path", "lang": "lang", "repo": "repo"}
+
+
+def _slop_phrase_expr(phrase: Phrase, col: str, analyzer: str = "standard") -> Column:
+    """Catalyst predicate for a sloppy phrase (ast.Phrase.slop > 0): there
+    exist 0-based token positions p1 < p2 < ... < pn, one per constituent,
+    with pn - p1 <= (n-1) + slop. Built as nested higher-order ``exists``
+    over per-constituent position arrays — pure JVM expressions, no UDF."""
+    toks = tokenize(col, analyzer)
+
+    # NOTE: pyspark decides unary-vs-binary HOF lambdas by parameter COUNT,
+    # so no default-arg captures here — closures only.
+    def _positions(t: str) -> Column:
+        def mark(x, i):
+            return F.when(x == F.lit(t), i).otherwise(F.lit(-1))
+
+        return F.filter(F.transform(toks, mark), lambda v: v >= 0)
+
+    pos_arrays = [_positions(t) for t in phrase.tokens]
+    n = len(phrase.tokens)
+    span = F.lit(n - 1 + int(phrase.slop))
+
+    def chain(k: int, prev: Column, first: Column) -> Column:
+        if k == n:
+            return F.lit(True)
+
+        def pred(p):
+            return (p > prev) & ((p - first) <= span) & chain(k + 1, p, first)
+
+        return F.exists(pos_arrays[k], pred)
+
+    return F.exists(pos_arrays[0], lambda p0: chain(1, p0, p0))
+
+
+def _phrase_doc_ids(index, phrase: Phrase, candidates: DataFrame | None) -> DataFrame:
+    """doc_ids whose tokenized stream text contains the phrase (adjacently
+    when slop is 0; within the slop window otherwise) — the corpus-derived
+    phrase semantics, for indexes whose segments carry no usable positions.
+
+    Scoped to candidate docs first (semi-join) when ``candidates`` is given,
+    so the corpus scan only touches documents that already contain all
+    constituents.
+    """
+    col = _STREAM_TEXT[phrase.stream]
+    analyzer = getattr(getattr(index, "config", None), "analyzer", "standard")
+    src = index.corpus
+    if candidates is not None:
+        src = src.join(candidates.select("doc_id"), "doc_id", "left_semi")
+    if getattr(phrase, "slop", 0):
+        return src.filter(_slop_phrase_expr(phrase, col, analyzer)).select("doc_id")
+    padded = F.concat(F.lit(" "), F.array_join(tokenize(col, analyzer), " "), F.lit(" "))
+    return src.filter(padded.contains(f" {phrase.text} ")).select("doc_id")
 
 
 def phrase_fallback_segments(index, phrases) -> "DataFrame":
@@ -653,10 +712,11 @@ def _descriptor(
     # per-block max_tf metadata (BlockCache bound mode). Both need
     # non-negative weights (w·max is NOT an upper bound of w·x when w < 0;
     # a negative boost through the public API takes the exhaustive
-    # scorer), and only scored queries have a top-k to prune against.
+    # scorer), and only a finite top-k has a threshold to prune against.
     desc["routes"] = [
         route_units(p.ast)
         if k is not None
+        and math.isfinite(k)
         and similarity in ("bm25", "dot_tf")
         and all(w >= 0.0 for w in q.values())
         else None
@@ -666,15 +726,20 @@ def _descriptor(
 
 
 def run_log(
-    index, plans: list[QueryPlan], k: int | None, facts: list[str] | None = None,
+    index, plans: list[QueryPlan], k: float | None, facts: list[str] | None = None,
     similarity: str = "bm25", after: tuple[float, int] | None = None,
     sink: bool = False,
 ) -> DataFrame:
     """Run a query log through the one kernel in ONE job: one segment scan
     over the union of the queries' terms, one applyInPandas over (shard,
     slice) groups. Returns per-group rows — RESULT_SCHEMA (per-group top-k
-    when ``k`` is set), MATCH_SCHEMA (full match sets, ``k=None``), or
-    METRIC_SCHEMA when the counters ``sink`` is on.
+    when ``k`` is finite; every match, scored, when ``k`` is ``math.inf``),
+    MATCH_SCHEMA (full unscored match sets, ``k=None``), or METRIC_SCHEMA
+    when the counters ``sink`` is on.
+
+    Fact sets named in ``facts`` (define_fact) reach the kernel as one
+    driver-collected doc-id array, capped at ``MAX_FACT_DOCS``
+    (index.fact_doc_ids); broad facts belong in define_fact_indexed.
 
     A doc-metadata restriction on the index (``_restrict_docs``, a
     DataFrame[doc_id] — ES range filters and post_filter, plans/dsl.py)
@@ -713,20 +778,30 @@ def run_log(
 
 def match_kernel(index, query, facts: list[str] | None = None) -> DataFrame:
     """Unscored boolean match set via the kernel path."""
-    return run_log(index, [_as_plan(query)], None, facts).select("doc_id")
+    return run_log(index, [as_plan(query)], None, facts).select("doc_id")
+
+
+def score_kernel(index, query, facts: list[str] | None = None) -> DataFrame:
+    """The FULL match set with BM25 scores — DataFrame[(doc_id, score)],
+    score rounded to 4 dp, no top-k cut. The input of serving layers that
+    must see every match (function_score, collapse, aggregations): ES
+    applies score functions during scoring, before any result-window cut."""
+    groups = run_log(index, [as_plan(query)], math.inf, facts)
+    return groups.select("doc_id", F.round(F.col("score"), 4).alias("score"))
 
 
 def search_kernel(
     index, query, k: int = 10, facts: list[str] | None = None,
     after: tuple[float, int] | None = None, similarity: str = "bm25",
 ) -> DataFrame:
-    """BM25 top-k via the kernel path — rank-identical to search_dataframe.
+    """BM25 top-k via the kernel path — rank-identical to the DuckDB oracle
+    and to the reference executor (plans/executor.search_dataframe).
 
     ``after=(score, doc_id)``: deep pagination (Elasticsearch search_after):
     return the k results strictly after the cursor in (score desc, doc_id
     asc) order. Pages stay k-row jobs at any depth — no window over the
     full result, no growing LIMIT; block-max traversals seed their
     threshold from the cursor (plans/wand.py head-skip)."""
-    groups = run_log(index, [_as_plan(query)], k, facts, similarity, after)
+    groups = run_log(index, [as_plan(query)], k, facts, similarity, after)
     res = groups.select("doc_id", F.round(F.col("score"), 4).alias("score"))
     return res.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)

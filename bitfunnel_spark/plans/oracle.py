@@ -17,8 +17,7 @@ from __future__ import annotations
 from bitfunnel_spark.config import TOKEN_PATTERN, BuildConfig
 from bitfunnel_spark.functions.tokenizer import CODE_SPLIT_RULES
 from bitfunnel_spark.plans.ast import And, FieldGroup, Node, Not, Or, Phrase, SynGroup, Term
-from bitfunnel_spark.plans.parser import parse_query
-from bitfunnel_spark.plans.planner import QueryPlan, plan_query
+from bitfunnel_spark.plans.planner import QueryPlan, as_plan
 
 _PAT = TOKEN_PATTERN.replace("'", "''")
 
@@ -177,14 +176,6 @@ def _bool_sql(node: Node) -> str:
             return f"(({counted}) >= {node.min_match})"
         return "(" + " OR ".join(_bool_sql(c) for c in node.children) + ")"
     raise TypeError(type(node))
-
-
-def _as_plan(query) -> QueryPlan:
-    if isinstance(query, QueryPlan):
-        return query
-    if isinstance(query, str):
-        return plan_query(parse_query(query))
-    return plan_query(query)
 
 
 def _hits_cte(
@@ -378,7 +369,7 @@ def oracle_search_sql(
     ``similarity`` mirrors the engine's query-time scoring flavor
     (plans/scoring.py): "bm25" (default), "classic", "boolean"."""
     config = config or BuildConfig()
-    plan = _as_plan(query)
+    plan = as_plan(query)
     extra = f" AND ({extra_where})" if extra_where else ""
     off = f" OFFSET {int(offset)}" if offset else ""
     return (
@@ -393,7 +384,7 @@ def oracle_search_sql(
 def oracle_match_sql(query, config: BuildConfig | None = None) -> str:
     """Unscored full match set oracle: SELECT doc_id."""
     config = config or BuildConfig()
-    plan = _as_plan(query)
+    plan = as_plan(query)
     return (
         f"WITH {corpus_cte(config.analyzer)},\n{_hits_cte(plan, config)}\n"
         f"SELECT h.doc_id AS doc_id\nFROM hits h\nWHERE {_bool_sql(plan.ast)}\n"
@@ -413,9 +404,9 @@ def oracle_facets_sql(
     Facet names map to documents columns (lang -> lang, repo -> source),
     mirroring sources/corpus.corpus_from_documents. ``extra_where`` ANDs a
     doc-level predicate into the match — the mirror of engine-side range
-    filters (run_aggs' `_restrict_docs` semi-join)."""
+    filters (run_aggs' restricted index copy)."""
     config = config or BuildConfig()
-    plan = _as_plan(query)
+    plan = as_plan(query)
     col_of = {"lang": "lang", "repo": "source"}
     parts = [
         f"SELECT '{f}' AS facet, d.{col_of[f]} AS value, count(*) AS n_docs\n"
@@ -439,7 +430,7 @@ def oracle_rare_terms_sql(
     """rare_terms oracle: SELECT value, n_docs (n_docs <= max_doc_count,
     ordered n_docs asc, value asc)."""
     config = config or BuildConfig()
-    plan = _as_plan(query)
+    plan = as_plan(query)
     col = {"lang": "lang", "repo": "source"}[by]
     return (
         f"WITH {CORPUS_CTE},\n{_hits_cte(plan, config)},\n"
@@ -458,7 +449,7 @@ def oracle_multi_terms_sql(
     """multi_terms oracle: SELECT <by...>, n_docs (n_docs desc, keys asc,
     LIMIT size)."""
     config = config or BuildConfig()
-    plan = _as_plan(query)
+    plan = as_plan(query)
     col_of = {"lang": "lang", "repo": "source"}
     sel = ", ".join(f"d.{col_of[f]} AS {f}" for f in by)
     grp = ", ".join(f"d.{col_of[f]}" for f in by)
@@ -480,7 +471,7 @@ def oracle_facet_ranges_sql(
     """Range-aggregation oracle mirroring plans/serving.facet_ranges:
     bucket_lo = largest edge <= body doclen, counts over the match set."""
     config = config or BuildConfig()
-    plan = _as_plan(query)
+    plan = as_plan(query)
     edges = tuple(sorted(int(e) for e in edges))
     whens = " ".join(
         f"WHEN coalesce(dl.doclen, 0) >= {lo} THEN CAST({lo} AS INT)"
@@ -502,7 +493,7 @@ def oracle_histogram_sql(
     """Fixed-interval histogram oracle mirroring plans/serving.histogram:
     bucket = floor(doclen / interval) · interval over the match set."""
     config = config or BuildConfig()
-    plan = _as_plan(query)
+    plan = as_plan(query)
     iv = int(interval)
     return (
         f"WITH {CORPUS_CTE},\n{_hits_cte(plan, config)},\n"
@@ -519,7 +510,7 @@ def oracle_extended_stats_sql(query, config: BuildConfig | None = None) -> str:
     int64 sum / sum-of-squares over the match set, then avg/var/std derived
     with the SAME float64 op order (var = sumsq/n − (sum/n)·(sum/n))."""
     config = config or BuildConfig()
-    plan = _as_plan(query)
+    plan = as_plan(query)
     mean = "(CAST(sum_doclen AS DOUBLE) / CAST(n_docs AS DOUBLE))"
     var = f"(CAST(sum_sq AS DOUBLE) / CAST(n_docs AS DOUBLE) - {mean} * {mean})"
     return (
@@ -547,7 +538,7 @@ def oracle_significant_terms_sql(
     """significant_terms oracle mirroring plans/serving.significant_terms:
     lift = (fg_df/F) / (bg_df/N), rounded 4 dp, top k by (lift desc, term)."""
     config = config or BuildConfig()
-    plan = _as_plan(query)
+    plan = as_plan(query)
     return (
         f"WITH {CORPUS_CTE},\n{_hits_cte(plan, config)},\n"
         f"m AS (SELECT h.doc_id FROM hits h WHERE {_bool_sql(plan.ast)}),\n"
@@ -568,7 +559,7 @@ def oracle_explain_sql(query, k: int = 10, config: BuildConfig | None = None) ->
     (top-k doc, scoring key present), contribution = idf(·boost)·partial,
     rounded 4 dp."""
     config = config or BuildConfig()
-    plan = _as_plan(query)
+    plan = as_plan(query)
     k1, b = config.bm25.k1, config.bm25.b
     scoring = sorted(plan.scoring_keys)
     scoring_list = ", ".join(_q(f"{s}:{t}") for s, t in scoring)
@@ -605,7 +596,7 @@ def oracle_hybrid_sql(
     BM25 top-k_each fused with exact-cosine top-k_each of the query
     vector, rrf = Σ 1/(rrf_k + rank), NULL rank when absent from a list."""
     config = config or BuildConfig()
-    plan = _as_plan(query)
+    plan = as_plan(query)
     qid = int(query_vec_id)
     return f"""WITH {CORPUS_CTE},
 {_hits_cte(plan, config)},
@@ -642,7 +633,7 @@ def oracle_facet_stats_sql(
     """Per-facet doclen statistics oracle mirroring
     plans/serving.facet_stats; ``by`` maps like facets (repo -> source)."""
     config = config or BuildConfig()
-    plan = _as_plan(query)
+    plan = as_plan(query)
     col = {"lang": "lang", "repo": "source"}[by]
     return (
         f"WITH {CORPUS_CTE},\n{_hits_cte(plan, config)},\n"
@@ -669,7 +660,7 @@ def oracle_script_score_sql(
     from bitfunnel_spark.operators.pipeline_aggs import compile_script_sql
 
     config = config or BuildConfig()
-    plan = _as_plan(query)
+    plan = as_plan(query)
     names = {"_score": "m.s", "doclen": "CAST(coalesce(dl.doclen, 0) AS DOUBLE)"}
     for name, val in (params or {}).items():
         names[name] = repr(float(val))
@@ -693,7 +684,7 @@ def oracle_facet_mad_sql(
     ``percentile``, the equivalence the percentiles entry already
     certifies), then the median of absolute deviations."""
     config = config or BuildConfig()
-    plan = _as_plan(query)
+    plan = as_plan(query)
     col = {"lang": "lang", "repo": "source"}[by]
     return (
         f"WITH {CORPUS_CTE},\n{_hits_cte(plan, config)},\n"
@@ -720,7 +711,7 @@ def oracle_facet_percentiles_sql(
     from bitfunnel_spark.plans.serving import _pct_name
 
     config = config or BuildConfig()
-    plan = _as_plan(query)
+    plan = as_plan(query)
     col = {"lang": "lang", "repo": "source"}[by]
     pcols = ",\n".join(
         f"       round(quantile_cont(CAST(coalesce(dl.doclen, 0) AS DOUBLE), "
@@ -786,7 +777,7 @@ def oracle_matrix_stats_sql(
     strings matrix_stats_exprs hands the engine. doclen comes from the dl
     CTE (the certified body-token counts); chars is length(text)."""
     config = config or BuildConfig()
-    plan = _as_plan(query)
+    plan = as_plan(query)
     a, b = fields
     assert a == "doclen" and b == "chars", fields
     rows = []
@@ -826,7 +817,7 @@ def oracle_metric_agg_sql(
     (length(text)). Sums cast ::BIGINT (DuckDB HUGEINT -> engine int64);
     avg derives from the exact integer sums with one float64 divide."""
     config = config or BuildConfig()
-    plan = _as_plan(query)
+    plan = as_plan(query)
     v = "dl.doclen" if field == "doclen" else "length(d.text)"
     join = ("m JOIN dl USING (doc_id)" if field == "doclen"
             else "m JOIN documents d USING (doc_id)")
@@ -860,7 +851,7 @@ def oracle_collapse_sql(
     then global top-k. ``by`` maps to documents columns like facets
     (repo -> source, lang -> lang)."""
     config = config or BuildConfig()
-    plan = _as_plan(query)
+    plan = as_plan(query)
     col = {"lang": "lang", "repo": "source"}[by]
     return (
         f"WITH {CORPUS_CTE},\n{_hits_cte(plan, config)},\n"
@@ -941,7 +932,7 @@ def oracle_sort_hits_sql(
     or a documents metadata column (repo -> source, lang -> lang), ties
     doc_id asc, top-k."""
     config = config or BuildConfig()
-    plan = _as_plan(query)
+    plan = as_plan(query)
     direction = "ASC" if ascending else "DESC"
     head = (
         f"WITH {CORPUS_CTE},\n{_hits_cte(plan, config)},\n"
@@ -973,7 +964,7 @@ def oracle_function_score_sql(
     top-k. ``field`` supports doclen (coalesced to 0, as the engine's left
     join does)."""
     config = config or BuildConfig()
-    plan = _as_plan(query)
+    plan = as_plan(query)
     if field != "doclen":
         raise ValueError("oracle supports field='doclen'")
     v = f"({float(factor)} * CAST(coalesce(dl.doclen, 0) AS DOUBLE))"
@@ -1007,7 +998,7 @@ def oracle_span_first_sql(
     first ``end`` tokens (1-based list_position BETWEEN 1 AND end ≡ the
     engine's 0-based first position < end)."""
     config = config or BuildConfig()
-    plan = _as_plan(query)
+    plan = as_plan(query)
     span = (
         f"h.doc_id IN (SELECT doc_id FROM corpus WHERE "
         f"list_position(regexp_extract_all(body_text, '{_PAT}'), {_q(term.lower())}) "
@@ -1029,8 +1020,8 @@ def oracle_boosting_sql(
     (rounded 4 dp) multiplied by negative_boost where the doc also matches
     the negative query, final round 4 dp, top-k."""
     config = config or BuildConfig()
-    pos = _as_plan(positive)
-    neg = _as_plan(negative)
+    pos = as_plan(positive)
+    neg = as_plan(negative)
     comb = (
         f"round(CASE WHEN ({_bool_sql(neg.ast)}) "
         f"THEN round(h.score, 4) * {float(negative_boost)} "
@@ -1054,7 +1045,7 @@ def oracle_dis_max_sql(
     max + tie·(sum − max) folds clauses in the same fixed order as the
     engine."""
     config = config or BuildConfig()
-    plans = [_as_plan(q) for q in clauses]
+    plans = [as_plan(q) for q in clauses]
     subs = []
     for i, plan in enumerate(plans):
         subs.append(
@@ -1089,8 +1080,8 @@ def oracle_rescore_sql(
     the rescore arm's full scored match set, Lucene combine rules,
     final round 4 dp, top-k."""
     config = config or BuildConfig()
-    pos = _as_plan(query)
-    sec = _as_plan(rescore_query)
+    pos = as_plan(query)
+    sec = as_plan(rescore_query)
     win = (
         f"(WITH {CORPUS_CTE},\n{_hits_cte(pos, config)}\n"
         f"SELECT h.doc_id AS doc_id, round(h.score, 4) AS p\n"
@@ -1131,7 +1122,7 @@ def oracle_decay_score_sql(
     import math
 
     config = config or BuildConfig()
-    plan = _as_plan(query)
+    plan = as_plan(query)
     d = (
         f"greatest(0.0, abs(CAST(coalesce(dl.doclen, 0) AS DOUBLE)"
         f" - {float(origin)}) - {float(offset)})"
@@ -1170,7 +1161,7 @@ def oracle_cardinality_sql(
     facet_cardinality(exact=True): per ``by``-bucket matching-doc count
     and distinct ``of``-values. Columns map like facets (repo -> source)."""
     config = config or BuildConfig()
-    plan = _as_plan(query)
+    plan = as_plan(query)
     cols = {"lang": "lang", "repo": "source"}
     bcol, ocol = cols[by], cols[of]
     return (
@@ -1192,7 +1183,7 @@ def oracle_top_hits_sql(
     ``per_group`` docs by (score desc, doc_id asc). ``by`` maps to
     documents columns like facets (repo -> source, lang -> lang)."""
     config = config or BuildConfig()
-    plan = _as_plan(query)
+    plan = as_plan(query)
     col = {"lang": "lang", "repo": "source"}[by]
     return (
         f"WITH {CORPUS_CTE},\n{_hits_cte(plan, config)},\n"
@@ -1218,7 +1209,7 @@ def oracle_snippets_sql(
     ±window around the first body occurrence of the rarest (df asc, term
     asc) scoring term present in each top-k document."""
     config = config or BuildConfig()
-    plan = _as_plan(query)
+    plan = as_plan(query)
     terms = sorted(plan.scoring_terms)
     topk = (
         f"topk AS (\n  SELECT h.doc_id, round(h.score, 4) AS score FROM hits h\n"
@@ -1330,7 +1321,7 @@ ORDER BY round(score, 4) DESC, doc_id ASC LIMIT {int(k)}"""
 
 def _plans_and_extra(filters: dict[str, str]):
     names = sorted(filters)
-    plans = {n: _as_plan(filters[n]) for n in names}
+    plans = {n: as_plan(filters[n]) for n in names}
     extra: set[tuple[str, str]] = set()
     for n in names[1:]:
         extra |= plans[n].terms
@@ -1395,7 +1386,7 @@ def oracle_matched_queries_sql(
     array<string> columns (VERDICT r04), so the registry entry uses the
     string form; tests keep the list form for API fidelity."""
     config = config or BuildConfig()
-    plan = _as_plan(query)
+    plan = as_plan(query)
     names, plans, _ = _plans_and_extra(named)
     extra: set[tuple[str, str]] = set()
     for n in names:
@@ -1431,7 +1422,7 @@ def oracle_composite_sql(
     Metadata mapping mirrors sources/corpus.corpus_from_documents
     (repo <- source, lang <- lang)."""
     config = config or BuildConfig()
-    plan = _as_plan(query)
+    plan = as_plan(query)
     mcol = {"lang": "d.lang", "repo": "d.source"}
     sel = ", ".join(f"{mcol[c]} AS {c}" for c in by)
     where = ""
@@ -1459,7 +1450,7 @@ def oracle_random_score_sql(
     int64-safe LCG hash (((doc_id + seed) mod 2^31)·1103515245 + 12345)
     mod 2^31, scaled to [0,1) and rounded 6 dp."""
     config = config or BuildConfig()
-    plan = _as_plan(query)
+    plan = as_plan(query)
     m = 2147483648
     seed = int(seed) % m  # the engine's driver-side normalization (serving.random_score)
     h = f"((((h.doc_id + {int(seed)}) % {m}) * 1103515245 + 12345) % {m})"
@@ -1486,7 +1477,7 @@ def oracle_span_near_sql(
     slots = [[x.lower() for x in t] if isinstance(t, (list, tuple))
              else [t.lower()] for t in terms]
     n = len(slots)
-    plan = _as_plan(" & ".join(
+    plan = as_plan(" & ".join(
         s[0] if len(s) == 1 else "(" + " | ".join(s) + ")" for s in slots
     ))
     ptok = (
@@ -1541,7 +1532,7 @@ def oracle_span_not_sql(
     toks = [t.lower() for t in include]
     excl = exclude.lower()
     n = len(toks)
-    plan = _as_plan(" & ".join(toks))
+    plan = as_plan(" & ".join(toks))
     ptok = (
         f"(SELECT doc_id, unnest(regexp_extract_all(body_text, '{_PAT}')) AS t, "
         f"unnest(range(1, len(regexp_extract_all(body_text, '{_PAT}')) + 1)) AS p "
@@ -1640,7 +1631,7 @@ def oracle_sampler_sql(
     ``max_docs_per_value`` dedup when ``diversify=(field, max)`` — then
     terms counts of ``by`` over the sample."""
     config = config or BuildConfig()
-    plan = _as_plan(query)
+    plan = as_plan(query)
     col_of = {"lang": "lang", "repo": "source"}
     shard = _shard_expr_sql()
     dedup = ""
@@ -1685,7 +1676,7 @@ def oracle_boxplot_sql(
     per facet value the exact five-number doclen summary (quantile_cont
     matches Spark's exact interpolated percentile)."""
     config = config or BuildConfig()
-    plan = _as_plan(query)
+    plan = as_plan(query)
     col_of = {"lang": "lang", "repo": "source"}
     return (
         f"WITH {CORPUS_CTE},\n{_hits_cte(plan, config)},\n"
@@ -1744,7 +1735,7 @@ def oracle_percentile_ranks_sql(
     per requested value the exact empirical CDF percentage of the match
     set's doclen, derived c/n*100 in the same float64 op order."""
     config = config or BuildConfig()
-    plan = _as_plan(query)
+    plan = as_plan(query)
     vals = sorted(float(v) for v in values)
     conds = ",\n".join(
         f"         sum(CASE WHEN coalesce(dl.doclen, 0) <= {v!r} THEN 1 ELSE 0 END)::BIGINT AS c{i}"
@@ -1772,8 +1763,8 @@ def oracle_t_test_sql(
     two-sample t over doclen, exact int64 n/sum/sumsq per side then
     mean/var/t in the engine's float64 op order (sample variance, n-1)."""
     config = config or BuildConfig()
-    pa = _as_plan(query_a)
-    pb = _as_plan(query_b)
+    pa = as_plan(query_a)
+    pb = as_plan(query_b)
 
     def _m(s):
         return (
@@ -1820,7 +1811,7 @@ def oracle_string_stats_sql(
     base-2 Shannon entropy of the character distribution refactored as
     log2(total) − Σ c·log2(c)/total — the engine's exact op order."""
     config = config or BuildConfig()
-    plan = _as_plan(query)
+    plan = as_plan(query)
     col = {"lang": "lang_text", "repo": "repo_text"}[field]
     return (
         f"WITH {CORPUS_CTE},\n{_hits_cte(plan, config)},\n"
@@ -1882,7 +1873,7 @@ def oracle_weighted_avg_sql(
     documents row — the same expression as the engine's
     length(content)."""
     config = config or BuildConfig()
-    plan = _as_plan(query)
+    plan = as_plan(query)
 
     def _col(f: str) -> str:
         if f == "doclen":

@@ -24,6 +24,7 @@ from bitfunnel_spark.plans.ast import (
     SynGroup,
     Term,
 )
+from bitfunnel_spark.plans.parser import parse_query
 
 
 class QueryPlanError(ValueError):
@@ -322,3 +323,12 @@ def plan_query(node: Node) -> QueryPlan:
         syn_groups=groups,
         field_groups=fgroups,
     )
+
+
+def as_plan(query) -> QueryPlan:
+    """A QueryPlan from a query string, an AST node or a plan."""
+    if isinstance(query, QueryPlan):
+        return query
+    if isinstance(query, str):
+        return plan_query(parse_query(query))
+    return plan_query(query)

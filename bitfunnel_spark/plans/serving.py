@@ -114,7 +114,7 @@ def _ranked_scoring_terms(index, plan) -> list[str]:
 
 
 def snippets(
-    index, query: str, k: int = 10, window: int = 4, mode: str = "kernel",
+    index, query: str, k: int = 10, window: int = 4,
     facts: list[str] | None = None, tags: tuple[str, str] | None = None,
 ) -> DataFrame:
     """Top-k search results with a token-window snippet.
@@ -131,7 +131,7 @@ def snippets(
     Python. Default None keeps the plain fragment (the oracle-verified
     shape); ES's implicit ``<em>`` default is opt-in here.
     """
-    res = index.search(query, k=k, mode=mode, facts=facts)
+    res = index.search(query, k=k, facts=facts)
     # prepare (don't just parse): expansion/synonym queries must rank their
     # RESOLVED scoring terms, and the raw AST may hold unplannable nodes
     plan = plan_query(index.prepare_query(query))
@@ -436,9 +436,8 @@ def function_score(
         raise ValueError(f"unknown modifier {modifier!r}")
     if boost_mode not in _FSCORE_BOOST_MODES:
         raise ValueError(f"unknown boost_mode {boost_mode!r}")
-    from bitfunnel_spark.plans.executor import scored_matches
 
-    scored = scored_matches(index, query, facts)
+    scored = index.scored_match(query, facts)
     if field == "doclen":
         meta = index.doc_stats.select(
             "doc_id", F.col("doclen").cast("double").alias("fv")
@@ -489,9 +488,8 @@ def script_score(
         PipelineError,
         compile_script,
     )
-    from bitfunnel_spark.plans.executor import scored_matches
 
-    scored = scored_matches(index, query, facts)
+    scored = index.scored_match(query, facts)
     dl = index.doc_stats.select(
         "doc_id", F.col("doclen").cast("double").alias("_doclen")
     )
@@ -557,7 +555,7 @@ def rank_feature(
     else:
         # the standalone form scans doc stats directly — match() isn't in
         # the path to mask tombstones or apply the ambient doc
-        # restriction (executor._matched does both), so do both here
+        # restriction (the kernel behind match() does both), so do both here
         tomb = getattr(index, "tombstones", frozenset())
         if tomb:
             feats = feats.filter(
@@ -604,12 +602,11 @@ def span_first(
     (array_position over the tokenized body — same fallback policy as
     phrases, plans/kernel.use_positional_phrases).
     """
-    from bitfunnel_spark.plans.executor import scored_matches
     from bitfunnel_spark.plans.kernel import _segment_filter, use_positional_phrases
 
     term = term.lower()
     end = int(end)
-    scored = scored_matches(index, query, facts)
+    scored = index.scored_match(query, facts)
     if index.segments is not None and use_positional_phrases(index):
         import numpy as np
         import pandas as pd
@@ -653,9 +650,8 @@ def boosting_query(
     the positive scored set on doc_id and the demotion is one fused
     conditional multiply, then the usual TakeOrderedAndProject top-k.
     """
-    from bitfunnel_spark.plans.executor import scored_matches
 
-    scored = scored_matches(index, positive, facts)
+    scored = index.scored_match(positive, facts)
     neg = index.match(negative, facts).select(
         "doc_id", F.lit(True).alias("_neg")
     )
@@ -695,10 +691,9 @@ def dis_max(
     """
     if not clauses:
         raise ValueError("dis_max needs at least one clause")
-    from bitfunnel_spark.plans.executor import scored_matches
 
     parts = [
-        scored_matches(index, q, facts).select(
+        index.scored_match(q, facts).select(
             "doc_id", F.col("score").alias(f"s{i}")
         )
         for i, q in enumerate(clauses)
@@ -810,7 +805,7 @@ def rescore(
     index, query: str, rescore_query: str, window_size: int = 100,
     query_weight: float = 1.0, rescore_weight: float = 1.0,
     score_mode: str = "total", k: int = 10,
-    facts: list[str] | None = None, mode: str = "dataframe",
+    facts: list[str] | None = None,
 ) -> DataFrame:
     """ES ``rescore`` (Lucene QueryRescorer): re-rank ONLY the top
     ``window_size`` docs of ``query`` by combining their primary score
@@ -823,19 +818,16 @@ def rescore(
     (TakeOrderedAndProject at window_size); the window — k-scale rows —
     then broadcast-joins the rescore arm's scored match set, so the
     expensive second query runs ONCE regardless of window size and the
-    re-sort touches only window_size rows. ``mode`` picks the executor
-    of the window cut (index.search's modes, rank-identical).
+    re-sort touches only window_size rows.
     """
     if score_mode not in _RESCORE_MODES:
         raise ValueError(f"unknown score_mode {score_mode!r}")
     from pyspark.sql.functions import broadcast
 
-    from bitfunnel_spark.plans.executor import scored_matches
-
-    win = index.search(query, k=int(window_size), mode=mode, facts=facts).select(
+    win = index.search(query, k=int(window_size), facts=facts).select(
         "doc_id", F.col("score").alias("p")
     )
-    sec = scored_matches(index, rescore_query, facts).select(
+    sec = index.scored_match(rescore_query, facts).select(
         "doc_id", F.col("score").alias("s")
     )
     qp = F.lit(float(query_weight)) * F.col("p")
@@ -893,9 +885,7 @@ def decay_score(
         raise ValueError(f"unknown boost_mode {boost_mode!r}")
     import math
 
-    from bitfunnel_spark.plans.executor import scored_matches
-
-    scored = scored_matches(index, query, facts)
+    scored = index.scored_match(query, facts)
     if field == "doclen":
         meta = index.doc_stats.select(
             "doc_id", F.col("doclen").cast("double").alias("fv")
@@ -1099,12 +1089,7 @@ def top_hits(
     hits. No collect; a mega-bucket costs one task's sort, bounded by the
     group-limit pushdown.
     """
-    from bitfunnel_spark.plans.executor import _matched
-
-    plan = plan_query(index.prepare_query(query))
-    scored = _matched(index, plan, facts).select(
-        "doc_id", F.round(F.col("score"), 4).alias("score")
-    )
+    scored = index.scored_match(query, facts)
     meta = index.corpus.select("doc_id", by)
     rows = scored.join(meta, "doc_id")
     counts = rows.groupBy(by).agg(F.count("*").alias("n_docs"))
@@ -1131,19 +1116,14 @@ def collapse_topk(
     other groups. Returns DataFrame[(doc_id, score, <by>)] ordered
     (score desc, doc_id asc), at most ``k`` rows.
 
-    Scale shape: scoring reuses the executor's match surface (one job);
+    Scale shape: scoring is the kernel's full scored match set (one job);
     the collapse for ``per_group=1`` is a plain groupBy(``by``).max_by —
     map-side partial aggregation, so a mega-group (one repo matching
     everything) combines locally and never skews the shuffle. ``per_group
     > 1`` uses a window (rank over the group) — still one shuffle keyed by
     ``by``.
     """
-    from bitfunnel_spark.plans.executor import _matched
-
-    plan = plan_query(index.prepare_query(query))
-    scored = _matched(index, plan, facts).select(
-        "doc_id", F.round(F.col("score"), 4).alias("score")
-    )
+    scored = index.scored_match(query, facts)
     meta = index.corpus.select("doc_id", by)
     rows = scored.join(meta, "doc_id")
     if per_group == 1:
@@ -1279,8 +1259,7 @@ def terms_enum(
 
 
 def explain(
-    index, query: str, k: int = 10, mode: str = "kernel",
-    facts: list[str] | None = None,
+    index, query: str, k: int = 10, facts: list[str] | None = None,
 ) -> DataFrame:
     """Per-term score breakdown of the top-k (Lucene
     IndexSearcher.explain shape): one row per (result doc, scoring key
@@ -1289,14 +1268,15 @@ def explain(
 
     Returns DataFrame[(doc_id, score, stream, term, tf, contribution)]
     ordered (score desc, doc_id asc, stream, term); contribution rounded
-    to 4 dp. The contribution expression is the DataFrame executor's
-    (plans/executor._hits) verbatim, so explain always reconciles with
-    the ranking it explains.
+    to 4 dp. The contribution is idf·boost·partial with the build-time
+    partial's BM25 expression, the association the kernel scores with,
+    so explain reconciles with the ranking it explains. It still reads
+    the row-form ``index.postings``.
 
     Scale shape: one key-pruned posting scan restricted to the k result
     docs by a broadcast semi-join — touches O(k · |query terms|) rows.
     """
-    res = index.search(query, k=k, mode=mode, facts=facts)
+    res = index.search(query, k=k, facts=facts)
     plan = plan_query(index.prepare_query(query))
     keys = sorted(f"{s}:{t}" for s, t in plan.scoring_keys)
     key_col = F.concat_ws(":", F.col("stream"), F.col("term"))
@@ -1345,7 +1325,7 @@ def rank_window(df: DataFrame, score_col: str, id_col: str,
 
 def hybrid_search(
     index, emb: DataFrame, query: str, query_vec_id: int, k: int = 10,
-    k_each: int = 20, rrf_k: int = 60, mode: str = "kernel",
+    k_each: int = 20, rrf_k: int = 60,
     vec_col: str = "embedding", id_col: str = "vec_id",
 ) -> DataFrame:
     """Hybrid lexical + vector retrieval fused with reciprocal-rank fusion
@@ -1364,7 +1344,7 @@ def hybrid_search(
     """
     from bitfunnel_spark.operators.similarity import brute_cosine_topk
 
-    bm = rank_window(index.search(query, k=k_each, mode=mode),
+    bm = rank_window(index.search(query, k=k_each),
                      "score", "doc_id", "bm25_rank")
     cs = brute_cosine_topk(emb, [int(query_vec_id)], k=k_each,
                            vec_col=vec_col, id_col=id_col)
@@ -1385,7 +1365,7 @@ def hybrid_search(
 
 
 def more_like_this(
-    index, doc_id: int, k: int = 10, m: int = 8, mode: str = "kernel",
+    index, doc_id: int, k: int = 10, m: int = 8,
 ) -> DataFrame:
     """Top-k documents most similar to ``doc_id`` (Lucene MoreLikeThis
     shape): select the source document's ``m`` most distinctive body terms
@@ -1409,7 +1389,7 @@ def more_like_this(
     if not selected:
         schema = "doc_id long, score double"
         return index.spark.createDataFrame([], schema)
-    res = index.search(" | ".join(selected), k=k + 1, mode=mode)
+    res = index.search(" | ".join(selected), k=k + 1)
     return (
         res.filter(F.col("doc_id") != int(doc_id))
         .orderBy(F.desc("score"), "doc_id")
@@ -1608,9 +1588,7 @@ def random_score(
         rows = index.match(query, facts).select("doc_id")
         combined = fn
     else:
-        from bitfunnel_spark.plans.executor import scored_matches
-
-        rows = scored_matches(index, query, facts)
+        rows = index.scored_match(query, facts)
         combined = (
             F.col("score") * fn if boost_mode == "multiply"
             else F.col("score") + fn
@@ -1677,7 +1655,6 @@ def span_near(
     fall back to an exact distributed smallest-window check over the
     tokenized corpus (Arrow-batched; same fallback policy as phrases).
     """
-    from bitfunnel_spark.plans.executor import scored_matches
     from bitfunnel_spark.plans.kernel import (
         POS_BITS,
         _segment_filter,
@@ -1695,8 +1672,7 @@ def span_near(
     if len(set(toks)) != len(toks):
         raise ValueError("span_near tokens must be distinct across slots")
     patterns = _near_offset_vectors(n, int(slop))
-    scored = scored_matches(
-        index,
+    scored = index.scored_match(
         " & ".join(s[0] if len(s) == 1 else "(" + " | ".join(s) + ")"
                    for s in slots),
         facts,
@@ -1828,7 +1804,6 @@ def span_not(
     import numpy as np
     import pandas as pd
 
-    from bitfunnel_spark.plans.executor import scored_matches
     from bitfunnel_spark.plans.kernel import (
         MAX_SLOP_PATTERNS,
         POS_BITS,
@@ -1850,7 +1825,7 @@ def span_not(
         raise ValueError("pre/post must be >= 0")
     if pre + n + post > MAX_SLOP_PATTERNS:
         raise ValueError(f"window pre+len+post = {pre + n + post} too large")
-    scored = scored_matches(index, " & ".join(toks), facts)
+    scored = index.scored_match(" & ".join(toks), facts)
 
     if index.segments is not None and use_positional_phrases(index):
         from bitfunnel_spark.operators.segments import (
@@ -2049,11 +2024,10 @@ def sampler_agg(
     operator: the sub-agg's cost is bounded by the sample budget, not
     the corpus.
     """
-    from bitfunnel_spark.plans.executor import scored_matches
 
     if shard_size < 1:
         raise ValueError("shard_size must be >= 1")
-    scored = scored_matches(index, query, facts)
+    scored = index.scored_match(query, facts)
     rows = scored.join(index.doc_stats.select("doc_id", "shard"), "doc_id")
     w = Window.partitionBy("shard").orderBy(F.desc("score"), F.asc("doc_id"))
     sample = (
@@ -2090,11 +2064,10 @@ def diversified_sampler_agg(
     survivors. Downstream cost is bounded by n_shards · shard_size
     exactly as in ``sampler_agg``.
     """
-    from bitfunnel_spark.plans.executor import scored_matches
 
     if shard_size < 1 or max_docs_per_value < 1:
         raise ValueError("shard_size and max_docs_per_value must be >= 1")
-    scored = scored_matches(index, query, facts)
+    scored = index.scored_match(query, facts)
     div = index.corpus.select("doc_id", F.col(field).alias("dval"))
     rows = scored.join(index.doc_stats.select("doc_id", "shard"), "doc_id").join(
         div, "doc_id"
@@ -2350,7 +2323,7 @@ def distance_feature(
         feats = matches.join(feats, "doc_id", "left").fillna(0.0, subset=["fv"])
     else:
         # standalone scan: mask tombstones AND the ambient doc
-        # restriction, which match()/executor._matched would otherwise
+        # restriction, which match() would otherwise
         # supply (the rank_feature branch above documents the same)
         tomb = getattr(index, "tombstones", frozenset())
         if tomb:

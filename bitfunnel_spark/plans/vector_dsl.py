@@ -166,12 +166,7 @@ def knn_search(
     return scored.orderBy(F.desc("cosine"), F.asc("vec_id")).limit(spec["k"])
 
 
-def rerank_search(
-    index,
-    emb: DataFrame,
-    body: dict,
-    mode: str = "kernel",
-) -> DataFrame:
+def rerank_search(index, emb: DataFrame, body: dict) -> DataFrame:
     """ES 8.15 ``retriever.text_similarity_reranker``: run the inner
     retriever for its top ``rank_window_size`` hits, then REORDER that
     window by embedding cosine to the query vector and return the top
@@ -208,7 +203,7 @@ def rerank_search(
     if kind == "standard":
         _require(isinstance(iconf, dict) and set(iconf) == {"query"},
                  "standard retriever takes a `query`")
-        hits = index.search(compile_dsl(iconf["query"]), k=window, mode=mode)
+        hits = index.search(compile_dsl(iconf["query"]), k=window)
         win = hits.select("doc_id")
     elif kind == "knn":
         spec = _knn_spec({"knn": iconf})
@@ -271,12 +266,7 @@ def _rrf_spec(body: dict) -> tuple[list[tuple[str, dict]], int, int, int]:
     return out, rank_constant, window, size
 
 
-def rrf_search(
-    index,
-    emb: DataFrame,
-    body: dict,
-    mode: str = "kernel",
-) -> DataFrame:
+def rrf_search(index, emb: DataFrame, body: dict) -> DataFrame:
     """ES 8.14 ``retriever.rrf`` hybrid search →
     DataFrame[(doc_id, rrf_score)], ordered (rrf_score desc, doc_id asc),
     ``size`` rows.
@@ -293,7 +283,7 @@ def rrf_search(
     ranked = []
     for i, (kind, conf) in enumerate(retrievers):
         if kind == "standard":
-            hits = index.search(compile_dsl(conf), k=window, mode=mode)
+            hits = index.search(compile_dsl(conf), k=window)
             ranked.append(rank_window(hits, "score", "doc_id", f"r_{i}"))
         else:
             kn = knn_search(emb, {"knn": {

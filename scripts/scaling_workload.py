@@ -164,7 +164,7 @@ def main() -> None:
 
     # ---- untimed warm-up: identical pipeline shape on a small slice ------
     warm = run_build(spark, corpus.filter(F.col("doc_id") < 4000), cfg)
-    warm["idx"].search("id_1 id_2", k=10, mode="kernel").collect()
+    warm["idx"].search("id_1 id_2", k=10).collect()
     warm["idx"].search_many(QUERIES, k=10).collect()
     for df in (warm["idx"].doc_stats, warm["idx"].term_stats, warm["idx"].segments):
         df.unpersist()
@@ -191,7 +191,7 @@ def main() -> None:
         lats = []
         for q in QUERIES:
             t1 = time.time()
-            idx.search(q, k=10, mode="kernel").collect()
+            idx.search(q, k=10).collect()
             lats.append(time.time() - t1)
         lats.sort()
 

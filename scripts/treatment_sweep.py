@@ -56,7 +56,7 @@ def main() -> None:
     warm_cfg = BuildConfig(n_slices=max(4, cores // 4), positions=True)
     warm = FullTextIndex.build_fused(spark, corpus.filter(F.col("doc_id") < 2000), warm_cfg)
     warm.segments.count(); warm.key_stats.count()
-    warm.search("data", k=10, mode="kernel").collect()
+    warm.search("data", k=10).collect()
     for df in (warm.doc_stats, warm.key_stats, warm.segments):
         df.unpersist()
 
@@ -76,7 +76,7 @@ def main() -> None:
             idx.segments.count(); idx.key_stats.count()
             builds.append(time.time() - t0)
         idx.prepare_serve()
-        idx.search("data", k=10, mode="kernel").collect()
+        idx.search("data", k=10).collect()
         # encoding mix of the built store
         mix = {
             r["enc"]: r["cnt"]

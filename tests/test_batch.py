@@ -1,6 +1,7 @@
 """Batched multi-query execution must be rank-identical to single-query
 search for every query in the log (engine-vs-engine equivalence, §5.2)."""
 
+from tests.conftest import reference_match
 from tests.test_kernel_parity import QUERIES
 
 
@@ -31,7 +32,7 @@ def test_match_many_equals_single_match(index):
     for r in got:
         by_q.setdefault(r["query_id"], []).append(r["doc_id"])
     for qid, q in enumerate(QUERIES):
-        single = sorted(r["doc_id"] for r in index.match(q).collect())
+        single = sorted(r["doc_id"] for r in reference_match(index, q).collect())
         assert sorted(by_q.get(qid, [])) == single, f"match_many mismatch for {q!r}"
     # disjoint groups: no duplicate (query, doc) pairs
     assert len(got) == len({(r["query_id"], r["doc_id"]) for r in got})
@@ -46,6 +47,6 @@ def test_percolate(spark, corpus, index):
     for r in got:
         by_q.setdefault(r["query_id"], set()).add(r["doc_id"])
     for qid, q in enumerate(queries):
-        want = {r["doc_id"] for r in index.match(q).collect()}
+        want = {r["doc_id"] for r in reference_match(index, q).collect()}
         assert by_q.get(qid, set()) == want, f"percolate mismatch for {q!r}"
     assert 2 not in by_q  # the absent-term query matches nothing

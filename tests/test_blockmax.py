@@ -5,6 +5,7 @@ opportunities) and rounding-boundary ties."""
 import pytest
 
 from bitfunnel_spark import BuildConfig, FullTextIndex
+from tests.conftest import reference_match, reference_search
 
 
 @pytest.fixture(scope="module")
@@ -17,17 +18,17 @@ def tiny_block_index(spark, corpus):
 @pytest.mark.parametrize("k", [3, 10, 50])
 def test_single_term_topk_parity(tiny_block_index, q, k):
     a = [(r["doc_id"], r["score"]) for r in tiny_block_index.search(q, k=k, mode="kernel").collect()]
-    b = [(r["doc_id"], r["score"]) for r in tiny_block_index.search(q, k=k, mode="dataframe").collect()]
+    b = [(r["doc_id"], r["score"]) for r in reference_search(tiny_block_index, q, k=k).collect()]
     assert a == b
 
 
 def test_single_term_match_unpruned(tiny_block_index):
-    # match has no k — the pruned path must not engage; the kernel-mode full
-    # match set must equal the DataFrame executor's (the unpruned oracle)
+    # match has no k — the pruned path must not engage; the kernel's full
+    # match set must equal the reference executor's (the unpruned oracle)
     from bitfunnel_spark.plans.kernel import match_kernel
 
     a = sorted(r["doc_id"] for r in match_kernel(tiny_block_index, "data").collect())
-    b = sorted(r["doc_id"] for r in tiny_block_index.match("data").collect())
+    b = sorted(r["doc_id"] for r in reference_match(tiny_block_index, "data").collect())
     assert a == b and len(a) > 0
 
 # ---------------------------------------------------------------------------
@@ -47,7 +48,7 @@ MULTI_QUERIES = [
 @pytest.mark.parametrize("k", [3, 10])
 def test_multi_term_topk_parity(tiny_block_index, q, k):
     a = [(r["doc_id"], r["score"]) for r in tiny_block_index.search(q, k=k, mode="kernel").collect()]
-    b = [(r["doc_id"], r["score"]) for r in tiny_block_index.search(q, k=k, mode="dataframe").collect()]
+    b = [(r["doc_id"], r["score"]) for r in reference_search(tiny_block_index, q, k=k).collect()]
     assert a == b
 
 
@@ -303,7 +304,7 @@ def test_blended_query_decodes_fewer(tiny_block_index):
     a = [(r["doc_id"], round(r["score"], 4)) for r in
          idx.search(node, k=5, mode="kernel").collect()]
     b = [(r["doc_id"], round(r["score"], 4)) for r in
-         idx.search(node, k=5, mode="dataframe").collect()]
+         reference_search(idx, node, k=5).collect()]
     assert a == b and len(a) == 5
     metrics, _ = profile_many(idx, [node], k=5)
     row = metrics.groupBy().sum("blocks_total", "blocks_decoded").collect()[0]
@@ -314,7 +315,7 @@ def test_blended_query_decodes_fewer(tiny_block_index):
     a2 = [(r["doc_id"], round(r["score"], 4)) for r in
           idx.search(bare, k=5, mode="kernel").collect()]
     b2 = [(r["doc_id"], round(r["score"], 4)) for r in
-          idx.search(bare, k=5, mode="dataframe").collect()]
+          reference_search(idx, bare, k=5).collect()]
     assert a2 == b2 and len(a2) == 5
 
 

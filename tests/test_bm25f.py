@@ -18,6 +18,7 @@ from bitfunnel_spark.plans.ast import FieldGroup, Term
 from bitfunnel_spark.plans.expand import combined_fields
 from bitfunnel_spark.plans.oracle import oracle_search_sql
 from bitfunnel_spark.plans.planner import plan_query
+from tests.conftest import reference_search, search_in
 
 
 def test_rewrite_and_plan():
@@ -63,7 +64,7 @@ QUERIES = [
 @pytest.mark.parametrize("mode", ["dataframe", "kernel"])
 def test_bm25f_vs_oracle(index, duck, q, w, mode):
     node = combined_fields(q, w)
-    got = [(r["doc_id"], r["score"]) for r in index.search(node, k=10, mode=mode).collect()]
+    got = [(r["doc_id"], r["score"]) for r in search_in(mode, index, node, k=10).collect()]
     exp = duck.execute(oracle_search_sql(node, k=10)).fetchall()
     assert len(got) > 0
     assert [(d, pytest.approx(s, abs=2e-4)) for d, s in exp] == got, f"{q!r} {mode}"
@@ -126,5 +127,5 @@ def test_cross_field_tf_sum(spark):
     exp = con.execute(oracle_search_sql(node, k=4)).fetchall()
     assert [(d, pytest.approx(s, abs=2e-4)) for d, s in exp] == got
     # DataFrame-executor parity on the same crafted index
-    df = [(r["doc_id"], r["score"]) for r in idx.search(node, k=4, mode="dataframe").collect()]
+    df = [(r["doc_id"], r["score"]) for r in reference_search(idx, node, k=4).collect()]
     assert df == got

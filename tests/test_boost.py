@@ -7,6 +7,7 @@ from bitfunnel_spark.plans.ast import Boost, Term
 from bitfunnel_spark.plans.oracle import oracle_search_sql
 from bitfunnel_spark.plans.parser import QueryParseError, parse_query
 from bitfunnel_spark.plans.planner import plan_query
+from tests.conftest import reference_search, search_in
 
 
 def test_parse_and_strip():
@@ -30,7 +31,7 @@ def test_parse_and_strip():
 @pytest.mark.parametrize("q", ["data^2 fast", "dup^3 | vector", "data^0.5 -slow"])
 @pytest.mark.parametrize("mode", ["dataframe", "kernel"])
 def test_boost_vs_oracle(index, duck, q, mode):
-    got = [(r["doc_id"], r["score"]) for r in index.search(q, k=10, mode=mode).collect()]
+    got = [(r["doc_id"], r["score"]) for r in search_in(mode, index, q, k=10).collect()]
     exp = duck.execute(oracle_search_sql(q, k=10)).fetchall()
     assert [(d, pytest.approx(s, abs=2e-4)) for d, s in exp] == got, f"{q!r} {mode}"
 
@@ -66,7 +67,7 @@ def test_boost_in_batch(index):
 def test_field_boost_vs_oracle(index, duck, q, mode):
     """Field-weighted scoring: a boosted non-body term contributes
     idf·boost·partial like a scoring term; both executors vs DuckDB."""
-    got = [(r["doc_id"], r["score"]) for r in index.search(q, k=10, mode=mode).collect()]
+    got = [(r["doc_id"], r["score"]) for r in search_in(mode, index, q, k=10).collect()]
     exp = duck.execute(oracle_search_sql(q, k=10)).fetchall()
     assert [(d, pytest.approx(s, abs=2e-4)) for d, s in exp] == got, f"{q!r} {mode}"
     assert got and got[0][1] > 0  # the field term actually scored
@@ -86,13 +87,13 @@ def test_unboosted_field_stays_filter_only(index):
 def test_search_after_pages_partition_results(index, mode):
     """search_after pages must exactly partition the full ranking: walking
     3 pages of 5 reproduces top-15, and pages are disjoint."""
-    full = index.search("data fast", k=15, mode=mode).collect()
+    full = search_in(mode, index, "data fast", k=15).collect()
     pages, cursor = [], None
     for _ in range(3):
         if cursor is None:
-            page = index.search("data fast", k=5, mode=mode).collect()
+            page = search_in(mode, index, "data fast", k=5).collect()
         else:
-            page = index.search_after("data fast", cursor, k=5, mode=mode).collect()
+            page = search_in(mode, index, "data fast", k=5, after=cursor).collect()
         assert len(page) == 5
         cursor = (float(page[-1]["score"]), int(page[-1]["doc_id"]))
         pages += page
@@ -105,8 +106,8 @@ def test_search_after_pages_partition_results(index, mode):
 def test_search_after_modes_agree(index):
     p1 = index.search("data fast", k=10, mode="kernel").collect()
     cur = (float(p1[-1]["score"]), int(p1[-1]["doc_id"]))
-    kr = index.search_after("data fast", cur, k=10, mode="kernel").collect()
-    df = index.search_after("data fast", cur, k=10, mode="dataframe").collect()
+    kr = index.search_after("data fast", cur, k=10).collect()
+    df = reference_search(index, "data fast", k=10, after=cur).collect()
     assert [(r["doc_id"], r["score"]) for r in kr] == [
         (r["doc_id"], r["score"]) for r in df
     ]

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from bitfunnel_spark import BuildConfig, FullTextIndex
 from bitfunnel_spark.functions.tokenizer import CODE_SPLIT_RULES, tokenize
 from bitfunnel_spark.plans.oracle import code_split_sql
+from tests.conftest import reference_search
 
 CASES = {
     "getUserName": ["get", "user", "name"],
@@ -127,7 +128,8 @@ def test_code_index_subtoken_match(code_index):
 
 def test_code_index_mode_parity(code_index):
     for q in ["server", "get & user", '"handle request"', "value -server"]:
-        a = [(r["doc_id"], round(r["score"], 6)) for r in code_index.search(q, k=4).collect()]
+        a = [(r["doc_id"], round(r["score"], 6))
+             for r in reference_search(code_index, q, k=4).collect()]
         b = [
             (r["doc_id"], round(r["score"], 6))
             for r in code_index.search(q, k=4, mode="kernel").collect()

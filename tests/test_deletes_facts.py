@@ -13,11 +13,13 @@ import dataclasses
 import pytest
 from pyspark.sql import functions as F
 
+from tests.conftest import reference_match, search_in
+
 
 def _top(index, q, k=10, mode="kernel", facts=None):
     return [
         (r["doc_id"], r["score"])
-        for r in index.search(q, k=k, mode=mode, facts=facts).collect()
+        for r in search_in(mode, index, q, k=k, facts=facts).collect()
     ]
 
 
@@ -40,11 +42,9 @@ def test_delete_in_match_and_batch(index):
     base = sorted(r["doc_id"] for r in index.match("data").collect())
     victim = base[0]
     deleted = dataclasses.replace(index, tombstones=frozenset({victim}))
-    got = sorted(r["doc_id"] for r in deleted.match("data").collect())
+    got = sorted(r["doc_id"] for r in reference_match(deleted, "data").collect())
     assert got == [d for d in base if d != victim]
-    from bitfunnel_spark.plans.kernel import match_kernel
-
-    got_k = sorted(r["doc_id"] for r in match_kernel(deleted, "data").collect())
+    got_k = sorted(r["doc_id"] for r in deleted.match("data").collect())
     assert got_k == got
     many = deleted.search_many(["data fast", "dup | vector"], k=10).collect()
     assert victim not in {r["doc_id"] for r in many}
@@ -258,3 +258,24 @@ def test_delete_by_query_rejects_combinators_and_caps(index, monkeypatch):
     monkeypatch.setattr(dslmod, "MAX_DELETE_DOCS", 3)
     with pytest.raises(dslmod.DslError, match="physical rewrite"):
         dslmod.delete_by_query(idx, {"query": {"range": {"doc_id": {"lt": 50}}}})
+
+
+def test_indexed_fact_serves_scored_routes(fcopy):
+    # the scored serving routes read the same prepared query as search:
+    # an indexed fact equals the same predicate as an array fact
+    from bitfunnel_spark.plans import serving
+
+    fcopy.define_fact("even_a", F.col("doc_id") % 2 == 0)
+    fcopy.define_fact_indexed("even_i", F.col("doc_id") % 2 == 0)
+    calls = [
+        lambda facts: serving.function_score(fcopy, "data", k=15, facts=facts),
+        lambda facts: serving.top_hits(fcopy, "data", by="lang", per_group=2,
+                                       facts=facts),
+        lambda facts: serving.collapse_topk(fcopy, "data fast", by="repo", k=8,
+                                            per_group=2, facts=facts),
+    ]
+    for call in calls:
+        want = call(["even_a"]).collect()
+        got = call(["even_i"]).collect()
+        assert got == want and got
+        assert all(r.doc_id % 2 == 0 for r in got)

@@ -8,6 +8,7 @@ from bitfunnel_spark.plans import dsl
 from bitfunnel_spark.plans.ast import And, Boost, Filter, Not, Or, Phrase, Prefix, Term
 from bitfunnel_spark.plans.dsl import DslError, compile_dsl, search_dsl
 from bitfunnel_spark.plans.parser import parse_query
+from tests.conftest import reference_match, reference_search
 
 
 def test_compile_shapes():
@@ -256,8 +257,8 @@ def test_aggs_filters(index):
         }}}},
     }
     got = {r["name"]: r["n_docs"] for r in run_aggs(index, body).collect()}
-    assert got["a"] == index.match("data & fast").count()
-    assert got["b"] == index.match('"batch batch"').count()
+    assert got["a"] == reference_match(index, "data & fast").count()
+    assert got["b"] == reference_match(index, '"batch batch"').count()
 
 
 def test_aggs_errors(index):
@@ -749,7 +750,7 @@ def test_constant_score(index):
     rows = search_dsl(index, {"query": {"constant_score": {
         "filter": {"term": {"content": "data"}}, "boost": 1.7}},
         "size": 8}).collect()
-    match_ids = sorted(r.doc_id for r in index.match("data").collect())[:8]
+    match_ids = sorted(r.doc_id for r in reference_match(index, "data").collect())[:8]
     assert [r.doc_id for r in rows] == match_ids
     assert all(r.score == 1.7 for r in rows)
     # nested filter-only filter inside constant_score
@@ -947,12 +948,12 @@ def test_count_dsl(index, corpus):
     from bitfunnel_spark.plans.dsl import count_dsl
 
     n = count_dsl(index, {"query": {"query_string": "data -slow"}}).collect()[0]["count"]
-    assert n == index.match("data -slow").count()
+    assert n == reference_match(index, "data -slow").count()
     assert count_dsl(index, {"query": {"match_all": {}}}).collect()[0]["count"] == corpus.count()
     assert count_dsl(index, {"query": {"ids": {"values": [1, 2, 10**9]}}}).collect()[0]["count"] == 2
     assert count_dsl(index, {"query": {"constant_score": {
         "filter": {"term": {"content": "data"}}}}}).collect()[0]["count"] == \
-        index.match("data").count()
+        reference_match(index, "data").count()
     with pytest.raises(DslError):
         count_dsl(index, {"query": {"dis_max": {"queries": []}}})
 
@@ -1218,10 +1219,10 @@ def test_dsl_rescore_composes_with_range_filter(index):
     ok = {r[0] for r in index.doc_stats.filter(
         "doclen between 40 and 200").select("doc_id").collect()}
     prim = [(r.doc_id, r.score) for r in
-            index.search("data", k=10**6, mode="dataframe").collect()
+            reference_search(index, "data", k=10**6).collect()
             if r.doc_id in ok][:15]
     sec = {r.doc_id: r.score for r in
-           index.search("fast", k=10**6, mode="dataframe").collect()}
+           reference_search(index, "fast", k=10**6).collect()}
     blended = sorted(((round(p + sec.get(d, 0.0), 4), -d) for d, p in prim),
                      reverse=True)
     assert got == [( -nd, s) for s, nd in blended][:6]

@@ -8,6 +8,7 @@ from bitfunnel_spark.plans import expand
 from bitfunnel_spark.plans.ast import Fuzzy, Or, Prefix, Term, Wildcard, fmt
 from bitfunnel_spark.plans.oracle import oracle_expansion_search_sql
 from bitfunnel_spark.plans.parser import QueryParseError, parse_query
+from tests.conftest import reference_search, search_in
 
 
 def test_parse_expansion_nodes():
@@ -30,7 +31,7 @@ def test_parse_expansion_nodes():
 
 @pytest.mark.parametrize("mode", ["dataframe", "kernel"])
 def test_prefix_vs_oracle(index, duck, mode):
-    got = [(r["doc_id"], r["score"]) for r in index.search("s*", k=10, mode=mode).collect()]
+    got = [(r["doc_id"], r["score"]) for r in search_in(mode, index, "s*", k=10).collect()]
     exp = duck.execute(oracle_expansion_search_sql("term LIKE 's%'", k=10)).fetchall()
     assert [(d, pytest.approx(s, abs=2e-4)) for d, s in exp] == got
 
@@ -38,7 +39,7 @@ def test_prefix_vs_oracle(index, duck, mode):
 @pytest.mark.parametrize("mode", ["dataframe", "kernel"])
 def test_wildcard_vs_oracle(index, duck, mode):
     got = [
-        (r["doc_id"], r["score"]) for r in index.search("s?a*", k=10, mode=mode).collect()
+        (r["doc_id"], r["score"]) for r in search_in(mode, index, "s?a*", k=10).collect()
     ]
     exp = duck.execute(oracle_expansion_search_sql("term LIKE 's_a%'", k=10)).fetchall()
     assert [(d, pytest.approx(s, abs=2e-4)) for d, s in exp] == got
@@ -62,7 +63,7 @@ def test_wildcard_expansion_terms(index):
 def test_regex_vs_oracle(index, duck, mode):
     got = [
         (r["doc_id"], r["score"])
-        for r in index.search("/s.a[nr]k?/", k=10, mode=mode).collect()
+        for r in search_in(mode, index, "/s.a[nr]k?/", k=10).collect()
     ]
     exp = duck.execute(
         oracle_expansion_search_sql("regexp_full_match(term, 's.a[nr]k?')", k=10)
@@ -117,7 +118,7 @@ def test_regex_alternation_vs_oracle(index, duck, mode):
     assert {t.text for t in expanded.children} == {"scan", "data"}
     got = [
         (r["doc_id"], r["score"])
-        for r in index.search(r"/scan\|data/", k=10, mode=mode).collect()
+        for r in search_in(mode, index, r"/scan\|data/", k=10).collect()
     ]
     exp = duck.execute(
         oracle_expansion_search_sql("regexp_full_match(term, 'scan|data')", k=10)
@@ -133,7 +134,7 @@ def test_regex_optional_quantifier_vs_oracle(index, duck, mode):
     assert expand.expand_query(index, parse_query("/datas*/")) == Term("data")
     got = [
         (r["doc_id"], r["score"])
-        for r in index.search("/datax{0,1}/", k=10, mode=mode).collect()
+        for r in search_in(mode, index, "/datax{0,1}/", k=10).collect()
     ]
     exp = duck.execute(
         oracle_expansion_search_sql("regexp_full_match(term, 'datax{0,1}')", k=10)
@@ -179,7 +180,7 @@ def test_phrase_prefix_vs_oracle(index, duck, mode, toks, pre):
     from bitfunnel_spark.plans.oracle import oracle_phrase_prefix_sql
 
     q = '"' + " ".join(toks) + " " + pre + '*"'
-    got = [(r["doc_id"], r["score"]) for r in index.search(q, k=10, mode=mode).collect()]
+    got = [(r["doc_id"], r["score"]) for r in search_in(mode, index, q, k=10).collect()]
     exp = duck.execute(oracle_phrase_prefix_sql(toks, pre, k=10)).fetchall()
     assert [(d, pytest.approx(s, abs=2e-4)) for d, s in exp] == got
     assert got  # the parity must not be vacuous
@@ -207,7 +208,7 @@ def test_glob_to_like_escaping():
 def test_fuzzy_vs_oracle(index, duck, mode):
     got = [
         (r["doc_id"], r["score"])
-        for r in index.search("vektor~", k=10, mode=mode).collect()
+        for r in search_in(mode, index, "vektor~", k=10).collect()
     ]
     exp = duck.execute(
         oracle_expansion_search_sql("levenshtein(term, 'vektor') <= 1", k=10)
@@ -215,7 +216,7 @@ def test_fuzzy_vs_oracle(index, duck, mode):
     assert [(d, pytest.approx(s, abs=2e-4)) for d, s in exp] == got
     # sanity: 'vektor~' resolved to the real term 'vector'
     direct = [
-        (r["doc_id"], r["score"]) for r in index.search("vector", k=10, mode=mode).collect()
+        (r["doc_id"], r["score"]) for r in search_in(mode, index, "vector", k=10).collect()
     ]
     assert got == direct
 
@@ -294,10 +295,10 @@ def test_suggest(index, duck):
 @pytest.mark.parametrize("mode", ["dataframe", "kernel"])
 def test_synonyms_vs_manual_or(index, mode):
     index.set_synonyms(None)
-    manual = index.search("(join | merge) & data", k=10, mode=mode).collect()
+    manual = search_in(mode, index, "(join | merge) & data", k=10).collect()
     index.set_synonyms({"join": ["merge"]})
     try:
-        got = index.search("join & data", k=10, mode=mode).collect()
+        got = search_in(mode, index, "join & data", k=10).collect()
     finally:
         index.set_synonyms(None)
     assert got == manual
@@ -353,11 +354,11 @@ def test_common_terms_query(index, duck, mode):
     node = common_terms_query(index, "dup data fast", max_df_ratio=0.3)
     assert fmt(node) == "And(dup, Or(dup, data, fast))"
     got = [
-        (r["doc_id"], r["score"]) for r in index.search(node, k=10, mode=mode).collect()
+        (r["doc_id"], r["score"]) for r in search_in(mode, index, node, k=10).collect()
     ]
     exp = [
         (r["doc_id"], r["score"])
-        for r in index.search("dup & (dup | data | fast)", k=10, mode=mode).collect()
+        for r in search_in(mode, index, "dup & (dup | data | fast)", k=10).collect()
     ]
     assert got == exp
     # match set is the rare terms alone (common terms never gate matching)
@@ -366,7 +367,7 @@ def test_common_terms_query(index, duck, mode):
     )
     # but common terms DO contribute score: differs from plain rare-only
     rare_only = [
-        (r["doc_id"], r["score"]) for r in index.search("dup", k=10, mode=mode).collect()
+        (r["doc_id"], r["score"]) for r in search_in(mode, index, "dup", k=10).collect()
     ]
     assert got != rare_only
 
@@ -391,7 +392,7 @@ def test_synonym_blend_kernel_dataframe_parity(index):
     index.set_synonyms({"join": ["merge"]}, mode="blend")
     try:
         kr = index.search("join & data", k=10, mode="kernel").collect()
-        df = index.search("join & data", k=10, mode="dataframe").collect()
+        df = reference_search(index, "join & data", k=10).collect()
         blend_match = sorted(r["doc_id"] for r in index.match("join & data").collect())
     finally:
         index.set_synonyms(None)

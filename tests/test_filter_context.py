@@ -10,6 +10,7 @@ from bitfunnel_spark.plans.ast import And, Filter, Phrase, Term, fmt
 from bitfunnel_spark.plans.oracle import oracle_search_sql
 from bitfunnel_spark.plans.parser import parse_query
 from bitfunnel_spark.plans.planner import plan_query
+from tests.conftest import reference_search, search_in
 
 
 def test_parse_and_plan_shapes():
@@ -45,7 +46,7 @@ QUERIES = ["data #fast", "#slow data | fast", 'data #"fast key"', "#lang:en data
 @pytest.mark.parametrize("mode", ["dataframe", "kernel"])
 @pytest.mark.parametrize("q", QUERIES)
 def test_filter_vs_oracle(index, duck, mode, q):
-    got = [(r["doc_id"], r["score"]) for r in index.search(q, k=10, mode=mode).collect()]
+    got = [(r["doc_id"], r["score"]) for r in search_in(mode, index, q, k=10).collect()]
     exp = [
         (d, pytest.approx(s, abs=2e-4))
         for d, s in duck.execute(oracle_search_sql(q, k=10)).fetchall()
@@ -68,7 +69,7 @@ def test_filter_same_match_set_lower_score(index):
 
 @pytest.mark.parametrize("mode", ["dataframe", "kernel"])
 def test_all_filter_query_scores_zero(index, mode):
-    rows = index.search("#data", k=10, mode=mode).collect()
+    rows = search_in(mode, index, "#data", k=10).collect()
     assert rows and all(r["score"] == 0.0 for r in rows)
     # deterministic constant-score order: doc_id asc
     ids = [r["doc_id"] for r in rows]
@@ -92,7 +93,7 @@ def test_filter_batch_parity(index):
 def test_filter_with_expansion(index):
     # '#dat*' expands against the dictionary inside filter context
     a = [(r["doc_id"], round(r["score"], 4)) for r in index.search("#dat* fast", k=10, mode="kernel").collect()]
-    b = [(r["doc_id"], round(r["score"], 4)) for r in index.search("#dat* fast", k=10, mode="dataframe").collect()]
+    b = [(r["doc_id"], round(r["score"], 4)) for r in reference_search(index, "#dat* fast", k=10).collect()]
     assert a == b and a
     plan = plan_query(index.prepare_query("#dat* fast"))
     assert plan.scoring_keys == {("body", "fast")}

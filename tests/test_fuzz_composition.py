@@ -9,9 +9,9 @@ randomized (query, bounds) workloads sampled from the index's own
 vocabulary, mirroring test_fuzz_r05_surface.py's discipline.
 
 The shared oracle for every property is driver-side recomputation from
-TWO independently-verified primitives: the plain dataframe ranking
-(r02-green executors) and a collected metadata map — never the code
-path under test.
+TWO independently-verified primitives: the plain ranking of the
+declarative reference executor (plans/executor.py) and a collected
+metadata map — never the code path under test.
 """
 
 from __future__ import annotations
@@ -20,6 +20,7 @@ import pytest
 
 from bitfunnel_spark.plans.dsl import DslError, search_dsl
 from bitfunnel_spark.plans.generator import generate_queries
+from tests.conftest import reference_match, reference_search
 
 
 def _rows(df):
@@ -60,7 +61,7 @@ def _range_body(terms, bounds):
 
 
 def _base(index, terms):
-    return _rows(index.search(" | ".join(terms), k=10_000, mode="dataframe"))
+    return _rows(reference_search(index, " | ".join(terms), k=10_000))
 
 
 def test_restricted_collapse_fuzz(index):
@@ -119,7 +120,7 @@ def test_restricted_sort_and_highlight_fuzz(index):
              for r in index.doc_stats.select("doc_id", "doclen").collect()}
     for terms, ok, bounds in _workloads(index, seeds=(13,)):
         matched = {r["doc_id"] for r in
-                   index.match(" | ".join(terms)).collect()}
+                   reference_match(index, " | ".join(terms)).collect()}
         expect = sorted(((stats[d], d) for d in matched & ok))[:5]
         got = [(r["doclen"], r["doc_id"]) for r in search_dsl(index, {
             "query": _range_body(terms, bounds),

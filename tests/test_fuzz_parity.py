@@ -9,6 +9,7 @@ import pytest
 
 from bitfunnel_spark import BuildConfig, FullTextIndex
 from bitfunnel_spark.plans.generator import generate_query_log, generate_queries
+from tests.conftest import reference_search
 
 
 @pytest.fixture(scope="module")
@@ -25,7 +26,7 @@ def _rows(df):
 def test_generated_and_queries_mode_parity(fuzz_index):
     for q in generate_query_log(fuzz_index.term_stats, 15, seed=11):
         a = _rows(fuzz_index.search(q, k=10, mode="kernel"))
-        b = _rows(fuzz_index.search(q, k=10, mode="dataframe"))
+        b = _rows(reference_search(fuzz_index, q, k=10))
         assert a == b, q
 
 
@@ -37,5 +38,5 @@ def test_generated_or_and_not_parity(fuzz_index):
     ]
     for q in shaped:
         a = _rows(fuzz_index.search(q, k=10, mode="kernel"))
-        b = _rows(fuzz_index.search(q, k=10, mode="dataframe"))
+        b = _rows(reference_search(fuzz_index, q, k=10))
         assert a == b, q

@@ -21,9 +21,10 @@ from __future__ import annotations
 
 import pytest
 
-from bitfunnel_spark.plans.dsl import msearch, search_dsl
+from bitfunnel_spark.plans.dsl import compile_dsl, msearch, search_dsl
 from bitfunnel_spark.plans.generator import generate_queries
 from bitfunnel_spark.plans.serving import terms_enum
+from tests.conftest import reference_match, reference_search
 
 
 def _rows(df):
@@ -34,7 +35,7 @@ def _match_counts(index, terms):
     """doc_id -> how many of `terms` it matches (driver-side, test scale)."""
     counts: dict[int, int] = {}
     for t in terms:
-        for r in index.match(t).select("doc_id").collect():
+        for r in reference_match(index, t).select("doc_id").collect():
             counts[r["doc_id"]] = counts.get(r["doc_id"], 0) + 1
     return counts
 
@@ -70,8 +71,8 @@ def test_minimum_should_match_mode_parity(index):
         body = {"query": {"match": {"body": {
             "query": q, "minimum_should_match": 2,
         }}}}
-        a = _rows(search_dsl(index, body, k=10, mode="kernel"))
-        b = _rows(search_dsl(index, body, k=10, mode="dataframe"))
+        a = _rows(search_dsl(index, body, k=10))
+        b = _rows(reference_search(index, compile_dsl(body["query"]), k=10))
         assert a == b, q
 
 
@@ -162,8 +163,7 @@ def test_range_filter_is_manual_restriction_fuzz(index):
                 continue
             # DSL match defaults to OR — the query-string parser's space
             # is AND, so the unfiltered base must be the OR ranking
-            base = _rows(index.search(" | ".join(terms), k=10_000,
-                                      mode="dataframe"))
+            base = _rows(reference_search(index, " | ".join(terms), k=10_000))
             # deterministic bound menu spanning empty/partial/full selections
             menu = [
                 ("doclen", {"gte": dls[n // 4], "lte": dls[3 * n // 4]}),

@@ -6,6 +6,7 @@ via the gram term's postings — no positions, no corpus scan."""
 import pytest
 
 from bitfunnel_spark import BuildConfig, FullTextIndex
+from tests.conftest import reference_search
 
 PHRASES = ['"batch batch"', '"fast key"', 'data "key value"']
 
@@ -33,7 +34,7 @@ def test_gram_phrase_parity(index, gram_index, q):
     the DataFrame executor on the gram index itself."""
     base = [(r["doc_id"], r["score"]) for r in index.search(q, k=10, mode="kernel").collect()]
     gram = [(r["doc_id"], r["score"]) for r in gram_index.search(q, k=10, mode="kernel").collect()]
-    df = [(r["doc_id"], r["score"]) for r in gram_index.search(q, k=10, mode="dataframe").collect()]
+    df = [(r["doc_id"], r["score"]) for r in reference_search(gram_index, q, k=10).collect()]
     assert gram == base
     assert df == base
 
@@ -54,7 +55,7 @@ def test_gram_phrase_no_corpus_collect(gram_index, monkeypatch):
 def test_gram_unigram_queries_unchanged(index, gram_index):
     for q in ("data fast", "dup | vector", "data -slow"):
         a = [(r["doc_id"], r["score"]) for r in gram_index.search(q, k=10, mode="kernel").collect()]
-        b = [(r["doc_id"], r["score"]) for r in index.search(q, k=10, mode="dataframe").collect()]
+        b = [(r["doc_id"], r["score"]) for r in reference_search(index, q, k=10).collect()]
         assert a == b, q
 
 
@@ -63,7 +64,7 @@ def test_too_long_phrase_falls_back(gram_index):
     still exact."""
     q = '"fast key order"'
     a = [(r["doc_id"], r["score"]) for r in gram_index.search(q, k=10, mode="kernel").collect()]
-    b = [(r["doc_id"], r["score"]) for r in gram_index.search(q, k=10, mode="dataframe").collect()]
+    b = [(r["doc_id"], r["score"]) for r in reference_search(gram_index, q, k=10).collect()]
     assert a == b and len(a) > 0
 
 

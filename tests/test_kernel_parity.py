@@ -1,9 +1,11 @@
 """Engine-vs-engine equivalence — the reference's ByteCode/NativeCode twin
 strategy (/root/reference/src/Plan/test/ByteCodeVerifier.cpp,
 NativeCodeVerifier.cpp): every query must produce identical results through
-the DataFrame executor and the segment/kernel executor."""
+the declarative reference executor (plans/executor.py) and the kernel."""
 
 import pytest
+
+from tests.conftest import reference_match, reference_search
 
 QUERIES = [
     "data",
@@ -28,7 +30,7 @@ def seg_index(index):
 
 @pytest.mark.parametrize("q", QUERIES)
 def test_search_parity(seg_index, q):
-    df_res = [(r["doc_id"], r["score"]) for r in seg_index.search(q, k=10, mode="dataframe").collect()]
+    df_res = [(r["doc_id"], r["score"]) for r in reference_search(seg_index, q, k=10).collect()]
     k_res = [(r["doc_id"], r["score"]) for r in seg_index.search(q, k=10, mode="kernel").collect()]
     assert df_res == k_res, f"kernel/dataframe divergence for {q!r}"
 
@@ -37,9 +39,10 @@ def test_search_parity(seg_index, q):
 def test_match_parity(seg_index, q):
     from bitfunnel_spark.plans.kernel import match_kernel
 
-    df_res = sorted(r["doc_id"] for r in seg_index.match(q).collect())
+    df_res = sorted(r["doc_id"] for r in reference_match(seg_index, q).collect())
     k_res = sorted(r["doc_id"] for r in match_kernel(seg_index, q).collect())
     assert df_res == k_res
+    assert sorted(r["doc_id"] for r in seg_index.match(q).collect()) == k_res
 
 
 def test_segments_roundtrip_postings(seg_index):
@@ -62,3 +65,14 @@ def test_segments_roundtrip_postings(seg_index):
         for r in seg_index.postings.collect()
     }
     assert decoded == original
+
+
+@pytest.mark.parametrize("q", ["data", "spark & join", '"batch batch"', "dup | vector"])
+def test_scored_match_parity(seg_index, q):
+    """The kernel's full scored match set (run_log with k=math.inf) equals
+    the reference's, score for score."""
+    from bitfunnel_spark.plans.executor import scored_matches
+
+    ref = sorted(tuple(r) for r in scored_matches(seg_index, q).collect())
+    got = sorted(tuple(r) for r in seg_index.scored_match(q).collect())
+    assert got == ref and got

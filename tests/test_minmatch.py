@@ -8,6 +8,7 @@ from bitfunnel_spark.plans.ast import Or, Term, fmt
 from bitfunnel_spark.plans.oracle import oracle_match_sql, oracle_search_sql
 from bitfunnel_spark.plans.parser import QueryParseError, parse_query
 from bitfunnel_spark.plans.planner import plan_query
+from tests.conftest import search_in
 
 
 def test_parse_minmatch():
@@ -53,7 +54,7 @@ def test_minmatch_match_vs_oracle(index, duck, q):
 @pytest.mark.parametrize("q", MM_QUERIES[:3])
 @pytest.mark.parametrize("mode", ["dataframe", "kernel"])
 def test_minmatch_topk_vs_oracle(index, duck, q, mode):
-    got = [(r["doc_id"], r["score"]) for r in index.search(q, k=10, mode=mode).collect()]
+    got = [(r["doc_id"], r["score"]) for r in search_in(mode, index, q, k=10).collect()]
     exp = duck.execute(oracle_search_sql(q, k=10)).fetchall()
     assert [(d, pytest.approx(s, abs=2e-4)) for d, s in exp] == got, f"{q!r} {mode}"
 

@@ -15,6 +15,8 @@ from __future__ import annotations
 
 import pytest
 
+from tests.conftest import reference_search
+
 QUERIES = [
     '"fast key order"',
     'data & "key order" -slow',
@@ -106,7 +108,7 @@ def test_fuzz_phrase_parity(idx_pos, idx_fb):
     for q in log:
         a = [(r.doc_id, round(r.score, 4)) for r in idx_pos.search(q, k=10, mode="kernel").collect()]
         b = [(r.doc_id, round(r.score, 4)) for r in idx_fb.search(q, k=10, mode="kernel").collect()]
-        c = [(r.doc_id, round(r.score, 4)) for r in idx_pos.search(q, k=10, mode="dataframe").collect()]
+        c = [(r.doc_id, round(r.score, 4)) for r in reference_search(idx_pos, q, k=10).collect()]
         assert a == b == c, q
         matched += bool(a)
     assert matched >= len(log) // 2  # the sweep must not be vacuous

@@ -11,6 +11,7 @@ import pytest
 from bitfunnel_spark import BuildConfig, FullTextIndex
 from bitfunnel_spark.functions.tokenizer import tokenize
 from bitfunnel_spark.operators.segments import decode_group_positions
+from tests.conftest import reference_search
 
 PHRASES = ['"batch batch"', '"fast key order"', 'data "key value"']
 
@@ -50,7 +51,7 @@ def test_positions_round_trip(spark, corpus, pos_index):
 def test_phrase_search_parity(index, pos_index, q):
     base = [(r["doc_id"], r["score"]) for r in index.search(q, k=10, mode="kernel").collect()]
     pos = [(r["doc_id"], r["score"]) for r in pos_index.search(q, k=10, mode="kernel").collect()]
-    df = [(r["doc_id"], r["score"]) for r in pos_index.search(q, k=10, mode="dataframe").collect()]
+    df = [(r["doc_id"], r["score"]) for r in reference_search(pos_index, q, k=10).collect()]
     assert pos == base
     assert df == base
 
@@ -186,7 +187,7 @@ def test_long_doc_falls_back_to_corpus(pos_index):
         ]
         base = [
             (r["doc_id"], r["score"])
-            for r in pos_index.search('"batch batch"', k=10, mode="dataframe").collect()
+            for r in reference_search(pos_index, '"batch batch"', k=10).collect()
         ]
         assert got == base and len(got) > 0
     finally:

@@ -2,6 +2,8 @@
 
 import pytest
 
+from tests.conftest import reference_match, reference_search
+
 
 @pytest.fixture(scope="module")
 def prof_index(spark, corpus):
@@ -197,7 +199,7 @@ def _restricted(index, case):
 def test_restriction_honoured_on_every_path(request, index_name, case):
     """An index copy carrying a doc-metadata restriction is served by the
     single, batch, match and profile paths of the kernel, each equal to the
-    declarative executor under the same restriction. prof_index is the
+    declarative reference executor under the same restriction. prof_index is the
     block_size=8 fused index (test_blockmax's shape), so block-max
     thresholds run with an allow array; ``index`` is the row-form build."""
     from bitfunnel_spark.plans.batch import match_many, search_many
@@ -207,8 +209,8 @@ def test_restriction_honoured_on_every_path(request, index_name, case):
     top, matched = {}, {}
     for qid, q in enumerate(RESTRICTED_QUERIES):
         top[qid] = [(r.doc_id, r.score)
-                    for r in idx.search(q, k=10, mode="dataframe", facts=facts).collect()]
-        matched[qid] = sorted(r.doc_id for r in idx.match(q, facts=facts).collect())
+                    for r in reference_search(idx, q, k=10, facts=facts).collect()]
+        matched[qid] = sorted(r.doc_id for r in reference_match(idx, q, facts).collect())
         got = [(r.doc_id, r.score) for r in search_kernel(idx, q, k=10, facts=facts).collect()]
         assert got == top[qid], q
         assert sorted(r.doc_id for r in match_kernel(idx, q, facts).collect()) == matched[qid], q

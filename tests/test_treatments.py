@@ -16,6 +16,7 @@ from bitfunnel_spark.operators.segments import (
     _encode_posting_arrays,
     decode_group,
 )
+from tests.conftest import reference_search
 
 
 def _enc_arrays(docs, tfs, rk, **kw):
@@ -125,8 +126,8 @@ def test_treated_search_parity(index, treated_index, q):
     the treated index must rank-match both its own DataFrame path and the
     default-encoded index."""
     a = [(r["doc_id"], r["score"]) for r in treated_index.search(q, k=10, mode="kernel").collect()]
-    b = [(r["doc_id"], r["score"]) for r in treated_index.search(q, k=10, mode="dataframe").collect()]
-    c = [(r["doc_id"], r["score"]) for r in index.search(q, k=10, mode="dataframe").collect()]
+    b = [(r["doc_id"], r["score"]) for r in reference_search(treated_index, q, k=10).collect()]
+    c = [(r["doc_id"], r["score"]) for r in reference_search(index, q, k=10).collect()]
     assert a == b == c
 
 
