@@ -350,24 +350,38 @@ class FullTextIndex:
         this removes the only network stage of the query path, leaving
         kernel tasks + a k-row-per-partition TakeOrdered collect.
 
+        ``doc_stats`` is re-cached the same way — hash-partitioned by
+        (shard, slice) into the SAME number of partitions — so a group's
+        doc metadata sits in the partition that holds its segments, as the
+        reference keeps each slice's DocTable inside its slice buffer
+        (Slice.h). A doc-metadata restriction (an ES range filter, a
+        ``(doc_id, shard, slice)`` scan of doc_stats) then cogroups with
+        the segment groups with no exchange: a range-filtered request is
+        one job and one stage (kernel.run_log). ``partitions`` defaults to
+        ``spark.sql.shuffle.partitions``. The old, narrow doc_stats cache
+        is kept: Spark keys caches by plan, so unpersisting it would also
+        drop the doc_stats cache of any other index built over the same
+        corpus and config, whose restricted requests would then
+        re-tokenize the corpus.
+
         The reference's analogue is loading slices into per-shard memory
         buffers before serving (SimpleIndex startup); build pipelines and
         one-shot analytics skip this step.
         """
         if self.segments is None:
             self.build_segments()
+        n = partitions or int(self.spark.conf.get("spark.sql.shuffle.partitions"))
         seg = self.segments
-        cols = ["shard", "slice"]
-        seg2 = (
-            seg.repartition(partitions, *cols) if partitions else seg.repartition(*cols)
-        ).cache()
-        seg2.count()  # materialize before dropping the old cache
+        self.segments, self.doc_stats = (
+            df.repartition(n, "shard", "slice").cache() for df in (seg, self.doc_stats)
+        )
+        for df in (self.segments, self.doc_stats):
+            df.count()  # materialize before dropping the old segment cache
         try:
             seg.unpersist()
         except Exception:
             pass
-        self.segments = seg2
-        return seg2
+        return self.segments
 
     def build_segments(self, cache: bool = True) -> DataFrame:
         from bitfunnel_spark.operators.segments import build_segments
@@ -425,9 +439,10 @@ class FullTextIndex:
 
     def restricted(self, docs: DataFrame) -> "FullTextIndex":
         """A copy of the index whose every query ANDs in the doc-metadata
-        restriction ``docs`` (DataFrame[doc_id] — ES range filters and
-        post_filter, plans/dsl.py); the kernel cogroups it into per-(shard,
-        slice) allow arrays (kernel.run_log). Segments are built on THIS
+        restriction ``docs`` (DataFrame[doc_id], or doc_stats rows
+        (doc_id, shard, slice) — ES range filters and post_filter,
+        plans/dsl.py); the kernel cogroups it into per-(shard, slice)
+        allow arrays (kernel.run_log). Segments are built on THIS
         index first, so a kernel run on the copy never encodes a throwaway
         segment store per request."""
         import dataclasses

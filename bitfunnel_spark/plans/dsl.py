@@ -530,8 +530,10 @@ def _parse_range(conf) -> tuple[str, list[tuple[str, float]]]:
 
 
 def _range_doc_ids(index, conf):
-    """DataFrame[doc_id] of docs whose metadata satisfies the range — one
-    scan of the narrow doc_stats table, predicate pushed to the source."""
+    """DataFrame[(doc_id, shard, slice)] of docs whose metadata satisfies
+    the range — one scan of the narrow doc_stats table, predicate pushed
+    to the source. The group key rides along, so the kernel cogroups the
+    rows with the segment store as they are (kernel.run_log)."""
     from pyspark.sql import functions as F
 
     col, bounds = _parse_range(conf)
@@ -540,7 +542,7 @@ def _range_doc_ids(index, conf):
     for op, v in bounds:
         p = {"gte": c >= v, "gt": c > v, "lte": c <= v, "lt": c < v}[op]
         pred = p if pred is None else (pred & p)
-    return index.doc_stats.filter(pred).select("doc_id")
+    return index.doc_stats.filter(pred).select("doc_id", "shard", "slice")
 
 _CORPUS_FIELD_COLS = {
     "content": "content", "body": "content", "text": "content",
@@ -551,8 +553,10 @@ _CORPUS_FIELD_COLS = {
 def _filter_doc_ids(index, query: dict):
     """DataFrame[doc_id] matching a filter-context query: match_all / ids /
     exists run as corpus-metadata scans (predicate pushdown to the parquet
-    scan, tombstones excluded); anything else compiles to the AST and runs
-    the engine's unscored match (which already masks tombstones)."""
+    scan, tombstones excluded); range scans doc_stats and also carries
+    (shard, slice) (_range_doc_ids); anything else compiles to the AST and
+    runs the engine's unscored match (which already masks tombstones).
+    Callers that hand the rows back select ``doc_id``."""
     from pyspark.sql import functions as F
 
     _require(isinstance(query, dict) and len(query) == 1,
@@ -643,18 +647,28 @@ def _pop_bool_ranges(body: dict) -> tuple[dict, list, list]:
     return residual, pos, neg
 
 
-def _range_restrict(index, pos: list, neg: list = (), extra=None):
-    """One DataFrame[doc_id]: the intersection of the positive metadata
-    clauses' doc sets (chained semi-joins; Catalyst broadcasts narrow
-    sides), minus the negated clauses' sets (anti-joins). With only
-    negations, the base is the narrow doc_stats id scan."""
-    out = extra
+def _semi(a, b):
+    """a ∩ b by doc_id. A side that carries (shard, slice) — a doc_stats
+    scan — is kept as the stream side, so the result keeps the group key
+    and its partitioning (Catalyst broadcasts the other, narrow side)."""
+    if "shard" in b.columns and "shard" not in a.columns:
+        a, b = b, a
+    return a.join(b, "doc_id", "left_semi")
+
+
+def _range_restrict(index, pos: list, neg: list = ()):
+    """One restriction frame: the intersection of the positive metadata
+    clauses' doc sets (chained semi-joins, _semi), minus the negated
+    clauses' sets (anti-joins). With only negations, the base is the
+    narrow doc_stats scan. Carries (doc_id, shard, slice) whenever a
+    clause scanned doc_stats, else doc_id alone."""
+    out = None
     for conf in pos:
         ids = _filter_doc_ids(index, conf)
-        out = ids if out is None else out.join(ids, "doc_id", "left_semi")
+        out = ids if out is None else _semi(out, ids)
     if neg:
         if out is None:
-            out = index.doc_stats.select("doc_id")
+            out = index.doc_stats.select("doc_id", "shard", "slice")
         for conf in neg:
             out = out.join(_filter_doc_ids(index, conf), "doc_id", "left_anti")
     return out
@@ -835,9 +849,7 @@ def search_dsl(index, body: dict, k: int = 10):
             _require(isinstance(post_filter, dict) and len(post_filter) == 1,
                      "post_filter must be a single-kind query object")
             pf = _filter_doc_ids(index, post_filter)
-            restrict = pf if restrict is None else restrict.join(
-                pf, "doc_id", "left_semi"
-            )
+            restrict = pf if restrict is None else _semi(restrict, pf)
         # ONE restriction channel for every downstream route, including
         # the plain-hits tail
         index = index.restricted(restrict)
@@ -1117,7 +1129,7 @@ def _match_ids(index, query: dict, api: str = "_count"):
             ids = index.match(compile_dsl(query))
     else:
         ids = index.match(compile_dsl(query))
-    return ids
+    return ids.select("doc_id")
 
 
 def count_dsl(index, body: dict):

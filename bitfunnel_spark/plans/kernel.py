@@ -741,14 +741,15 @@ def run_log(
     driver-collected doc-id array, capped at ``MAX_FACT_DOCS``
     (index.fact_doc_ids); broad facts belong in define_fact_indexed.
 
-    A doc-metadata restriction on the index (``_restrict_docs``, a
-    DataFrame[doc_id] — ES range filters and post_filter, plans/dsl.py)
-    travels as data: its doc ids pick up their (shard, slice) from
-    doc_stats and cogroup with the segment groups, so each kernel call
-    receives its own group's allow array — the reference's fact row
+    A doc-metadata restriction on the index (``_restrict_docs`` — ES
+    range filters and post_filter, plans/dsl.py) travels as data: its
+    rows cogroup with the segment groups by (shard, slice), so each kernel
+    call receives its own group's allow array — the reference's fact row
     ANDed into the plan, with no driver-collected doc array and no size
-    cap. The unrestricted scan keeps the plain applyInPandas, which needs
-    no Exchange over a prepare_serve'd segment store."""
+    cap. A restriction scanned from doc_stats already carries (shard,
+    slice) (_allow_rows); over a prepare_serve'd index both sides are
+    partitioned alike, so the restricted scan, like the plain
+    applyInPandas, needs no Exchange."""
     if index.segments is None:
         index.build_segments()
     desc = _descriptor(index, plans, k, facts, similarity, after)
@@ -770,9 +771,22 @@ def run_log(
     amb = getattr(index, "_restrict_docs", None)
     if amb is None:
         return groups.applyInPandas(_make_kernel(plans, desc, sink), schema)
-    allow = amb.select("doc_id").join(index.doc_stats.select("doc_id", "shard", "slice"), "doc_id")
-    return groups.cogroup(allow.groupBy("shard", "slice")).applyInPandas(
+    allow = _allow_rows(index, amb).groupBy("shard", "slice")
+    return groups.cogroup(allow).applyInPandas(
         _make_kernel(plans, desc, sink, restricted=True), schema
+    )
+
+
+def _allow_rows(index, docs: DataFrame) -> DataFrame:
+    """(doc_id, shard, slice) rows of a doc-metadata restriction. A
+    restriction scanned from doc_stats carries its group key already;
+    any other (ids, exists, match_all, a post_filter match) is
+    semi-joined into doc_stats, doc_stats streaming, so the rows keep
+    doc_stats' (shard, slice) partitioning."""
+    if {"shard", "slice"} <= set(docs.columns):
+        return docs.select("doc_id", "shard", "slice")
+    return index.doc_stats.select("doc_id", "shard", "slice").join(
+        docs.select("doc_id"), "doc_id", "left_semi"
     )
 
 

@@ -31,6 +31,13 @@ def get_spark(
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if shuffle_partitions is None:
+        # also the partition count FullTextIndex.prepare_serve lays the
+        # segment store and doc_stats out in, both hash-partitioned by
+        # (shard, slice), so a query's kernel groups and a range
+        # restriction's doc_stats rows meet with no exchange. Hash
+        # placement of few groups skews: on 4 vCPUs, 4 partitions put 32
+        # (shard, slice) groups 8/15/4/5 and slowed the serve_batch
+        # benchmark (ROADMAP item 1, "One task wave")
         shuffle_partitions = max(cores, 8)
     builder = (
         SparkSession.builder.master(f"local[{cores}]")
