@@ -179,8 +179,8 @@ def q_bm25_fact(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_ft_fact_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k restricted by an INDEXED fact filter-stream — the broad-fact
     scale route (define_fact_indexed): the fact is posting rows in stream
-    "fact" ANDed in-kernel as a filter-context conjunct, no driver-resident
-    doc array, no MAX_FACT_DOCS cap."""
+    "fact" ANDed in-kernel as a filter-context conjunct — a pruned posting
+    scan instead of define_fact's semi-join into doc_stats."""
     import dataclasses
 
     idx = dataclasses.replace(

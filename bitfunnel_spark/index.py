@@ -51,11 +51,6 @@ class FullTextIndex:
     synonyms: dict | None = None  # body-term synonym map (set_synonyms)
     synonym_mode: str = "expand"  # "expand" (OR) | "blend" (SynonymQuery)
 
-    # fact doc-sets are collected driver-side and broadcast into kernels
-    # (the reference's FactSet is likewise an in-memory per-doc bit row —
-    # IFactSet.h); broad predicates belong as indexed filter streams instead
-    MAX_FACT_DOCS = 5_000_000
-
     # terms above this, fall back to per-query filtered collects rather than
     # holding the whole dictionary on the driver
     IDF_MAP_MAX_TERMS = 5_000_000
@@ -184,18 +179,20 @@ class FullTextIndex:
     def define_fact(self, name: str, predicate) -> None:
         """Register a named boolean per-document fact (IFactSet analogue):
         ``predicate`` is a Column over the corpus. Queries pass
-        ``facts=[name, ...]`` to AND the fact sets into the match."""
+        ``facts=[name, ...]`` to AND the fact sets into the match: the
+        kernel cogroups them, semi-joined into doc_stats, as per-(shard,
+        slice) allow rows (kernel._allow_rows)."""
         self.facts[name] = self.corpus.filter(predicate).select("doc_id")
 
     def define_fact_indexed(self, name: str, predicate) -> None:
-        """Register a fact as an INDEXED filter stream — the scale route for
-        broad facts (the `fact_doc_ids` cap error prescribes it): the fact's
-        doc set becomes ordinary posting rows (stream="fact", term=name)
-        unioned into the postings table and the built segment store, so
-        queries AND it in-kernel exactly like a term — a pruned posting
-        scan, no driver-resident doc array, no MAX_FACT_DOCS cap. The
-        reference's IFactSet is likewise just another row ANDed into the
-        plan (inc/BitFunnel/IFactSet.h); here the row is a posting list.
+        """Register a fact as an INDEXED filter stream: the fact's doc set
+        becomes ordinary posting rows (stream="fact", term=name) unioned
+        into the postings table and the built segment store, so queries
+        AND it in-kernel exactly like a term — a pruned posting scan that
+        reads only the fact's blocks of the groups the query touches, with
+        no semi-join into doc_stats (define_fact's route). The reference's
+        IFactSet is likewise just another row ANDed into the plan
+        (inc/BitFunnel/IFactSet.h); here the row is a posting list.
         Queries can also name it directly as ``fact:<name>``."""
         if name in self.indexed_facts:
             raise ValueError(f"indexed fact {name!r} already defined")
@@ -227,7 +224,8 @@ class FullTextIndex:
     def _apply_indexed_facts(self, node, facts: list[str] | None):
         """(node', residual_facts): indexed facts become filter-context
         conjuncts (Filter(Term(stream="fact")) — non-scoring, prunable,
-        evaluated in-kernel); driver-array facts pass through."""
+        evaluated in-kernel); define_fact facts pass through to the
+        kernel's allow rows."""
         facts = list(facts) if facts else []
         idx_names = [f for f in facts if f in self.indexed_facts]
         rest = [f for f in facts if f not in self.indexed_facts]
@@ -238,27 +236,6 @@ class FullTextIndex:
                 (node, *(Filter(Term(text=f, stream="fact")) for f in idx_names))
             )
         return node, (rest or None)
-
-    def fact_doc_ids(self, names: list[str]):
-        """Sorted int64 array = intersection of the named facts' doc sets
-        (driver-resident, like the reference's fact rows). Raises KeyError
-        for unknown facts and ValueError past MAX_FACT_DOCS."""
-        import numpy as np
-
-        out = None
-        for name in names:
-            if name not in self.facts:
-                raise KeyError(f"unknown fact {name!r} (define_fact first)")
-            df = self.facts[name].limit(self.MAX_FACT_DOCS + 1)
-            ids = np.array(sorted(r[0] for r in df.collect()), dtype=np.int64)
-            if ids.size > self.MAX_FACT_DOCS:
-                raise ValueError(
-                    f"fact {name!r} exceeds MAX_FACT_DOCS; broad facts belong "
-                    "in the indexed filter stream: define_fact_indexed(name, "
-                    "predicate) serves them as pruned posting scans at any size"
-                )
-            out = ids if out is None else out[np.isin(out, ids)]
-        return out if out is not None else np.empty(0, dtype=np.int64)
 
     @classmethod
     def build(
@@ -462,8 +439,8 @@ class FullTextIndex:
     def match(self, query, facts: list[str] | None = None) -> DataFrame:
         """Reference semantics: the full unscored boolean match set
         (ResultsBuffer analogue) as DataFrame[doc_id]. Fact sets
-        (define_fact) reach the kernel as a doc-id array capped at
-        MAX_FACT_DOCS; indexed facts have no cap."""
+        (define_fact) reach the kernel as cogrouped allow rows; indexed
+        facts as filter conjuncts of the query."""
         from bitfunnel_spark.plans.kernel import match_kernel
 
         return match_kernel(self, *self._prepared(query, facts))

@@ -647,21 +647,14 @@ def _pop_bool_ranges(body: dict) -> tuple[dict, list, list]:
     return residual, pos, neg
 
 
-def _semi(a, b):
-    """a ∩ b by doc_id. A side that carries (shard, slice) — a doc_stats
-    scan — is kept as the stream side, so the result keeps the group key
-    and its partitioning (Catalyst broadcasts the other, narrow side)."""
-    if "shard" in b.columns and "shard" not in a.columns:
-        a, b = b, a
-    return a.join(b, "doc_id", "left_semi")
-
-
 def _range_restrict(index, pos: list, neg: list = ()):
     """One restriction frame: the intersection of the positive metadata
     clauses' doc sets (chained semi-joins, _semi), minus the negated
     clauses' sets (anti-joins). With only negations, the base is the
     narrow doc_stats scan. Carries (doc_id, shard, slice) whenever a
     clause scanned doc_stats, else doc_id alone."""
+    from bitfunnel_spark.plans.kernel import _semi
+
     out = None
     for conf in pos:
         ids = _filter_doc_ids(index, conf)
@@ -848,6 +841,8 @@ def search_dsl(index, body: dict, k: int = 10):
         if post_filter is not None:
             _require(isinstance(post_filter, dict) and len(post_filter) == 1,
                      "post_filter must be a single-kind query object")
+            from bitfunnel_spark.plans.kernel import _semi
+
             pf = _filter_doc_ids(index, post_filter)
             restrict = pf if restrict is None else _semi(restrict, pf)
         # ONE restriction channel for every downstream route, including
@@ -1147,9 +1142,10 @@ def count_dsl(index, body: dict):
 
 #: _delete_by_query collects matched ids to the driver (tombstones are a
 #: driver-resident set by design — the reference's "document active" row is
-#: likewise an in-memory row, Row.h:34-35), so it carries the same ceiling
-#: fact_doc_ids enforces. A mass deletion past the cap is a physical-layout
-#: operation, not a tombstone update: run a filtered rebuild / compaction
+#: likewise an in-memory row, Row.h:34-35, and every query ships the set in
+#: its kernel closure), so it caps the set a single call may add. A mass
+#: deletion past the cap is a physical-layout operation, not a tombstone
+#: update: run a filtered rebuild / compaction
 #: (streaming/ingest.compact drops tombstoned docs; FullTextIndex.build
 #: over corpus.join(match, "left_anti") rewrites without them).
 MAX_DELETE_DOCS = 5_000_000

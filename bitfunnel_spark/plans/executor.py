@@ -20,8 +20,8 @@ Semantics (SURVEY §2.5):
   (field) terms when query-boosted (field-weighted scoring).
 - Determinism contract with the oracle: score rounded half-up to 4 dp,
   ordered (score desc, doc_id asc), ties broken by doc_id.
-- Fact sets semi-join with no size cap; the kernel collects them into a
-  doc-id array capped at MAX_FACT_DOCS (index.fact_doc_ids).
+- Fact sets semi-join into the match with no size cap; the kernel takes
+  the same fact sets as cogrouped allow rows (kernel._allow_rows).
 """
 
 from __future__ import annotations

@@ -442,9 +442,8 @@ def _make_kernel(plans: list[QueryPlan], desc: dict, sink: bool, restricted: boo
     rest), rows = result rows emitted, kernel_ms = its wall time.
 
     ``restricted``: the kernel takes a second, cogrouped frame — the
-    group's allowed doc ids under the index's doc-metadata restriction
-    (run_log) — and intersects it with the fact-set array; a group with
-    nothing allowed, or with no segment rows, emits no rows."""
+    group's allowed doc ids (run_log's allow rows); a group with nothing
+    allowed, or with no segment rows, emits no rows."""
     keymap = _keymap(set().union(*desc["keys"]))
     scored = desc["k"] is not None
     bound = "dot_tf" if desc["similarity"] == "dot_tf" else "bm25"
@@ -491,15 +490,12 @@ def _make_kernel(plans: list[QueryPlan], desc: dict, sink: bool, restricted: boo
         # one parameter: applyInPandas reads a two-parameter function as
         # (key, pdf)
         def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-            return run(pdf, desc["allow"])
+            return run(pdf, None)
 
         return kernel
 
     def restricted_kernel(pdf: pd.DataFrame, allowed: pd.DataFrame) -> pd.DataFrame:
-        allow = np.unique(allowed["doc_id"].to_numpy(np.int64))
-        if desc["allow"] is not None:
-            allow = allow[_member(desc["allow"], allow)]
-        return run(pdf, allow)
+        return run(pdf, np.unique(allowed["doc_id"].to_numpy(np.int64)))
 
     return restricted_kernel
 
@@ -646,13 +642,13 @@ def use_positional_phrases(index) -> bool:
 
 
 def _descriptor(
-    index, plans: list[QueryPlan], k: int | None, facts: list[str] | None = None,
-    similarity: str = "bm25", after: tuple[float, int] | None = None,
+    index, plans: list[QueryPlan], k: int | None, similarity: str = "bm25",
+    after: tuple[float, int] | None = None,
 ) -> dict:
     """The one descriptor builder: every per-query decision is made here,
-    once per log, on the driver — the kernel only executes it. A
-    doc-metadata restriction (``index._restrict_docs``) is not part of it:
-    it reaches the kernel as data, per group (run_log)."""
+    once per log, on the driver — the kernel only executes it. Fact sets
+    and the doc-metadata restriction are not part of it: they reach the
+    kernel as data, per group (run_log, _allow_rows)."""
     from bitfunnel_spark.plans.planner import effective_idf
     from bitfunnel_spark.plans.scoring import base_weight_map, check_similarity, mu_p_map
 
@@ -696,13 +692,11 @@ def _descriptor(
         "mu_p": mu_p,
         # (score4, doc_id) search_after cursor
         "after": None if after is None else (round(float(after[0]), 4), int(after[1])),
-        # tombstones + fact sets: sorted int64 doc-id arrays shipped in the
-        # closure (the reference holds fact rows and the soft-delete row
-        # in memory the same way)
+        # tombstones: a sorted int64 doc-id array shipped in the closure
+        # (the reference holds the soft-delete row in memory the same way)
         "deleted": (
             np.array(sorted(index.tombstones), dtype=np.int64) if index.tombstones else None
         ),
-        "allow": index.fact_doc_ids(facts) if facts else None,
     }
     desc["keys"] = [
         frozenset(p.terms).union(*(_phrase_keys(ph, desc) for ph, _neg in p.phrases))
@@ -737,22 +731,20 @@ def run_log(
     MATCH_SCHEMA (full unscored match sets, ``k=None``), or METRIC_SCHEMA
     when the counters ``sink`` is on.
 
-    Fact sets named in ``facts`` (define_fact) reach the kernel as one
-    driver-collected doc-id array, capped at ``MAX_FACT_DOCS``
-    (index.fact_doc_ids); broad facts belong in define_fact_indexed.
-
-    A doc-metadata restriction on the index (``_restrict_docs`` — ES
-    range filters and post_filter, plans/dsl.py) travels as data: its
-    rows cogroup with the segment groups by (shard, slice), so each kernel
-    call receives its own group's allow array — the reference's fact row
-    ANDed into the plan, with no driver-collected doc array and no size
-    cap. A restriction scanned from doc_stats already carries (shard,
-    slice) (_allow_rows); over a prepare_serve'd index both sides are
-    partitioned alike, so the restricted scan, like the plain
-    applyInPandas, needs no Exchange."""
+    Every restriction travels as data: fact sets named in ``facts``
+    (define_fact) and a doc-metadata restriction on the index
+    (``_restrict_docs`` — ES range filters and post_filter, plans/dsl.py)
+    meet in one frame of allow rows (_allow_rows), which cogroups with the
+    segment groups by (shard, slice), so each kernel call receives its own
+    group's allow array — the reference's fact row ANDed into the plan,
+    with no driver-collected doc array and no size cap. Over a
+    prepare_serve'd index both sides are partitioned alike, so the
+    restricted scan, like the plain applyInPandas, needs no Exchange on
+    the segment side."""
+    allow = _allow_rows(index, facts)
     if index.segments is None:
         index.build_segments()
-    desc = _descriptor(index, plans, k, facts, similarity, after)
+    desc = _descriptor(index, plans, k, similarity, after)
     # the plans' terms plus the gram term of every gram-matched phrase (the
     # gram's posting list must reach the kernel); fallback phrase rows are
     # unioned in below
@@ -768,26 +760,68 @@ def run_log(
         )
     schema = _schema(k, sink)
     groups = seg.groupBy("shard", "slice")
-    amb = getattr(index, "_restrict_docs", None)
-    if amb is None:
+    if allow is None:
         return groups.applyInPandas(_make_kernel(plans, desc, sink), schema)
-    allow = _allow_rows(index, amb).groupBy("shard", "slice")
-    return groups.cogroup(allow).applyInPandas(
+    return groups.cogroup(allow.groupBy("shard", "slice")).applyInPandas(
         _make_kernel(plans, desc, sink, restricted=True), schema
     )
 
 
-def _allow_rows(index, docs: DataFrame) -> DataFrame:
-    """(doc_id, shard, slice) rows of a doc-metadata restriction. A
-    restriction scanned from doc_stats carries its group key already;
-    any other (ids, exists, match_all, a post_filter match) is
-    semi-joined into doc_stats, doc_stats streaming, so the rows keep
-    doc_stats' (shard, slice) partitioning."""
-    if {"shard", "slice"} <= set(docs.columns):
-        return docs.select("doc_id", "shard", "slice")
-    return index.doc_stats.select("doc_id", "shard", "slice").join(
-        docs.select("doc_id"), "doc_id", "left_semi"
-    )
+def _semi(a, b):
+    """a ∩ b by doc_id. A side that carries (shard, slice) — a doc_stats
+    scan — is kept as the stream side, so the result keeps the group key
+    and its partitioning (Catalyst broadcasts the other, narrow side)."""
+    if "shard" in b.columns and "shard" not in a.columns:
+        a, b = b, a
+    return a.join(b, "doc_id", "left_semi")
+
+
+def _allow_rows(index, facts: list[str] | None = None) -> DataFrame | None:
+    """(doc_id, shard, slice) rows of every restriction a query on
+    ``index`` carries — its doc-metadata restriction (``_restrict_docs``)
+    ∩ each named fact set — or None when there is none. A restriction
+    scanned from doc_stats carries its group key already; any other (ids,
+    exists, match_all, a post_filter match, a fact set) is semi-joined
+    into doc_stats, doc_stats streaming (_semi), so the rows keep
+    doc_stats' (shard, slice) partitioning. An unknown fact raises
+    KeyError here, on the driver, before any job."""
+    amb = getattr(index, "_restrict_docs", None)
+    docs = [] if amb is None else [amb]
+    docs += [_fact_docs(index, name) for name in facts or ()]
+    if not docs:
+        return None
+    if {"shard", "slice"} <= set(docs[0].columns):
+        out = docs.pop(0).select("doc_id", "shard", "slice")
+    else:
+        out = index.doc_stats.select("doc_id", "shard", "slice")
+    for d in docs:
+        out = _semi(out, d.select("doc_id"))
+    return out
+
+
+def _fact_docs(index, name: str) -> DataFrame:
+    """A named fact's doc set: a define_fact frame, or the doc ids of a
+    define_fact_indexed stream (the standalone scans, which run no query
+    to fold an indexed fact into)."""
+    if name in index.facts:
+        return index.facts[name]
+    if name in index.indexed_facts:
+        return index.indexed_facts[name].select("doc_id")
+    raise KeyError(f"unknown fact {name!r} (define_fact first)")
+
+
+def live_docs(index, frame: DataFrame, facts: list[str] | None = None) -> DataFrame:
+    """``frame`` (rows keyed by doc_id) masked as the kernel masks a match:
+    tombstoned docs dropped, and only docs in the allow rows kept
+    (_allow_rows: the doc-metadata restriction ∩ the named fact sets).
+    The mask of the scans that run no query: standalone rank_feature and
+    distance_feature, and metric_agg over the whole corpus."""
+    if index.tombstones:
+        frame = frame.filter(~F.col("doc_id").isin(sorted(int(d) for d in index.tombstones)))
+    allow = _allow_rows(index, facts)
+    if allow is None:
+        return frame
+    return frame.join(allow.select("doc_id"), "doc_id", "left_semi")
 
 
 def match_kernel(index, query, facts: list[str] | None = None) -> DataFrame:

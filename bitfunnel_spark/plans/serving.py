@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from bitfunnel_spark.functions.tokenizer import tokenize
+from bitfunnel_spark.plans.kernel import live_docs
 from bitfunnel_spark.plans.planner import plan_query
 
 
@@ -553,17 +554,9 @@ def rank_feature(
         matches = index.match(query, facts).select("doc_id")
         feats = matches.join(feats, "doc_id", "left").fillna(0.0, subset=["fv"])
     else:
-        # the standalone form scans doc stats directly — match() isn't in
-        # the path to mask tombstones or apply the ambient doc
-        # restriction (the kernel behind match() does both), so do both here
-        tomb = getattr(index, "tombstones", frozenset())
-        if tomb:
-            feats = feats.filter(
-                ~F.col("doc_id").isin([int(d) for d in tomb])
-            )
-        amb = getattr(index, "_restrict_docs", None)
-        if amb is not None:
-            feats = feats.join(amb.select("doc_id"), "doc_id", "left_semi")
+        # the standalone form scans doc stats directly: the kernel's mask
+        # (tombstones, the ambient restriction, fact sets) applies here
+        feats = live_docs(index, feats, facts)
     v = F.col("fv")
     if fn == "saturation":
         expr = v / (v + F.lit(float(pivot)))
@@ -2322,17 +2315,8 @@ def distance_feature(
         matches = index.match(query, facts).select("doc_id")
         feats = matches.join(feats, "doc_id", "left").fillna(0.0, subset=["fv"])
     else:
-        # standalone scan: mask tombstones AND the ambient doc
-        # restriction, which match() would otherwise
-        # supply (the rank_feature branch above documents the same)
-        tomb = getattr(index, "tombstones", frozenset())
-        if tomb:
-            feats = feats.filter(
-                ~F.col("doc_id").isin([int(d) for d in tomb])
-            )
-        amb = getattr(index, "_restrict_docs", None)
-        if amb is not None:
-            feats = feats.join(amb.select("doc_id"), "doc_id", "left_semi")
+        # standalone scan: the kernel's mask, as in rank_feature
+        feats = live_docs(index, feats, facts)
     dist = F.abs(F.col("fv") - F.lit(float(origin)))
     expr = F.lit(float(pivot)) / (F.lit(float(pivot)) + dist)
     return (
@@ -2506,12 +2490,9 @@ def metric_agg(
     else:
         vals = index.corpus.select("doc_id", F.col(field).alias("v"))
     if query is None:
-        # no query = the whole live corpus (ES metrics without a query);
-        # tombstones still mask
-        j = vals
-        tomb = getattr(index, "tombstones", frozenset())
-        if tomb:
-            j = j.filter(~F.col("doc_id").isin([int(d) for d in tomb]))
+        # no query = the whole live corpus (ES metrics without a query),
+        # under the kernel's mask
+        j = live_docs(index, vals, facts)
     else:
         matches = index.match(query, facts).select("doc_id")
         j = matches.join(vals, "doc_id")

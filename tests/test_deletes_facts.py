@@ -116,7 +116,7 @@ def test_compact_drops_tombstones(spark, corpus, tmp_path):
 # ---------------------------------------------------------------------------
 # indexed fact filter-streams (define_fact_indexed) — the broad-fact scale
 # route: the fact is posting rows in stream "fact", ANDed in-kernel like a
-# term; no driver-resident doc array, no MAX_FACT_DOCS cap.
+# term, where a define_fact set is a semi-join into doc_stats.
 
 @pytest.fixture()
 def fcopy(index):
@@ -163,12 +163,11 @@ def test_indexed_fact_batch_and_after(fcopy):
     assert [(r["doc_id"], r["score"]) for r in p1 + p2] == full
 
 
-def test_indexed_fact_no_cap_no_driver_array(fcopy, monkeypatch):
-    # the array route refuses a broad fact; the indexed route serves it
-    monkeypatch.setattr(type(fcopy), "MAX_FACT_DOCS", 3)
+def test_indexed_fact_no_cap_no_driver_array(fcopy):
+    # a fact of every doc is served on both routes and restricts nothing
     fcopy.define_fact("broad_a", F.col("doc_id") >= 0)
-    with pytest.raises(ValueError, match="define_fact_indexed"):
-        fcopy.search("data", facts=["broad_a"], mode="kernel").collect()
+    got = _top(fcopy, "data", facts=["broad_a"])
+    assert got and got == _top(fcopy, "data", mode="dataframe")
     fcopy.define_fact_indexed("broad_i", F.col("doc_id") >= 0)
     got = _top(fcopy, "data", facts=["broad_i"])
     assert got == _top(fcopy, "data")  # all-docs fact restricts nothing
@@ -209,6 +208,39 @@ def test_filter_only_and_rank_feature_mask_tombstones(index):
     assert rows.count() == 0
     ma = search_dsl(deleted, {"query": {"match_all": {}}, "size": 5}).collect()
     assert victim not in [r.doc_id for r in ma]
+
+
+def test_standalone_routes_honour_facts(fcopy):
+    """The scans that run no query (rank_feature and distance_feature with
+    query=None, metric_agg over the whole corpus) AND the named fact sets
+    in, array and indexed alike: each equals its unrestricted answer
+    filtered to the fact by hand."""
+    from bitfunnel_spark.plans import serving
+
+    fcopy.define_fact("odd_a", F.col("doc_id") % 2 == 1)
+    fcopy.define_fact_indexed("odd_i", F.col("doc_id") % 2 == 1)
+    n = fcopy.n_docs
+    calls = [
+        lambda k, facts: serving.rank_feature(
+            fcopy, None, field="doclen", fn="saturation", pivot=8.0, k=k,
+            facts=facts),
+        lambda k, facts: serving.distance_feature(
+            fcopy, None, field="doclen", origin=50.0, pivot=10.0, k=k,
+            facts=facts),
+    ]
+    for call in calls:
+        full = [(r.doc_id, r.score) for r in call(n, None).collect()]
+        want = [x for x in full if x[0] % 2 == 1][:10]
+        for fact in ("odd_a", "odd_i"):
+            got = [(r.doc_id, r.score) for r in call(10, [fact]).collect()]
+            assert got == want and len(got) == 10, fact
+    n_odd = fcopy.corpus.filter(F.col("doc_id") % 2 == 1).count()
+    assert 0 < n_odd < n
+    for fact in ("odd_a", "odd_i"):
+        row = serving.metric_agg(fcopy, None, "value_count", facts=[fact]).first()
+        assert row.n_docs == row.value == n_odd, fact
+    with pytest.raises(KeyError, match="unknown fact"):
+        serving.metric_agg(fcopy, None, "value_count", facts=["nope"])
 
 
 def test_delete_by_query_ast(index):

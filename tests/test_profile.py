@@ -164,9 +164,9 @@ RESTRICTED_QUERIES = ["data", "data fast", "dup | vector", "data -slow", '"batch
 
 
 def _restricted(index, case):
-    """(index copy, facts) carrying one doc-metadata restriction case:
-    a doclen range, an ids set, an empty restriction, range ∩ tombstones,
-    range ∩ a driver-array fact set."""
+    """(index copy, facts) carrying one restriction case: a doclen range,
+    an ids set, an empty restriction, range ∩ tombstones, range ∩ a
+    define_fact set, a define_fact set alone."""
     import dataclasses
 
     from pyspark.sql import functions as F
@@ -186,15 +186,17 @@ def _restricted(index, case):
     elif case == "tombstones":
         idx = dataclasses.replace(index, tombstones=frozenset(data_ids[::2]))
         idx._restrict_docs = in_range
-    else:  # facts
+    else:  # facts, facts_only
         even = index.corpus.filter(F.col("doc_id") % 2 == 0).select("doc_id")
         idx = dataclasses.replace(index, facts={**index.facts, "even": even})
-        idx._restrict_docs = in_range
+        if case == "facts":
+            idx._restrict_docs = in_range
         facts = ["even"]
     return idx, facts
 
 
-@pytest.mark.parametrize("case", ["range", "ids", "empty", "tombstones", "facts"])
+@pytest.mark.parametrize(
+    "case", ["range", "ids", "empty", "tombstones", "facts", "facts_only"])
 @pytest.mark.parametrize("index_name", ["index", "prof_index"])
 def test_restriction_honoured_on_every_path(request, index_name, case):
     """An index copy carrying a doc-metadata restriction is served by the

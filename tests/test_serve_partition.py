@@ -34,20 +34,33 @@ def _rows(df):
     return [(r["doc_id"], r["score"]) for r in df.collect()]
 
 
-def _query_side_plan(df) -> str:
-    """The executed plan's nodes above the cached stores, one per line: a
-    tree walk that stops at each InMemoryTableScan, so the build plans
-    behind the caches (and their exchanges) are left out on every branch
-    of a cogroup, not only the first."""
-    out, todo = [], [df._jdf.queryExecution().executedPlan()]
+def _nodes(root):
+    """The executed plan's nodes above the cached stores: a tree walk that
+    stops at each InMemoryTableScan, so the build plans behind the caches
+    (and their exchanges) are left out on every branch of a cogroup, not
+    only the first."""
+    todo = [root]
     while todo:
         node = todo.pop()
         if node.nodeName() == "AdaptiveSparkPlan":
             node = node.executedPlan()
-        out.append(node.simpleString(100))
+        yield node
         kids = node.children()
         todo.extend(kids.apply(i) for i in range(kids.size()))
-    return "\n".join(out)
+
+
+def _query_side_plan(df) -> str:
+    """The query-side nodes (_nodes), one per line."""
+    root = df._jdf.queryExecution().executedPlan()
+    return "\n".join(n.simpleString(100) for n in _nodes(root))
+
+
+def _segment_side_plan(df) -> str:
+    """The query-side nodes of the cogroup's first input, the segment
+    store, one per line: the restriction input is left out."""
+    root = df._jdf.queryExecution().executedPlan()
+    cogroup = next(n for n in _nodes(root) if n.nodeName() == "FlatMapCoGroupsInPandas")
+    return "\n".join(n.simpleString(100) for n in _nodes(cogroup.children().apply(0)))
 
 
 def test_no_exchange_on_query_side(served):
@@ -144,3 +157,19 @@ def test_restriction_columns_do_not_reach_callers(served):
               {"bool": {"must": [{"match": {"body": "data"}}], "must_not": [rng]}}):
         assert _match_ids(idx, q).columns == ["doc_id"], q
     assert search_dsl(idx, RANGE_BODY).columns == ["doc_id", "score"]
+
+
+def test_fact_restricted_request_segment_side_exchange_free(served):
+    # a define_fact set reaches the kernel as allow rows semi-joined into
+    # the served doc_stats: the segment store feeds the cogroup as laid out
+    import dataclasses
+
+    from pyspark.sql import functions as F
+
+    idx = served["idx"]
+    even = idx.corpus.filter(F.col("doc_id") % 2 == 0).select("doc_id")
+    fidx = dataclasses.replace(idx, facts={"even": even})
+    df = fidx.search("data", k=8, facts=["even"])
+    assert "Exchange" not in _segment_side_plan(df)
+    want = _rows(reference_search(fidx, "data", k=8, facts=["even"]))
+    assert want and _rows(df) == want
