@@ -26,7 +26,9 @@ kernel does not model).
 
 from __future__ import annotations
 
+import functools
 import re
+from typing import NamedTuple
 
 from bitfunnel_spark.config import TOKEN_PATTERN
 from bitfunnel_spark.plans.ast import (
@@ -61,6 +63,20 @@ _TOKEN_RE = re.compile(TOKEN_PATTERN)
 
 class DslError(ValueError):
     pass
+
+
+def _dsl_errors(fn):
+    """An executor dispatch whose ValueErrors (the serving layer's own
+    argument checks) surface as DslError, the DSL's one error type."""
+    @functools.wraps(fn)
+    def run(*args, **kwargs):
+        try:
+            return fn(*args, **kwargs)
+        except DslError:
+            raise
+        except ValueError as e:
+            raise DslError(str(e)) from e
+    return run
 
 
 def _stream(field: str) -> str:
@@ -470,28 +486,37 @@ def compile_dsl(query: dict) -> Node:
 
 _SOURCE_FIELDS = ("repo", "path", "commit", "lang", "content", "content_sha256")
 
+# query kind -> kind class; kinds not listed compile to one AST node
+# (compile_dsl) and are class "ast". The class decides the executor and,
+# through _CLASSES, the body keys a query of the kind composes with.
+#   metadata      doc-metadata scans (_filter_doc_ids): filter-only hits,
+#                 and in bool.filter / must_not the restriction plan
+#   filter        constant_score: any filter at a constant score
+#   combinator    serving-layer score combinators that take every match
+#                 from index.match / index.scored_match, so the kernel
+#                 applies the restriction plan to them
+#   unrestricted  serving-layer combinators that also read positions,
+#                 postings, pinned ids or a vector store outside that call
+_KIND_CLASS = {
+    **dict.fromkeys(("match_all", "match_none", "ids", "exists", "range"),
+                    "metadata"),
+    "constant_score": "filter",
+    **dict.fromkeys(("multi_match", "dis_max", "boosting", "function_score",
+                     "script_score", "rank_feature", "distance_feature"),
+                    "combinator"),
+    **dict.fromkeys(("span_near", "span_first", "span_not", "span_or",
+                     "intervals", "sparse_vector", "pinned", "more_like_this"),
+                    "unrestricted"),
+}
+_FILTER_ONLY = ("metadata", "filter")
+_COMBINATORS = ("combinator", "unrestricted")
 
-_COMBINATOR_KINDS = (
-    "multi_match", "dis_max", "boosting", "function_score",
-    "span_near", "span_first", "span_not", "span_or", "more_like_this",
-    "sparse_vector", "rank_feature", "pinned", "intervals", "script_score",
-    "distance_feature",
-)
 
-# kinds that are pure filters (no relevance signal): hits score a constant,
-# ordered by doc_id — ES's constant-score semantics
-_FILTER_ONLY_KINDS = ("constant_score", "ids", "exists", "match_all", "range",
-                      "match_none")
+def _kind_class(query) -> str:
+    if isinstance(query, dict) and len(query) == 1:
+        return _KIND_CLASS.get(next(iter(query)), "ast")
+    return "ast"
 
-# combinator kinds whose serving executors take every match from
-# index.match / index.scored_match, so the kernel applies the doc-metadata
-# restriction plan to them; the other combinators also read positions,
-# postings, pinned ids or a vector store outside that call, and reject
-# loudly at routing
-_RESTRICT_COMBINATORS = (
-    "multi_match", "dis_max", "boosting", "function_score",
-    "script_score", "rank_feature", "distance_feature",
-)
 
 # ES range query fields -> engine doc-metadata columns. Both live on the
 # NARROW doc_stats frame (doc_id, doclen, shard, slice) — a range filter is
@@ -551,13 +576,15 @@ _CORPUS_FIELD_COLS = {
 
 
 def _filter_doc_ids(index, query: dict):
-    """DataFrame[doc_id] matching a filter-context query: match_all / ids /
-    exists run as corpus-metadata scans (predicate pushdown to the parquet
-    scan, tombstones excluded); range scans doc_stats and also carries
-    (shard, slice) (_range_doc_ids); anything else compiles to the AST and
-    runs the engine's unscored match (which already masks tombstones).
-    Callers that hand the rows back select ``doc_id``."""
+    """DataFrame[doc_id] matching a filter-context query: the metadata
+    kinds (_KIND_CLASS) run as corpus-metadata scans (predicate pushdown
+    to the parquet scan, masked by kernel.live_docs); range scans
+    doc_stats and also carries (shard, slice) (_range_doc_ids); anything
+    else compiles to the AST and runs the engine's unscored match (which
+    already masks). Callers that hand the rows back select ``doc_id``."""
     from pyspark.sql import functions as F
+
+    from bitfunnel_spark.plans.kernel import live_docs
 
     _require(isinstance(query, dict) and len(query) == 1,
              "filter must be a single-kind query object")
@@ -593,36 +620,26 @@ def _filter_doc_ids(index, query: dict):
         out = index.corpus.select("doc_id").filter(F.lit(False))
     else:
         return index.match(compile_dsl(query))
-    tomb = getattr(index, "tombstones", frozenset())
-    if tomb:
-        out = out.filter(~F.col("doc_id").isin([int(d) for d in tomb]))
-    return out
+    return live_docs(index, out)
 
 
-_META_FILTER_KINDS = ("range", "ids", "exists", "match_all", "match_none")
-
-
-def _is_meta(c) -> bool:
-    return (isinstance(c, dict) and len(c) == 1
-            and next(iter(c)) in _META_FILTER_KINDS)
-
-
-def _pop_bool_ranges(body: dict) -> tuple[dict, list, list]:
-    """(residual bool body, positive clauses, negated clauses): pop the
-    doc-metadata filter kinds (range / ids / exists / match_all /
-    match_none) out of a bool's `filter` AND `must_not` lists. These are
-    metadata scans, not posting intersections — the router executes them
-    as semi-join (filter) / anti-join (must_not — the ES "field is
-    missing" idiom) restrictions on the scored match set
-    (FullTextIndex.restricted) instead of compiling them into the AST. In must/should
-    they reject loudly (filter context only; a metadata predicate never
-    contributes relevance — the subset rule keeps the scoring story
-    simple)."""
+def _pop_bool_ranges(query) -> tuple[dict | None, list, list]:
+    """(query, positive clauses, negated clauses): pop the metadata-class
+    kinds (_KIND_CLASS) out of a bool's `filter` and `must_not` lists,
+    leaving the residual bool (None when nothing else is left); any other
+    query passes through with no clauses. The popped clauses run as the
+    request's restriction (_restricted: semi-joins for filter, anti-joins
+    for must_not — the ES "field is missing" idiom), not as AST clauses;
+    in must/should they reject loudly (filter context only: a metadata
+    predicate never contributes relevance)."""
+    if not (isinstance(query, dict) and set(query) == {"bool"}):
+        return query, [], []
+    body = query["bool"]
     _require(isinstance(body, dict), "bool expects an object")
     for key in ("must", "should"):
         v = body.get(key, [])
         for c in (v if isinstance(v, list) else [v]):
-            if _is_meta(c):
+            if _kind_class(c) == "metadata":
                 raise DslError(
                     f"{next(iter(c))} belongs in bool.filter (or "
                     f"bool.must_not), not bool.{key} — it is "
@@ -630,21 +647,21 @@ def _pop_bool_ranges(body: dict) -> tuple[dict, list, list]:
                 )
     v = body.get("filter", [])
     clauses = v if isinstance(v, list) else [v]
-    pos = [c for c in clauses if _is_meta(c)]
     v = body.get("must_not", [])
     nots = v if isinstance(v, list) else [v]
-    neg = [c for c in nots if _is_meta(c)]
+    pos = [c for c in clauses if _kind_class(c) == "metadata"]
+    neg = [c for c in nots if _kind_class(c) == "metadata"]
     if not pos and not neg:
-        return body, [], []
+        return query, [], []
     residual = {k2: v2 for k2, v2 in body.items()
                 if k2 not in ("filter", "must_not")}
-    rest_f = [c for c in clauses if not _is_meta(c)]
-    rest_n = [c for c in nots if not _is_meta(c)]
+    rest_f = [c for c in clauses if _kind_class(c) != "metadata"]
+    rest_n = [c for c in nots if _kind_class(c) != "metadata"]
     if rest_f:
         residual["filter"] = rest_f
     if rest_n:
         residual["must_not"] = rest_n
-    return residual, pos, neg
+    return ({"bool": residual} if residual else None), pos, neg
 
 
 def _range_restrict(index, pos: list, neg: list = ()):
@@ -667,464 +684,449 @@ def _range_restrict(index, pos: list, neg: list = ()):
     return out
 
 
-def _filter_only_hits(index, kind: str, conf, k: int):
-    """constant_score / bare-filter kinds: the filter's match set scored at
-    a constant, ordered by doc_id (ES ties break on doc order), top-k."""
-    from pyspark.sql import functions as F
+def _restricted(index, pos: list = (), neg: list = (), post_filter=None):
+    """``index``, or its copy (FullTextIndex.restricted) whose every query
+    ANDs in a request's doc-metadata clauses (_pop_bool_ranges) and its
+    post_filter: one restriction channel for every route, which the
+    kernel cogroups into per-(shard, slice) allow arrays — no doc array
+    collected to the driver, no size cap."""
+    from bitfunnel_spark.plans.kernel import _semi
 
+    restrict = _range_restrict(index, pos, neg)
+    if post_filter is not None:
+        pf = _filter_doc_ids(index, post_filter)
+        restrict = pf if restrict is None else _semi(restrict, pf)
+    return index if restrict is None else index.restricted(restrict)
+
+
+def _filter_only(kind: str, conf) -> tuple[dict, float]:
+    """(filter query, constant score) of a filter-only kind:
+    constant_score's filter and boost, match_all's optional boost, else
+    the kind itself at 1.0."""
     if kind == "constant_score":
         _require(isinstance(conf, dict) and "filter" in conf
                  and not set(conf) - {"filter", "boost"},
                  "constant_score needs {filter: ..., boost?: n}")
-        ids_df = _filter_doc_ids(index, conf["filter"])
-        score = float(conf.get("boost", 1.0))
+        return conf["filter"], float(conf.get("boost", 1.0))
+    score = 1.0
+    if kind == "match_all" and isinstance(conf, dict):
+        conf = dict(conf)
+        score = float(conf.pop("boost", 1.0))
+    return {kind: conf}, score
+
+
+# ---------------------------------------------------------------------------
+# _search routing: _route reads the body against _CLASSES and _ROUTES, then
+# search_dsl runs the route's executor under the request's restriction and
+# one shared tail (min_score, from, _source / fields).
+
+# kind class -> (the body keys its queries compose with — query and size
+# compose with everything, `fields` is `_source` — and why the rest reject)
+_CLASSES = {
+    "ast": (("from", "_source", "post_filter", "min_score", "sort",
+             "highlight", "collapse", "search_after", "rescore", "explain"),
+            ""),
+    "combinator": (("from", "_source", "post_filter", "min_score"),
+                   "a serving-combinator kind has no single AST query to "
+                   "re-rank, page or explain"),
+    "unrestricted": (("from", "_source", "min_score"),
+                     "a serving-combinator kind with no single AST query, "
+                     "whose executor reads positions, postings, pinned ids "
+                     "or a vector store outside the restricted match"),
+    **dict.fromkeys(_FILTER_ONLY, (("from", "_source"), (
+        "a filter-only kind (constant score, doc_id order) is no scoring "
+        "query, and these keys need an AST main query — an AST query that "
+        "ranks"))),
+}
+
+
+class Route(NamedTuple):
+    """A routed `_search` body: the route's name (_ROUTES), the query its
+    executor runs (a bool's residual once its doc-metadata clauses are
+    popped), the rows it fetches (``k`` = size + from), the shared tail's
+    keys, the restriction (_restricted's positive and negated metadata
+    clauses, post_filter), and ``arg``, the route key's parsed value."""
+
+    name: str
+    query: object
+    k: int
+    frm: int = 0
+    source: tuple = ()
+    min_score: float | None = None
+    restrict: tuple = ((), (), None)
+    arg: object = None
+
+
+def _source_cols(source) -> tuple:
+    """The corpus columns a `_source` / `fields` spec names (() for none;
+    ES allows a bare string, e.g. "_source": "repo")."""
+    if not source:
+        return ()
+    if isinstance(source, str):
+        source = [source]
+    _require(isinstance(source, (list, tuple)),
+             f"_source must be a field name or list of field names, got "
+             f"{type(source).__name__}")
+    bad = [c for c in source if c not in _SOURCE_FIELDS]
+    _require(not bad, f"unknown _source fields: {bad} (known: {list(_SOURCE_FIELDS)})")
+    return tuple(source)
+
+
+def _unknown_keys(body: dict, known) -> None:
+    """Reject body keys no route reads — silently dropping a clause the
+    caller sent is the worst failure mode for a search API — pointing at
+    the executors that do run them."""
+    unknown = set(body) - set(known)
+    if unknown & {"aggs", "aggregations"}:
+        raise DslError("aggregation bodies run via run_aggs(index, body) — "
+                       "_search hits and aggs are separate executors here")
+    if unknown & {"knn", "retriever", "rank"}:
+        raise DslError("vector/hybrid bodies run via plans.vector_dsl "
+                       "(knn_search / rrf_search / rerank_search)")
+    _require(not unknown, f"unsupported _search body keys: {sorted(unknown)}")
+
+
+def _route(body, k: int = 10) -> Route:
+    """Route one `_search` body from the body alone — no index, no
+    DataFrame, no Spark import: validate its keys, pick the route
+    (_ROUTES) and raise every composition DslError — a key that neither
+    the route nor the query's kind class (_CLASSES) composes with."""
+    if isinstance(body, dict) and "suggest" in body:
+        _require("query" not in body,
+                 "suggest-only bodies supported (no query alongside)")
+        _unknown_keys(body, ("suggest", "size"))
+        return Route("suggest", None, int(body.get("size", k)), arg=body["suggest"])
+    if not (isinstance(body, dict) and isinstance(body.get("query"), dict)):
+        body = {"query": body}  # a bare query object
+    _unknown_keys(body, ("query", "size", "fields", *_CLASSES["ast"][0]))
+    k = int(body.get("size", k))
+    # ES from+size shallow paging fetches from+size rows and skips `from`;
+    # ES caps it at max_result_window (10,000), and so does this engine —
+    # deep pages belong to search_after (k-row at any depth)
+    frm = int(body.get("from", 0))
+    _require(0 <= frm and frm + k <= 10_000,
+             "from + size must stay within 10,000 (ES max_result_window); "
+             "use search_after for deep pages")
+    _require(isinstance(body.get("explain", False), bool), "explain must be a boolean")
+    source = body.get("_source")
+    if "fields" in body:
+        # ES `fields` (doc values in a per-hit section) renders flattened
+        # exactly like `_source` columns, so the two are aliases — but
+        # not both at once. "_source": false + fields is ES's canonical
+        # usage (source disabled), not a second retrieval spec.
+        _require(source is None or source is False,
+                 "fields and _source are aliases here — pass one")
+        source = body["fields"]
+    post_filter = body.get("post_filter")
+    _require(post_filter is None or (isinstance(post_filter, dict) and len(post_filter) == 1),
+             "post_filter must be a single-kind query object")
+    # the keys in play: set (not None), `from` past 0, `explain` true
+    vals = {**body, "_source": source, "from": frm or None,
+            "explain": body.get("explain") or None}
+    on = {key for key in _CLASSES["ast"][0] if vals.get(key) is not None}
+    query, pos, neg = _pop_bool_ranges(body["query"])
+    _require(query is not None,
+             "a bool of only metadata filters has no scoring query: use a "
+             "standalone filter-only query (constant-score semantics) or "
+             "_count instead")
+    cls = _kind_class(query)
+    keys, why = _CLASSES[cls]
+    bad = on - set(keys)
+    if bad:
+        raise DslError(f"{next(iter(query))} does not compose with "
+                       f"{'/'.join(sorted(bad))}: {why}")
+    name = next((r for r in _ROUTES if r in on),
+                "filter_only" if cls in _FILTER_ONLY else "hits")
+    parse, _, keys = _ROUTES[name]
+    extra = on - {name} - set(keys)
+    _require(not extra, f"{name} composes with query/size/{'/'.join(keys)} "
+                        f"only, not {'/'.join(sorted(extra))} — pick one")
+    arg = parse(body[name]) if parse else None
+    _require(name != "rescore" or k + frm <= arg[0],
+             "from + size must fit inside window_size (hits past the window "
+             "would be un-rescored)")
+    min_score = body.get("min_score")
+    return Route(name, query, k + frm, frm, _source_cols(source),
+                 None if min_score is None else float(min_score),
+                 (pos, neg, post_filter), arg)
+
+
+def _sort_clause(spec) -> tuple[str, bool]:
+    """One ES sort clause → (field, ascending). Accepts "field",
+    {"field": "asc|desc"}, {"field": {"order": ...}}, each optionally in a
+    one-element list. `_score` / multi-clause sorts are rejected loudly."""
+    if isinstance(spec, list):
+        _require(len(spec) == 1, "sort supports exactly one clause")
+        spec = spec[0]
+    if isinstance(spec, str):
+        field, order = spec, "desc"
+    elif isinstance(spec, dict) and len(spec) == 1:
+        field, conf = next(iter(spec.items()))
+        if isinstance(conf, dict):
+            order = str(conf.get("order", "desc"))
+            _require(set(conf) <= {"order"}, f"unsupported sort options: {conf}")
+        else:
+            order = str(conf)
     else:
-        score = 1.0
-        if kind == "match_all" and isinstance(conf, dict):
-            conf = dict(conf)
-            score = float(conf.pop("boost", 1.0))
-        ids_df = _filter_doc_ids(index, {kind: conf})
-    return (
-        ids_df.orderBy("doc_id")
-        .limit(int(k))
-        .select(
-            F.col("doc_id"),
-            F.round(F.lit(score), 4).cast("double").alias("score"),
-        )
+        raise DslError(f"unsupported sort clause: {spec!r}")
+    _require(field != "_score", "sort by _score is the default search — drop `sort`")
+    _require(field in ("doclen", "lang", "repo", "path"),
+             f"sort field must be doclen/lang/repo/path, got {field!r}")
+    _require(order in ("asc", "desc"), f"sort order must be asc/desc, got {order!r}")
+    return field, order == "asc"
+
+
+def _cursor(search_after) -> tuple[float, int]:
+    """ES search_after: the next page strictly after a cursor in the total
+    order. This engine ranks (score desc, doc_id asc), so the cursor is
+    [last_score, last_doc_id] — the ES idiom of sorting [_score,
+    tiebreak-field]."""
+    _require(isinstance(search_after, (list, tuple)) and len(search_after) == 2,
+             "search_after takes [last_score, last_doc_id]")
+    score, doc = search_after
+    _require(isinstance(score, (int, float)) and not isinstance(score, bool),
+             "search_after cursor is [last_score, last_doc_id] — the "
+             "first element must be a number (the last page's score)")
+    _require((isinstance(doc, int) and not isinstance(doc, bool))
+             or (isinstance(doc, float) and doc.is_integer()),
+             "search_after cursor is [last_score, last_doc_id] — the "
+             "second element must be an integral doc_id (a fractional "
+             "value usually means the cursor is swapped)")
+    return float(score), int(doc)
+
+
+def _collapse_arg(collapse) -> tuple[str, int]:
+    """(field, per_group) of an ES collapse: the best hit per distinct
+    value of a keyword field; `inner_hits: {size: n}` widens each group to
+    its best n docs (the flattened rendering of ES's per-hit inner hit
+    lists)."""
+    _require(isinstance(collapse, dict) and isinstance(collapse.get("field"), str),
+             "collapse needs {'field': <keyword field>}")
+    extra = set(collapse) - {"field", "inner_hits"}
+    _require(not extra, f"unsupported collapse options: {sorted(extra)}")
+    ih = collapse.get("inner_hits", {"size": 1})
+    _require(isinstance(ih, dict) and set(ih) == {"size"},
+             "collapse.inner_hits takes exactly {'size': n}")
+    _require(isinstance(ih["size"], int) and not isinstance(ih["size"], bool)
+             and 1 <= ih["size"] <= 100,
+             "inner_hits.size must be an int in [1, 100]")
+    _require(collapse["field"] in ("repo", "lang", "path", "commit"),
+             "collapse field must be corpus metadata (repo/lang/path/commit)")
+    return collapse["field"], ih["size"]
+
+
+def _one_tag(conf: dict, key: str) -> str | None:
+    v = conf.get(key)
+    if isinstance(v, list):
+        _require(len(v) == 1 and isinstance(v[0], str),
+                 f"{key} takes exactly one tag string")
+        return v[0]
+    _require(v is None or isinstance(v, str), f"{key} must be a string or [string]")
+    return v
+
+
+def _highlight_tags(highlight) -> tuple[str, str] | None:
+    """serving.snippets' (pre, post) tags for an ES highlight on the
+    content field. pre/post_tags take ES's list-of-one shape or a bare
+    string, at the highlight level or per field (field wins); either tag
+    alone defaults its pair to ES's <em> family. Unknown options reject
+    (silently dropping number_of_fragments / fragment_size would
+    misrepresent the single-fragment subset)."""
+    frag = highlight if isinstance(highlight, dict) else {}
+    fields = frag.get("fields")
+    _require(isinstance(fields, dict) and set(fields) <= {"content", "body", "text"},
+             "highlight supports the content field")
+    extra = set(frag) - {"fields", "pre_tags", "post_tags"}
+    _require(not extra, f"unsupported highlight options: {sorted(extra)}")
+    _require(len(fields) == 1, "highlight takes exactly one field")
+    (fconf,) = fields.values()
+    _require(isinstance(fconf, dict) and not (set(fconf) - {"pre_tags", "post_tags"}),
+             "per-field highlight options: pre_tags/post_tags only")
+    # validate BOTH levels, then let the field level win on a None
+    # comparison — truthiness would drop an explicit empty-string tag
+    pre, post = (next((t for t in (_one_tag(fconf, key), _one_tag(frag, key))
+                       if t is not None), None)
+                 for key in ("pre_tags", "post_tags"))
+    if pre is None and post is None:
+        return None
+    return ("<em>" if pre is None else pre, "</em>" if post is None else post)
+
+
+def _rescore_arg(rescore) -> tuple[int, dict]:
+    """(window_size, rescore.query) of an ES rescore: {"window_size": n,
+    "query": {"rescore_query": {...}, "query_weight": w,
+    "rescore_query_weight": rw, "score_mode": m}}. window_size defaults to
+    100, where ES defaults to 10."""
+    _require(isinstance(rescore, dict) and "query" in rescore
+             and not (set(rescore) - {"window_size", "query"}),
+             "rescore takes {'window_size': n, 'query': {...}}")
+    rq = rescore["query"]
+    _require(isinstance(rq, dict) and "rescore_query" in rq
+             and not (set(rq) - {"rescore_query", "query_weight",
+                                 "rescore_query_weight", "score_mode"}),
+             "rescore.query takes rescore_query/query_weight/"
+             "rescore_query_weight/score_mode")
+    sub = rq["rescore_query"]
+    _require(isinstance(sub, dict) and len(sub) == 1 and _kind_class(sub) == "ast",
+             "rescore_query must be an AST query kind")
+    window = rescore.get("window_size", 100)
+    _require(isinstance(window, int) and not isinstance(window, bool)
+             and 1 <= window <= 10_000,
+             "window_size must be an int in [1, 10000]")
+    return window, rq
+
+
+def _explain_hits(index, r: Route):
+    # ES "explain": true, flattened (the inner_hits precedent) to
+    # serving.explain's DataFrame[(doc_id, score, stream, term, tf,
+    # contribution)]: one row per (result doc, scoring key), contributions
+    # summing to the doc's score — not a hits page, so no page key applies
+    from bitfunnel_spark.plans import serving
+
+    return serving.explain(index, compile_dsl(r.query), k=r.k)
+
+
+def _rescore_hits(index, r: Route):
+    # Lucene QueryRescorer: re-rank the top window_size primary hits by
+    # blending in a second query's score (serving.rescore: the second arm
+    # runs ONCE and broadcast-joins the ≤window-row frame)
+    from bitfunnel_spark.plans import serving
+
+    window, rq = r.arg
+    score_mode = rq.get("score_mode", "total")
+    _require(score_mode in serving._RESCORE_MODES,
+             f"score_mode must be one of {serving._RESCORE_MODES}")
+    return serving.rescore(
+        index, compile_dsl(r.query), compile_dsl(rq["rescore_query"]),
+        window_size=window,
+        query_weight=float(rq.get("query_weight", 1.0)),
+        rescore_weight=float(rq.get("rescore_query_weight", 1.0)),
+        score_mode=score_mode, k=r.k,
     )
+
+
+def _search_after_hits(index, r: Route):
+    # index.search_after: k rows at any depth, block-max aware — never the
+    # from+size over-fetch
+    return index.search_after(compile_dsl(r.query), r.arg, k=r.k)
+
+
+def _collapse_hits(index, r: Route):
+    # serving.collapse_topk over the FULL scored match set (groupBy.max_by,
+    # so a mega-group combines map-side; per_group > 1 is one window
+    # partitioned by the collapse field)
+    from bitfunnel_spark.plans import serving
+
+    by, per_group = r.arg
+    return serving.collapse_topk(index, compile_dsl(r.query), by=by, k=r.k,
+                                 per_group=per_group)
+
+
+def _sort_hits(index, r: Route):
+    from bitfunnel_spark.plans import serving
+
+    by, ascending = r.arg
+    return serving.sort_hits(index, compile_dsl(r.query), by=by,
+                             ascending=ascending, k=r.k)
+
+
+def _highlight_hits(index, r: Route):
+    from bitfunnel_spark.plans import serving
+
+    return serving.snippets(index, compile_dsl(r.query), k=r.k, tags=r.arg)
+
+
+def _filter_only_hits(index, r: Route):
+    """The filter's match set scored at a constant, ordered by doc_id (ES
+    ties break on doc order), top-k."""
+    from pyspark.sql import functions as F
+
+    (kind, conf), = r.query.items()
+    filt, score = _filter_only(kind, conf)
+    return (
+        _filter_doc_ids(index, filt).orderBy("doc_id").limit(r.k)
+        .select(F.col("doc_id"),
+                F.round(F.lit(score), 4).cast("double").alias("score"))
+    )
+
+
+def _plain_hits(index, r: Route):
+    if _kind_class(r.query) in _COMBINATORS:
+        return _serving_query(index, *next(iter(r.query.items())), k=r.k)
+    return index.search(compile_dsl(r.query), k=r.k)
+
+
+# route -> (the parser of its body key, its executor, and the body keys it
+# composes with besides query and size). _route tries the rows in order
+# and takes the first whose key is in the body; a body with none runs
+# filter_only (filter-only kinds) or hits. No route composes with an
+# earlier route's key, so any two route keys reject. msearch is one body
+# of an msearch batch: the batched kernel job reads query and size only.
+_ROUTES = {
+    "explain": (None, _explain_hits, ("post_filter",)),
+    # window_size defaults to 100, where ES defaults to 10
+    "rescore": (_rescore_arg, _rescore_hits, ("from", "_source", "post_filter")),
+    "search_after": (_cursor, _search_after_hits, ("_source", "post_filter")),
+    "collapse": (_collapse_arg, _collapse_hits, ("from", "_source", "post_filter")),
+    "sort": (_sort_clause, _sort_hits, ("from", "_source", "post_filter")),
+    "highlight": (_highlight_tags, _highlight_hits,
+                  ("from", "_source", "post_filter", "min_score")),
+    "filter_only": (None, _filter_only_hits, ("from", "_source")),
+    "hits": (None, _plain_hits, ("from", "_source", "post_filter", "min_score")),
+    "msearch": (None, None, ()),
+}
 
 
 def search_dsl(index, body: dict, k: int = 10):
     """Run an ES `_search`-style body: `{"query": {...}}` (or a bare query
-    object) through the engine. `size` maps to k; `"_source": [cols...]`
-    joins the named corpus columns onto the hits — the k-row result
-    broadcasts into the corpus scan, so field fetching never reorders or
-    re-shuffles the match set. `"sort"` (one field clause) routes to
-    sort_hits (score omitted, ES field-sort semantics); `"highlight"`
-    (content field) routes to snippets; `"collapse"` routes to
-    collapse_topk (best hit per field value); `"search_after"`
-    ([last_score, last_doc_id]) routes to index.search_after (k-row deep
-    paging). All four are AST-query-only — the serving-combinator kinds
-    have no single match node to re-rank or page — and all four compose
-    with the doc-metadata restriction plan (`range` in bool.filter /
-    must_not, `post_filter`): the restriction rides an index copy's
-    ambient `_restrict_docs` (FullTextIndex.restricted), which the kernel
-    honours as per-(shard, slice) allow arrays."""
-    if "suggest" in body:
-        _require("query" not in body,
-                 "suggest-only bodies supported (no query alongside)")
-        return run_suggest(index, body["suggest"], k=int(body.get("size", k)))
-    source = sort_spec = highlight = min_score = collapse = post_filter = None
-    rescore = None
-    explain_flag = False
-    frm = 0
-    if "query" in body and isinstance(body.get("query"), dict):
-        # unknown body keys reject LOUDLY — silently dropping a clause the
-        # caller sent (aggs, knn, rescore windows, ...) is the worst
-        # failure mode for a search API; pointed errors route the
-        # supported separate executors
-        unknown = set(body) - {"query", "size", "from", "_source", "sort",
-                               "highlight", "collapse", "post_filter",
-                               "min_score", "search_after", "rescore",
-                               "explain", "fields"}
-        if unknown & {"aggs", "aggregations"}:
-            raise DslError(
-                "aggregation bodies run via run_aggs(index, body) — "
-                "_search hits and aggs are separate executors here"
-            )
-        if unknown & {"knn", "retriever", "rank"}:
-            raise DslError(
-                "vector/hybrid bodies run via plans.vector_dsl "
-                "(knn_search / rrf_search / rerank_search)"
-            )
-        _require(not unknown,
-                 f"unsupported _search body keys: {sorted(unknown)}")
-        k = int(body.get("size", k))
-        source = body.get("_source")
-        if "fields" in body:
-            # ES `fields` returns doc values in a per-hit fields section;
-            # the flattened rendering here is identical to `_source`
-            # columns, so the two are aliases — but not both at once
-            # (their per-hit nesting differs in ES; one flattened shape
-            # cannot honor two retrieval specs)
-            # "_source": false + fields is ES's canonical usage (source
-            # disabled, doc values requested) — false is not a second
-            # retrieval spec, so only a real column list conflicts
-            _require(source is None or source is False,
-                     "fields and _source are aliases here — pass one")
-            source = body["fields"]
-        sort_spec = body.get("sort")
-        highlight = body.get("highlight")
-        collapse = body.get("collapse")
-        rescore = body.get("rescore")
-        if "explain" in body:
-            _require(isinstance(body["explain"], bool),
-                     "explain must be a boolean")
-            explain_flag = body["explain"]
-        post_filter = body.get("post_filter")
-        # ES min_score: drop hits scoring below the floor. Scores order
-        # the ranking descending, so filtering the fetched top page equals
-        # filtering the full result then paging — no extra fetch needed.
-        # Compared on the engine's rounded (4 dp) scores, the same values
-        # the ranking itself uses.
-        if "min_score" in body:
-            min_score = float(body["min_score"])
-        # ES from+size shallow paging: fetch from+size rows, skip `from`.
-        # Cost grows with the page start — ES caps the same pattern at
-        # max_result_window (10,000); deep pagination belongs to
-        # search_after (which stays k-row at any depth and rides
-        # block-max). The same cap applies here, loudly.
-        frm = int(body.get("from", 0))
-        _require(0 <= frm and frm + k <= 10_000,
-                 "from + size must stay within 10,000 (ES "
-                 "max_result_window); use search_after for deep pages")
-        query = body["query"]
-    else:
-        query = body
-    if min_score is not None:
-        from pyspark.sql import functions as F  # noqa: N812
-    is_comb = (
-        isinstance(query, dict)
-        and len(query) == 1
-        and next(iter(query)) in _COMBINATOR_KINDS
-    )
-    is_filter_only = (
-        isinstance(query, dict)
-        and len(query) == 1
-        and next(iter(query)) in _FILTER_ONLY_KINDS
-    )
-    fetch_k = k + frm  # over-fetch, then skip `frm` ordered rows
+    object) through the engine. _route picks the executor from the route
+    table (_ROUTES) and rejects every body key that the route or the
+    query's kind class (_CLASSES) does not compose with. The request's
+    doc-metadata restriction (metadata kinds in bool.filter / must_not,
+    post_filter) rides an index copy (_restricted) into every route. One
+    tail then applies min_score, from, and `_source` / `fields`: the named
+    corpus columns joined onto the k-row page (broadcast, so field
+    fetching never reorders or re-shuffles the match set)."""
+    r = _route(body, k)
+    if r.name == "suggest":
+        return run_suggest(index, r.arg, k=r.k)
+    index = _restricted(index, *r.restrict)
+    hits = _ROUTES[r.name][1](index, r)
+    if r.min_score is not None:
+        # the page is score-ordered, so flooring the fetched page equals
+        # flooring the full result then paging (4 dp scores, as ranked)
+        from pyspark.sql import functions as F
 
-    def _page(hits):
-        return hits.offset(frm) if frm else hits
-
-    search_after = body.get("search_after") if isinstance(body, dict) else None
-    ranges: list = []
-    negs: list = []
-    residual: dict = {}
-    if isinstance(query, dict) and set(query) == {"bool"}:
-        residual, ranges, negs = _pop_bool_ranges(query["bool"])
-    if ranges or negs or post_filter is not None:
-        # Doc-metadata restriction plan (ES range filters in bool.filter;
-        # post_filter): the text query compiles and scores as usual; the
-        # restriction ANDs into the match set BEFORE top-k. It attaches
-        # ambiently to an index COPY (FullTextIndex.restricted, the
-        # run_aggs mechanism) and the body falls through to its route
-        # below: every route's match set comes from the kernel, which
-        # cogroups it into per-(shard, slice) allow arrays — no doc array
-        # collected to the driver, no size cap. Mutual-exclusion rules
-        # AMONG the routes stay the branches' own.
-        if (ranges or negs) and not residual:
-            raise DslError(
-                "a bool of only metadata filters has no scoring query: use "
-                "a standalone filter-only query (constant-score semantics) "
-                "or _count instead"
-            )
-        node_query = {"bool": residual} if (ranges or negs) else query
-        if isinstance(node_query, dict) and len(node_query) == 1:
-            kind0 = next(iter(node_query))
-            _require(kind0 not in _FILTER_ONLY_KINDS,
-                     "post_filter needs a scoring query, not a "
-                     "filter-only kind (fold the filter into the query)")
-            # combinators that take every match from index.match /
-            # index.scored_match compose with the restriction via the
-            # ambient channel below; the others (span_*, intervals,
-            # sparse_vector, pinned, more_like_this) also read positions,
-            # postings, pinned ids or a vector store outside that call,
-            # so they reject HERE with a pointed message
-            _require(kind0 not in set(_COMBINATOR_KINDS)
-                     - set(_RESTRICT_COMBINATORS),
-                     f"{kind0} does not compose with the restriction plan "
-                     "(its executor reads positions, postings, pinned ids "
-                     "or a vector store outside the restricted match)")
-        restrict = _range_restrict(index, ranges, negs)
-        if post_filter is not None:
-            _require(isinstance(post_filter, dict) and len(post_filter) == 1,
-                     "post_filter must be a single-kind query object")
-            from bitfunnel_spark.plans.kernel import _semi
-
-            pf = _filter_doc_ids(index, post_filter)
-            restrict = pf if restrict is None else _semi(restrict, pf)
-        # ONE restriction channel for every downstream route, including
-        # the plain-hits tail
-        index = index.restricted(restrict)
-        query = node_query
-    if explain_flag:
-        # ES "explain": true — per-hit score breakdown. ES nests an
-        # explanation object under every hit; this engine's flattened
-        # rendering (the inner_hits precedent) is serving.explain's
-        # DataFrame[(doc_id, score, stream, term, tf, contribution)] —
-        # one row per (result doc, scoring key), contributions summing to
-        # the doc's score, so the breakdown always reconciles with the ranking it explains.
-        # The shape differs from a hits page, so explain composes with
-        # query/size and the metadata restriction plan only — everything
-        # else alongside rejects loudly.
-        _require(sort_spec is None and highlight is None
-                 and collapse is None and search_after is None
-                 and min_score is None and rescore is None
-                 and source is None and frm == 0,
-                 "explain composes with query/size and the metadata "
-                 "restriction plan only")
-        _require(not is_comb and not is_filter_only,
-                 "explain needs an AST query, not a "
-                 "combinator/filter-only kind")
-        from bitfunnel_spark.plans import serving
-
-        return serving.explain(index, compile_dsl(query), k=k)
-    if rescore is not None:
-        # ES rescore (Lucene QueryRescorer): re-rank the top window_size
-        # primary hits by blending in a second query's score —
-        # serving.rescore (window cut = standard top-k; the second arm
-        # runs ONCE and broadcast-joins the ≤window-row frame). ES body
-        # shape: {"window_size": n, "query": {"rescore_query": {...},
-        # "query_weight": w, "rescore_query_weight": rw, "score_mode": m}}.
-        # Subset rules, loud: AST queries both arms; no sort/highlight/
-        # collapse/search_after/min_score alongside (rescore redefines the
-        # score the others would rank or floor by); the page must sit
-        # inside the window (past it ES serves un-rescored tail hits —
-        # this engine refuses to mix orderings in one result).
-        from bitfunnel_spark.plans import serving
-
-        _require(sort_spec is None and highlight is None
-                 and collapse is None and search_after is None
-                 and min_score is None,
-                 "rescore composes with query/size/from/_source and the "
-                 "metadata restriction plan only")
-        _require(not is_comb and not is_filter_only,
-                 "rescore needs an AST main query, not a "
-                 "combinator/filter-only kind")
-        _require(isinstance(rescore, dict) and "query" in rescore
-                 and not (set(rescore) - {"window_size", "query"}),
-                 "rescore takes {'window_size': n, 'query': {...}}")
-        rq = rescore["query"]
-        _require(isinstance(rq, dict) and "rescore_query" in rq
-                 and not (set(rq) - {"rescore_query", "query_weight",
-                                     "rescore_query_weight", "score_mode"}),
-                 "rescore.query takes rescore_query/query_weight/"
-                 "rescore_query_weight/score_mode")
-        sub = rq["rescore_query"]
-        _require(isinstance(sub, dict) and len(sub) == 1
-                 and next(iter(sub))
-                 not in _COMBINATOR_KINDS + _FILTER_ONLY_KINDS,
-                 "rescore_query must be an AST query kind")
-        score_mode = rq.get("score_mode", "total")
-        _require(score_mode in serving._RESCORE_MODES,
-                 f"score_mode must be one of {serving._RESCORE_MODES}")
-        window = rescore.get("window_size", 100)
-        _require(isinstance(window, int) and not isinstance(window, bool)
-                 and 1 <= window <= 10_000,
-                 "window_size must be an int in [1, 10000]")
-        _require(fetch_k <= window,
-                 "from + size must fit inside window_size (hits past the "
-                 "window would be un-rescored)")
-        hits = serving.rescore(
-            index, compile_dsl(query), compile_dsl(sub),
-            window_size=window,
-            query_weight=float(rq.get("query_weight", 1.0)),
-            rescore_weight=float(rq.get("rescore_query_weight", 1.0)),
-            score_mode=score_mode, k=fetch_k,
-        )
-        return _fetch_source(index, _page(hits), source)
-    if search_after is not None:
-        # ES search_after: the next page strictly after a cursor in the
-        # total order. This engine's ranking order is (score desc, doc_id
-        # asc), so the cursor is [last_score, last_doc_id] — the ES
-        # idiom of sorting [_score, tiebreak-field]. Rides
-        # index.search_after (k-row at any depth, block-max aware — never
-        # the from+size over-fetch). ES itself rejects `from` with
-        # search_after; sort/collapse/min_score/combinators reject loudly
-        # per the subset rule (the cursor is defined by score order).
-        _require(isinstance(search_after, (list, tuple)) and len(search_after) == 2,
-                 "search_after takes [last_score, last_doc_id]")
-        _require(frm == 0, "search_after and from are mutually exclusive (ES rule)")
-        _require(sort_spec is None and highlight is None and collapse is None
-                 and min_score is None,
-                 "search_after composes with query/size/_source and the "
-                 "metadata restriction plan only")
-        _require(not is_comb and not is_filter_only,
-                 "search_after needs an AST query, not a combinator/filter-only kind")
-        _require(isinstance(search_after[0], (int, float))
-                 and not isinstance(search_after[0], bool),
-                 "search_after cursor is [last_score, last_doc_id] — the "
-                 "first element must be a number (the last page's score)")
-        _require((isinstance(search_after[1], int)
-                  and not isinstance(search_after[1], bool))
-                 or (isinstance(search_after[1], float)
-                     and float(search_after[1]).is_integer()),
-                 "search_after cursor is [last_score, last_doc_id] — the "
-                 "second element must be an integral doc_id (a fractional "
-                 "value usually means the cursor is swapped)")
-        cursor = (float(search_after[0]), int(search_after[1]))
-        hits = index.search_after(compile_dsl(query), cursor, k=k)
-        return _fetch_source(index, hits, source)
-    if collapse is not None:
-        # ES field collapsing: best hit per distinct value of a keyword
-        # field over the FULL scored match set, then the global top page —
-        # plans/serving.collapse_topk (groupBy.max_by, so a mega-group
-        # combines map-side). `inner_hits: {size: n}` widens each group to
-        # its best n docs (collapse_topk's per_group knob — a window
-        # PARTITIONED by the collapse field, one shuffle; the flattened
-        # rendering of ES's per-hit inner hit lists). Subset rules,
-        # rejected loudly: one collapse field; inner_hits takes only size;
-        # AST queries only; no sort/highlight/min_score alongside (ES
-        # composes some of these — this engine keeps the collapsed page
-        # score-ranked).
-        _require(isinstance(collapse, dict) and isinstance(collapse.get("field"), str),
-                 "collapse needs {'field': <keyword field>}")
-        _require(not (set(collapse) - {"field", "inner_hits"}),
-                 f"unsupported collapse options: "
-                 f"{sorted(set(collapse) - {'field', 'inner_hits'})}")
-        per_group = 1
-        if "inner_hits" in collapse:
-            ih = collapse["inner_hits"]
-            _require(isinstance(ih, dict) and set(ih) == {"size"},
-                     "collapse.inner_hits takes exactly {'size': n}")
-            _require(isinstance(ih["size"], int)
-                     and not isinstance(ih["size"], bool)
-                     and 1 <= ih["size"] <= 100,
-                     "inner_hits.size must be an int in [1, 100]")
-            per_group = int(ih["size"])
-        _require(collapse["field"] in ("repo", "lang", "path", "commit"),
-                 "collapse field must be corpus metadata (repo/lang/path/commit)")
-        _require(not is_comb and not is_filter_only,
-                 "collapse needs an AST query, not a combinator/filter-only kind")
-        _require(sort_spec is None and highlight is None and min_score is None,
-                 "collapse composes with query/size/from/_source and the "
-                 "metadata restriction plan only")
-        from bitfunnel_spark.plans import serving
-
-        hits = serving.collapse_topk(
-            index, compile_dsl(query), by=collapse["field"], k=fetch_k,
-            per_group=per_group,
-        )
-        return _fetch_source(index, _page(hits), source)
-    if is_filter_only:
-        _require(sort_spec is None and highlight is None,
-                 "sort/highlight need an AST query, not a filter-only kind")
-        _require(min_score is None,
-                 "min_score needs a scored query, not a filter-only kind")
-        hits = _filter_only_hits(index, *next(iter(query.items())), k=fetch_k)
-        return _fetch_source(index, _page(hits), source)
-    if sort_spec is not None or highlight is not None:
-        _require(not is_comb,
-                 "sort/highlight need an AST query, not a combinator kind")
-        _require(min_score is None or sort_spec is None,
-                 "min_score needs _score ranking; sort omits it")
-        _require(not (sort_spec is not None and highlight is not None),
-                 "sort omits _score; highlight ranks by it — pick one")
-        node = compile_dsl(query)
-        if sort_spec is not None:
-            by, ascending = _sort_clause(sort_spec)
-            from bitfunnel_spark.plans import serving
-
-            hits = serving.sort_hits(index, node, by=by, ascending=ascending, k=fetch_k)
-            return _fetch_source(index, _page(hits), source, order_cols=((by, ascending),))
-        frag = highlight if isinstance(highlight, dict) else {}
-        fields = frag.get("fields")
-        _require(isinstance(fields, dict) and set(fields) <= {"content", "body", "text"},
-                 "highlight supports the content field")
-        # unknown highlight options reject loudly (silently dropping
-        # number_of_fragments/fragment_size would misrepresent the single-
-        # fragment subset); pre/post_tags accept the ES list-of-one shape
-        # or a bare string, at the highlight level or per-field (field
-        # wins). Either tag alone defaults its pair to ES's <em> family.
-        _require(not (set(frag) - {"fields", "pre_tags", "post_tags"}),
-                 f"unsupported highlight options: "
-                 f"{sorted(set(frag) - {'fields', 'pre_tags', 'post_tags'})}")
-        _require(len(fields) == 1, "highlight takes exactly one field")
-        (fconf,) = fields.values()
-        _require(isinstance(fconf, dict)
-                 and not (set(fconf) - {"pre_tags", "post_tags"}),
-                 "per-field highlight options: pre_tags/post_tags only")
-
-        def _one_tag(conf, key):
-            v = conf.get(key)
-            if v is None:
-                return None
-            if isinstance(v, list):
-                _require(len(v) == 1 and isinstance(v[0], str),
-                         f"{key} takes exactly one tag string")
-                return v[0]
-            _require(isinstance(v, str), f"{key} must be a string or [string]")
-            return v
-
-        # validate BOTH levels unconditionally, then let the field level
-        # win on a None comparison — truthiness would silently discard an
-        # explicit empty-string tag and skip validating the shadowed level
-        f_pre, f_post = _one_tag(fconf, "pre_tags"), _one_tag(fconf, "post_tags")
-        t_pre, t_post = _one_tag(frag, "pre_tags"), _one_tag(frag, "post_tags")
-        pre = f_pre if f_pre is not None else t_pre
-        post = f_post if f_post is not None else t_post
-        tags = None
-        if pre is not None or post is not None:
-            tags = (pre if pre is not None else "<em>",
-                    post if post is not None else "</em>")
-        from bitfunnel_spark.plans import serving
-
-        hits = serving.snippets(index, node, k=fetch_k, tags=tags)
-        if min_score is not None:
-            hits = hits.filter(F.col("score") >= min_score)
-        return _fetch_source(index, _page(hits), source, extra_cols=("snippet",))
-    if is_comb:
-        # kinds whose executor is a serving-layer combinator rather than a
-        # single AST (per-clause score fusion) — dispatched directly
-        hits = _serving_query(index, *next(iter(query.items())), k=fetch_k)
-    else:
-        hits = index.search(compile_dsl(query), k=fetch_k)
-    if min_score is not None:
-        hits = hits.filter(F.col("score") >= min_score)
-    return _fetch_source(index, _page(hits), source)
+        hits = hits.filter(F.col("score") >= r.min_score)
+    if r.frm:
+        hits = hits.offset(r.frm)
+    return _fetch_source(index, hits, r.source,
+                         order_cols=(r.arg,) if r.name == "sort" else ())
 
 
 def _match_ids(index, query: dict, api: str = "_count"):
     """DataFrame[doc_id] of the query's unscored match set — the shared
     plan behind ``_count`` and ``_delete_by_query``: a pushed-down
     doc-metadata scan for the filter-only kinds, the engine match set for
-    AST kinds, and the restriction semi-join for range-bearing bools.
-    Tombstoned docs are always excluded. Combinator kinds reject (their
-    executors produce rankings; their match semantics, where needed, are
-    expressible as bool/AST)."""
+    AST kinds, under the restriction (_restricted) of a bool's
+    doc-metadata clauses. Tombstoned docs are always excluded. Combinator
+    kinds reject (their executors produce rankings; their match
+    semantics, where needed, are expressible as bool/AST)."""
+    from bitfunnel_spark.plans.kernel import live_docs
+
     _require(isinstance(query, dict) and len(query) == 1,
              f"{api} needs a single-kind query object")
-    kind = next(iter(query))
-    _require(kind not in _COMBINATOR_KINDS,
+    (kind, conf), = query.items()
+    cls = _kind_class(query)
+    _require(cls not in _COMBINATORS,
              f"{api} takes AST or filter-only queries, not {kind!r}")
-    from pyspark.sql import functions as F
-
-    if kind in _FILTER_ONLY_KINDS:
-        if kind == "constant_score":
-            conf = query[kind]
-            _require(isinstance(conf, dict) and "filter" in conf,
-                     "constant_score needs a filter")
-            ids = _filter_doc_ids(index, conf["filter"])
-        else:
-            conf = query[kind]
-            if kind == "match_all" and isinstance(conf, dict):
-                conf = {key: v for key, v in conf.items() if key != "boost"}
-            ids = _filter_doc_ids(index, {kind: conf})
-    elif kind == "bool":
-        residual, ranges, negs = _pop_bool_ranges(query["bool"])
-        if ranges or negs:
-            restrict = _range_restrict(index, ranges, negs)
-            if not residual:
-                # counting needs no scoring query — the metadata
-                # restriction alone is the match set; mask tombstones (the
-                # residual branch gets this from the kernel)
-                ids = restrict
-                tomb = getattr(index, "tombstones", frozenset())
-                if tomb:
-                    ids = ids.filter(
-                        ~F.col("doc_id").isin([int(d) for d in tomb])
-                    )
-            else:
-                ids = index.restricted(restrict).match(
-                    compile_dsl({"bool": residual})
-                )
-        else:
-            ids = index.match(compile_dsl(query))
-    else:
-        ids = index.match(compile_dsl(query))
-    return ids.select("doc_id")
+    if cls in _FILTER_ONLY:
+        return _filter_doc_ids(index, _filter_only(kind, conf)[0]).select("doc_id")
+    query, pos, neg = _pop_bool_ranges(query)
+    if query is None:
+        # counting needs no scoring query: the restriction is the match set
+        return live_docs(index, _range_restrict(index, pos, neg)).select("doc_id")
+    return _restricted(index, pos, neg).match(compile_dsl(query)).select("doc_id")
 
 
 def count_dsl(index, body: dict):
@@ -1188,12 +1190,11 @@ def validate_query(body) -> tuple[bool, str]:
 
     try:
         query = body.get("query", body) if isinstance(body, dict) else body
-        if isinstance(query, dict) and len(query) == 1:
-            kind = next(iter(query))
-            if kind in _COMBINATOR_KINDS:
-                return True, f"{kind} (serving combinator)"
-            if kind in _FILTER_ONLY_KINDS:
-                return True, f"{kind} (filter-only, constant score)"
+        cls = _kind_class(query)
+        if cls in _COMBINATORS:
+            return True, f"{next(iter(query))} (serving combinator)"
+        if cls in _FILTER_ONLY:
+            return True, f"{next(iter(query))} (filter-only, constant score)"
         node = compile_dsl(query)
         return True, fmt(node)
     except Exception as e:  # DslError, parser/planner ValueErrors
@@ -1236,44 +1237,13 @@ def run_suggest(index, suggest: dict, k: int = 10):
     raise DslError("suggester must be `term` or `completion`")
 
 
-def _sort_clause(spec) -> tuple[str, bool]:
-    """One ES sort clause → (field, ascending). Accepts "field",
-    {"field": "asc|desc"}, {"field": {"order": ...}}, each optionally in a
-    one-element list. `_score` / multi-clause sorts are rejected loudly."""
-    if isinstance(spec, list):
-        _require(len(spec) == 1, "sort supports exactly one clause")
-        spec = spec[0]
-    if isinstance(spec, str):
-        field, order = spec, "desc"
-    elif isinstance(spec, dict) and len(spec) == 1:
-        field, conf = next(iter(spec.items()))
-        if isinstance(conf, dict):
-            order = str(conf.get("order", "desc"))
-            _require(set(conf) <= {"order"}, f"unsupported sort options: {conf}")
-        else:
-            order = str(conf)
-    else:
-        raise DslError(f"unsupported sort clause: {spec!r}")
-    _require(field != "_score", "sort by _score is the default search — drop `sort`")
-    _require(field in ("doclen", "lang", "repo", "path"),
-             f"sort field must be doclen/lang/repo/path, got {field!r}")
-    _require(order in ("asc", "desc"), f"sort order must be asc/desc, got {order!r}")
-    return field, order == "asc"
-
-
-def _fetch_source(index, hits, source, order_cols=(), extra_cols=()):
-    """Join `_source` corpus columns onto a k-row hits frame (broadcast,
-    never reshuffling the match set). `order_cols`: result columns that
-    replace `score` in the output ordering (field-sort results)."""
+def _fetch_source(index, hits, source: tuple, order_cols=()):
+    """Join the `_source` corpus columns (_source_cols) onto a k-row hits
+    frame (broadcast, never reshuffling the match set). `order_cols`:
+    result columns that replace `score` in the output ordering
+    (field-sort results)."""
     if not source:
         return hits
-    if isinstance(source, str):  # ES allows a bare string, e.g. "_source": "repo"
-        source = [source]
-    if not isinstance(source, (list, tuple)):
-        raise DslError(f"_source must be a field name or list of field names, got {type(source).__name__}")
-    bad = [c for c in source if c not in _SOURCE_FIELDS]
-    if bad:
-        raise DslError(f"unknown _source fields: {bad} (known: {list(_SOURCE_FIELDS)})")
     from pyspark.sql import functions as F
 
     hit_cols = [c for c in hits.columns if c != "doc_id"]
@@ -1300,11 +1270,7 @@ def compile_bodies(bodies: list) -> list:
     out = []
     for body in bodies:
         q = body.get("query", body) if isinstance(body, dict) else body
-        if (
-            isinstance(q, dict)
-            and len(q) == 1
-            and next(iter(q)) in _COMBINATOR_KINDS
-        ):
+        if _kind_class(q) in _COMBINATORS:
             raise DslError(
                 f"standing queries must compile to one AST node, got {next(iter(q))!r}"
             )
@@ -1318,17 +1284,18 @@ def msearch(index, bodies: list, k: int = 10):
     the body's position. Bodies must be plain AST queries (compile_bodies
     contract). Sizes may differ per body (ES allows it); per-body limits
     ride batch.search_many's single rank window — one job for N bodies.
-    Body modifiers that would silently change semantics if ignored
-    (sort/highlight/suggest/_source/from/min_score/aggs/knn) are rejected
-    loudly: run those bodies through search_dsl individually."""
+    A `{"query": ...}` body takes only the keys the route table gives the
+    batched route (_ROUTES["msearch"]: query and size); any other key
+    rejects before the index is touched — run such a body through
+    search_dsl."""
     _require(isinstance(bodies, (list, tuple)) and bodies,
              "msearch needs a non-empty list of bodies")
     sizes = []
     for b in bodies:
-        for mod in ("sort", "highlight", "suggest", "_source", "from",
-                    "min_score", "aggs", "aggregations", "knn"):
-            if isinstance(b, dict) and mod in b:
-                raise DslError(f"msearch bodies don't support {mod!r}")
+        if isinstance(b, dict) and "query" in b:
+            extra = sorted(set(b) - {"query", "size", *_ROUTES["msearch"][2]})
+            if extra:
+                raise DslError(f"msearch bodies don't support {extra[0]!r}")
         size = int(b.get("size", k)) if isinstance(b, dict) else k
         _require(size >= 1, "msearch size must be >= 1")
         sizes.append(size)
@@ -1337,9 +1304,10 @@ def msearch(index, bodies: list, k: int = 10):
     return search_many(index, compile_bodies(bodies), k=sizes)
 
 
+@_dsl_errors
 def _serving_query(index, kind: str, body, k: int = 10):
-    """ES query kinds that compile to serving-layer score combinators
-    (dis_max / multi_match / boosting) instead of one AST node. Field
+    """The combinator kinds (_KIND_CLASS): ES query kinds that run on
+    serving-layer executors instead of one AST node. Field
     names map through FIELD_TO_STREAM; sub-queries must be
     `query_string`/`match`-expressible as engine query strings."""
     from bitfunnel_spark.plans import serving
@@ -1433,10 +1401,7 @@ def _serving_query(index, kind: str, body, k: int = 10):
         if ordered:
             return index.search(Phrase(tuple(toks), "body", slop=gaps),
                                 k=k)
-        try:
-            return serving.span_near(index, toks, slop=gaps, k=k)
-        except ValueError as e:
-            raise DslError(str(e)) from e
+        return serving.span_near(index, toks, slop=gaps, k=k)
     if kind == "rank_feature":
         # ES rank_feature: a static per-doc numeric feature through a
         # bounded monotone function (plans/serving.rank_feature). ES's
@@ -1452,21 +1417,13 @@ def _serving_query(index, kind: str, body, k: int = 10):
                 fn = fname
                 params = dict(opts.pop(fname) or {})
         _reject_extra(opts, "rank_feature")
-        kwargs = {}
-        if "pivot" in params:
-            kwargs["pivot"] = float(params.pop("pivot"))
-        if "exponent" in params:
-            kwargs["exponent"] = float(params.pop("exponent"))
-        if "scaling_factor" in params:
-            kwargs["scaling_factor"] = float(params.pop("scaling_factor"))
+        kwargs = {key: float(params.pop(key))
+                  for key in ("pivot", "exponent", "scaling_factor") if key in params}
         _require(not params, f"unsupported rank_feature params: {sorted(params)}")
-        try:
-            return serving.rank_feature(
-                index, None, field=field, fn=fn or "saturation",
-                boost=boost, k=k, **kwargs,
-            )
-        except ValueError as e:
-            raise DslError(str(e)) from e
+        return serving.rank_feature(
+            index, None, field=field, fn=fn or "saturation",
+            boost=boost, k=k, **kwargs,
+        )
     if kind == "distance_feature":
         # ES distance_feature: boost by proximity of a per-doc numeric to
         # an origin — boost · pivot / (pivot + |v − origin|). Dates reduce
@@ -1487,13 +1444,10 @@ def _serving_query(index, kind: str, body, k: int = 10):
                  "distance_feature needs a numeric origin")
         _require(isinstance(pivot, (int, float)) and float(pivot) > 0,
                  "distance_feature needs a positive numeric pivot")
-        try:
-            return serving.distance_feature(
-                index, None, field=field, origin=float(origin),
-                pivot=float(pivot), boost=boost, k=k,
-            )
-        except ValueError as e:
-            raise DslError(str(e)) from e
+        return serving.distance_feature(
+            index, None, field=field, origin=float(origin),
+            pivot=float(pivot), boost=boost, k=k,
+        )
     if kind == "pinned":
         # ES pinned query (search promotions): the given ids first, in the
         # given order, then organic results excluding them. Pinned rows
@@ -1501,6 +1455,8 @@ def _serving_query(index, kind: str, body, k: int = 10):
         # (score desc, doc_id asc) order yields ES's layout. Unknown ids
         # are dropped (ES semantics). All frames stay ≤ k + |ids| rows.
         from pyspark.sql import functions as F
+
+        from bitfunnel_spark.plans.kernel import live_docs
 
         ids = opts.pop("ids", None)
         organic = opts.pop("organic", None)
@@ -1512,10 +1468,8 @@ def _serving_query(index, kind: str, body, k: int = 10):
         org = index.search(compile_dsl(organic), k=k + len(ids))
         org = org.filter(~F.col("doc_id").isin(ids))
         id_arr = F.array(*[F.lit(i).cast("long") for i in ids])
-        live = index.corpus.select("doc_id").filter(F.col("doc_id").isin(ids))
-        tomb = getattr(index, "tombstones", frozenset())
-        if tomb:
-            live = live.filter(~F.col("doc_id").isin([int(d) for d in tomb]))
+        live = live_docs(index, index.corpus.select("doc_id")
+                         .filter(F.col("doc_id").isin(ids)))
         pinned_rows = live.select(
             "doc_id",
             (F.lit(1e9) - F.array_position(id_arr, F.col("doc_id"))
@@ -1539,13 +1493,10 @@ def _serving_query(index, kind: str, body, k: int = 10):
         for spec in fields:
             field, _, w = str(spec).partition("^")
             mapped.append(_stream(field) + (f"^{w}" if w else ""))
-        try:
-            return serving.multi_match(
-                index, text, mapped, mm_type=mm_type,
-                tie_breaker=tie, operator=operator, k=k,
-            )
-        except ValueError as e:
-            raise DslError(str(e)) from e
+        return serving.multi_match(
+            index, text, mapped, mm_type=mm_type,
+            tie_breaker=tie, operator=operator, k=k,
+        )
     if kind == "dis_max":
         queries = opts.pop("queries", None)
         _require(isinstance(queries, list) and queries, "dis_max needs queries")
@@ -1587,13 +1538,10 @@ def _serving_query(index, kind: str, body, k: int = 10):
                      "random_score.seed must be an int")
             _require(rconf.get("field") in (None, "_seq_no", "doc_id", "_id"),
                      "random_score.field supports _seq_no/doc_id/_id")
-            try:
-                return serving.random_score(
-                    index, _clause_string(q), seed=seed,
-                    boost_mode=boost_mode, k=k,
-                )
-            except ValueError as e:
-                raise DslError(str(e)) from e
+            return serving.random_score(
+                index, _clause_string(q), seed=seed,
+                boost_mode=boost_mode, k=k,
+            )
         decay_kind = next(
             (d for d in serving._DECAY_KINDS if d in opts), None
         )
@@ -1634,15 +1582,12 @@ def _serving_query(index, kind: str, body, k: int = 10):
                      f"{decay_kind}.decay must be in (0, 1)")
             _require(float(offset) >= 0.0,
                      f"{decay_kind}.offset must be >= 0")
-            try:
-                return serving.decay_score(
-                    index, _clause_string(q), float(origin), float(scale),
-                    field=str(dfield), kind=decay_kind,
-                    offset=float(offset), decay=float(decay),
-                    boost_mode=boost_mode, k=k,
-                )
-            except ValueError as e:
-                raise DslError(str(e)) from e
+            return serving.decay_score(
+                index, _clause_string(q), float(origin), float(scale),
+                field=str(dfield), kind=decay_kind,
+                offset=float(offset), decay=float(decay),
+                boost_mode=boost_mode, k=k,
+            )
         _require(isinstance(fvf, dict),
                  "function_score supports field_value_factor and the "
                  "gauss/exp/linear decay functions")
@@ -1652,13 +1597,10 @@ def _serving_query(index, kind: str, body, k: int = 10):
         modifier = str(f.pop("modifier", "none"))
         factor = float(f.pop("factor", 1.0))
         _reject_extra(f, "field_value_factor")
-        try:
-            return serving.function_score(
-                index, _clause_string(q), field=field, modifier=modifier,
-                factor=factor, boost_mode=boost_mode, k=k,
-            )
-        except ValueError as e:
-            raise DslError(str(e)) from e
+        return serving.function_score(
+            index, _clause_string(q), field=field, modifier=modifier,
+            factor=factor, boost_mode=boost_mode, k=k,
+        )
     if kind == "script_score":
         # ES script_score: the painless-lite expression IS the score
         # (plans/serving.script_score) — bindings: _score, doclen, params.*
@@ -1675,12 +1617,9 @@ def _serving_query(index, kind: str, body, k: int = 10):
         _reject_extra(spec, "script")
         _require(isinstance(src, str) and src.strip(),
                  "script needs a source expression")
-        try:
-            return serving.script_score(
-                index, _clause_string(q), src, params=sparams, k=k
-            )
-        except ValueError as e:
-            raise DslError(str(e)) from e
+        return serving.script_score(
+            index, _clause_string(q), src, params=sparams, k=k
+        )
     if kind == "more_like_this":
         like = opts.pop("like", None)
         mqt = int(opts.pop("max_query_terms", 8))
@@ -1839,6 +1778,7 @@ def _require(cond: bool, msg: str) -> None:
         raise DslError(msg)
 
 
+@_dsl_errors
 def run_aggs(index, body: dict, k: int = 10):
     """Run an ES `_search` body carrying exactly ONE top-level aggregation
     (optionally with exactly one sub-aggregation under a `terms` bucket)
@@ -1873,23 +1813,17 @@ def run_aggs(index, body: dict, k: int = 10):
     _require(isinstance(aggs, dict) and len(aggs) == 1, "exactly one top-level agg")
     q = None
     if "query" in body:
-        query = body["query"]
-        if isinstance(query, dict) and set(query) == {"bool"}:
-            # ES range filters compose with every aggregation: pop them
-            # out of bool.filter and attach the doc-metadata restriction
-            # to an index COPY (FullTextIndex.restricted) — the kernel
-            # behind index.match / index.scored_match (the match surfaces
-            # every serving agg rides) ANDs it in. The `global` agg still escapes the FULL query
-            # context including these filters (ES semantics) because it
-            # never touches the match set.
-            residual, ranges, negs = _pop_bool_ranges(query["bool"])
-            if ranges or negs:
-                _require(bool(residual),
-                         "aggs over a pure metadata filter need a match "
-                         "query alongside (a bool of only metadata "
-                         "filters has no scoring/match clause)")
-                index = index.restricted(_range_restrict(index, ranges, negs))
-                query = {"bool": residual}
+        # ES range filters compose with every aggregation: the bool's
+        # doc-metadata clauses ride an index copy (_restricted) into the
+        # kernel behind index.match / index.scored_match, the match
+        # surfaces every serving agg rides. The `global` agg still escapes
+        # them (ES semantics): it never touches the match set.
+        query, pos, neg = _pop_bool_ranges(body["query"])
+        _require(query is not None,
+                 "aggs over a pure metadata filter need a match query "
+                 "alongside (a bool of only metadata filters has no "
+                 "scoring/match clause)")
+        index = _restricted(index, pos, neg)
         q = compile_dsl(query)
     (_, spec), = aggs.items()
     _require(isinstance(spec, dict), "agg spec must be an object")
@@ -1903,11 +1837,8 @@ def run_aggs(index, body: dict, k: int = 10):
         _require(q is None, "filters agg counts over the whole corpus (no query)")
         named = conf.get("filters")
         _require(isinstance(named, dict) and named, "filters.filters must be non-empty")
-        qs = {}
-        for name, sub_q in named.items():
-            node = compile_dsl(sub_q)
-            qs[name] = node
-        return serving.filters_agg(index, qs)
+        return serving.filters_agg(
+            index, {name: compile_dsl(sub_q) for name, sub_q in named.items()})
 
     if kind == "adjacency_matrix":
         _require(q is None, "adjacency_matrix counts over the whole corpus (no query)")
@@ -1971,12 +1902,9 @@ def run_aggs(index, body: dict, k: int = 10):
         unknown = set(conf) - {"value", "weight"}
         _require(not unknown, f"unsupported weighted_avg options: {sorted(unknown)}")
         _require(sub is None, "weighted_avg takes no sub-aggs")
-        try:
-            return serving.weighted_avg(
-                index, q, value_field=vspec["field"], weight_field=wspec["field"]
-            )
-        except ValueError as e:
-            raise DslError(str(e)) from e
+        return serving.weighted_avg(
+            index, q, value_field=vspec["field"], weight_field=wspec["field"]
+        )
 
     if kind == "string_stats":
         field = conf.get("field")
@@ -2125,10 +2053,7 @@ def run_aggs(index, body: dict, k: int = 10):
                          f"multiple sub-aggs support metric kinds "
                          f"{metric_kinds}; {mk!r} needs its own request")
                 specs.append((name, mk, dict(mconf)))
-            try:
-                return serving.facet_metrics(index, q, by=field, metrics=specs)
-            except ValueError as e:
-                raise DslError(str(e)) from e
+            return serving.facet_metrics(index, q, by=field, metrics=specs)
         _require(isinstance(sub, dict) and len(sub) == 1, "exactly one sub-agg")
         (_, sspec), = sub.items()
         skinds = list(sspec)
@@ -2163,10 +2088,7 @@ def run_aggs(index, body: dict, k: int = 10):
         _reject_extra(mconf, kind)
         _require(isinstance(mfields, list) and len(mfields) == 2,
                  "matrix_stats needs exactly two fields")
-        try:
-            return serving.matrix_stats(index, q, fields=tuple(mfields))
-        except ValueError as e:
-            raise DslError(str(e)) from e
+        return serving.matrix_stats(index, q, fields=tuple(mfields))
     if kind in LEAF_METRIC_KINDS:
         # TOP-LEVEL leaf metrics — the most common ES aggregation shape
         # (no bucket): one narrow join + one global agg
@@ -2177,15 +2099,12 @@ def run_aggs(index, body: dict, k: int = 10):
         mfield = mconf.pop("field", "doclen")
         pcts = mconf.pop("percents", None) if kind == "percentiles" else None
         _reject_extra(mconf, kind)
-        try:
-            if pcts is not None:
-                return serving.metric_agg(
-                    index, q, kind, field=mfield,
-                    percents=tuple(float(p) for p in pcts),
-                )
-            return serving.metric_agg(index, q, kind, field=mfield)
-        except ValueError as e:
-            raise DslError(str(e)) from e
+        if pcts is not None:
+            return serving.metric_agg(
+                index, q, kind, field=mfield,
+                percents=tuple(float(p) for p in pcts),
+            )
+        return serving.metric_agg(index, q, kind, field=mfield)
     raise DslError(f"unsupported agg kind: {kind!r}")
 
 

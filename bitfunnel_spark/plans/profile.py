@@ -5,10 +5,10 @@ records row/cacheline counts; our analogue counts posting blocks).
 
 `profile_many` runs a query log through the production query kernel
 (plans/kernel.run_log) with the counters sink on — the same descriptor,
-restrictions (tombstones), phrase routing and search_after handling as
-search, so a profile describes the execution that actually runs. Instead
-of result rows the kernel emits one METRIC_SCHEMA row per (query, shard,
-slice) group, with driver-side phase timings alongside:
+restrictions (tombstones, fact sets), phrase routing and search_after
+handling as search, so a profile describes the execution that actually
+runs. Instead of result rows the kernel emits one METRIC_SCHEMA row per
+(query, shard, slice) group, with driver-side phase timings alongside:
 
     blocks_total    — blocks of the query's terms present in the group
     blocks_decoded  — blocks actually decoded (block-max pruning skips the
@@ -34,7 +34,7 @@ from bitfunnel_spark.plans.kernel import METRIC_SCHEMA, run_log  # noqa: F401 (r
 def profile_many(
     index, queries: list[str], k: int = 10,
     after: tuple[float, int] | None = None,
-    similarity: str = "bm25",
+    similarity: str = "bm25", facts: list[str] | None = None,
 ) -> tuple[DataFrame, dict]:
     """Per-query execution metrics for a query log, ONE job.
 
@@ -44,19 +44,19 @@ def profile_many(
     driver_timings records parse/plan/descriptor wall-times (the reference's
     parse/plan phases, QueryRunner.cpp:84-92). ``after`` applies one
     search_after cursor to every query — the per-page decode-counter
-    instrumentation for deep pagination. ``similarity`` profiles the
+    instrumentation for deep pagination; ``facts`` restricts every query
+    to the named fact sets (batch.search_many). ``similarity`` profiles the
     prunable flavors ("bm25" / "dot_tf" — queries may be AST nodes, e.g. a
-    compiled sparse_vector body, whose boosts carry the weights).
-    """
+    compiled sparse_vector body, whose boosts carry the weights)."""
     if similarity not in ("bm25", "dot_tf"):
         raise ValueError(
             f"profile_many instruments the prunable similarities "
             f"('bm25', 'dot_tf'), got {similarity!r}"
         )
     t0 = time.perf_counter()
-    plans, _ = plan_log(index, queries)
+    plans, facts = plan_log(index, queries, facts)
     t_parse = time.perf_counter()
-    metrics = run_log(index, plans, k, None, similarity, after, sink=True)
+    metrics = run_log(index, plans, k, facts, similarity, after, sink=True)
     t_plan = time.perf_counter()
     timings = {
         "parse_ms": round((t_parse - t0) * 1000.0, 3),

@@ -114,12 +114,12 @@ def gram_index(spark, corpus):
     )
 
 
-def _profile_rows(index, queries, k):
+def _profile_rows(index, queries, k, facts=None):
     from pyspark.sql import functions as F
 
     from bitfunnel_spark.plans.profile import profile_many
 
-    metrics, _ = profile_many(index, queries, k=k)
+    metrics, _ = profile_many(index, queries, k=k, facts=facts)
     agg = metrics.groupBy("query_id").agg(F.sum("rows").alias("rows")).collect()
     return {r["query_id"]: r["rows"] for r in agg}
 
@@ -225,11 +225,10 @@ def test_restriction_honoured_on_every_path(request, index_name, case):
     for r in match_many(idx, RESTRICTED_QUERIES, facts=facts).collect():
         sets.setdefault(r.query_id, []).append(r.doc_id)
     assert {q: sorted(v) for q, v in sets.items()} == {q: v for q, v in matched.items() if v}
-    if facts is None:  # profile_many takes no fact sets
-        # k covers every match, so per-group rows sum to the match-set size
-        got = _profile_rows(idx, RESTRICTED_QUERIES, idx.n_docs)
-        assert {q: n for q, n in got.items() if n} == {
-            q: len(v) for q, v in matched.items() if v}
+    # k covers every match, so per-group rows sum to the match-set size
+    got = _profile_rows(idx, RESTRICTED_QUERIES, idx.n_docs, facts)
+    assert {q: n for q, n in got.items() if n} == {
+        q: len(v) for q, v in matched.items() if v}
     if case == "empty":
         assert not any(matched.values())
     else:

@@ -450,6 +450,17 @@ def test_msearch_rejects_min_score_and_aggs(index):
     with pytest.raises(DslError, match="aggs"):
         msearch(index, [{"query": {"query_string": "data"},
                          "aggs": {"a": {"terms": {"field": "lang"}}}}])
+    # a batched body takes query and size only: every other key rejects,
+    # before the index is touched, instead of running as if absent
+    for key, value in [("post_filter", {"range": {"doclen": {"gte": 5}}}),
+                       ("collapse", {"field": "repo"}), ("explain", True),
+                       ("search_after", [1.0, 3]),
+                       ("rescore", {"query": {"rescore_query": {
+                           "match": {"body": "data"}}}}),
+                       ("no_such_key", 1)]:
+        with pytest.raises(DslError, match=f"msearch bodies don't support '{key}'"):
+            msearch(None, [{"query": {"query_string": "data"}, "size": 3},
+                           {"query": {"query_string": "data"}, key: value}])
 
 
 def test_search_many_per_query_k_list(index):
