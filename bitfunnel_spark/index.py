@@ -86,36 +86,21 @@ class FullTextIndex:
         return self._idf_map
 
     def idf_for_terms(self, terms) -> dict:
-        """{term_string: idf} for a query's BODY terms — via the resident
-        map, else one filtered collect over the key dictionary. When the
-        dictionary is the persisted bucket-partitioned layout
-        (statistics.write_dictionary), the added ``term_bucket`` predicate
-        prunes to ≤ |terms| partition directories and the ``term_key``
-        IN-list prunes row groups — a point lookup regardless of
-        dictionary size (the past-driver-cap serve path)."""
-        from bitfunnel_spark.operators.segments import _term_bucket_py, _term_key_py
-
-        body = sorted({t for s, t in terms if s == "body"})
-        keys = {t: _term_key_py("body", t) for t in body}
-        m = self.idf_map()
-        if m is not None:
-            return {t: m[k] for t, k in keys.items() if k in m}
-        ks = self._key_stats_df()
-        pred = F.col("term_key").isin(list(keys.values()))
-        if "term_bucket" in ks.columns:
-            buckets = sorted(
-                {_term_bucket_py(k, self.config.term_buckets) for k in keys.values()}
-            )
-            pred = F.col("term_bucket").isin(buckets) & pred
-        rows = ks.filter(pred).select("term_key", "idf").collect()
-        by_key = {int(r[0]): float(r[1]) for r in rows}
-        return {t: by_key[k] for t, k in keys.items() if k in by_key}
+        """{term_string: idf} for a query's BODY terms: the body-stream
+        projection of idf_for_keys (the same resident-map or bucket-pruned
+        lookup)."""
+        body = {(s, t) for s, t in terms if s == "body"}
+        return {t: idf for (_, t), idf in self.idf_for_keys(body).items()}
 
     def idf_for_keys(self, terms) -> dict:
         """{(stream, term): idf} for a query's keys — ALL streams (the
-        field-weighted scoring path needs non-body idf too). Same lookup
-        machinery as idf_for_terms: resident map when it fits, else one
-        bucket-pruned filtered collect."""
+        field-weighted scoring path needs non-body idf too): the resident
+        map when it fits, else one filtered collect over the key
+        dictionary. When the dictionary is the persisted bucket-partitioned
+        layout (statistics.write_dictionary), the added ``term_bucket``
+        predicate prunes to ≤ |terms| partition directories and the
+        ``term_key`` IN-list prunes row groups — a point lookup regardless
+        of dictionary size (the past-driver-cap serve path)."""
         from bitfunnel_spark.operators.segments import _term_bucket_py, _term_key_py
 
         pairs = sorted({(s, t) for s, t in terms})

@@ -486,30 +486,8 @@ def compile_dsl(query: dict) -> Node:
 
 _SOURCE_FIELDS = ("repo", "path", "commit", "lang", "content", "content_sha256")
 
-# query kind -> kind class; kinds not listed compile to one AST node
-# (compile_dsl) and are class "ast". The class decides the executor and,
-# through _CLASSES, the body keys a query of the kind composes with.
-#   metadata      doc-metadata scans (_filter_doc_ids): filter-only hits,
-#                 and in bool.filter / must_not the restriction plan
-#   filter        constant_score: any filter at a constant score
-#   combinator    serving-layer score combinators that take every match
-#                 from index.match / index.scored_match, so the kernel
-#                 applies the restriction plan to them
-#   unrestricted  serving-layer combinators that also read positions,
-#                 postings, pinned ids or a vector store outside that call
-_KIND_CLASS = {
-    **dict.fromkeys(("match_all", "match_none", "ids", "exists", "range"),
-                    "metadata"),
-    "constant_score": "filter",
-    **dict.fromkeys(("multi_match", "dis_max", "boosting", "function_score",
-                     "script_score", "rank_feature", "distance_feature"),
-                    "combinator"),
-    **dict.fromkeys(("span_near", "span_first", "span_not", "span_or",
-                     "intervals", "sparse_vector", "pinned", "more_like_this"),
-                    "unrestricted"),
-}
 _FILTER_ONLY = ("metadata", "filter")
-_COMBINATORS = ("combinator", "unrestricted")
+_COMBINATOR_CLASSES = ("combinator", "unrestricted")
 
 
 def _kind_class(query) -> str:
@@ -795,15 +773,14 @@ def _route(body, k: int = 10) -> Route:
         _require("query" not in body,
                  "suggest-only bodies supported (no query alongside)")
         _unknown_keys(body, ("suggest", "size"))
-        return Route("suggest", None, int(body.get("size", k)), arg=body["suggest"])
+        return Route("suggest", None, _page(body, k)[0], arg=body["suggest"])
     if not (isinstance(body, dict) and isinstance(body.get("query"), dict)):
         body = {"query": body}  # a bare query object
     _unknown_keys(body, ("query", "size", "fields", *_CLASSES["ast"][0]))
-    k = int(body.get("size", k))
     # ES from+size shallow paging fetches from+size rows and skips `from`;
     # ES caps it at max_result_window (10,000), and so does this engine —
     # deep pages belong to search_after (k-row at any depth)
-    frm = int(body.get("from", 0))
+    k, frm, min_score = _page(body, k)
     _require(0 <= frm and frm + k <= 10_000,
              "from + size must stay within 10,000 (ES max_result_window); "
              "use search_after for deep pages")
@@ -845,9 +822,7 @@ def _route(body, k: int = 10) -> Route:
     _require(name != "rescore" or k + frm <= arg[0],
              "from + size must fit inside window_size (hits past the window "
              "would be un-rescored)")
-    min_score = body.get("min_score")
-    return Route(name, query, k + frm, frm, _source_cols(source),
-                 None if min_score is None else float(min_score),
+    return Route(name, query, k + frm, frm, _source_cols(source), min_score,
                  (pos, neg, post_filter), arg)
 
 
@@ -1051,7 +1026,7 @@ def _filter_only_hits(index, r: Route):
 
 
 def _plain_hits(index, r: Route):
-    if _kind_class(r.query) in _COMBINATORS:
+    if _kind_class(r.query) in _COMBINATOR_CLASSES:
         return _serving_query(index, *next(iter(r.query.items())), k=r.k)
     return index.search(compile_dsl(r.query), k=r.k)
 
@@ -1118,7 +1093,7 @@ def _match_ids(index, query: dict, api: str = "_count"):
              f"{api} needs a single-kind query object")
     (kind, conf), = query.items()
     cls = _kind_class(query)
-    _require(cls not in _COMBINATORS,
+    _require(cls not in _COMBINATOR_CLASSES,
              f"{api} takes AST or filter-only queries, not {kind!r}")
     if cls in _FILTER_ONLY:
         return _filter_doc_ids(index, _filter_only(kind, conf)[0]).select("doc_id")
@@ -1191,7 +1166,7 @@ def validate_query(body) -> tuple[bool, str]:
     try:
         query = body.get("query", body) if isinstance(body, dict) else body
         cls = _kind_class(query)
-        if cls in _COMBINATORS:
+        if cls in _COMBINATOR_CLASSES:
             return True, f"{next(iter(query))} (serving combinator)"
         if cls in _FILTER_ONLY:
             return True, f"{next(iter(query))} (filter-only, constant score)"
@@ -1270,7 +1245,7 @@ def compile_bodies(bodies: list) -> list:
     out = []
     for body in bodies:
         q = body.get("query", body) if isinstance(body, dict) else body
-        if _kind_class(q) in _COMBINATORS:
+        if _kind_class(q) in _COMBINATOR_CLASSES:
             raise DslError(
                 f"standing queries must compile to one AST node, got {next(iter(q))!r}"
             )
@@ -1296,7 +1271,7 @@ def msearch(index, bodies: list, k: int = 10):
             extra = sorted(set(b) - {"query", "size", *_ROUTES["msearch"][2]})
             if extra:
                 raise DslError(f"msearch bodies don't support {extra[0]!r}")
-        size = int(b.get("size", k)) if isinstance(b, dict) else k
+        size = _page(b, k)[0] if isinstance(b, dict) else k
         _require(size >= 1, "msearch size must be >= 1")
         sizes.append(size)
     from bitfunnel_spark.plans.batch import search_many
@@ -1304,382 +1279,431 @@ def msearch(index, bodies: list, k: int = 10):
     return search_many(index, compile_bodies(bodies), k=sizes)
 
 
-@_dsl_errors
-def _serving_query(index, kind: str, body, k: int = 10):
-    """The combinator kinds (_KIND_CLASS): ES query kinds that run on
-    serving-layer executors instead of one AST node. Field
-    names map through FIELD_TO_STREAM; sub-queries must be
-    `query_string`/`match`-expressible as engine query strings."""
+# ---------------------------------------------------------------------------
+# Option tables. Every combinator kind (_COMBINATORS) and aggregation kind
+# (_AGGS, _TERMS_SUBS) declares its options once, as {name: Opt}, and _read
+# reads a conf against that declaration: an unknown option, a missing
+# required one or a malformed value raises DslError before any executor
+# runs — never a silent drop, never a raw TypeError.
+
+_REQ = object()  # the Opt.default of a required option
+
+
+class Opt(NamedTuple):
+    """One declared option. ``check(value, label)`` validates a given value
+    and returns what the executor takes; ``default`` (already in executor
+    form) fills an absent one, _REQ makes it required; ``to`` is the
+    executor keyword (None: the option's own name; "": checked, not
+    passed)."""
+
+    check: object
+    default: object = _REQ
+    to: str | None = None
+
+
+def _read(conf, spec: dict, what: str) -> dict:
+    """``conf`` read against ``spec``: {executor keyword: value}."""
+    _require(isinstance(conf, dict), f"{what} expects an object")
+    unknown = set(conf) - set(spec)
+    _require(not unknown, f"unsupported {what} options: {sorted(unknown)} "
+                          f"({what} takes {sorted(spec)})")
+    required = [name for name, opt in spec.items() if opt.default is _REQ]
+    _require(set(required) <= set(conf), f"{what} needs {' and '.join(required)}")
+    out = {}
+    for name, (check, default, to) in spec.items():
+        value = check(conf[name], f"{what}.{name}") if name in conf else default
+        if to != "":
+            out[to or name] = value
+    return out
+
+
+def _check(what: str, test, conv=None):
+    """An Opt check: a value passing ``test`` is returned (through
+    ``conv``); any other value raises DslError saying it must be ``what``."""
+    def check(v, label):
+        _require(test(v), f"{label} must be {what}, got {v!r}")
+        return v if conv is None else conv(v)
+    return check
+
+
+def _conv(fn):
+    """An Opt check that is a parser raising its own DslError."""
+    return lambda v, label: fn(v)
+
+
+def _is_num(v) -> bool:
+    return isinstance(v, (int, float)) and not isinstance(v, bool)
+
+
+def _one_of(*domain):
+    return _check(" or ".join(domain), lambda v: isinstance(v, str) and v in domain)
+
+
+_NUM = _check("a number", _is_num, float)
+_INT = _check("an integer", lambda v: _is_num(v) and (
+    isinstance(v, int) or v.is_integer()), int)
+_BOOL = _check("a boolean", lambda v: isinstance(v, bool))
+_STR = _check("a non-empty string", lambda v: isinstance(v, str) and v != "")
+_LOWER = lambda v, label: _STR(v, label).lower()  # noqa: E731
+_LIST = _check("a non-empty list", lambda v: isinstance(v, list) and v != [])
+_OBJ = _check("an object", lambda v: isinstance(v, dict))
+_NUMS = _check("a non-empty list of numbers",
+               lambda v: isinstance(v, list) and v != [] and all(map(_is_num, v)),
+               lambda v: tuple(map(float, v)))
+_CLAUSE = _conv(lambda q: _clause_string(q))
+_SPAN_TERM = _conv(lambda q: _span_term(q))
+# a _search body's page keys (size defaults to the caller's k)
+_PAGE = {"size": Opt(_INT, None), "from": Opt(_INT, 0), "min_score": Opt(_NUM, None)}
+
+
+def _page(body: dict, k: int) -> tuple[int, int, float | None]:
+    """(size, from, min_score) of a body, read against _PAGE."""
+    o = _read({key: v for key, v in body.items() if key in _PAGE}, _PAGE, "_search")
+    return (k if o["size"] is None else o["size"]), o["from"], o["min_score"]
+
+
+def _serving(name: str, **fixed):
+    """A row executor: the serving-layer function ``name`` (imported on
+    call — routing and the option tables import no Spark)."""
+    def run(*args, **kwargs):
+        from bitfunnel_spark.plans import serving
+
+        return getattr(serving, name)(*args, **fixed, **kwargs)
+    return run
+
+
+def _clauses(v, label) -> list[str]:
+    return [_clause_string(q) for q in _LIST(v, label)]
+
+
+def _fields(v, label) -> list[str]:
+    """multi_match fields as streams, keeping each `^weight`."""
+    return [_stream(f) + (f"^{w}" if w else "")
+            for f, _, w in (str(s).partition("^") for s in _LIST(v, label))]
+
+
+def _like(v, label) -> int:
+    """more_like_this's one source document: like [{"_id": <doc_id>}]."""
+    like = [v] if isinstance(v, dict) else v
+    _require(isinstance(like, list) and len(like) == 1
+             and isinstance(like[0], dict) and set(like[0]) == {"_id"}
+             and str(like[0]["_id"]).isdigit(),
+             "more_like_this supports like: [{'_id': <doc_id>}]")
+    return int(like[0]["_id"])
+
+
+def _sparse_vector(index, k, field, query_vector):
+    # ES 8.15 sparse_vector (learned-sparse / ELSER-shape retrieval) with
+    # pre-computed query weights: score(d) = Σ_t w_t · tf(t, d) — the
+    # dot_tf similarity, with weights riding the Boost machinery. Tokens
+    # are features (used verbatim, lowercased — ES does not re-analyze
+    # them either); absent tokens contribute nothing.
+    _require(_stream(field) == "body",
+             "sparse_vector scores the body field (tf impacts are stored "
+             "for body postings)")
+    _require(bool(query_vector),
+             "sparse_vector needs a query_vector of {token: weight}")
+    for tok, w in query_vector.items():
+        _require(isinstance(tok, str) and tok, f"bad sparse token {tok!r}")
+        _require(_is_num(w) and w > 0,
+                 f"sparse weight for {tok!r} must be > 0, got {w!r}")
+    clauses = tuple(Boost(Term(tok.lower(), "body"), float(w))
+                    for tok, w in sorted(query_vector.items()))
+    node = clauses[0] if len(clauses) == 1 else Or(clauses)
+    return index.search(node, k=k, similarity="dot_tf")
+
+
+_INTERVAL_RULES = {
+    "match": {"query": Opt(_STR), "max_gaps": Opt(_INT, -1),
+              "ordered": Opt(_BOOL, False)},
+    "all_of": {"intervals": Opt(_LIST), "max_gaps": Opt(_INT, -1),
+               "ordered": Opt(_BOOL, False)},
+}
+
+
+def _interval_tokens(rule) -> tuple[list[str], int, bool]:
+    """(tokens, max_gaps, ordered) of an intervals rule: `match`, or
+    `all_of` over single-token `match` rules."""
+    _require(isinstance(rule, dict) and len(rule) == 1,
+             "an intervals rule is a single-kind object")
+    (kind, conf), = rule.items()
+    _require(kind in _INTERVAL_RULES,
+             f"unsupported intervals rule {kind!r} (supported: match, "
+             "all_of over single-token matches)")
+    o = _read(conf, _INTERVAL_RULES[kind], f"intervals {kind}")
+    if kind == "match":
+        toks = _analyze(o["query"])
+        _require(bool(toks), f"match analyzes to zero tokens: {o['query']!r}")
+        return toks, o["max_gaps"], o["ordered"]
+    toks = []
+    for sub in o["intervals"]:
+        st, sg, so = _interval_tokens(sub)
+        _require(len(st) == 1 and sg == -1 and not so,
+                 "all_of sub-intervals must be single-token match rules "
+                 "(nested windows are not modeled)")
+        toks.extend(st)
+    return toks, o["max_gaps"], o["ordered"]
+
+
+def _intervals(index, conf, k):
+    # ES intervals query — documented subset mapped onto the engine's
+    # positional executors: `match` rules (and `all_of` over single-token
+    # `match` sub-rules, ES's common composition) with ordered/unordered +
+    # max_gaps. ordered+bounded → sloppy phrase (ordered window
+    # (n-1)+max_gaps); unordered+bounded → span_near; unlimited gaps (-1,
+    # the ES default) → plain conjunction. any_of / filter / prefix /
+    # wildcard rules raise loudly.
     from bitfunnel_spark.plans import serving
 
-    if not isinstance(body, dict):
-        raise DslError(f"{kind} expects an object")
-    opts = dict(body)
-    if kind == "sparse_vector":
-        # ES 8.15 sparse_vector (learned-sparse / ELSER-shape retrieval)
-        # with pre-computed query weights: score(d) = Σ_t w_t · tf(t, d) —
-        # the dot_tf similarity, with weights riding the Boost machinery.
-        # Tokens are features (used verbatim, lowercased — ES does not
-        # re-analyze them either); absent tokens contribute nothing.
-        field = opts.pop("field", "content")
-        qv = opts.pop("query_vector", None)
-        _reject_extra(opts, "sparse_vector")
-        _require(_stream(field) == "body",
-                 "sparse_vector scores the body field (tf impacts are "
-                 "stored for body postings)")
-        _require(isinstance(qv, dict) and qv,
-                 "sparse_vector needs a query_vector of {token: weight}")
-        for tok, w in qv.items():
-            _require(isinstance(tok, str) and tok, f"bad sparse token {tok!r}")
-            _require(isinstance(w, (int, float)) and float(w) > 0,
-                     f"sparse weight for {tok!r} must be > 0, got {w!r}")
-        clauses = tuple(
-            Boost(Term(tok.lower(), "body"), float(w))
-            for tok, w in sorted(qv.items())
-        )
-        node = clauses[0] if len(clauses) == 1 else Or(clauses)
-        return index.search(node, k=k, similarity="dot_tf")
-    if kind == "intervals":
-        # ES intervals query — documented subset mapped onto the engine's
-        # positional executors: `match` rules (and `all_of` over
-        # single-token `match` sub-rules, ES's common composition) with
-        # ordered/unordered + max_gaps. ordered+bounded → sloppy phrase
-        # (ordered window (n-1)+max_gaps); unordered+bounded → span_near;
-        # unlimited gaps (-1, the ES default) → plain conjunction.
-        # any_of / filter / prefix / wildcard rules raise loudly.
-        _require(len(opts) == 1, "intervals needs exactly one field")
-        (field, rule), = opts.items()
-        _require(_stream(field) == "body",
-                 "intervals runs on the body field (positions are stored "
-                 "for body postings)")
+    _require(isinstance(conf, dict) and len(conf) == 1,
+             "intervals needs exactly one field")
+    (field, rule), = conf.items()
+    _require(_stream(field) == "body",
+             "intervals runs on the body field (positions are stored for "
+             "body postings)")
+    toks, gaps, ordered = _interval_tokens(rule)
+    if len(toks) == 1:
+        return index.search(Term(toks[0], "body"), k=k)
+    if gaps < 0:  # unlimited gaps: pure conjunction, order unobservable
+        _require(not ordered,
+                 "ordered intervals need max_gaps >= 0 (an unbounded "
+                 "ordered subsequence is not modeled)")
+        return index.search(And(tuple(Term(t, "body") for t in toks)), k=k)
+    if ordered:
+        return index.search(Phrase(tuple(toks), "body", slop=gaps), k=k)
+    return serving.span_near(index, toks, slop=gaps, k=k)
 
-        def _interval_tokens(r) -> tuple[list[str], int, bool]:
-            _require(isinstance(r, dict) and len(r) == 1,
-                     "an intervals rule is a single-kind object")
-            (rkind, rconf), = r.items()
-            if rkind == "match":
-                rc = dict(rconf)
-                text = rc.pop("query", None)
-                _require(isinstance(text, str) and text,
-                         "intervals match needs a query string")
-                gaps = int(rc.pop("max_gaps", -1))
-                ordered = bool(rc.pop("ordered", False))
-                _reject_extra(rc, "intervals match")
-                toks = _analyze(text)
-                _require(bool(toks), f"match analyzes to zero tokens: {text!r}")
-                return toks, gaps, ordered
-            if rkind == "all_of":
-                rc = dict(rconf)
-                subs = rc.pop("intervals", None)
-                gaps = int(rc.pop("max_gaps", -1))
-                ordered = bool(rc.pop("ordered", False))
-                _reject_extra(rc, "intervals all_of")
-                _require(isinstance(subs, list) and subs,
-                         "all_of needs a non-empty intervals list")
-                toks = []
-                for s in subs:
-                    st, sg, so = _interval_tokens(s)
-                    _require(len(st) == 1 and sg == -1 and not so,
-                             "all_of sub-intervals must be single-token "
-                             "match rules (nested windows are not modeled)")
-                    toks.extend(st)
-                return toks, gaps, ordered
-            raise DslError(
-                f"unsupported intervals rule {rkind!r} (supported: match, "
-                "all_of over single-token matches)"
-            )
 
-        toks, gaps, ordered = _interval_tokens(rule)
-        if len(toks) == 1:
-            return index.search(Term(toks[0], "body"), k=k)
-        if gaps < 0:  # unlimited gaps: pure conjunction, order unobservable
-            _require(not ordered,
-                     "ordered intervals need max_gaps >= 0 (an unbounded "
-                     "ordered subsequence is not modeled)")
-            return index.search(And(tuple(Term(t, "body") for t in toks)),
-                                k=k)
-        if ordered:
-            return index.search(Phrase(tuple(toks), "body", slop=gaps),
-                                k=k)
-        return serving.span_near(index, toks, slop=gaps, k=k)
-    if kind == "rank_feature":
-        # ES rank_feature: a static per-doc numeric feature through a
-        # bounded monotone function (plans/serving.rank_feature). ES's
-        # standalone form matches every doc carrying the feature.
-        field = opts.pop("field", None)
-        _require(isinstance(field, str) and field, "rank_feature needs a field")
-        boost = float(opts.pop("boost", 1.0))
-        fn = None
-        params = {}
-        for fname in ("saturation", "log", "sigmoid"):
-            if fname in opts:
-                _require(fn is None, "rank_feature takes ONE function")
-                fn = fname
-                params = dict(opts.pop(fname) or {})
-        _reject_extra(opts, "rank_feature")
-        kwargs = {key: float(params.pop(key))
-                  for key in ("pivot", "exponent", "scaling_factor") if key in params}
-        _require(not params, f"unsupported rank_feature params: {sorted(params)}")
-        return serving.rank_feature(
-            index, None, field=field, fn=fn or "saturation",
-            boost=boost, k=k, **kwargs,
-        )
-    if kind == "distance_feature":
-        # ES distance_feature: boost by proximity of a per-doc numeric to
-        # an origin — boost · pivot / (pivot + |v − origin|). Dates reduce
-        # to the same arithmetic on epoch values; this engine's per-doc
-        # numerics are doclen / numeric corpus metadata, so origin and
-        # pivot are numbers (date-math strings are out of the subset).
-        field = opts.pop("field", None)
-        # restrict to the engine's per-doc numerics: anything else would
-        # either raise a raw AnalysisException (unknown column) or cast
-        # strings to NULL and rank garbage — loud subset instead
-        _require(field in ("doclen", "doc_id"),
-                 "distance_feature field must be doclen or doc_id")
-        origin = opts.pop("origin", None)
-        pivot = opts.pop("pivot", None)
-        boost = float(opts.pop("boost", 1.0))
-        _reject_extra(opts, "distance_feature")
-        _require(isinstance(origin, (int, float)) and not isinstance(origin, bool),
-                 "distance_feature needs a numeric origin")
-        _require(isinstance(pivot, (int, float)) and float(pivot) > 0,
-                 "distance_feature needs a positive numeric pivot")
-        return serving.distance_feature(
-            index, None, field=field, origin=float(origin),
-            pivot=float(pivot), boost=boost, k=k,
-        )
-    if kind == "pinned":
-        # ES pinned query (search promotions): the given ids first, in the
-        # given order, then organic results excluding them. Pinned rows
-        # score 1e9 − position — far above any organic score, so one
-        # (score desc, doc_id asc) order yields ES's layout. Unknown ids
-        # are dropped (ES semantics). All frames stay ≤ k + |ids| rows.
-        from pyspark.sql import functions as F
+_RANK_FEATURE_FNS = {"pivot": Opt(_NUM, None), "exponent": Opt(_NUM, 1.0),
+                     "scaling_factor": Opt(_NUM, 1.0)}
 
-        from bitfunnel_spark.plans.kernel import live_docs
 
-        ids = opts.pop("ids", None)
-        organic = opts.pop("organic", None)
-        _reject_extra(opts, "pinned")
-        _require(isinstance(ids, (list, tuple)) and ids, "pinned needs ids")
-        _require(isinstance(organic, dict), "pinned needs an organic query")
-        ids = [int(i) for i in ids]
-        _require(len(set(ids)) == len(ids), "pinned ids must be distinct")
-        org = index.search(compile_dsl(organic), k=k + len(ids))
-        org = org.filter(~F.col("doc_id").isin(ids))
-        id_arr = F.array(*[F.lit(i).cast("long") for i in ids])
-        live = live_docs(index, index.corpus.select("doc_id")
-                         .filter(F.col("doc_id").isin(ids)))
-        pinned_rows = live.select(
-            "doc_id",
-            (F.lit(1e9) - F.array_position(id_arr, F.col("doc_id"))
-             .cast("double")).alias("score"),
-        )
-        return (
-            pinned_rows.unionByName(org.select("doc_id", "score"))
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
-    if kind == "multi_match":
-        text = opts.pop("query", None)
-        _require(isinstance(text, str) and text, "multi_match needs a query string")
-        fields = opts.pop("fields", ["content"])
-        _require(isinstance(fields, list) and fields, "multi_match needs fields")
-        mm_type = str(opts.pop("type", "best_fields"))
-        tie = float(opts.pop("tie_breaker", 0.0))
-        operator = str(opts.pop("operator", "or")).lower()
-        _reject_extra(opts, kind)
-        mapped = []
-        for spec in fields:
-            field, _, w = str(spec).partition("^")
-            mapped.append(_stream(field) + (f"^{w}" if w else ""))
-        return serving.multi_match(
-            index, text, mapped, mm_type=mm_type,
-            tie_breaker=tie, operator=operator, k=k,
-        )
-    if kind == "dis_max":
-        queries = opts.pop("queries", None)
-        _require(isinstance(queries, list) and queries, "dis_max needs queries")
-        tie = float(opts.pop("tie_breaker", 0.0))
-        _reject_extra(opts, kind)
-        clauses = [_clause_string(q) for q in queries]
-        return serving.dis_max(index, clauses, tie_breaker=tie, k=k)
-    if kind == "boosting":
-        pos = opts.pop("positive", None)
-        neg = opts.pop("negative", None)
-        nb = float(opts.pop("negative_boost", 0.5))
-        _require(pos is not None and neg is not None,
-                 "boosting needs positive and negative")
-        _reject_extra(opts, kind)
-        return serving.boosting_query(
-            index, _clause_string(pos), _clause_string(neg), negative_boost=nb, k=k
-        )
-    if kind == "function_score":
-        q = opts.pop("query", None)
-        _require(q is not None, "function_score needs a query")
-        fvf = opts.pop("field_value_factor", None)
-        boost_mode = str(opts.pop("boost_mode", "multiply"))
-        if "random_score" in opts:
-            # ES random_score: reproducible per-(seed, doc) factor —
-            # serving.random_score's documented LCG mix (ES's own is a
-            # seed+field hash; both are deterministic, neither is
-            # portable to the other)
-            rconf = opts.pop("random_score")
-            _reject_extra(opts, kind)
-            _require(fvf is None,
-                     "function_score takes exactly one function")
-            _require(isinstance(rconf, dict)
-                     and not (set(rconf) - {"seed", "field"}),
-                     "random_score takes {'seed': int} (field: doc_id "
-                     "identity is the only per-doc source here)")
-            seed = rconf.get("seed", 17)  # absent seed: ES randomizes;
-            # this engine stays deterministic on the function's default
-            _require(isinstance(seed, int) and not isinstance(seed, bool),
-                     "random_score.seed must be an int")
-            _require(rconf.get("field") in (None, "_seq_no", "doc_id", "_id"),
-                     "random_score.field supports _seq_no/doc_id/_id")
-            return serving.random_score(
-                index, _clause_string(q), seed=seed,
-                boost_mode=boost_mode, k=k,
-            )
-        decay_kind = next(
-            (d for d in serving._DECAY_KINDS if d in opts), None
-        )
-        if decay_kind is not None:
-            # ES decay functions: {"gauss": {field: {"origin": o, "scale":
-            # s, "offset": ..., "decay": ...}}} → serving.decay_score
-            # (exact public ES formulas, one narrow feature join)
-            dconf = opts.pop(decay_kind)
-            _reject_extra(opts, kind)
-            _require(fvf is None,
-                     "function_score takes exactly one function")
-            _require(isinstance(dconf, dict) and len(dconf) == 1,
-                     f"{decay_kind} takes exactly one field")
-            (dfield, params), = dconf.items()
-            # numeric doc metadata only, validated HERE: an unknown or
-            # text field would otherwise surface as an ANSI cast error
-            # (or a silent factor-1 no-op with ANSI off) deep in execution
-            _require(dfield in ("doclen", "length", "doc_id", "_id"),
-                     f"{decay_kind} field must be numeric doc metadata "
-                     "(doclen/length, doc_id/_id)")
-            dfield = {"length": "doclen", "_id": "doc_id"}.get(dfield, dfield)
-            _require(isinstance(params, dict), f"{decay_kind} field "
-                     "config must be an object")
-            params = dict(params)
-            origin = params.pop("origin", None)
-            scale = params.pop("scale", None)
-            offset = params.pop("offset", 0.0)
-            decay = params.pop("decay", 0.5)
-            _reject_extra(params, decay_kind)
-            for label, v in (("origin", origin), ("scale", scale),
-                             ("offset", offset), ("decay", decay)):
-                _require(isinstance(v, (int, float))
-                         and not isinstance(v, bool),
-                         f"{decay_kind}.{label} must be a number")
-            # the closed forms need log(decay)/scale finite and nonzero
-            _require(float(scale) > 0, f"{decay_kind}.scale must be > 0")
-            _require(0.0 < float(decay) < 1.0,
-                     f"{decay_kind}.decay must be in (0, 1)")
-            _require(float(offset) >= 0.0,
-                     f"{decay_kind}.offset must be >= 0")
-            return serving.decay_score(
-                index, _clause_string(q), float(origin), float(scale),
-                field=str(dfield), kind=decay_kind,
-                offset=float(offset), decay=float(decay),
-                boost_mode=boost_mode, k=k,
-            )
-        _require(isinstance(fvf, dict),
-                 "function_score supports field_value_factor and the "
-                 "gauss/exp/linear decay functions")
-        _reject_extra(opts, kind)
-        f = dict(fvf)
-        field = str(f.pop("field", "doclen"))
-        modifier = str(f.pop("modifier", "none"))
-        factor = float(f.pop("factor", 1.0))
-        _reject_extra(f, "field_value_factor")
-        return serving.function_score(
-            index, _clause_string(q), field=field, modifier=modifier,
-            factor=factor, boost_mode=boost_mode, k=k,
-        )
-    if kind == "script_score":
-        # ES script_score: the painless-lite expression IS the score
-        # (plans/serving.script_score) — bindings: _score, doclen, params.*
-        q = opts.pop("query", None)
-        _require(q is not None, "script_score needs a query")
-        spec = opts.pop("script", None)
-        _reject_extra(opts, kind)
-        _require(isinstance(spec, (str, dict)), "script_score needs a script")
-        if isinstance(spec, str):
-            spec = {"source": spec}
-        spec = dict(spec)
-        src = spec.pop("source", None)
-        sparams = spec.pop("params", None) or {}
-        _reject_extra(spec, "script")
-        _require(isinstance(src, str) and src.strip(),
-                 "script needs a source expression")
-        return serving.script_score(
-            index, _clause_string(q), src, params=sparams, k=k
-        )
-    if kind == "more_like_this":
-        like = opts.pop("like", None)
-        mqt = int(opts.pop("max_query_terms", 8))
-        _reject_extra(opts, kind)
-        if isinstance(like, dict):
-            like = [like]
-        _require(
-            isinstance(like, list) and len(like) == 1
-            and isinstance(like[0], dict) and set(like[0]) == {"_id"},
-            "more_like_this supports like: [{'_id': <doc_id>}]",
-        )
-        return serving.more_like_this(index, int(like[0]["_id"]), k=k, m=mqt)
-    if kind == "span_or":
-        # standalone span_or: any occurrence of any clause term is a span,
-        # so the match set is the plain OR of the terms — scored with the
-        # engine's BM25 convention (the span family's standing contract;
-        # ES's span scoring differs, documented deviation)
-        cl = opts.pop("clauses", None)
-        _reject_extra(opts, kind)
-        _require(isinstance(cl, list) and cl, "span_or needs clauses")
-        toks2 = [_span_term(c) for c in cl]
-        _require(len(set(toks2)) == len(toks2), "span_or clauses must be distinct")
-        node = (Term(toks2[0], "body") if len(toks2) == 1
-                else Or(tuple(Term(t, "body") for t in toks2)))
-        return index.search(node, k=k)
-    if kind == "span_near":
-        clauses = opts.pop("clauses", None)
-        _require(isinstance(clauses, list) and clauses, "span_near needs clauses")
-        slop = int(opts.pop("slop", 0))
-        in_order = bool(opts.pop("in_order", False))
-        _reject_extra(opts, kind)
-        slots = [_span_slot(c) for c in clauses]
-        if in_order:
-            # ordered near ≡ the engine's sloppy phrase (order preserved,
-            # up to `slop` interleaved tokens); Phrase is the module-level
-            # ast import. Alternation needs the unordered evaluator.
-            _require(all(isinstance(s, str) for s in slots),
-                     "span_or inside span_near needs in_order=false")
-            return index.search(Phrase(tuple(slots), slop=slop), k=k)
-        return serving.span_near(index, slots, slop=slop, k=k)
-    if kind == "span_first":
-        m = opts.pop("match", None)
-        end = opts.pop("end", None)
-        _require(m is not None and end is not None, "span_first needs match and end")
-        _reject_extra(opts, kind)
-        term = _span_term(m)
-        return serving.span_first(index, term, term, int(end), k=k)
-    # span_not
-    inc = opts.pop("include", None)
-    exc = opts.pop("exclude", None)
-    pre = int(opts.pop("pre", 0))
-    post = int(opts.pop("post", 0))
-    dist = opts.pop("dist", None)  # ES alias for pre == post
-    if dist is not None:
-        pre = post = int(dist)
-    _require(inc is not None and exc is not None, "span_not needs include and exclude")
-    _reject_extra(opts, kind)
-    return serving.span_not(
-        index, _span_tokens(inc), _span_term(exc), pre=pre, post=post, k=k
-    )
+def _one_function(fns: dict, what: str):
+    """(name, conf) of the one function a kind was given, (None, None) for
+    none."""
+    given = [(name, conf) for name, conf in fns.items() if conf is not None]
+    _require(len(given) <= 1, f"{what} takes exactly one function")
+    return given[0] if given else (None, None)
+
+
+def _rank_feature(index, k, saturation=None, log=None, sigmoid=None, **opts):
+    # ES rank_feature: a static per-doc numeric feature through a bounded
+    # monotone function (serving.rank_feature). ES's standalone form
+    # matches every doc carrying the feature.
+    from bitfunnel_spark.plans import serving
+
+    fn, conf = _one_function(
+        {"saturation": saturation, "log": log, "sigmoid": sigmoid}, "rank_feature")
+    fn = fn or "saturation"
+    return serving.rank_feature(index, fn=fn, k=k, **opts,
+                                **_read(conf or {}, _RANK_FEATURE_FNS, fn))
+
+
+_FIELD_VALUE_FACTOR = {"field": Opt(_STR, "doclen"), "modifier": Opt(_STR, "none"),
+                       "factor": Opt(_NUM, 1.0)}
+_RANDOM_SCORE = {"seed": Opt(_INT, 17),
+                 "field": Opt(_one_of("_seq_no", "doc_id", "_id"), None, "")}
+# origin and scale have no default; _function_score raises their message
+_DECAY = {"origin": Opt(_NUM, None), "scale": Opt(_NUM, None),
+          "offset": Opt(_NUM, 0.0), "decay": Opt(_NUM, 0.5)}
+_DECAY_FIELDS = {"doclen": "doclen", "length": "doclen",
+                 "doc_id": "doc_id", "_id": "doc_id"}
+
+
+def _function_score(index, k, query, boost_mode, **fns):
+    """ES function_score with one function: field_value_factor,
+    random_score, or a gauss/exp/linear decay."""
+    from bitfunnel_spark.plans import serving
+
+    fn, conf = _one_function(fns, "function_score")
+    _require(fn is not None, "function_score supports field_value_factor, "
+                             "random_score and the gauss/exp/linear decay functions")
+    if fn == "field_value_factor":
+        return serving.function_score(index, query, boost_mode=boost_mode, k=k,
+                                      **_read(conf, _FIELD_VALUE_FACTOR, fn))
+    if fn == "random_score":
+        # serving.random_score's documented LCG mix (ES's own is a
+        # seed+field hash; both are deterministic, neither is portable to
+        # the other); an absent seed, where ES randomizes, stays
+        # deterministic on the function's default; doc_id identity is the
+        # only per-doc source, whichever field is named
+        return serving.random_score(index, query, boost_mode=boost_mode, k=k,
+                                    **_read(conf, _RANDOM_SCORE, fn))
+    # ES decay functions: {"gauss": {field: {"origin": o, "scale": s,
+    # "offset": ..., "decay": ...}}} → serving.decay_score (exact public ES
+    # formulas, one narrow feature join)
+    _require(len(conf) == 1, f"{fn} takes exactly one field")
+    (field, params), = conf.items()
+    # numeric doc metadata only, validated HERE: an unknown or text field
+    # would otherwise surface as an ANSI cast error (or a silent factor-1
+    # no-op with ANSI off) deep in execution
+    _require(field in _DECAY_FIELDS, f"{fn} field must be numeric doc metadata "
+                                     "(doclen/length, doc_id/_id)")
+    p = _read(params, _DECAY, fn)
+    for label in ("origin", "scale"):
+        _require(p[label] is not None, f"{fn}.{label} must be a number")
+    # the closed forms need log(decay)/scale finite and nonzero
+    _require(p["scale"] > 0, f"{fn}.scale must be > 0")
+    _require(0.0 < p["decay"] < 1.0, f"{fn}.decay must be in (0, 1)")
+    _require(p["offset"] >= 0.0, f"{fn}.offset must be >= 0")
+    return serving.decay_score(index, query, field=_DECAY_FIELDS[field], kind=fn,
+                               boost_mode=boost_mode, k=k, **p)
+
+
+_SCRIPT = {"source": Opt(_STR, to="script"), "params": Opt(_OBJ, {})}
+
+
+def _script_score(index, k, query, script):
+    # ES script_score: the painless-lite expression IS the score
+    # (serving.script_score) — bindings: _score, doclen, params.*
+    from bitfunnel_spark.plans import serving
+
+    if isinstance(script, str):
+        script = {"source": script}
+    return serving.script_score(index, query, k=k, **_read(script, _SCRIPT, "script"))
+
+
+def _span_or(index, k, clauses):
+    # standalone span_or: any occurrence of any clause term is a span, so
+    # the match set is the plain OR of the terms — scored with the
+    # engine's BM25 convention (the span family's standing contract; ES's
+    # span scoring differs, documented deviation)
+    _require(len(set(clauses)) == len(clauses), "span_or clauses must be distinct")
+    terms = tuple(Term(t, "body") for t in clauses)
+    return index.search(terms[0] if len(terms) == 1 else Or(terms), k=k)
+
+
+def _span_near(index, k, clauses, slop, in_order):
+    from bitfunnel_spark.plans import serving
+
+    if in_order:
+        # ordered near ≡ the engine's sloppy phrase (order preserved, up
+        # to `slop` interleaved tokens). Alternation needs the unordered
+        # evaluator.
+        _require(all(isinstance(s, str) for s in clauses),
+                 "span_or inside span_near needs in_order=false")
+        return index.search(Phrase(tuple(clauses), slop=slop), k=k)
+    return serving.span_near(index, clauses, slop=slop, k=k)
+
+
+def _span_first(index, k, term, end):
+    from bitfunnel_spark.plans import serving
+
+    return serving.span_first(index, term, term, end, k=k)
+
+
+def _span_not(index, k, include, exclude, pre, post, dist):
+    from bitfunnel_spark.plans import serving
+
+    if dist is not None:  # ES alias for pre == post
+        pre = post = dist
+    return serving.span_not(index, include, exclude, pre=pre, post=post, k=k)
+
+
+class Combinator(NamedTuple):
+    """A combinator kind: its kind class (_KIND_CLASS), its options (None:
+    a structural body its executor parses whole) and its executor, called
+    as run(index, k=..., **options)."""
+
+    cls: str
+    spec: dict | None
+    run: object
+
+
+# The combinator kinds: ES query kinds that run on serving-layer executors
+# instead of one AST node. Field names map through FIELD_TO_STREAM;
+# sub-queries must be query_string/term/match (_clause_string).
+_COMBINATORS = {
+    "multi_match": Combinator("combinator", {
+        "query": Opt(_STR, to="text"), "fields": Opt(_fields, ["body"]),
+        "type": Opt(_STR, "best_fields", "mm_type"),
+        "tie_breaker": Opt(_NUM, 0.0), "operator": Opt(_LOWER, "or"),
+    }, _serving("multi_match")),
+    "dis_max": Combinator("combinator", {
+        "queries": Opt(_clauses, to="clauses"), "tie_breaker": Opt(_NUM, 0.0),
+    }, _serving("dis_max")),
+    "boosting": Combinator("combinator", {
+        "positive": Opt(_CLAUSE), "negative": Opt(_CLAUSE),
+        "negative_boost": Opt(_NUM, 0.5),
+    }, _serving("boosting_query")),
+    "function_score": Combinator("combinator", {
+        "query": Opt(_CLAUSE), "boost_mode": Opt(_STR, "multiply"),
+        **dict.fromkeys(("field_value_factor", "random_score", "gauss", "exp",
+                         "linear"), Opt(_OBJ, None)),
+    }, _function_score),
+    "script_score": Combinator("combinator", {
+        "query": Opt(_CLAUSE),
+        "script": Opt(_check("a string or an object",
+                             lambda v: isinstance(v, (str, dict)))),
+    }, _script_score),
+    "rank_feature": Combinator("combinator", {
+        "field": Opt(_STR), "boost": Opt(_NUM, 1.0),
+        **dict.fromkeys(("saturation", "log", "sigmoid"), Opt(_OBJ, None)),
+    }, _rank_feature),
+    # ES distance_feature: boost · pivot / (pivot + |v − origin|) on the
+    # engine's per-doc numerics (dates would reduce to the same arithmetic
+    # on epoch values; date-math strings are out of the subset)
+    "distance_feature": Combinator("combinator", {
+        "field": Opt(_one_of("doclen", "doc_id")), "origin": Opt(_NUM),
+        "pivot": Opt(_NUM), "boost": Opt(_NUM, 1.0),
+    }, _serving("distance_feature")),
+    "span_near": Combinator("unrestricted", {
+        "clauses": Opt(lambda v, label: [_span_slot(c) for c in _LIST(v, label)]),
+        "slop": Opt(_INT, 0), "in_order": Opt(_BOOL, False),
+    }, _span_near),
+    "span_first": Combinator("unrestricted", {
+        "match": Opt(_SPAN_TERM, to="term"), "end": Opt(_INT),
+    }, _span_first),
+    "span_not": Combinator("unrestricted", {
+        "include": Opt(_conv(lambda q: _span_tokens(q))), "exclude": Opt(_SPAN_TERM),
+        "pre": Opt(_INT, 0), "post": Opt(_INT, 0), "dist": Opt(_INT, None),
+    }, _span_not),
+    "span_or": Combinator("unrestricted", {
+        "clauses": Opt(lambda v, label: [_span_term(c) for c in _LIST(v, label)]),
+    }, _span_or),
+    "intervals": Combinator("unrestricted", None, _intervals),
+    "sparse_vector": Combinator("unrestricted", {
+        "field": Opt(_STR, "content"), "query_vector": Opt(_OBJ),
+    }, _sparse_vector),
+    # ES pinned query (search promotions): the ids first, in order, then
+    # the organic results without them (serving.pinned)
+    "pinned": Combinator("unrestricted", {
+        "ids": Opt(_check("a non-empty list of doc_ids", lambda v: isinstance(v, list)
+                          and v != [] and all(str(i).isdigit() for i in v))),
+        "organic": Opt(_conv(lambda q: compile_dsl(q)), to="query"),
+    }, _serving("pinned")),
+    "more_like_this": Combinator("unrestricted", {
+        "like": Opt(_like, to="doc_id"), "max_query_terms": Opt(_INT, 8, "m"),
+    }, _serving("more_like_this")),
+}
+
+# query kind -> kind class; kinds not listed compile to one AST node
+# (compile_dsl) and are class "ast". The class decides the executor and,
+# through _CLASSES, the body keys a query of the kind composes with.
+#   metadata      doc-metadata scans (_filter_doc_ids): filter-only hits,
+#                 and in bool.filter / must_not the restriction plan
+#   filter        constant_score: any filter at a constant score
+#   combinator    serving-layer score combinators that take every match
+#                 from index.match / index.scored_match, so the kernel
+#                 applies the restriction plan to them
+#   unrestricted  serving-layer combinators that also read positions,
+#                 postings, pinned ids or a vector store outside that call
+_KIND_CLASS = {
+    **dict.fromkeys(("match_all", "match_none", "ids", "exists", "range"),
+                    "metadata"),
+    "constant_score": "filter",
+    **{kind: row.cls for kind, row in _COMBINATORS.items()},
+}
+
+
+@_dsl_errors
+def _serving_query(index, kind: str, body, k: int = 10):
+    """Run a combinator kind (_COMBINATORS): its options read against its
+    row's spec, then its executor."""
+    row = _COMBINATORS[kind]
+    if row.spec is None:
+        return row.run(index, body, k=k)
+    return row.run(index, k=k, **_read(body, row.spec, kind))
 
 
 def _span_slot(q):
@@ -1717,13 +1741,11 @@ def _span_tokens(q) -> list[str]:
     span_terms with slop 0 + in_order (the adjacent-phrase include shape
     serving.span_not evaluates)."""
     if isinstance(q, dict) and len(q) == 1 and next(iter(q)) == "span_near":
-        body = dict(q["span_near"])
-        clauses = body.pop("clauses", None)
-        _require(isinstance(clauses, list) and clauses, "span_near needs clauses")
-        _require(int(body.pop("slop", 0)) == 0 and bool(body.pop("in_order", True)),
+        o = _read(q["span_near"], {"clauses": Opt(_LIST), "slop": Opt(_INT, 0),
+                                   "in_order": Opt(_BOOL, True)}, "span_near")
+        _require(o["slop"] == 0 and o["in_order"],
                  "span_not include must be adjacent in-order (slop 0)")
-        _reject_extra(body, "span_near")
-        return [_span_term(c) for c in clauses]
+        return [_span_term(c) for c in o["clauses"]]
     return [_span_term(q)]
 
 
@@ -1771,6 +1793,10 @@ NUMERIC_FIELDS = ("doclen",)  # the engine's per-doc numeric
 # (ES's no-query metric covers the whole live corpus)
 LEAF_METRIC_KINDS = ("stats", "avg", "sum", "min", "max", "value_count",
                      "cardinality", "percentiles")
+# the metric kinds several sub-aggs under one terms bucket may use
+# (serving.facet_metrics: one groupBy pass)
+_FACET_METRICS = ("avg", "sum", "min", "max", "value_count",
+                      "percentiles", "cardinality")
 
 
 def _require(cond: bool, msg: str) -> None:
@@ -1778,334 +1804,262 @@ def _require(cond: bool, msg: str) -> None:
         raise DslError(msg)
 
 
-@_dsl_errors
-def run_aggs(index, body: dict, k: int = 10):
-    """Run an ES `_search` body carrying exactly ONE top-level aggregation
-    (optionally with exactly one sub-aggregation under a `terms` bucket)
-    and return the corresponding serving op's DataFrame. Documented
-    subset; anything else raises DslError:
+_BUCKET = _one_of(*BUCKET_FIELDS)
+_DOCLEN = Opt(_one_of(*NUMERIC_FIELDS), to="")  # checked; the executor reads doclen
+_PERCENTS = Opt(_NUMS, (25.0, 50.0, 75.0, 95.0))
 
-      terms(field)                         -> facet_counts
-      terms + stats(doclen)                -> facet_stats
-      terms + percentiles(doclen)          -> facet_percentiles
-      terms + cardinality(field)           -> facet_cardinality
-      terms + top_hits(size)               -> top_hits
-      histogram(doclen, interval)          -> histogram
-      extended_stats(doclen)               -> extended_stats
-      range(doclen, ranges)                -> facet_ranges
-      significant_terms(content, size)     -> significant_terms
-      rare_terms(field, max_doc_count)     -> rare_terms (long-tail buckets)
-      multi_terms(terms, size)             -> multi_terms (composite keys)
-      filters(query_string filters)        -> filters_agg
-      adjacency_matrix(filters)            -> adjacency_matrix (pair counts)
-      composite(sources, size, after)      -> composite_agg (paginated buckets)
-      sampler(shard_size) + terms          -> sampler_agg (per-shard best-docs)
-      diversified_sampler(...) + terms     -> diversified_sampler_agg
-      terms + boxplot(doclen)              -> facet_boxplot (5-number summary)
-      percentile_ranks(doclen, values)     -> percentile_ranks (exact CDF)
-      t_test(a, b, heteroscedastic)        -> t_test (Welch's two-sample)
-      string_stats(lang|repo)              -> string_stats (lengths + entropy)
-      global {} + stats(doclen)            -> global_stats (query-escaping)
-    """
+
+def _named_queries(v, label) -> dict:
+    _require(isinstance(v, dict) and v != {}, f"{label} must be non-empty")
+    return {name: compile_dsl(q) for name, q in v.items()}
+
+
+def _field_of(v, label) -> str:
+    return _read(v, {"field": Opt(_STR)}, label)["field"]
+
+
+def _t_side(v, label):
+    """A t_test side: {field: doclen, filter: query} -> the compiled filter."""
+    return _read(v, {"field": _DOCLEN, "filter": Opt(_conv(compile_dsl))},
+                 label)["filter"]
+
+
+def _range_edges(v, label) -> tuple:
+    """range.ranges as facet_ranges' edges. facet_ranges buckets are
+    contiguous half-open [edge_i, edge_{i+1}) intervals, so the ES spec
+    must be contiguous and end unbounded — anything else (a bounded last
+    range, a gap between `to` and the next `from`) would silently count
+    docs into the wrong bucket."""
+    rs = [_read(r, {"from": Opt(_INT, None), "to": Opt(_INT, None)}, label)
+          for r in _LIST(v, label)]
+    edges = [0 if i == 0 and r["from"] is None else r["from"]
+             for i, r in enumerate(rs)]
+    _require(None not in edges, "every range after the first needs a `from`")
+    _require(all(a["to"] is not None and a["to"] == b["from"]
+                 for a, b in zip(rs, rs[1:])),
+             "ranges must be contiguous: each `to` must equal the next "
+             "range's `from`")
+    _require(rs[-1]["to"] is None, "last range must be unbounded (no `to`)")
+    _require(edges == sorted(set(edges)), "range froms must be increasing")
+    return tuple(edges)
+
+
+def _distinct(fields: list, what: str) -> tuple:
+    _require(len(set(fields)) == len(fields), f"{what} fields must be distinct")
+    return tuple(fields)
+
+
+def _multi_terms(v, label) -> tuple:
+    _require(isinstance(v, list) and len(v) >= 2,
+             "multi_terms needs >= 2 `terms` entries")
+    return _distinct([_read(t, {"field": Opt(_BUCKET)}, "multi_terms entry")["field"]
+                      for t in v], "multi_terms")
+
+
+def _sources(v, label) -> list:
+    """composite.sources as [(label, field)]: [{label: {"terms": {"field":
+    ...}}}]."""
+    out = []
+    for s in _LIST(v, label):
+        _require(isinstance(s, dict) and len(s) == 1,
+                 "each composite source is {label: {'terms': {'field': ...}}}")
+        (name, sspec), = s.items()
+        _require(isinstance(sspec, dict) and set(sspec) == {"terms"},
+                 "composite sources support terms only")
+        out.append((name, _read(sspec["terms"], {"field": Opt(_BUCKET)},
+                                "composite terms")["field"]))
+    _distinct([f for _, f in out], "composite")
+    return out
+
+
+def _composite(index, query, sources, size, after):
     from bitfunnel_spark.plans import serving
 
-    aggs = body.get("aggs") or body.get("aggregations")
+    labels = [name for name, _ in sources]
+    if after is not None:
+        _require(set(after) == set(labels),
+                 "composite.after keys must match the source labels")
+        after = tuple(after[name] for name in labels)
+    return serving.composite_agg(index, query, by=tuple(f for _, f in sources),
+                                 size=size, after=after)
+
+
+def _one_agg(spec, kinds, what: str):
+    """(kind, conf, sub-aggs or None) of one agg spec {kind: conf,
+    aggs|aggregations?: {...}}, its kind one of ``kinds``."""
+    _require(isinstance(spec, dict), f"{what} spec must be an object")
+    nest = [key for key in ("aggs", "aggregations") if key in spec]
+    _require(len(nest) <= 1, f"{what} takes aggs or aggregations, not both")
+    kind = [key for key in spec if key not in nest]
+    _require(len(kind) == 1, f"{what} needs exactly one kind, got {kind}")
+    _require(kind[0] in kinds, f"unsupported {what} kind: {kind[0]!r}")
+    return kind[0], spec[kind[0]], spec[nest[0]] if nest and spec[nest[0]] else None
+
+
+def _no_sub(kind: str, sub) -> None:
+    _require(sub is None, f"{kind} takes no sub-aggs (a leaf metric or bucket here)")
+
+
+def _terms(index, query, by, sub=None):
+    """A terms bucket: counts, one _TERMS_SUBS sub-agg, or several metric
+    sub-aggs in ONE groupBy pass (facet_metrics — never one scan per
+    metric: the Kibana shape)."""
+    from bitfunnel_spark.plans import serving
+
+    if sub is None:
+        return serving.facet_counts(index, query, facets=(by,))
+    _require(isinstance(sub, dict), "sub-aggs must be an object")
+    if len(sub) == 1:
+        (_, sspec), = sub.items()
+        kind, conf, nested = _one_agg(sspec, _TERMS_SUBS, "sub-agg")
+        _no_sub(kind, nested)
+        row = _TERMS_SUBS[kind]
+        return row.run(index, query, by=by, **_read(conf, row.spec, kind))
+    metrics = []
+    for name, sspec in sub.items():
+        kind, conf, nested = _one_agg(sspec, _FACET_METRICS, f"sub-agg {name!r}")
+        _no_sub(kind, nested)
+        _require(isinstance(conf, dict), f"{kind} expects an object")
+        metrics.append((name, kind, dict(conf)))
+    return serving.facet_metrics(index, query, by=by, metrics=metrics)
+
+
+class Agg(NamedTuple):
+    """An aggregation kind: its options, its executor — called as
+    run(index, [query,] **options) — and two rules. ``query``: "required",
+    "optional" (without one, the whole live corpus), "forbidden" (its
+    filters carry their own queries) or "escapes" (read, restricted and
+    compiled, but never matched: ES's global bucket). ``sub``: None (no
+    sub-aggs), "terms" (the terms bucket's own: _terms), or (kind, spec):
+    exactly one sub-agg of that kind, whose options join the executor's."""
+
+    spec: dict
+    run: object
+    query: str = "required"
+    sub: object = None
+
+
+_AGGS = {
+    # one bucket per named query, counted over the whole corpus
+    "filters": Agg({"filters": Opt(_named_queries)}, _serving("filters_agg"),
+                   "forbidden"),
+    "adjacency_matrix": Agg({"filters": Opt(_named_queries)},
+                            _serving("adjacency_matrix"), "forbidden"),
+    # ES global bucket: ESCAPES the query context by definition — stats
+    # over the whole corpus for filtered-vs-unfiltered comparison
+    "global": Agg({}, _serving("global_stats"), "escapes", ("stats", {"field": _DOCLEN})),
+    # Welch's two-sample test; each side carries its own filter
+    "t_test": Agg({"a": Opt(_t_side, to="query_a"), "b": Opt(_t_side, to="query_b"),
+                   "type": Opt(_one_of("heteroscedastic"), None, "")},
+                  _serving("t_test"), "forbidden"),
+    "percentile_ranks": Agg({"field": _DOCLEN, "values": Opt(_LIST)},
+                            _serving("percentile_ranks")),
+    # Σ(value·weight)/Σ(weight) over the match set; serving.weighted_avg
+    # checks the per-doc numerics (doclen, chars)
+    "weighted_avg": Agg({"value": Opt(_field_of, to="value_field"),
+                         "weight": Opt(_field_of, to="weight_field")},
+                        _serving("weighted_avg")),
+    # the entropy is show_distribution's statistic; the per-character
+    # distribution itself is not emitted, so only false is honoured
+    "string_stats": Agg({"field": Opt(_BUCKET), "show_distribution": Opt(
+        _check("false", lambda v: v is False), None, "")}, _serving("string_stats")),
+    "composite": Agg({"sources": Opt(_sources), "size": Opt(_INT, 10),
+                      "after": Opt(_OBJ, None)}, _composite),
+    "sampler": Agg({"shard_size": Opt(_INT, 64)}, _serving("sampler_agg"),
+                   sub=("terms", {"field": Opt(_BUCKET, to="by")})),
+    "diversified_sampler": Agg({"shard_size": Opt(_INT, 64), "field": Opt(_BUCKET),
+                                "max_docs_per_value": Opt(_INT, 1)},
+                               _serving("diversified_sampler_agg"),
+                               sub=("terms", {"field": Opt(_BUCKET, to="by")})),
+    "histogram": Agg({"field": _DOCLEN, "interval": Opt(_INT, 32)},
+                     _serving("histogram")),
+    "extended_stats": Agg({"field": _DOCLEN}, _serving("extended_stats")),
+    "range": Agg({"field": _DOCLEN, "ranges": Opt(_range_edges, to="edges")},
+                 _serving("facet_ranges")),
+    # significant_text is ES's re-analyzing variant of significant_terms;
+    # this engine analyzes body text for both, so they share the executor
+    **dict.fromkeys(("significant_terms", "significant_text"), Agg(
+        {"field": Opt(_one_of("content", "body", "text"), to=""),
+         "size": Opt(_INT, 20, "k")}, _serving("significant_terms"))),
+    "rare_terms": Agg({"field": Opt(_BUCKET, to="by"), "max_doc_count": Opt(_INT, 1)},
+                      _serving("rare_terms")),
+    "multi_terms": Agg({"terms": Opt(_multi_terms, to="by"), "size": Opt(_INT, 10)},
+                       _serving("multi_terms")),
+    "terms": Agg({"field": Opt(_BUCKET, to="by")}, _terms, sub="terms"),
+    "matrix_stats": Agg({"fields": Opt(_check("a list of two fields", lambda v: (
+        isinstance(v, list) and len(v) == 2), tuple), ("doclen", "chars"))},
+        _serving("matrix_stats")),
+    # TOP-LEVEL leaf metrics — the most common ES aggregation shape (no
+    # bucket): one narrow join + one global agg (serving.metric_agg)
+    **{kind: Agg({"field": Opt(_STR, "doclen"),
+                  **({"percents": _PERCENTS} if kind == "percentiles" else {})},
+                 _serving("metric_agg", kind=kind), "optional")
+       for kind in LEAF_METRIC_KINDS},
+}
+
+# the sub-aggs a terms bucket takes alone, each run as (index, query,
+# by=<the bucket field>, **options)
+_TERMS_SUBS = {
+    "stats": Agg({"field": _DOCLEN}, _serving("facet_stats")),
+    "percentiles": Agg({"field": _DOCLEN, "percents": _PERCENTS},
+                       _serving("facet_percentiles")),
+    "boxplot": Agg({"field": _DOCLEN}, _serving("facet_boxplot")),
+    "median_absolute_deviation": Agg({"field": _DOCLEN}, _serving("facet_mad")),
+    "cardinality": Agg({"field": Opt(_BUCKET, to="of")}, _serving("facet_cardinality")),
+    "top_hits": Agg({"size": Opt(_INT, 3, "per_group")}, _serving("top_hits")),
+}
+
+
+@_dsl_errors
+def run_aggs(index, body: dict, k: int = 10):
+    """Run an ES `_search` body of an optional `query` and exactly ONE
+    top-level aggregation, under `aggs` or `aggregations`, and return its
+    serving op's DataFrame. The kinds, their options and their query and
+    sub-agg rules are the rows of _AGGS (and _TERMS_SUBS for a terms
+    bucket's sub-agg); anything else raises DslError. A bool's
+    doc-metadata clauses restrict every kind through the kernel
+    (_restricted) — `global` too reads the restricted copy, but never its
+    match set."""
+    _require(isinstance(body, dict), "an aggs body must be an object")
+    _unknown_keys(body, ("query", "aggs", "aggregations"))
+    _require(("aggs" in body) != ("aggregations" in body),
+             "give exactly one of aggs / aggregations")
+    aggs = body.get("aggs", body.get("aggregations"))
     _require(isinstance(aggs, dict) and len(aggs) == 1, "exactly one top-level agg")
-    q = None
+    (_, spec), = aggs.items()
+    kind, conf, sub = _one_agg(spec, _AGGS, "agg")
+    row = _AGGS[kind]
+    opts = _read(conf, row.spec, kind)
+    if row.sub is None:
+        _no_sub(kind, sub)
+    elif row.sub == "terms":
+        opts["sub"] = sub
+    else:
+        skind, sspec = row.sub
+        _require(isinstance(sub, dict) and len(sub) == 1,
+                 f"{kind} needs exactly one {skind} sub-agg")
+        (_, s), = sub.items()
+        _, sconf, nested = _one_agg(s, (skind,), "sub-agg")
+        _no_sub(skind, nested)
+        opts.update(_read(sconf, sspec, skind))
+    args = [index, None]
     if "query" in body:
-        # ES range filters compose with every aggregation: the bool's
-        # doc-metadata clauses ride an index copy (_restricted) into the
-        # kernel behind index.match / index.scored_match, the match
-        # surfaces every serving agg rides. The `global` agg still escapes
-        # them (ES semantics): it never touches the match set.
+        _require(row.query != "forbidden",
+                 f"{kind} takes no query: its filters run over the whole corpus")
+        # the bool's doc-metadata clauses ride an index copy (_restricted)
+        # into the kernel behind index.match / index.scored_match, the
+        # match surfaces every serving agg rides
         query, pos, neg = _pop_bool_ranges(body["query"])
         _require(query is not None,
                  "aggs over a pure metadata filter need a match query "
                  "alongside (a bool of only metadata filters has no "
                  "scoring/match clause)")
-        index = _restricted(index, pos, neg)
-        q = compile_dsl(query)
-    (_, spec), = aggs.items()
-    _require(isinstance(spec, dict), "agg spec must be an object")
-    sub = spec.get("aggs") or spec.get("aggregations")
-    kinds = [x for x in spec if x not in ("aggs", "aggregations")]
-    _require(len(kinds) == 1, f"agg needs exactly one kind, got {kinds}")
-    kind = kinds[0]
-    conf = spec[kind]
-
-    if kind == "filters":
-        _require(q is None, "filters agg counts over the whole corpus (no query)")
-        named = conf.get("filters")
-        _require(isinstance(named, dict) and named, "filters.filters must be non-empty")
-        return serving.filters_agg(
-            index, {name: compile_dsl(sub_q) for name, sub_q in named.items()})
-
-    if kind == "adjacency_matrix":
-        _require(q is None, "adjacency_matrix counts over the whole corpus (no query)")
-        named = conf.get("filters")
-        _require(isinstance(named, dict) and named, "adjacency_matrix.filters must be non-empty")
-        _require(sub is None, "adjacency_matrix takes no sub-aggs")
-        qs = {name: compile_dsl(sub_q) for name, sub_q in named.items()}
-        return serving.adjacency_matrix(index, qs)
-
-    if kind == "global":
-        # ES global bucket: ESCAPES the query context by definition — stats
-        # over the whole corpus for filtered-vs-unfiltered comparison
-        _require(conf == {}, "global takes no options")
-        _require(isinstance(sub, dict) and len(sub) == 1,
-                 "global needs exactly one stats sub-agg")
-        (_, sspec), = sub.items()
-        _require(isinstance(sspec, dict) and set(sspec) == {"stats"},
-                 "global sub-agg must be stats")
-        _require(sspec["stats"].get("field") in NUMERIC_FIELDS,
-                 "global stats field must be doclen")
-        return serving.global_stats(index)
-
-    if kind == "t_test":
-        _require(q is None, "t_test's sides carry their own filters (no query)")
-        _require(sub is None, "t_test takes no sub-aggs")
-        unknown = set(conf) - {"a", "b", "type"}
-        _require(not unknown, f"unsupported t_test options: {sorted(unknown)}")
-        _require(conf.get("type", "heteroscedastic") == "heteroscedastic",
-                 "t_test supports type=heteroscedastic (Welch) only")
-        sides = []
-        for s in ("a", "b"):
-            sconf = conf.get(s)
-            _require(isinstance(sconf, dict) and set(sconf) == {"field", "filter"},
-                     f"t_test.{s} needs field + filter")
-            _require(sconf["field"] in NUMERIC_FIELDS,
-                     f"t_test.{s}.field must be doclen")
-            sides.append(compile_dsl(sconf["filter"]))
-        return serving.t_test(index, sides[0], sides[1])
-
-    _require(q is not None or kind in LEAF_METRIC_KINDS,
-             f"{kind} agg requires a query")
-
-    if kind == "percentile_ranks":
-        _require(conf.get("field") in NUMERIC_FIELDS,
-                 "percentile_ranks field must be doclen")
-        values = conf.get("values")
-        _require(isinstance(values, list) and values,
-                 "percentile_ranks.values must be non-empty")
-        _require(sub is None, "percentile_ranks takes no sub-aggs")
-        return serving.percentile_ranks(index, q, values=values)
-
-    if kind == "weighted_avg":
-        # ES weighted_avg: Σ(value·weight)/Σ(weight) over the match set.
-        # Per-doc numerics: doclen (token count) and chars (content
-        # character length) — serving.weighted_avg validates.
-        vspec, wspec = conf.get("value"), conf.get("weight")
-        _require(isinstance(vspec, dict) and set(vspec) == {"field"},
-                 "weighted_avg.value needs exactly {'field': ...}")
-        _require(isinstance(wspec, dict) and set(wspec) == {"field"},
-                 "weighted_avg.weight needs exactly {'field': ...}")
-        unknown = set(conf) - {"value", "weight"}
-        _require(not unknown, f"unsupported weighted_avg options: {sorted(unknown)}")
-        _require(sub is None, "weighted_avg takes no sub-aggs")
-        return serving.weighted_avg(
-            index, q, value_field=vspec["field"], weight_field=wspec["field"]
-        )
-
-    if kind == "string_stats":
-        field = conf.get("field")
-        _require(field in BUCKET_FIELDS,
-                 f"string_stats field must be one of {BUCKET_FIELDS}")
-        unknown = set(conf) - {"field", "show_distribution"}
-        _require(not unknown, f"unsupported string_stats options: {sorted(unknown)}")
-        _require(sub is None, "string_stats takes no sub-aggs")
-        return serving.string_stats(index, q, field=field)
-
-    if kind == "composite":
-        sources = conf.get("sources")
-        _require(isinstance(sources, list) and sources, "composite.sources must be non-empty")
-        fields, labels = [], []
-        for s in sources:
-            _require(isinstance(s, dict) and len(s) == 1,
-                     "each composite source is {label: {'terms': {'field': ...}}}")
-            (label, sspec), = s.items()
-            _require(isinstance(sspec, dict) and set(sspec) == {"terms"},
-                     "composite sources support terms only")
-            f = sspec["terms"].get("field")
-            _require(f in BUCKET_FIELDS, f"composite fields must be among {BUCKET_FIELDS}")
-            fields.append(f)
-            labels.append(label)
-        _require(len(set(fields)) == len(fields), "composite fields must be distinct")
-        after = conf.get("after")
-        after_t = None
-        if after is not None:
-            _require(isinstance(after, dict) and set(after) == set(labels),
-                     "composite.after keys must match the source labels")
-            after_t = tuple(after[lbl] for lbl in labels)
-        unknown = set(conf) - {"sources", "size", "after"}
-        _require(not unknown, f"unsupported composite options: {sorted(unknown)}")
-        _require(sub is None, "composite sub-aggs are not supported")
-        return serving.composite_agg(
-            index, q, by=tuple(fields), size=int(conf.get("size", 10)),
-            after=after_t,
-        )
-
-    if kind in ("sampler", "diversified_sampler"):
-        _require(isinstance(sub, dict) and len(sub) == 1,
-                 f"{kind} needs exactly one terms sub-agg")
-        (_, sspec), = sub.items()
-        _require(isinstance(sspec, dict) and set(sspec) == {"terms"},
-                 f"{kind} sub-agg must be a terms agg")
-        by = sspec["terms"].get("field")
-        _require(by in BUCKET_FIELDS, f"terms field must be one of {BUCKET_FIELDS}")
-        shard_size = int(conf.get("shard_size", 64))
-        if kind == "sampler":
-            unknown = set(conf) - {"shard_size"}
-            _require(not unknown, f"unsupported sampler options: {sorted(unknown)}")
-            return serving.sampler_agg(index, q, by=by, shard_size=shard_size)
-        dfield = conf.get("field")
-        _require(dfield in BUCKET_FIELDS,
-                 f"diversified_sampler field must be one of {BUCKET_FIELDS}")
-        unknown = set(conf) - {"shard_size", "field", "max_docs_per_value"}
-        _require(not unknown, f"unsupported diversified_sampler options: {sorted(unknown)}")
-        return serving.diversified_sampler_agg(
-            index, q, by=by, field=dfield, shard_size=shard_size,
-            max_docs_per_value=int(conf.get("max_docs_per_value", 1)),
-        )
-
-    if kind == "histogram":
-        _require(conf.get("field") in NUMERIC_FIELDS, "histogram field must be doclen")
-        return serving.histogram(index, q, interval=int(conf.get("interval", 32)))
-    if kind == "extended_stats":
-        _require(conf.get("field") in NUMERIC_FIELDS, "extended_stats field must be doclen")
-        return serving.extended_stats(index, q)
-    if kind == "range":
-        _require(conf.get("field") in NUMERIC_FIELDS, "range field must be doclen")
-        ranges = conf.get("ranges")
-        _require(isinstance(ranges, list) and ranges, "range.ranges must be non-empty")
-        # facet_ranges buckets are contiguous half-open [edge_i, edge_{i+1})
-        # intervals, so the ES spec must be contiguous and end unbounded —
-        # anything else (a bounded last range, a gap between `to` and the
-        # next `from`) would silently count docs into the wrong bucket.
-        edges = []
-        for i, r in enumerate(ranges):
-            frm = r.get("from", 0 if i == 0 else None)
-            _require(frm is not None, "every range after the first needs a `from`")
-            edges.append(int(frm))
-            to = r.get("to")
-            if i + 1 < len(ranges):
-                nxt = ranges[i + 1].get("from")
-                _require(
-                    to is not None and nxt is not None and int(to) == int(nxt),
-                    "ranges must be contiguous: each `to` must equal the "
-                    "next range's `from`",
-                )
-            else:
-                _require("to" not in r, "last range must be unbounded (no `to`)")
-        _require(edges == sorted(set(edges)), "range froms must be increasing")
-        return serving.facet_ranges(index, q, edges=tuple(edges))
-    if kind in ("significant_terms", "significant_text"):
-        # significant_text is ES's re-analyzing variant of
-        # significant_terms; this engine analyzes body text for both, so
-        # they share the executor (the distinction in ES — stored keyword
-        # values vs re-analyzed source — has no analogue here)
-        _require(conf.get("field") in ("content", "body", "text"),
-                 f"{kind} field must be the body text")
-        return serving.significant_terms(index, q, k=int(conf.get("size", 20)))
-    if kind == "rare_terms":
-        field = conf.get("field")
-        _require(field in BUCKET_FIELDS, f"rare_terms field must be one of {BUCKET_FIELDS}")
-        _require(sub is None, "rare_terms takes no sub-aggs")
-        unknown = set(conf) - {"field", "max_doc_count"}
-        _require(not unknown, f"unsupported rare_terms options: {sorted(unknown)}")
-        return serving.rare_terms(
-            index, q, by=field, max_doc_count=int(conf.get("max_doc_count", 1))
-        )
-    if kind == "multi_terms":
-        terms_spec = conf.get("terms")
-        _require(isinstance(terms_spec, list) and len(terms_spec) >= 2,
-                 "multi_terms needs >= 2 `terms` entries")
-        fields = []
-        for t in terms_spec:
-            _require(isinstance(t, dict) and set(t) == {"field"},
-                     f"each multi_terms entry is {{'field': ...}}, got {t!r}")
-            _require(t["field"] in BUCKET_FIELDS,
-                     f"multi_terms fields must be among {BUCKET_FIELDS}")
-            fields.append(t["field"])
-        _require(len(set(fields)) == len(fields), "multi_terms fields must be distinct")
-        _require(sub is None, "multi_terms takes no sub-aggs")
-        unknown = set(conf) - {"terms", "size"}
-        _require(not unknown, f"unsupported multi_terms options: {sorted(unknown)}")
-        return serving.multi_terms(
-            index, q, by=tuple(fields), size=int(conf.get("size", 10))
-        )
-    if kind == "terms":
-        field = conf.get("field")
-        _require(field in BUCKET_FIELDS, f"terms field must be one of {BUCKET_FIELDS}")
-        if not sub:
-            return serving.facet_counts(index, q, facets=(field,))
-        _require(isinstance(sub, dict), "sub-aggs must be an object")
-        if len(sub) > 1:
-            # several metric sub-aggs under one bucket (the Kibana shape):
-            # ONE groupBy pass via facet_metrics — never one scan per metric
-            metric_kinds = ("avg", "sum", "min", "max", "value_count",
-                            "percentiles", "cardinality")
-            specs = []
-            for name, sspec in sub.items():
-                _require(isinstance(sspec, dict) and len(sspec) == 1,
-                         f"sub-agg {name!r} needs exactly one kind")
-                (mk, mconf), = sspec.items()
-                _require(mk in metric_kinds,
-                         f"multiple sub-aggs support metric kinds "
-                         f"{metric_kinds}; {mk!r} needs its own request")
-                specs.append((name, mk, dict(mconf)))
-            return serving.facet_metrics(index, q, by=field, metrics=specs)
-        _require(isinstance(sub, dict) and len(sub) == 1, "exactly one sub-agg")
-        (_, sspec), = sub.items()
-        skinds = list(sspec)
-        _require(len(skinds) == 1, "sub-agg needs exactly one kind")
-        skind, sconf = skinds[0], sspec[skinds[0]]
-        if skind == "stats":
-            _require(sconf.get("field") in NUMERIC_FIELDS, "stats field must be doclen")
-            return serving.facet_stats(index, q, by=field)
-        if skind == "percentiles":
-            _require(sconf.get("field") in NUMERIC_FIELDS, "percentiles field must be doclen")
-            pcts = tuple(float(p) for p in sconf.get("percents", (25.0, 50.0, 75.0, 95.0)))
-            return serving.facet_percentiles(index, q, by=field, percents=pcts)
-        if skind == "boxplot":
-            _require(sconf.get("field") in NUMERIC_FIELDS, "boxplot field must be doclen")
-            return serving.facet_boxplot(index, q, by=field)
-        if skind == "median_absolute_deviation":
-            _require(sconf.get("field") in NUMERIC_FIELDS,
-                     "median_absolute_deviation field must be doclen")
-            return serving.facet_mad(index, q, by=field)
-        if skind == "cardinality":
-            of = sconf.get("field")
-            _require(of in BUCKET_FIELDS, f"cardinality field must be one of {BUCKET_FIELDS}")
-            return serving.facet_cardinality(index, q, by=field, of=of)
-        if skind == "top_hits":
-            return serving.top_hits(index, q, by=field, per_group=int(sconf.get("size", 3)))
-        raise DslError(f"unsupported sub-agg kind: {skind!r}")
-    if kind == "matrix_stats":
-        _require(sub is None, "matrix_stats is a leaf metric (no sub-aggs)")
-        _require(q is not None, "matrix_stats agg requires a query")
-        mconf = dict(conf or {})
-        mfields = mconf.pop("fields", ["doclen", "chars"])
-        _reject_extra(mconf, kind)
-        _require(isinstance(mfields, list) and len(mfields) == 2,
-                 "matrix_stats needs exactly two fields")
-        return serving.matrix_stats(index, q, fields=tuple(mfields))
-    if kind in LEAF_METRIC_KINDS:
-        # TOP-LEVEL leaf metrics — the most common ES aggregation shape
-        # (no bucket): one narrow join + one global agg
-        # (plans/serving.metric_agg). Without a query the metric covers
-        # the whole live corpus, ES's own no-query behavior.
-        _require(sub is None, f"{kind} is a leaf metric (no sub-aggs)")
-        mconf = dict(conf or {})
-        mfield = mconf.pop("field", "doclen")
-        pcts = mconf.pop("percents", None) if kind == "percentiles" else None
-        _reject_extra(mconf, kind)
-        if pcts is not None:
-            return serving.metric_agg(
-                index, q, kind, field=mfield,
-                percents=tuple(float(p) for p in pcts),
-            )
-        return serving.metric_agg(index, q, kind, field=mfield)
-    raise DslError(f"unsupported agg kind: {kind!r}")
+        args = [_restricted(index, pos, neg), compile_dsl(query)]
+    else:
+        _require(row.query != "required", f"{kind} agg requires a query")
+    if row.query in ("forbidden", "escapes"):
+        args = args[:1]
+    return row.run(*args, **opts)
 
 
 # ---------------------------------------------------------------------------

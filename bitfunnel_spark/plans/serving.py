@@ -406,6 +406,13 @@ def sort_hits(
     return rows.select("doc_id", by).orderBy(direction, F.asc("doc_id")).limit(k)
 
 
+def _feature(index, field: str) -> DataFrame:
+    """(doc_id, fv): a per-doc numeric as double — ``doclen`` from the doc
+    stats, any other field from the corpus column of that name."""
+    src = index.doc_stats if field == "doclen" else index.corpus
+    return src.select("doc_id", F.col(field).cast("double").alias("fv"))
+
+
 _FSCORE_MODIFIERS = ("none", "log1p", "ln1p", "sqrt", "square")
 _FSCORE_BOOST_MODES = ("multiply", "sum", "replace")
 
@@ -439,14 +446,9 @@ def function_score(
         raise ValueError(f"unknown boost_mode {boost_mode!r}")
 
     scored = index.scored_match(query, facts)
-    if field == "doclen":
-        meta = index.doc_stats.select(
-            "doc_id", F.col("doclen").cast("double").alias("fv")
-        )
-        rows = scored.join(meta, "doc_id", "left").fillna(0.0, subset=["fv"])
-    else:
-        meta = index.corpus.select("doc_id", F.col(field).cast("double").alias("fv"))
-        rows = scored.join(meta, "doc_id")
+    meta = _feature(index, field)
+    rows = (scored.join(meta, "doc_id", "left").fillna(0.0, subset=["fv"])
+            if field == "doclen" else scored.join(meta, "doc_id"))
     v = F.lit(float(factor)) * F.col("fv")
     fn = {
         "none": v,
@@ -517,7 +519,7 @@ _RANK_FEATURE_FNS = ("saturation", "log", "sigmoid")
 
 
 def rank_feature(
-    index, query, field: str = "doclen", fn: str = "saturation",
+    index, query=None, field: str = "doclen", fn: str = "saturation",
     pivot: float | None = None, exponent: float = 1.0,
     scaling_factor: float = 1.0, boost: float = 1.0, k: int = 10,
     facts: list[str] | None = None,
@@ -542,14 +544,7 @@ def rank_feature(
         raise ValueError(f"rank_feature fn must be one of {_RANK_FEATURE_FNS}")
     if fn in ("saturation", "sigmoid") and (pivot is None or float(pivot) <= 0):
         raise ValueError(f"rank_feature {fn} needs a positive pivot")
-    if field == "doclen":
-        feats = index.doc_stats.select(
-            "doc_id", F.col("doclen").cast("double").alias("fv")
-        )
-    else:
-        feats = index.corpus.select(
-            "doc_id", F.col(field).cast("double").alias("fv")
-        )
+    feats = _feature(index, field)
     if query is not None:
         matches = index.match(query, facts).select("doc_id")
         feats = matches.join(feats, "doc_id", "left").fillna(0.0, subset=["fv"])
@@ -879,14 +874,9 @@ def decay_score(
     import math
 
     scored = index.scored_match(query, facts)
-    if field == "doclen":
-        meta = index.doc_stats.select(
-            "doc_id", F.col("doclen").cast("double").alias("fv")
-        )
-        rows = scored.join(meta, "doc_id", "left").fillna(0.0, subset=["fv"])
-    else:
-        meta = index.corpus.select("doc_id", F.col(field).cast("double").alias("fv"))
-        rows = scored.join(meta, "doc_id")
+    meta = _feature(index, field)
+    rows = (scored.join(meta, "doc_id", "left").fillna(0.0, subset=["fv"])
+            if field == "doclen" else scored.join(meta, "doc_id"))
     d = F.greatest(
         F.lit(0.0), F.abs(F.col("fv") - F.lit(float(origin))) - F.lit(float(offset))
     )
@@ -1353,6 +1343,31 @@ def hybrid_search(
             "cos_rank",
         )
         .orderBy(F.desc("rrf"), F.asc("doc_id"))
+        .limit(k)
+    )
+
+
+def pinned(index, query, ids, k: int = 10) -> DataFrame:
+    """ES ``pinned`` query (search promotions): the given ``ids`` first,
+    in the given order, then ``query``'s organic results excluding them.
+    Pinned rows score 1e9 − position — far above any organic score, so one
+    (score desc, doc_id asc) order yields ES's layout. Unknown ids are
+    dropped (ES semantics). All frames stay ≤ k + |ids| rows."""
+    ids = [int(i) for i in ids]
+    if len(set(ids)) != len(ids):
+        raise ValueError("pinned ids must be distinct")
+    org = index.search(query, k=k + len(ids)).filter(~F.col("doc_id").isin(ids))
+    id_arr = F.array(*[F.lit(i).cast("long") for i in ids])
+    live = live_docs(index, index.corpus.select("doc_id")
+                     .filter(F.col("doc_id").isin(ids)))
+    pinned_rows = live.select(
+        "doc_id",
+        (F.lit(1e9) - F.array_position(id_arr, F.col("doc_id"))
+         .cast("double")).alias("score"),
+    )
+    return (
+        pinned_rows.unionByName(org.select("doc_id", "score"))
+        .orderBy(F.desc("score"), F.asc("doc_id"))
         .limit(k)
     )
 
@@ -2284,7 +2299,7 @@ def global_stats(index) -> DataFrame:
 
 
 def distance_feature(
-    index, query, field: str = "doclen", origin: float = 0.0,
+    index, query=None, field: str = "doclen", origin: float = 0.0,
     pivot: float = 1.0, boost: float = 1.0, k: int = 10,
     facts: list[str] | None = None,
 ) -> DataFrame:
@@ -2303,14 +2318,7 @@ def distance_feature(
     TakeOrderedAndProject; nothing is recomputed per query."""
     if float(pivot) <= 0:
         raise ValueError("distance_feature needs a positive pivot")
-    if field == "doclen":
-        feats = index.doc_stats.select(
-            "doc_id", F.col("doclen").cast("double").alias("fv")
-        )
-    else:
-        feats = index.corpus.select(
-            "doc_id", F.col(field).cast("double").alias("fv")
-        )
+    feats = _feature(index, field)
     if query is not None:
         matches = index.match(query, facts).select("doc_id")
         feats = matches.join(feats, "doc_id", "left").fillna(0.0, subset=["fv"])

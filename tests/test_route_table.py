@@ -226,3 +226,13 @@ def test_route_names_the_executor(kind):
         for key in ("explain", "rescore", "search_after", "collapse", "sort",
                     "highlight"):
             assert _route(body(kind, (key,))).name == key
+
+
+@pytest.mark.parametrize("page", [{"size": None}, {"from": [1]},
+                                  {"min_score": "high"}])
+def test_malformed_page_values_raise_dsl_error(page, monkeypatch):
+    """size, from and min_score are read against their declared types:
+    a malformed value raises DslError, not a raw TypeError/ValueError."""
+    monkeypatch.setitem(sys.modules, "pyspark", None)
+    with pytest.raises(DslError, match=f"_search.{next(iter(page))} must be"):
+        _route(body("match", ()) | page)
